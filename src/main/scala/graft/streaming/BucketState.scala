@@ -570,9 +570,13 @@ private[graft] object BucketState {
     * nBuckets; replace-merge writers keep 1-2 versions live, append
     * writers as many as batches since the last [[compact]]). `empty`
     * supplies the schema-correct zero-state (must already carry the `p`
-    * column).
-    */
-  /** `readSchema`, when given, pins every per-version read to an EXPLICIT
+    * column). The curation stores and the replace-merge replica read
+    * through here; the LSM replica does not — its reads go through
+    * `CdcStream.readLsm`, one relation over every segment, because a
+    * per-version relation costs a schema-inference job and its own tasks
+    * per segment.
+    *
+    * `readSchema`, when given, pins every per-version read to an EXPLICIT
     * schema (it must include the `p` partition column): parquet null-fills
     * requested fields a file lacks, so version dirs written under an
     * OLDER, narrower image struct (pre-ADD-COLUMN) read back widened —

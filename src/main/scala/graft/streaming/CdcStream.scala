@@ -1202,31 +1202,85 @@ object CdcStream {
     BucketState.gcVersions(spark, stateDir)
   }
 
-  /** The manifest's DATA segments (horizon rows included, tombstones
-    * excluded — they are not events and must never reach
-    * [[resolveSegments]], where a null-image row would read as a delete
-    * marker).
+  /** One LSM read's inputs, split by reserved bucket:
+    *  - `events`: the keyed rows of every referenced `(version, p ≥ 0)`
+    *    dir, retraction-masked;
+    *  - `horizonRows`: the truncate rows of the `p = -1` dirs — None when
+    *    the manifest has no horizon bucket (no truncate ever reached the
+    *    store: the horizon is `Long.MinValue` and no scan runs);
+    *  - `tombs`: the per-key retraction horizon `(_rkey, rpos)` — max over
+    *    duplicate tombstones — or None on a retraction-free store.
     */
-  private def lsmDataBuckets(m: BucketState.Manifest): Map[Long, Set[Long]] =
-    m.buckets.view.filterKeys(_ != LsmRetractBucket).toMap
+  private final case class LsmSegments(events: DataFrame,
+                                       horizonRows: Option[DataFrame],
+                                       tombs: Option[DataFrame]) {
+    /** The truncate horizon at `through` (the largest truncate position
+      * ≤ it, `Long.MinValue` if none) as a one-row `h` frame.
+      */
+    def horizon(through: Long = Long.MaxValue): Option[DataFrame] =
+      horizonRows.map(_.filter(col("pos") <= through)
+        .agg(coalesce(max(col("pos")), lit(Long.MinValue)).as("h")))
+  }
 
-  /** The per-key retraction horizon `(key, rpos)` — max over duplicate
-    * tombstones — or None on a retraction-free store (the zero-cost
-    * common case).
+  /** The LSM segment reader every LSM read goes through. The data rows
+    * are ONE parquet relation over every referenced `(version, p ≥ 0)`
+    * leaf dir — no `basePath`, so no `v`/`p` columns appear — and Spark
+    * packs the small bucket files into about `cores` splits (a relation
+    * per version would cost a schema-inference job and its own tasks per
+    * segment). The schema comes from one parquet footer read on the
+    * driver, pinned for every scan, and the leaf dirs are listed on the
+    * driver, so the read's job count does not grow with the segment
+    * count. The horizon and tombstone buckets are their own tiny scans,
+    * run only when the manifest holds them. `empty` is the zero-state of
+    * an empty store.
     */
-  private def lsmRetractions(spark: SparkSession, stateDir: String,
-                             m: BucketState.Manifest): Option[DataFrame] =
-    if (!m.buckets.contains(LsmRetractBucket)) None
-    else Some(
-      BucketState.readBuckets(spark, stateDir,
-          m.buckets.view.filterKeys(_ == LsmRetractBucket).toMap,
-          sys.error("unreachable — bucket present"))
-        .groupBy(col("key")).agg(max(col("pos")).as("rpos"))
-        .withColumnRenamed("key", "_rkey"))
+  private def readLsm(spark: SparkSession, stateDir: String,
+                      m: BucketState.Manifest, empty: => DataFrame): LsmSegments = {
+    val leaves = m.buckets.toSeq
+      .flatMap { case (b, vs) => vs.map(v => (b, v)) }.sortBy(_.swap)
+    if (leaves.isEmpty) return LsmSegments(empty, None, None)
+    def dir(leaf: (Long, Long)) = s"$stateDir/v=${leaf._2}/p=${leaf._1}"
+    val schema = segmentSchema(spark, dir(leaves.last))
+    // a relation over more root paths than this lists them with a Spark
+    // job, one task per path: past it, one relation per chunk, unioned
+    val dirsPerScan = math.max(1, spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
+    def scan(inBucket: Long => Boolean): Option[DataFrame] =
+      leaves.filter(l => inBucket(l._1)).map(dir).grouped(dirsPerScan)
+        .map(spark.read.schema(schema).parquet(_: _*)).reduceOption(_.union(_))
+    val tombs = scan(_ == LsmRetractBucket).map(_
+      .groupBy(col("key")).agg(max(col("pos")).as("rpos"))
+      .withColumnRenamed("key", "_rkey"))
+    val events = scan(_ >= 0).getOrElse(spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
+    LsmSegments(maskRetracted(events, tombs),
+      scan(_ == -1L).map(_.select(col("pos"))), tombs)
+  }
+
+  /** A segment dir's schema, off one parquet footer read on the driver
+    * (a plain `spark.read.parquet` infers it with a Spark job). Spark
+    * stores its row schema in every footer it writes; a footer without
+    * one falls back to that inference.
+    */
+  private def segmentSchema(spark: SparkSession,
+                            leafDir: String): org.apache.spark.sql.types.StructType = {
+    val file = hadoopFs(spark, leafDir)
+      .listStatus(new org.apache.hadoop.fs.Path(leafDir))
+      .map(_.getPath).find(_.getName.endsWith(".parquet"))
+    file.flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f,
+          spark.sparkContext.hadoopConfiguration))
+      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally r.close()
+    }.map(org.apache.spark.sql.types.DataType.fromJson(_)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .getOrElse(spark.read.parquet(leafDir).schema)
+  }
 
   /** Erase rows at or below each key's retraction horizon (broadcast
-    * left join — takedown sets are bounded). Horizon rows (null key)
-    * never match and always survive.
+    * left join — takedown sets are bounded).
     */
   private def maskRetracted(segs: DataFrame,
                             tombs: Option[DataFrame]): DataFrame =
@@ -1236,27 +1290,23 @@ object CdcStream {
         .drop("_rkey", "rpos")
     }
 
-  /** Per-key resolution across a union of LSM segments — the read-side
-    * half of the fold: max-pos winner per key, rows at-or-below the
-    * accumulated horizon erased, delete markers retained, one horizon
-    * row out. Buckets partition the keyspace, so per-bucket resolution ≡
-    * global resolution (the same argument as the replace-merge).
+  /** Per-key resolution across LSM segments — the read-side half of the
+    * fold: max-pos winner per key, winners at or below `horizon` (a
+    * one-row `h` frame, broadcast; None ≡ `Long.MinValue`) erased, delete
+    * markers retained. Buckets partition the keyspace, so per-bucket
+    * resolution ≡ global resolution (the same argument as the
+    * replace-merge).
     */
-  private[graft] def resolveSegments(segs: DataFrame): DataFrame = {
-    val keyType = segs.schema("key").dataType
-    val imageType = segs.schema("after").dataType
-    val horizon = segs.filter(col("key").isNull)
-      .agg(coalesce(max(col("pos")), lit(Long.MinValue)).as("h"))
-    val events = segs.filter(col("key").isNotNull)
+  private[graft] def resolveSegments(events: DataFrame,
+                                     horizon: Option[DataFrame]): DataFrame = {
+    val winners = events
       .groupBy(col("key"))
       .agg(max_by(struct(col("pos"), col("after")), col("pos")).as("m"))
       .select(col("key"), col("m.pos").as("pos"), col("m.after").as("after"))
-      .crossJoin(broadcast(horizon))
+    horizon.fold(winners.withColumn("h", lit(Long.MinValue)))(h =>
+        winners.crossJoin(broadcast(h)))
       .filter(col("pos") > col("h"))
       .select(col("key"), col("pos"), col("after"))
-    events.unionByName(horizon.select(
-      lit(null).cast(keyType).as("key"), col("h").as("pos"),
-      lit(null).cast(imageType).as("after")))
   }
 
   /** Replica snapshot of an LSM state dir (manifest-resolved, segments
@@ -1265,18 +1315,10 @@ object CdcStream {
   def partitionedSnapshotLsm(spark: SparkSession, stateDir: String,
                              spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
                              imageType: org.apache.spark.sql.types.StructType =
-                               CdcSchema.invoiceType): DataFrame =
-    snapshotOfFor(lsmState(spark, stateDir, spec, imageType), spec)
-
-  private def lsmState(spark: SparkSession, stateDir: String,
-                       spec: CdcSchema.CdcTableSpec,
-                       imageType: org.apache.spark.sql.types.StructType): DataFrame = {
-    val m = readManifest(spark, stateDir)
-    resolveSegments(maskRetracted(
-      BucketState.readBuckets(spark, stateDir, lsmDataBuckets(m),
-        emptyStateFor(spark, spec, imageType).withColumn("p", lit(-1L)))
-        .drop("p"),
-      lsmRetractions(spark, stateDir, m)))
+                               CdcSchema.invoiceType): DataFrame = {
+    val segs = readLsm(spark, stateDir, readManifest(spark, stateDir),
+      emptyStateFor(spark, spec, imageType))
+    snapshotOfFor(resolveSegments(segs.events, segs.horizon()), spec)
   }
 
   /** Time-travel snapshot: the replica as of position `asOfPos`, read
@@ -1310,14 +1352,11 @@ object CdcStream {
     // the retraction mask applies UNFILTERED by the as-of point: erased
     // history must not resurrect in any time-travel view (see the
     // retraction section — per-key truncate semantics)
-    val m = readManifest(spark, stateDir)
+    val segs = readLsm(spark, stateDir, readManifest(spark, stateDir),
+      emptyStateFor(spark, spec, imageType))
     snapshotOfFor(
-      resolveSegments(maskRetracted(
-        BucketState.readBuckets(spark, stateDir, lsmDataBuckets(m),
-          emptyStateFor(spark, spec, imageType).withColumn("p", lit(-1L)))
-          .drop("p"),
-        lsmRetractions(spark, stateDir, m))
-        .filter(col("pos") <= asOfPos)),
+      resolveSegments(segs.events.filter(col("pos") <= asOfPos),
+        segs.horizon(asOfPos)),
       spec)
   }
 
@@ -1354,29 +1393,25 @@ object CdcStream {
     // masked on BOTH prefix views: a retracted key reports no net change
     // (a retraction is not a CDC event — downstream stores receive the
     // takedown out-of-band; see the retraction section)
-    val m = readManifest(spark, stateDir)
-    val segs = maskRetracted(
-        BucketState.readBuckets(spark, stateDir, lsmDataBuckets(m),
-          emptyStateFor(spark, spec, imageType).withColumn("p", lit(-1L)))
-          .drop("p"),
-        lsmRetractions(spark, stateDir, m))
-      .filter(col("pos") <= toPos)
+    val segs = readLsm(spark, stateDir, readManifest(spark, stateDir),
+      emptyStateFor(spark, spec, imageType))
     // BOTH prefix winners from ONE keyed aggregation over ONE segment
     // scan (two resolveSegments calls would read the log twice): the
     // fromPos winner uses a conditional ordering column — rows past
-    // fromPos order as null and are never chosen — and the horizons come
-    // from one tiny agg over the key-null rows, broadcast.
-    val h = broadcast(segs.filter(col("key").isNull).agg(
-      coalesce(max(when(col("pos") <= fromPos, col("pos"))), lit(Long.MinValue))
-        .as("h1"),
-      coalesce(max(col("pos")), lit(Long.MinValue)).as("h2")))
-    segs.filter(col("key").isNotNull)
+    // fromPos order as null and are never chosen — and both horizons
+    // come from one tiny agg over the horizon bucket, broadcast.
+    val winners = segs.events.filter(col("pos") <= toPos)
       .groupBy(col("key"))
       .agg(
         max_by(struct(col("pos"), col("after")),
           when(col("pos") <= fromPos, col("pos"))).as("w1"),
         max_by(struct(col("pos"), col("after")), col("pos")).as("w2"))
-      .crossJoin(h)
+    segs.horizonRows.map(_.filter(col("pos") <= toPos).agg(
+        coalesce(max(when(col("pos") <= fromPos, col("pos"))), lit(Long.MinValue))
+          .as("h1"),
+        coalesce(max(col("pos")), lit(Long.MinValue)).as("h2")))
+      .fold(winners.withColumn("h1", lit(Long.MinValue))
+        .withColumn("h2", lit(Long.MinValue)))(h => winners.crossJoin(broadcast(h)))
       .select(col("key"),
         when(col("w1.pos") > col("h1"), col("w1.after")).as("old_img"),
         when(col("w2.pos") > col("h2"), col("w2.after")).as("new_img"))
@@ -1415,25 +1450,25 @@ object CdcStream {
   }
 
   /** Fold an LSM state's segment lists back to one resolved version per
-    * bucket: below-horizon rows are erased for good, markers and the
-    * horizon row survive, and the whole manifest repoints in one atomic
-    * rename (same single-writer contract as `BucketState.compact`; run
-    * from the stream's thread or a maintenance window). The recorded
-    * (version, fingerprint) pair is preserved so a crash-replay of the
-    * last data batch still recognizes itself post-compaction.
-    */
-  /** Fold every segment referenced at call time into one version dir and
-    * swap the manifest to it. SAFE TO RUN CONCURRENTLY with the apply
-    * path (this is the "compaction off the hot path" contract): the fold
-    * reads a manifest snapshot outside any lock, and the final swap runs
-    * under the per-state-dir manifest lock against a FRESH read,
-    * replacing only the segments it actually folded — segments a
-    * concurrent batch appended mid-fold survive verbatim (resolution is
-    * max-pos-per-key and max-horizon, both associative, so
-    * resolve(folded ∪ late) ≡ resolve(old ∪ late)). The replay
-    * fingerprint is taken from the fresh read, never the stale snapshot,
-    * so a concurrent batch's progress record is preserved. `beforeSwap`
-    * is a test seam: it runs after the fold, before the locked swap.
+    * bucket: below-horizon rows are erased for good, delete markers and
+    * retraction tombstones survive, and the whole manifest repoints in one
+    * atomic rename. A horizon row is written only when a truncate was
+    * folded — an absent `p = -1` bucket already reads as `Long.MinValue`.
+    * The recorded (version, fingerprint) pair is preserved so a
+    * crash-replay of the last data batch still recognizes itself
+    * post-compaction.
+    *
+    * SAFE TO RUN CONCURRENTLY with the apply path (this is the
+    * "compaction off the hot path" contract): the fold reads a manifest
+    * snapshot outside any lock, and the final swap runs under the
+    * per-state-dir manifest lock against a FRESH read, replacing only the
+    * segments it actually folded — segments a concurrent batch appended
+    * mid-fold survive verbatim (resolution is max-pos-per-key and
+    * max-horizon, both associative, so resolve(folded ∪ late) ≡
+    * resolve(old ∪ late)). The replay fingerprint is taken from the fresh
+    * read, never the stale snapshot, so a concurrent batch's progress
+    * record is preserved. `beforeSwap` is a test seam: it runs after the
+    * fold, before the locked swap.
     */
   def compactLsm(spark: SparkSession, stateDir: String, nBuckets: Int,
                  spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
@@ -1441,7 +1476,7 @@ object CdcStream {
     val m = readManifest(spark, stateDir)
     // nothing to fold on an empty store, or one holding only retraction
     // tombstones (a takedown can precede the first data batch)
-    if (m.buckets.isEmpty || lsmDataBuckets(m).isEmpty) return
+    if (!m.buckets.keys.exists(_ != LsmRetractBucket)) return
     val bucketOf = bucketFn(nBuckets) _
     val newVersion = BucketState.reserveVersion(
       stateDir, m.buckets.values.flatten.max + 1)
@@ -1450,11 +1485,16 @@ object CdcStream {
       // disk here; tombstones themselves are read separately (they are
       // not events — a null-image tombstone reaching resolveSegments
       // would read as a delete marker)
-      val tombsOpt = lsmRetractions(spark, stateDir, m)
-      val resolved = resolveSegments(maskRetracted(
-          BucketState.readBuckets(spark, stateDir, lsmDataBuckets(m),
-            sys.error("unreachable — manifest non-empty")).drop("p"),
-          tombsOpt))
+      val segs = readLsm(spark, stateDir, m,
+        sys.error("unreachable — manifest non-empty"))
+      val horizon = segs.horizon()
+      val winners = resolveSegments(segs.events, horizon)
+      // (a `Long.MinValue` row — written by older folds — is dropped too)
+      val resolved = horizon.fold(winners)(h => winners.unionByName(h
+        .filter(col("h") > Long.MinValue).select(
+          lit(null).cast(winners.schema("key").dataType).as("key"),
+          col("h").as("pos"),
+          lit(null).cast(winners.schema("after").dataType).as("after"))))
         .persist()
       try {
         val keyType = resolved.schema("key").dataType
@@ -1479,7 +1519,7 @@ object CdcStream {
         // narrow row per lifetime takedown (the standing-mask stance the
         // near-dup index's keepTombstones documents); the rows the
         // horizon already covers DO leave the disk here.
-        val keptTombs = tombsOpt.map(_
+        val keptTombs = segs.tombs.map(_
           .select(col("_rkey").as("key"), col("rpos").as("pos"),
             lit(null).cast(resolved.schema("after").dataType).as("after"),
             lit(LsmRetractBucket).as("p")))

@@ -49,6 +49,42 @@ class PlanRegressionSpec extends AnyFunSuite {
     assert(p.contains("BroadcastNestedLoopJoin") || p.contains("BroadcastExchange"), p)
   }
 
+  test("LSM snapshot: one parquet scan over every segment, partial max_by before the key shuffle") {
+    import graft.streaming.{BucketState, CdcStream}
+    def env(pos: Long, key: Int) =
+      s"""{"payload":{"before":null,"after":{"order_id":$key,"invoice_number":$pos},"source":{"ts_ms":$pos,"pos":$pos,"db":"dev","table":"invoice"},"op":"c","ts_ms":$pos}}"""
+    val trunc =
+      """{"payload":{"before":null,"after":null,"source":{"ts_ms":25,"pos":25},"op":"t","ts_ms":25}}"""
+    val state = java.nio.file.Files.createTempDirectory("graft-plan-lsm").toString
+    def append(batchId: Long, lines: Seq[String]): Unit =
+      CdcStream.applyLsmBatch(graft.cdc.Changelog.fromEnvelopeJson(
+          spark.createDataset(lines)(org.apache.spark.sql.Encoders.STRING).toDF("value")),
+        batchId, s"$state-audit", state, 4, graft.cdc.CdcSchema.invoiceSpec)
+    def fileScans(p: String) =
+      p.split("\n").filter(_.contains("FileScan parquet")).toSeq
+    (0 until 3).foreach(b => append(b, (1 to 12).map(k => env(b * 10L + k, k))))
+    assert(BucketState.readManifest(spark, state).buckets.values.forall(_.size == 3))
+
+    val p = plan(CdcStream.partitionedSnapshotLsm(spark, state))
+    assert(fileScans(p).size === 1, s"expected one scan over all segments:\n$p")
+    assert(!p.contains("Union"), s"per-version scans are unioned:\n$p")
+    val shuffle = p.indexOf("Exchange hashpartitioning(key")
+    assert(shuffle >= 0 && p.indexOf("partial_max_by", shuffle) > shuffle,
+      s"no map-side partial max_by below the key shuffle:\n$p")
+    // no horizon bucket: the horizon is a constant, not a scan
+    assert(!p.contains("Broadcast"), p)
+
+    // truncate horizon must be a broadcast, never a collected literal
+    append(3, Seq(trunc, env(31, 1)))
+    val pt = plan(CdcStream.partitionedSnapshotLsm(spark, state))
+    val (horizon, data) = fileScans(pt).partition(_.contains("p=-1"))
+    assert(data.size === 1 && horizon.size === 1, pt)
+    assert(pt.contains("BroadcastNestedLoopJoin") || pt.contains("BroadcastExchange"), pt)
+    assert(!pt.contains("Union"), pt)
+    graft.Shared.deleteDirTree(state)
+    graft.Shared.deleteDirTree(s"$state-audit")
+  }
+
   test("ANN brute force: pruned scan + broadcast query + top-k") {
     val p = plan(Similarity.annCosineTopk(spark, sf))
     assert(p.contains("TakeOrderedAndProject"), p)

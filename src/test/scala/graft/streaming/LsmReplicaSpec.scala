@@ -1,7 +1,11 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -199,5 +203,120 @@ class LsmReplicaSpec extends AnyFunSuite {
     val snap = CdcStream.partitionedSnapshotLsm(spark, s"$base/state")
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
     assert(snap === Seq((2, 20)))
+  }
+
+  private def batchOf(lines: Seq[String]): DataFrame =
+    graft.cdc.Changelog.fromEnvelopeJson(
+      spark.createDataset(lines)(Encoders.STRING).toDF("value"))
+
+  private def pairs(df: DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue)).toSet
+
+  test("compaction writes a horizon row only when a truncate was folded") {
+    def horizonRows(state: String): Long =
+      BucketState.readManifest(spark, state).buckets.get(-1L).fold(0L)(vs =>
+        spark.read.parquet(vs.toSeq.map(v => s"$state/v=$v/p=-1"): _*).count())
+    Seq(false, true).foreach { withTruncate =>
+      val base = Files.createTempDirectory("graft-lsm-horizon").toString
+      val (state, audit) = (s"$base/state", s"$base/audit")
+      def append(batchId: Long, lines: Seq[String]): Unit =
+        CdcStream.applyLsmBatch(batchOf(lines), batchId, audit, state, 4,
+          graft.cdc.CdcSchema.invoiceSpec)
+      def snap() = pairs(CdcStream.partitionedSnapshotLsm(spark, state))
+      def asof(p: Long) = pairs(CdcStream.partitionedSnapshotLsmAsOf(spark, state, p))
+      def feed(p1: Long, p2: Long) =
+        CdcStream.lsmChangesBetween(spark, state, p1, p2).collect()
+          .map(r => (r.getInt(0), r.getString(1))).toSet
+      // k1=10@1 k2=20@2 k3=30@3 | k1=11@4 k3 deleted@5 [TRUNCATE@6] k4=40@7 k2=21@8
+      append(0, Seq(env(1, 1, Some(10)), env(2, 2, Some(20)), env(3, 3, Some(30))))
+      append(1, Seq(env(4, 1, Some(11)), env(5, 3, None)) ++
+        (if (withTruncate) Seq(trunc(6)) else Nil) ++
+        Seq(env(7, 4, Some(40)), env(8, 2, Some(21))))
+      val live = if (withTruncate) Set((2L, 21L), (4L, 40L))
+                 else Set((1L, 11L), (2L, 21L), (4L, 40L))
+      assert(snap() === live)
+      assert(asof(5) === Set((1L, 11L), (2L, 20L)))
+      assert(horizonRows(state) === (if (withTruncate) 1L else 0L))
+      val before = (snap(), asof(8), feed(8, 8))
+
+      CdcStream.compactLsm(spark, state, nBuckets = 4)
+      assert(BucketState.readManifest(spark, state).buckets.contains(-1L) === withTruncate,
+        "a -1 bucket must exist exactly when a truncate was folded")
+      assert(horizonRows(state) === (if (withTruncate) 1L else 0L))
+      assert((snap(), asof(8), feed(8, 8)) === before)
+
+      // after the fold: k6's straggler @2 sits under the truncate (erased
+      // only when the folded horizon row survived), k5 is born @9
+      append(2, Seq(env(2, 6, Some(60)), env(9, 5, Some(50))))
+      val straggler = if (withTruncate) Set.empty[(Long, Long)] else Set((6L, 60L))
+      assert(snap() === live + ((5L, 50L)) ++ straggler)
+      assert(asof(8) === live ++ straggler)
+      assert(feed(8, 9) === Set((5, "i")))
+      graft.Shared.deleteDirTree(base)
+    }
+  }
+
+  /** Spark jobs `body` starts on this thread. The listener bus delivers
+    * events in order, so once a marker job run after `body` is seen,
+    * every job of `body` has been counted.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"lsm-jobs-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      body
+      sc.setJobGroup(s"$group-marker", "listener drain marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus never drained")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a snapshot read runs the same jobs at 1 and 6 segments per bucket") {
+    // 6 batches, each touching every key of every bucket: updates and
+    // deletes interleave so the read must resolve across segments
+    val batches = (0 until 6).map(b => (1 to 40).map { k =>
+      val pos = b * 100L + k
+      if ((k + b) % 7 == 0) env(pos, k, None) else env(pos, k, Some(b * 1000 + k))
+    })
+    val base = Files.createTempDirectory("graft-lsm-jobs").toString
+    // 8 buckets × 6 segments = 48 leaf dirs: past the 32 root paths a
+    // single parquet relation would list with a distributed Spark job
+    CdcStream.applyLsmBatch(batchOf(batches.flatten), 0, s"$base/audit1",
+      s"$base/one", 8, graft.cdc.CdcSchema.invoiceSpec)
+    batches.zipWithIndex.foreach { case (b, i) =>
+      CdcStream.applyLsmBatch(batchOf(b), i, s"$base/audit6", s"$base/six", 8,
+        graft.cdc.CdcSchema.invoiceSpec)
+    }
+    def segments(state: String) =
+      BucketState.readManifest(spark, state).buckets.values.map(_.size)
+    assert(segments(s"$base/one").forall(_ == 1))
+    assert(segments(s"$base/six").forall(_ == 6) && segments(s"$base/six").size == 8)
+
+    val jobs1 = jobsOf(CdcStream.partitionedSnapshotLsm(spark, s"$base/one").count())
+    val jobs6 = jobsOf(CdcStream.partitionedSnapshotLsm(spark, s"$base/six").count())
+    assert(jobs1 === jobs6, s"jobs per read grew with segments: $jobs1 -> $jobs6")
+
+    val oneShot = pairs(graft.cdc.CdcApply.snapshot(batchOf(batches.flatten)))
+    assert(oneShot.nonEmpty)
+    Seq("one", "six").foreach { st =>
+      assert(pairs(CdcStream.partitionedSnapshotLsm(spark, s"$base/$st")) === oneShot, st)
+    }
+    graft.Shared.deleteDirTree(base)
   }
 }
