@@ -43,16 +43,6 @@ object IncrementalDedup {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       survivorSchema.add("p", LongType))
 
-  /** Stored tombstone ids `(doc_id)` — one pruned read of the reserved
-    * bucket (see [[Retraction]]).
-    */
-  private def storedTombs(spark: SparkSession, indexDir: String,
-                          m: BucketState.Manifest): DataFrame =
-    BucketState.readBuckets(spark, indexDir,
-      m.buckets.view.filterKeys(_ == Retraction.TombBucket).toMap,
-      emptyIdx(spark))
-      .select(col("doc_id"))
-
   /** Admit `docs` (columns `doc_id`, `text`) against the index at
     * `indexDir`: returns the survivors — one `(fp, doc_id)` row per
     * content fingerprint never seen before, min doc_id within the batch —
@@ -132,8 +122,11 @@ object IncrementalDedup {
               // r14 read path, restored (Retraction.hasTombs)
               val tombs: Option[DataFrame] =
                 if (retract.isEmpty && !Retraction.hasTombs(m)) None
-                else Some(retract.fold(storedTombs(spark, indexDir, m))(r =>
-                  storedTombs(spark, indexDir, m).unionByName(r).distinct()))
+                else {
+                  val stored = Retraction.storedTombs(spark, indexDir, m,
+                    emptyIdx(spark), "doc_id")
+                  Some(retract.fold(stored)(stored.unionByName(_).distinct()))
+                }
               val prevLive = Retraction.maskIfAny(prev, tombs, "doc_id")
 
               val survivors = batchFps
@@ -277,7 +270,8 @@ object IncrementalDedup {
       // stored tombstone: the surviving registry (mask skipped entirely
       // on a takedown-free store — Retraction.hasTombs)
       Retraction.maskIfAny(all.filter(col("fp").isNotNull),
-          if (Retraction.hasTombs(m)) Some(storedTombs(spark, indexDir, m))
+          if (Retraction.hasTombs(m))
+            Some(Retraction.storedTombs(spark, indexDir, m, emptyIdx(spark), "doc_id"))
           else None, "doc_id")
         .select(col("fp"), col("doc_id"))
         .localCheckpoint(eager = true)

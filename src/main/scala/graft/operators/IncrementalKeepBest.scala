@@ -124,16 +124,6 @@ object IncrementalKeepBest {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       rowSchema.add("p", LongType))
 
-  /** Stored tombstone ids `(doc_id)` — one pruned read of the reserved
-    * bucket (see [[Retraction]]).
-    */
-  private def storedTombs(spark: SparkSession, indexDir: String,
-                          m: BucketState.Manifest): DataFrame =
-    BucketState.readBuckets(spark, indexDir,
-      m.buckets.view.filterKeys(_ == Retraction.TombBucket).toMap,
-      emptyIdx(spark))
-      .select(col("doc_id"))
-
   /** Driver union-find over a collected edge list — min-id roots, path
     * compression; exactly [[Dedup.clustersOf]]'s answer ((doc_id,
     * cluster) over `universe`, cluster = min reachable id, singletons
@@ -307,8 +297,11 @@ object IncrementalKeepBest {
         // None on a takedown-free store (mask skipped — Retraction.hasTombs)
         val tombs: Option[DataFrame] =
           if (retract.isEmpty && !Retraction.hasTombs(m)) None
-          else Some(retract.fold(storedTombs(spark, indexDir, m))(r =>
-            storedTombs(spark, indexDir, m).unionByName(r).distinct()))
+          else {
+            val stored = Retraction.storedTombs(spark, indexDir, m,
+              emptyIdx(spark), "doc_id")
+            Some(retract.fold(stored)(stored.unionByName(_).distinct()))
+          }
         BucketState.checkBatch(m, batchId, batchFp) match {
           case BucketState.AlreadyCommitted => ()
           case BucketState.Proceed(proposed) =>
@@ -810,7 +803,8 @@ object IncrementalKeepBest {
     // mask skipped on a takedown-free store (Retraction.hasTombs)
     val members = Retraction.maskIfAny(
         all.filter(col("band") === -2L),
-        if (Retraction.hasTombs(m)) Some(storedTombs(spark, indexDir, m))
+        if (Retraction.hasTombs(m))
+          Some(Retraction.storedTombs(spark, indexDir, m, emptyIdx(spark), "doc_id"))
         else None, "doc_id")
       .select(col("doc_id"), col("label"), col("score"))
     val fwdAll = all.filter(col("band") === -3L)

@@ -88,18 +88,10 @@ object IncrementalNearDup {
 
   private val admittedSchema = StructType(Seq(StructField("doc_id", LongType)))
 
-  /** Stored tombstone ids `(doc_id)` — one pruned read of the reserved
-    * bucket (see [[Retraction]] for the takedown design).
-    */
-  private def storedTombs(spark: SparkSession, indexDir: String,
-                          m: BucketState.Manifest): DataFrame = {
-    val emptyIdx = spark.createDataFrame(
+  private def emptyIdx(spark: SparkSession): DataFrame =
+    spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       bandSchema.add("p", LongType))
-    BucketState.readBuckets(spark, indexDir,
-      m.buckets.view.filterKeys(_ == Retraction.TombBucket).toMap, emptyIdx)
-      .select(col("doc_id"))
-  }
 
   private def md5Long60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
@@ -278,15 +270,12 @@ object IncrementalNearDup {
     */
   def preReadTouched(spark: SparkSession, indexDir: String,
                      bandsSuperset: DataFrame, nBuckets: Int = 64): DataFrame = {
-    val emptyIdx = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      bandSchema.add("p", LongType))
     val (m, lease) = BucketState.readManifestLeased(spark, indexDir)
     try {
       val groups0 = bandsSuperset.select(col("band"), col("bh")).distinct()
       val touched0 = groups0.select(bucketOf(nBuckets).as("p")).distinct()
         .collect().map(_.getLong(0)).toSet
-      BucketState.readStoreView(spark, indexDir, m, emptyIdx)
+      BucketState.readStoreView(spark, indexDir, m, emptyIdx(spark))
         .filter(col("p").isin(touched0.toSeq: _*))
         .filter(col("band") >= 0)
         .select(col("band"), col("bh"), col("doc_id"))
@@ -402,9 +391,6 @@ object IncrementalNearDup {
                             replayFloor: Option[Long] = None,
                             prevBandsIn: Option[DataFrame] = None)
       : (DataFrame, DataFrame) = {
-    val emptyIdx = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      bandSchema.add("p", LongType))
     def ownRowsExcluded(df: DataFrame, idCol: Column): DataFrame =
       replayFloor.map(f => df.filter(idCol < lit(f))).getOrElse(df)
     val batchGroups = bands.select(col("band"), col("bh")).distinct()
@@ -413,7 +399,7 @@ object IncrementalNearDup {
     // batch-sized delta leaf; the touched/sig/sk bucket prunes become
     // in-memory filters over the cached rows — same rows, same plans
     // downstream (StoreViewSpec pins view ≡ direct)
-    val view = BucketState.readStoreView(spark, indexDir, m, emptyIdx)
+    val view = BucketState.readStoreView(spark, indexDir, m, emptyIdx(spark))
     // surviving pre-batch stored band rows of the touched buckets —
     // UNRESTRICTED (no group semi-join): the guard consumes this form
     // directly so its job is two stages (partial + final aggregate over
@@ -562,19 +548,13 @@ object IncrementalNearDup {
       // checkpoint is this frame's ONLY consumer.
       // A pair found in several bands appears once per band here; the
       // pre-verify distinct() pays one full pair-set exchange to avoid
-      // re-verifying duplicates, and the fused edge checkpoint's own
-      // distinct dedupes the OUTPUT either way — so dropping it trades
-      // duplicate sig-join/verify compute for one exchange fewer
-      // (bit-identical results; IncrementalCapSpec + the oracle gate
-      // hold under both). Conf'd for the soak A/B; default keeps the
-      // measured r16 shape.
-      val dedupCand = spark.conf
-        .getOption("spark.graft.nd.dedupCandidates").forall(_.toBoolean)
-      val cand0raw = elig.as("b").join(prevBands.as("i"),
+      // re-verifying duplicates (the fused edge checkpoint's own distinct
+      // dedupes the OUTPUT either way).
+      val cand0 = elig.as("b").join(prevBands.as("i"),
           col("b.band") === col("i.band") && col("b.bh") === col("i.bh") &&
             col("i.doc_id") < col("b.doc_id"))
         .select(col("b.doc_id").as("doc_id"), col("i.doc_id").as("seen_id"))
-      val cand0 = if (dedupCand) cand0raw.distinct() else cand0raw
+        .distinct()
       // the >64-bucket fallback consumes cand twice (probe + verify) —
       // persist it there; the fused path's single consumer needs none
       val cand = if (fusedProbe) cand0 else cand0.persist(Ser)
@@ -654,12 +634,12 @@ object IncrementalNearDup {
         val seenSigs = view.filter(col("p").isin(sigBuckets.toSeq: _*))
           .filter(col("band") === -1L)
           .select(col("doc_id").as("seen_id"), col("sig").as("seen_sig"))
-        val candBraw = elig.as("x").join(
+        val candB = elig.as("x").join(
             bands.select(col("band"), col("bh"), col("doc_id")).as("y"),
             col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
               col("y.doc_id") < col("x.doc_id"))
           .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        val candB = if (dedupCand) candBraw.distinct() else candBraw
+          .distinct()
         // ONE tagged frame, ONE checkpoint action (r14 ran two — the
         // traced 0.9 + 0.8 s/drop pair): both edge kinds verify in the
         // same job and land in the same truncated-lineage blocks; the
@@ -739,8 +719,11 @@ object IncrementalNearDup {
         // on a takedown-free store (mask skipped — Retraction.hasTombs)
         val tombs: Option[DataFrame] =
           if (retract.isEmpty && !Retraction.hasTombs(m)) None
-          else Some(retract.fold(storedTombs(spark, indexDir, m))(r =>
-            storedTombs(spark, indexDir, m).unionByName(r).distinct()))
+          else {
+            val stored = Retraction.storedTombs(spark, indexDir, m,
+              emptyIdx(spark), "doc_id")
+            Some(retract.fold(stored)(stored.unionByName(_).distinct()))
+          }
         BucketState.checkBatch(m, batchId, batchFp) match {
           case BucketState.AlreadyCommitted =>
             // a replayed batch still owes its consumer the edges (the
@@ -898,7 +881,8 @@ object IncrementalNearDup {
     val (m, lease) = BucketState.readManifestLeased(spark, indexDir)
     try Retraction.maskIfAny(
         spark.read.schema(admittedSchema).parquet(s"$indexDir/admitted/*"),
-        if (Retraction.hasTombs(m)) Some(storedTombs(spark, indexDir, m))
+        if (Retraction.hasTombs(m))
+          Some(Retraction.storedTombs(spark, indexDir, m, emptyIdx(spark), "doc_id"))
         else None, "doc_id")
       .localCheckpoint(eager = true)
     finally BucketState.releaseReads(lease)

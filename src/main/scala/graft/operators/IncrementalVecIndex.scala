@@ -467,16 +467,6 @@ object IncrementalVecIndex {
     encodeWithParams(spark, cachedParams(spark, indexDir, frozen = true), clean)
   }
 
-  /** Stored tombstone ids `(vec_id)` — one pruned read of the reserved
-    * bucket (see [[Retraction]]).
-    */
-  private def storedTombs(spark: SparkSession, indexDir: String,
-                          m: BucketState.Manifest): DataFrame =
-    BucketState.readBuckets(spark, indexDir,
-      m.buckets.view.filterKeys(_ == Retraction.TombBucket).toMap,
-      emptyIdx(spark))
-      .select(col("vec_id"))
-
   /** Every committed code row `(cell, vec_id, codes)`, minus every
     * stored takedown — the surviving searchable set. Materialized under
     * a read lease so a concurrent fold's GC cannot sweep the version
@@ -489,7 +479,8 @@ object IncrementalVecIndex {
     try Retraction.maskIfAny(
         BucketState.readBuckets(spark, indexDir, m.buckets, emptyIdx(spark))
           .filter(col("cell") >= 0),
-        if (Retraction.hasTombs(m)) Some(storedTombs(spark, indexDir, m))
+        if (Retraction.hasTombs(m))
+          Some(Retraction.storedTombs(spark, indexDir, m, emptyIdx(spark), "vec_id"))
         else None, "vec_id")
       .select(col("cell"), col("vec_id"), col("codes"))
       .localCheckpoint(eager = true)
@@ -550,7 +541,8 @@ object IncrementalVecIndex {
         if (cells <= MaxBuckets) pruned0
         else pruned0.filter(col("cell").isInCollection(probed))
       val idx = Retraction.maskIfAny(prunedRows,
-        if (Retraction.hasTombs(m)) Some(storedTombs(s, indexDir, m))
+        if (Retraction.hasTombs(m))
+          Some(Retraction.storedTombs(s, indexDir, m, emptyIdx(s), "vec_id"))
         else None, "vec_id")
       val base = excludeId.map(id => idx.filter(col("vec_id") =!= id)).getOrElse(idx)
       val tables = Similarity.pqTablesFor(p.codebooks, qvec)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deletion/takedown for the incremental curation stores — the
@@ -86,6 +86,17 @@ private[graft] object Retraction {
     */
   def hasTombs(m: graft.streaming.BucketState.Manifest): Boolean =
     m.buckets.contains(TombBucket)
+
+  /** A store's stored tombstone ids (`idCol`) under manifest `m` — one
+    * pruned read of the reserved bucket. `empty` is the store's
+    * zero-state (with `p`).
+    */
+  def storedTombs(spark: SparkSession, dir: String,
+                  m: graft.streaming.BucketState.Manifest,
+                  empty: => DataFrame, idCol: String): DataFrame =
+    graft.streaming.BucketState.readBuckets(spark, dir,
+      m.buckets.view.filterKeys(_ == TombBucket).toMap, empty)
+      .select(col(idCol))
 
   /** [[mask]] when the caller may have no tombstone relation at all —
     * `None` is the zero-cost identity (no read, no join).

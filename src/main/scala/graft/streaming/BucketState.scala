@@ -3,9 +3,11 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Manifest-committed, bucket-partitioned persistent state — the shared
-  * durability substrate under both the CDC replica ([[CdcStream]]
-  * `runPartitioned`) and incremental corpus dedup
-  * (`operators.IncrementalDedup`).
+  * durability substrate and the one segment reader under every bucketed
+  * store: the CDC replica (replace-merge `runPartitioned` and its
+  * schema-evolving runners, and the LSM replica's `readLsm`) and the four
+  * curation stores (`operators.IncrementalDedup`, `IncrementalNearDup`,
+  * `IncrementalKeepBest`, `IncrementalVecIndex`).
   *
   * Layout: `stateDir/v=<version>/p=<bucket>/` parquet files in immutable version
   * dirs plus a `_CURRENT` manifest mapping each live bucket to the version
@@ -20,7 +22,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * At 100 TB this is the point: an incremental batch touches only the
   * buckets its keys hash into, so both the pre-state read (partition-
   * pruned paths) and the rewrite (one version dir holding only touched
-  * buckets) are O(batch), never O(state).
+  * buckets) are O(batch), never O(state). A read of any number of
+  * segments is one parquet relation per chunk of leaf dirs, with its
+  * schema taken from one footer on the driver ([[readBuckets]]), so
+  * building it runs no Spark job.
   */
 private[graft] object BucketState {
 
@@ -181,8 +186,6 @@ private[graft] object BucketState {
   //    getPersistentRDDs DIFF; view leaves materialized inside that
   //    window must survive it, so their cached-RDD ids are registered in
   //    [[viewRddIds]] and the sweeps subtract them.
-  //
-  // Opt-out: spark.graft.store.readCache=false restores direct reads.
 
   private final class ViewLeaf(val df: DataFrame) {
     @volatile var rddIds: Set[Int] = Set.empty
@@ -209,16 +212,11 @@ private[graft] object BucketState {
     scala.collection.concurrent.TrieMap.empty[String, Set[(Long, Long)]]
   /** Union-tree depth bound before a full reset re-bases the view. */
   private val MaxViewLeaves = 8
-  /** Live views bound — one-shot driver queries churn temp store dirs.
-    * Default; override with spark.graft.store.maxViews for workloads
-    * streaming into more than this many stores at once (each eviction
-    * under pressure costs the victim a full O(store) re-materialization
-    * on its next drop — the warning below is the signal).
+  /** Live views bound — one-shot driver queries churn temp store dirs;
+    * each eviction under pressure costs the victim a full O(store)
+    * re-materialization on its next drop (the warning below says so).
     */
-  private val MaxViewsDefault = 8
-  private def maxViews(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.store.maxViews")
-      .map(_.toInt).getOrElse(MaxViewsDefault)
+  private val MaxViews = 8
   /** Recency window (ns) inside which an evicted view counts as LIVE —
     * evicting one means the cache bound is defeated, not that a stale
     * one-shot dir aged out.
@@ -293,15 +291,11 @@ private[graft] object BucketState {
     (storeViews.keys ++ lastSeen.keys).toList.distinct.foreach(invalidateView)
 
   /** The store's rows under manifest `m` as a session-cached frame (all
-    * buckets, `p` column included — callers filter). Falls back to a
-    * direct [[readBuckets]] when disabled. See the section comment for
-    * the maintenance and safety story.
+    * buckets, `p` column included — callers filter). See the section
+    * comment for the maintenance and safety story.
     */
   def readStoreView(spark: SparkSession, stateDir: String, m: Manifest,
                     empty: => DataFrame): DataFrame = {
-    if (!spark.conf.getOption("spark.graft.store.readCache")
-          .forall(_.toBoolean))
-      return readBuckets(spark, stateDir, m.buckets, empty)
     val want: Set[(Long, Long)] = m.buckets.toSeq
       .flatMap { case (b, vs) => vs.map(v => (v, b)) }.toSet
     if (want.isEmpty) return empty
@@ -366,18 +360,17 @@ private[graft] object BucketState {
     // queries): evict the least-recently-used OTHER dir, outside our
     // lock — invalidateView takes the victim's own. A victim used within
     // the live window means MORE streams than slots — the cache is being
-    // defeated, every drop re-pays O(store); warn so the operator raises
-    // spark.graft.store.maxViews instead of silently thrashing
-    if (storeViews.size > maxViews(spark))
+    // defeated, every drop re-pays O(store); warn instead of silently
+    // thrashing
+    if (storeViews.size > MaxViews)
       storeViews.toSeq.filter(_._1 != stateDir)
         .sortBy(_._2.lastUse).headOption
         .foreach { case (dir, v) =>
           if (System.nanoTime() - v.lastUse < LiveEvictionNs)
             System.err.println(
-              s"[store-view] evicting recently-used view for $dir under " +
-                s"maxViews=${maxViews(spark)} pressure — more concurrently " +
-                "streaming stores than view slots; raise " +
-                "spark.graft.store.maxViews to avoid per-drop O(store) re-reads")
+              s"[store-view] evicting recently-used view for $dir: more " +
+                s"concurrently streaming stores than the $MaxViews view " +
+                "slots, so each re-reads O(store) per drop")
           invalidateView(dir)
         }
     frame
@@ -564,37 +557,74 @@ private[graft] object BucketState {
       .rename(tmp, cur, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** Union of each referenced segment's bucket dirs, partition-pruned:
-    * group the (bucket → segment versions) map by version, one pruned
-    * read per referenced version (bounded by segments-per-bucket ×
-    * nBuckets; replace-merge writers keep 1-2 versions live, append
-    * writers as many as batches since the last [[compact]]). `empty`
-    * supplies the schema-correct zero-state (must already carry the `p`
-    * column). The curation stores and the replace-merge replica read
-    * through here; the LSM replica does not — its reads go through
-    * `CdcStream.readLsm`, one relation over every segment, because a
-    * per-version relation costs a schema-inference job and its own tasks
-    * per segment.
+  /** The one segment reader: the rows of every `(version, bucket)` leaf
+    * dir `manifest` references, with a `long` `p` bucket column. Every
+    * bucketed store reads through here — the four curation stores,
+    * [[readStoreView]], [[compact]] and [[compactConcurrent]], the
+    * replace-merge replica and its schema-evolving snapshots, the LSM
+    * replica (`CdcStream.readLsm` splits its reserved buckets over it) and
+    * the full-DDL replica (one call per version, each remapped). Only the
+    * referenced leaf dirs are read (partition-pruned by construction), and
+    * building the frame runs no Spark job: the leaf dirs come from the
+    * manifest, the schema from [[segmentSchema]]'s footer read, and a
+    * relation over at most `parallelPartitionDiscovery.threshold` root
+    * paths lists them on the driver — past that, one relation per chunk,
+    * unioned. `empty` is the zero-state of an empty manifest (it must
+    * already carry `p`).
     *
-    * `readSchema`, when given, pins every per-version read to an EXPLICIT
-    * schema (it must include the `p` partition column): parquet null-fills
-    * requested fields a file lacks, so version dirs written under an
-    * OLDER, narrower image struct (pre-ADD-COLUMN) read back widened —
-    * schema evolution over at-rest state without rewriting untouched
-    * buckets. Without it the per-version schemas are inferred (and must
-    * agree), the pre-evolution behavior.
+    * `readSchema`, when given, is the explicit schema (it must include
+    * `p`): parquet null-fills requested fields a file lacks, so version
+    * dirs written under an OLDER, narrower image struct (pre-ADD-COLUMN)
+    * read back widened — schema evolution over at-rest state without
+    * rewriting untouched buckets.
     */
   def readBuckets(spark: SparkSession, stateDir: String,
                   manifest: Map[Long, Set[Long]], empty: => DataFrame,
                   readSchema: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame = {
-    val pairs = manifest.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) }
-    if (pairs.isEmpty) return empty
-    pairs.groupBy(_._1).toSeq.sortBy(_._1).map { case (v, entries) =>
-      val reader = spark.read.option("basePath", s"$stateDir/v=$v")
-      readSchema.fold(reader)(reader.schema)
-        .parquet(entries.map(_._2).sorted.map(b => s"$stateDir/v=$v/p=$b"): _*)
-    }.reduce(_.unionByName(_))
+    val leaves = leafDirs(stateDir, manifest)
+    if (leaves.isEmpty) return empty
+    val schema = readSchema.getOrElse(segmentSchema(spark, stateDir, manifest))
+    // a relation over more root paths than this lists them with a Spark
+    // job, one task per path: past it, one relation per chunk, unioned
+    val dirsPerScan = math.max(1, spark.conf
+      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
+    leaves.grouped(dirsPerScan)
+      .map(spark.read.schema(schema).option("basePath", stateDir).parquet(_: _*))
+      .reduce(_.union(_))
+      .drop("v")
+  }
+
+  /** `manifest`'s leaf dirs in `(version, bucket)` order. */
+  private def leafDirs(stateDir: String,
+                       manifest: Map[Long, Set[Long]]): Seq[String] =
+    manifest.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) }.sorted
+      .map { case (v, b) => s"$stateDir/v=$v/p=$b" }
+
+  /** The at-rest schema of `manifest`'s newest leaf dir plus `p: long`,
+    * off one parquet footer read on the driver (a plain
+    * `spark.read.parquet` infers it with a Spark job). Spark stores its
+    * row schema in every footer it writes; a footer without one falls
+    * back to that inference. `manifest` must be non-empty.
+    */
+  def segmentSchema(spark: SparkSession, stateDir: String,
+                    manifest: Map[Long, Set[Long]])
+      : org.apache.spark.sql.types.StructType = {
+    val leafDir = leafDirs(stateDir, manifest).last
+    val file = hadoopFs(spark, leafDir)
+      .listStatus(new org.apache.hadoop.fs.Path(leafDir))
+      .map(_.getPath).find(_.getName.endsWith(".parquet"))
+    file.flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f,
+          spark.sparkContext.hadoopConfiguration))
+      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally r.close()
+    }.map(org.apache.spark.sql.types.DataType.fromJson(_)
+        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      .getOrElse(spark.read.parquet(leafDir).schema)
+      .add("p", org.apache.spark.sql.types.LongType)
   }
 
   // ---- per-batch answer files staged inside the segment write ---------

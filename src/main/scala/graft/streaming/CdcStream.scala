@@ -478,15 +478,15 @@ object CdcStream {
   }
 
   /** Bucket read with PER-VERSION identity remap — the full-DDL
-    * `stateReader`: each referenced version dir is read under its own
-    * at-rest schema (partition-pruned to the relevant buckets, exactly
-    * like `BucketState.readBuckets`) and projected to the CURRENT shape
-    * through the identity map at its schema watermark — a renamed
-    * column's values follow the identity to the new name, a dropped
-    * column's values retire, a re-added namesake null-fills (pre-drop
-    * values must not resurface). A version dir with no watermark sidecar
-    * (written before full-DDL mode) reads under current names — add-only
-    * evolution never renames, so its names are already final.
+    * `stateReader`: each referenced version's relevant buckets are one
+    * [[BucketState.readBuckets]] call under that version's own at-rest
+    * (footer) schema, projected to the CURRENT shape through the identity
+    * map at its schema watermark — a renamed column's values follow the
+    * identity to the new name, a dropped column's values retire, a
+    * re-added namesake null-fills (pre-drop values must not resurface). A
+    * version dir with no watermark sidecar (written before full-DDL mode)
+    * reads under current names — add-only evolution never renames, so its
+    * names are already final.
     */
   private def remappedBucketRead(spark: SparkSession, stateDir: String,
                                  relevant: Map[Long, Set[Long]],
@@ -507,8 +507,9 @@ object CdcStream {
           graft.cdc.SchemaEvolution.identityRemapAt(spec, imageType, ddls, w)
         case None => etype.fieldNames.map(n => n -> Option(n)).toMap
       }
-      val df = spark.read.option("basePath", vdir)
-        .parquet(entries.map(_._2).sorted.map(b => s"$vdir/p=$b"): _*)
+      val df = BucketState.readBuckets(spark, stateDir,
+        entries.map { case (_, b) => b -> Set(v) }.toMap,
+        sys.error("unreachable — version has buckets"))
       val physAfter = df.schema("after").dataType.asInstanceOf[StructType]
       val afterCol = when(col("after").isNull, lit(null).cast(etype)).otherwise(struct(
         etype.fields.map { f =>
@@ -1222,61 +1223,30 @@ object CdcStream {
         .agg(coalesce(max(col("pos")), lit(Long.MinValue)).as("h")))
   }
 
-  /** The LSM segment reader every LSM read goes through. The data rows
-    * are ONE parquet relation over every referenced `(version, p ≥ 0)`
-    * leaf dir — no `basePath`, so no `v`/`p` columns appear — and Spark
-    * packs the small bucket files into about `cores` splits (a relation
-    * per version would cost a schema-inference job and its own tasks per
-    * segment). The schema comes from one parquet footer read on the
-    * driver, pinned for every scan, and the leaf dirs are listed on the
-    * driver, so the read's job count does not grow with the segment
-    * count. The horizon and tombstone buckets are their own tiny scans,
-    * run only when the manifest holds them. `empty` is the zero-state of
-    * an empty store.
+  /** One LSM read, split by reserved bucket: the events (`p ≥ 0`),
+    * horizon (`p = -1`) and tombstone buckets are each one
+    * [[BucketState.readBuckets]] call under one footer schema, so the
+    * read's job count does not grow with the segment count. The horizon
+    * and tombstone scans run only when the manifest holds those buckets.
+    * `empty` is the zero-state of an empty store.
     */
   private def readLsm(spark: SparkSession, stateDir: String,
                       m: BucketState.Manifest, empty: => DataFrame): LsmSegments = {
-    val leaves = m.buckets.toSeq
-      .flatMap { case (b, vs) => vs.map(v => (b, v)) }.sortBy(_.swap)
-    if (leaves.isEmpty) return LsmSegments(empty, None, None)
-    def dir(leaf: (Long, Long)) = s"$stateDir/v=${leaf._2}/p=${leaf._1}"
-    val schema = segmentSchema(spark, dir(leaves.last))
-    // a relation over more root paths than this lists them with a Spark
-    // job, one task per path: past it, one relation per chunk, unioned
-    val dirsPerScan = math.max(1, spark.conf
-      .get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt)
-    def scan(inBucket: Long => Boolean): Option[DataFrame] =
-      leaves.filter(l => inBucket(l._1)).map(dir).grouped(dirsPerScan)
-        .map(spark.read.schema(schema).parquet(_: _*)).reduceOption(_.union(_))
+    if (m.buckets.isEmpty) return LsmSegments(empty, None, None)
+    val schema = BucketState.segmentSchema(spark, stateDir, m.buckets)
+    def scan(inBucket: Long => Boolean): Option[DataFrame] = {
+      val sub = m.buckets.filter { case (b, _) => inBucket(b) }
+      if (sub.isEmpty) None
+      else Some(BucketState.readBuckets(spark, stateDir, sub,
+        sys.error("unreachable — sub-manifest non-empty"), Some(schema)).drop("p"))
+    }
     val tombs = scan(_ == LsmRetractBucket).map(_
       .groupBy(col("key")).agg(max(col("pos")).as("rpos"))
       .withColumnRenamed("key", "_rkey"))
     val events = scan(_ >= 0).getOrElse(spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
+      new java.util.ArrayList[org.apache.spark.sql.Row](), schema).drop("p"))
     LsmSegments(maskRetracted(events, tombs),
       scan(_ == -1L).map(_.select(col("pos"))), tombs)
-  }
-
-  /** A segment dir's schema, off one parquet footer read on the driver
-    * (a plain `spark.read.parquet` infers it with a Spark job). Spark
-    * stores its row schema in every footer it writes; a footer without
-    * one falls back to that inference.
-    */
-  private def segmentSchema(spark: SparkSession,
-                            leafDir: String): org.apache.spark.sql.types.StructType = {
-    val file = hadoopFs(spark, leafDir)
-      .listStatus(new org.apache.hadoop.fs.Path(leafDir))
-      .map(_.getPath).find(_.getName.endsWith(".parquet"))
-    file.flatMap { f =>
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f,
-          spark.sparkContext.hadoopConfiguration))
-      try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
-        .get("org.apache.spark.sql.parquet.row.metadata"))
-      finally r.close()
-    }.map(org.apache.spark.sql.types.DataType.fromJson(_)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(spark.read.parquet(leafDir).schema)
   }
 
   /** Erase rows at or below each key's retraction horizon (broadcast

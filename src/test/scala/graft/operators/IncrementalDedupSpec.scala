@@ -1,9 +1,14 @@
 package graft.operators
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.streaming.BucketState
 
 /** Incremental dedup against the persisted fingerprint index: survivor
   * semantics, partition-pruned incrementality (untouched buckets carry
@@ -297,5 +302,69 @@ class IncrementalDedupSpec extends AnyFunSuite {
       .orderBy("fp")
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     assert(got === expected)
+  }
+
+  /** `body`'s result and the Spark jobs it starts on this thread. The
+    * listener bus delivers events in order, so once a marker job run
+    * after `body` is seen, every job of `body` has been counted.
+    */
+  private def withJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"dedup-jobs-${System.nanoTime}"
+    val jobs = new AtomicInteger
+    val drained = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(g) if g == s"$group-marker" => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = body
+      sc.setJobGroup(s"$group-marker", "listener drain marker")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(60, TimeUnit.SECONDS), "listener bus never drained")
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("building a bucket read runs no Spark job at 1 or 6 segments per bucket") {
+    // 6 drops of 40 distinct texts over 4 buckets: every drop appends a
+    // segment to every bucket of the six-drop store
+    val drops = (0 until 6).map(d =>
+      (1 to 40).map(k => (d * 100L + k, s"doc $d $k")))
+    val one = tmp()
+    val six = tmp()
+    IncrementalDedup.ingest(spark, one, docsOf(drops.flatten: _*), batchId = 0,
+      nBuckets = 4)
+    drops.zipWithIndex.foreach { case (d, i) =>
+      IncrementalDedup.ingest(spark, six, docsOf(d: _*), batchId = i, nBuckets = 4)
+    }
+    def segments(dir: String) =
+      BucketState.readManifest(spark, dir).buckets.values.map(_.size)
+    assert(segments(one).size === 4 && segments(one).forall(_ == 1))
+    assert(segments(six).size === 4 && segments(six).forall(_ == 6))
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("fp"), col("doc_id")).collect().map(_.toString).sorted.toSeq
+    Seq(one, six).foreach { dir =>
+      val m = BucketState.readManifest(spark, dir)
+      val (read, jobs) = withJobs(
+        BucketState.readBuckets(spark, dir, m.buckets, spark.emptyDataFrame))
+      assert(jobs === 0, s"building the read of $dir ran $jobs jobs")
+      assert(read.schema("p").dataType === org.apache.spark.sql.types.LongType)
+      val got = rows(read)
+      assert(got.size === 240)
+      assert(got === rows(IncrementalDedup.snapshot(spark, dir)))
+    }
+    graft.Shared.deleteDirTree(one)
+    graft.Shared.deleteDirTree(six)
   }
 }

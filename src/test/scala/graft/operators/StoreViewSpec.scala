@@ -76,21 +76,6 @@ class StoreViewSpec extends AnyFunSuite {
     BucketState.invalidateView(dir)
   }
 
-  test("disabled conf bypasses the cache with identical rows") {
-    val dir = tmp()
-    IncrementalDedup.ingest(spark, dir,
-      docsOf(1L -> "aa bb", 2L -> "cc dd"), batchId = 0)
-    spark.conf.set("spark.graft.store.readCache", "false")
-    try {
-      viewEqualsDirect(dir) // readStoreView falls back to a direct read
-      val out = IncrementalDedup.ingest(spark, dir,
-        docsOf(5L -> "aa bb", 6L -> "zz ww"), batchId = 1)
-        .collect().map(_.getLong(1)).toSet
-      assert(out === Set(6L))
-    } finally spark.conf.unset("spark.graft.store.readCache")
-    BucketState.invalidateView(dir)
-  }
-
   test("invalidation releases the view's leaf blocks and their ids") {
     // isolate from views other suites may have left alive
     BucketState.invalidateAllViews()
