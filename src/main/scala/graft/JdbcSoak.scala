@@ -52,7 +52,7 @@ object JdbcSoak {
     val maxPos = nKeys.toLong * 5 + 5
     val cuts = (0 to nBatches).map(i => maxPos * i / nBatches)
 
-    def run(batchSize: Int, url: String): Double = {
+    def timedSink(batchSize: Int, url: String): Double = {
       val t0 = System.nanoTime()
       cuts.sliding(2).foreach { case Seq(lo, hi) =>
         streaming.JdbcSink.applyBatch(
@@ -72,8 +72,8 @@ object JdbcSoak {
 
     val urlRow = s"jdbc:duckdb:$base/row.db"
     val urlBat = s"jdbc:duckdb:$base/batch.db"
-    val rowSec = run(1, urlRow)
-    val batSec = run(streaming.JdbcSink.DefaultBatchSize, urlBat)
+    val rowSec = timedSink(1, urlRow)
+    val batSec = timedSink(streaming.JdbcSink.DefaultBatchSize, urlBat)
 
     // both replicas must equal the engine's own fold of the same stream
     val expect = cdc.CdcApply.snapshot(log)

@@ -14,27 +14,25 @@ import org.apache.spark.sql.streaming.Trigger
   * envelopes with the REAL wall-clock produce time and drops them as
   * atomically-renamed files every `tickMs`; a `ProcessingTime(triggerMs)`
   * streaming query runs the production micro-batch path
-  * (`CdcStream.applyPartitionedBatch` — parse, audit append, manifest-
-  * committed bucket merge); after each batch COMMITS (merge returned, so
-  * the snapshot is readable), per-event latency = commit wall-time −
+  * (`CdcStream.applyLsmBatch` — parse, audit append, LSM segment append,
+  * manifest commit); after each batch COMMITS (manifest renamed, so the
+  * snapshot is readable), per-event latency = commit wall-time −
   * producer stamp. Prints p50/p95/p99/max over all events plus per-batch
   * commit cost.
   *
   * The latency floor is structural: ~half the trigger interval (uniform
   * event arrival within a trigger window) + the micro-batch commit cost
-  * (parse + keyed merge of the delta + manifest write). Lowering the
+  * (parse + segment write of the delta + manifest write). Lowering the
   * trigger below the commit cost buys nothing — batches queue; that
   * trade-off is what this soak quantifies for README.
   *
   * Reported twice: overall, and STEADY-STATE (first two batches dropped —
   * they carry one-time JVM/codegen warmup, not the operating regime).
   *
-  * Usage: `graft.LatencySoak [nTicks] [perTick] [tickMs] [triggerMs] [workDir] [nBuckets] [mode]`
-  * (defaults 60 × 2000 events, 250 ms tick, 1000 ms trigger, 64 buckets,
-  * mode `merge`). Mode `lsm` runs the append-only replica
-  * (`CdcStream.applyLsmBatch` — O(delta) commit, read-time resolution)
-  * instead of the replace-merge; when the observed max segments-per-
-  * bucket reaches 8, compaction dispatches to a BACKGROUND thread
+  * Usage: `graft.LatencySoak [nTicks] [perTick] [tickMs] [triggerMs] [workDir] [nBuckets]`
+  * (defaults 60 × 2000 events, 250 ms tick, 1000 ms trigger, 64
+  * buckets). When the observed max segments-per-bucket reaches 8,
+  * compaction dispatches to a BACKGROUND thread
   * (`maybeCompact` async — the concurrent-writer manifest protocol in
   * `BucketState` makes the interleaving safe), so delivery latency never
   * pays the fold; the JSON reports threshold trips plus worst/final
@@ -66,8 +64,6 @@ object LatencySoak {
     val base = args.lift(4).filter(_.nonEmpty).getOrElse(
       Files.createTempDirectory("graft-latency").toString)
     val nBuckets = args.lift(5).map(_.toInt).getOrElse(64)
-    val mode = args.lift(6).getOrElse("merge")
-    require(mode == "merge" || mode == "lsm", s"mode must be merge|lsm, got $mode")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
     // AQE is a per-stage re-planning pass — pure win on big shuffles,
@@ -156,30 +152,23 @@ object LatencySoak {
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         val t0 = System.currentTimeMillis()
-        if (mode == "lsm")
-          streaming.CdcStream.applyLsmBatch(
-            batch, batchId, s"$base/audit", s"$base/state", nBuckets,
-            cdc.CdcSchema.invoiceSpec)
-        else
-          streaming.CdcStream.applyPartitionedBatch(
-            batch, batchId, s"$base/audit", s"$base/state", nBuckets,
-            cdc.CdcSchema.invoiceSpec)
+        streaming.CdcStream.applyLsmBatch(
+          batch, batchId, s"$base/audit", s"$base/state", nBuckets,
+          cdc.CdcSchema.invoiceSpec)
         // Replica-visible AT the manifest commit — the timestamp is taken
         // before any compaction check: compaction is maintenance, run on
         // a background thread (asyncCompaction protocol), never billed to
         // delivery latency and never blocking the next trigger.
         val commit = System.currentTimeMillis()
-        if (mode == "lsm") {
-          val m = streaming.BucketState.readManifest(batch.sparkSession, s"$base/state")
-          val maxSegs =
-            if (m.buckets.isEmpty) 0 else m.buckets.values.map(_.size).max
-          segsObserved.add(maxSegs.toLong) // per-batch observed read amplification
-          if (maxSegs >= 8) {
-            compactions.incrementAndGet()
-            streaming.CdcStream.maybeCompact(
-              batch.sparkSession, s"$base/state", nBuckets,
-              cdc.CdcSchema.invoiceSpec, async = true)
-          }
+        val m = streaming.BucketState.readManifest(batch.sparkSession, s"$base/state")
+        val maxSegs =
+          if (m.buckets.isEmpty) 0 else m.buckets.values.map(_.size).max
+        segsObserved.add(maxSegs.toLong) // per-batch observed read amplification
+        if (maxSegs >= 8) {
+          compactions.incrementAndGet()
+          streaming.CdcStream.maybeCompact(
+            batch.sparkSession, s"$base/state", nBuckets,
+            cdc.CdcSchema.invoiceSpec, async = true)
         }
         // The probe's stamp collect is measurement harness, not engine —
         // but run serially here it would still DELAY THE NEXT TRIGGER
@@ -228,19 +217,14 @@ object LatencySoak {
     val st = steady.asScala.map(_.longValue()).toArray.sorted
     val sp = if (st.nonEmpty) pctOf(st) _ else pct
     val cs = commitCosts.asScala.map(_.longValue()).toArray.sorted
-    // lsm mode: per-batch observed max segments-per-bucket (read
-    // amplification) — boundedness under BACKGROUND compaction is the
-    // claim being verified, so report the worst observed and the final.
+    // per-batch observed max segments-per-bucket (read amplification) —
+    // boundedness under BACKGROUND compaction is the claim being
+    // verified, so report the worst observed and the final.
     val segsSeen = segsObserved.asScala.map(_.longValue()).toArray
-    val lsmTail = if (mode == "lsm") {
-      val mEnd = streaming.BucketState.readManifest(spark, s"$base/state")
-      val segsEnd =
-        if (mEnd.buckets.isEmpty) 0 else mEnd.buckets.values.map(_.size).max
-      s""","compact_trips":${compactions.get()},""" +
-        s""""max_segs_observed":${if (segsSeen.isEmpty) 0 else segsSeen.max},""" +
-        s""""max_segs_final":$segsEnd"""
-    } else ""
-    println(s"""{"metric":"latency_soak","mode":"$mode","events":$total,"ticks":$nTicks,""" +
+    val mEnd = streaming.BucketState.readManifest(spark, s"$base/state")
+    val segsEnd =
+      if (mEnd.buckets.isEmpty) 0 else mEnd.buckets.values.map(_.size).max
+    println(s"""{"metric":"latency_soak","events":$total,"ticks":$nTicks,""" +
       s""""tick_ms":$tickMs,"trigger_ms":$triggerMs,"buckets":$nBuckets,""" +
       s""""batches":${cs.length},""" +
       s""""p50_ms":${pct(0.50)},"p95_ms":${pct(0.95)},"p99_ms":${pct(0.99)},""" +
@@ -249,7 +233,10 @@ object LatencySoak {
       s""""steady_p95_ms":${sp(0.95)},"steady_p99_ms":${sp(0.99)},""" +
       s""""commit_p50_ms":${cs(cs.length / 2)},""" +
       s""""commit_max_ms":${cs.last},""" +
-      s""""engine_ms":{${engineMedians(engine)}}$lsmTail}""")
+      s""""engine_ms":{${engineMedians(engine)}},""" +
+      s""""compact_trips":${compactions.get()},""" +
+      s""""max_segs_observed":${if (segsSeen.isEmpty) 0 else segsSeen.max},""" +
+      s""""max_segs_final":$segsEnd}""")
     spark.stop()
   }
 }

@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Reproducible throughput soak: generate N-scale Debezium envelopes as
   * JSON files, stream them through the full path — parse → dead-letter
-  * gate → audit append → manifest-committed bucketed merge
-  * (`CdcStream.runPartitioned`) — then replay the same envelopes in batch
-  * mode and assert both reach the identical snapshot. Prints one JSON
+  * gate → audit append → LSM segment append with sync compaction
+  * (`CdcStream.runPartitionedLsm`) — then replay the same envelopes in
+  * batch mode and assert the LSM snapshot (`partitionedSnapshotLsm`)
+  * equals the batch one. Prints one JSON
   * line with events/s for each mode (the README "Measured throughput"
   * numbers come from here).
   *
@@ -75,15 +76,17 @@ object Soak {
     val batchSec = (System.nanoTime() - t1) / 1e9
 
     // ---- streaming: the full production path; 2 files per trigger → 5
-    // micro-batches, so the manifest-committed O(delta) merge actually
-    // runs incrementally instead of as one replay-sized batch
+    // micro-batches, so the O(delta) segment append actually runs
+    // incrementally instead of as one replay-sized batch
     val t0 = System.nanoTime()
-    val q = streaming.CdcStream.runPartitioned(
+    val q = streaming.CdcStream.runPartitionedLsm(
       streaming.CdcStream.fromFiles(spark, in, maxFilesPerTrigger = Some(2)),
       s"$base/audit", s"$base/state", s"$base/ckpt")
     q.awaitTermination(1200000)
     val streamSec = (System.nanoTime() - t0) / 1e9
-    val streamed = streaming.CdcStream.partitionedSnapshot(spark, s"$base/state")
+    val streamed = streaming.CdcStream.partitionedSnapshotLsm(spark, s"$base/state")
+      .select(col("order_id").cast("long").as("order_id"),
+        col("invoice_number").cast("long").as("invoice_number"))
 
     val diff = streamed.exceptAll(batchSnap).count() +
       batchSnap.exceptAll(streamed).count()

@@ -83,10 +83,9 @@ object Changelog {
     changelogOfParsed(parsedEnvelopes(df, valueCol, imageType), kafkaTsCol, spec)
 
   /** The three routing heads over an ALREADY-PARSED envelope frame (from
-    * [[parsedEnvelopes]]) — `runRouted` parses each micro-batch once and
-    * routes with three filters; the JSON parse is the dominant ingress
-    * cost at scale (CdcSchema's narrow-schema rationale), so it must not
-    * run once per sink.
+    * [[parsedEnvelopes]]); the JSON parse is the dominant ingress cost at
+    * scale (CdcSchema's narrow-schema rationale), so a caller routing one
+    * frame to several sinks parses once and filters the parse.
     */
   private[graft] def changelogOfParsed(parsed: DataFrame,
                                        kafkaTsCol: Option[String] = None,
@@ -180,8 +179,8 @@ object Changelog {
   /** Dead letters under the epoch-sliced parse: a non-tombstone value that
     * normalizes to null under ITS epoch's schema+gate and is not a
     * schema-change event (checked by an exact scalar pre-read of
-    * `payload.ddl` — no second full parse). The live full-DDL ingress
-    * ([[graft.streaming.CdcStream.runRoutedEvolvingFull]]) forks this off
+    * `payload.ddl` — no second full parse). The live routed ingress
+    * ([[graft.streaming.CdcStream.runRouted]]) forks this off
     * the same cached batch the changelog head reads.
     */
   def deadLettersEpochs(df: DataFrame,

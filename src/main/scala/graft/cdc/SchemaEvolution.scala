@@ -43,7 +43,7 @@ import org.apache.spark.sql.types._
   * the image never tracked, and ADD/MODIFY with types outside the
   * engine's int32/int64/string carrier. Inertness here is an
   * OPERABILITY invariant, not laxity: the history is persisted before
-  * it is folded (`CdcStream.runRoutedEvolving` writes
+  * it is folded (`CdcStream.runRouted` writes
   * `schemaHistoryDir` first), so a fold that THREW on an out-of-scope
   * statement would wedge the stream permanently — every restart
   * re-reads the same poison DDL. The full statement stays in the
@@ -245,7 +245,7 @@ object SchemaEvolution {
     * assignment is deterministic in pos order, so the prefix fold sees
     * exactly the ids the full fold assigned to those statements — this
     * is what lets a bucket-state version dir stamped with its history
-    * watermark ([[graft.streaming.CdcStream.runRoutedEvolvingFull]]) be
+    * watermark ([[graft.streaming.CdcStream.runRouted]]) be
     * read back under ANY later schema.
     */
   def identityRemapAt(spec: CdcSchema.CdcTableSpec, imageType: StructType,

@@ -709,7 +709,8 @@ object Dedup {
     * 0.109), i.e. this detects closer near-dups.
     *
     * Recall vs the jaccard-0.8 exact pairs as a function of the hamming
-    * threshold (measured by `graft.SimhashRecall`, round 9; "banded" =
+    * threshold (measured in round 9 by the since-retired `SimhashRecall`
+    * probe, whose numbers this table keeps; "banded" =
     * what the shipped 8-band generator recalls, "intrinsic" = the ceiling
     * with perfect candidate generation):
     * {{{

@@ -24,7 +24,7 @@ import graft.streaming.BucketState
   * point; survivors are staged BEFORE it, so a crash-replay of a
   * committed batch returns the identical survivor set (guarded by the
   * recorded input fingerprint, exactly like the CDC replica's
-  * `runPartitioned`).
+  * LSM apply path).
   *
   * One-shot equivalence: chunked ingest in ascending doc_id order lands
   * on the same (fp → min doc_id) set as `Dedup`'s exact pass over the

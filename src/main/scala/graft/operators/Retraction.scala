@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * sig-family rows (keep-best), and code rows (vector index).
   *
   * DESIGN — tombstones in the batch commit, folded out at compaction
-  * (the LSM CDC replica's exact pattern, `CdcStream.scala:123-186`):
+  * (the LSM CDC replica's exact pattern, `CdcStream.retractLsmKeys`):
   *
   *  - A retraction arrives WITH a batch (possibly an otherwise-empty
   *    one): the store's `ingest` stages its data rows AND one tombstone

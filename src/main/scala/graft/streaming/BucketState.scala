@@ -4,9 +4,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Manifest-committed, bucket-partitioned persistent state — the shared
   * durability substrate and the one segment reader under every bucketed
-  * store: the CDC replica (replace-merge `runPartitioned` and its
-  * schema-evolving runners, and the LSM replica's `readLsm`) and the four
-  * curation stores (`operators.IncrementalDedup`, `IncrementalNearDup`,
+  * store: the CDC LSM replica (`CdcStream.readLsm`, plain and
+  * schema-remapped) and the four curation stores
+  * (`operators.IncrementalDedup`, `IncrementalNearDup`,
   * `IncrementalKeepBest`, `IncrementalVecIndex`).
   *
   * Layout: `stateDir/v=<version>/p=<bucket>/` parquet files in immutable version
@@ -436,9 +436,9 @@ private[graft] object BucketState {
   }
 
   /** `_CURRENT` manifest: one `bucket,version` line per live SEGMENT
-    * (a bucket may list several — replace-merge writers like the CDC
-    * replica keep exactly one per bucket, append-only writers like the
-    * dedup index accumulate one per contributing batch, LSM-style) plus
+    * (a bucket may list several — [[compact]] leaves exactly one per
+    * bucket, append-only writers like the dedup index and the CDC replica
+    * accumulate one per contributing batch, LSM-style) plus
     * one `fp,version,hash` line for the committing batch. Empty = no
     * committed state.
     */
@@ -560,10 +560,10 @@ private[graft] object BucketState {
   /** The one segment reader: the rows of every `(version, bucket)` leaf
     * dir `manifest` references, with a `long` `p` bucket column. Every
     * bucketed store reads through here — the four curation stores,
-    * [[readStoreView]], [[compact]] and [[compactConcurrent]], the
-    * replace-merge replica and its schema-evolving snapshots, the LSM
+    * [[readStoreView]], [[compact]] and [[compactConcurrent]], the LSM
     * replica (`CdcStream.readLsm` splits its reserved buckets over it) and
-    * the full-DDL replica (one call per version, each remapped). Only the
+    * its schema-evolving reads (one call per schema watermark, each
+    * remapped). Only the
     * referenced leaf dirs are read (partition-pruned by construction), and
     * building the frame runs no Spark job: the leaf dirs come from the
     * manifest, the schema from [[segmentSchema]]'s footer read, and a
@@ -859,8 +859,8 @@ private[graft] object BucketState {
     * hands out monotonically-increasing, never-reused numbers and every
     * writer registers its version in-flight BEFORE staging a byte, so no
     * later commit can reference a number that was already dead.
-    * Unlocked commit paths (`runPartitioned`, `IncrementalDedup`,
-    * [[compact]]) are protected not by this lock but by their documented
+    * Unlocked commit paths (`IncrementalDedup`, [[compact]]) are
+    * protected not by this lock but by their documented
     * single-writer contract: they never run concurrently with anything
     * that could GC their dirs.
     */

@@ -15,7 +15,7 @@ import graft.cdc.{CdcApply, CdcSchema, Changelog}
   *   source (kafka / files) ──► tombstone filter ──► narrow from_json
   *        ├──► audit sink: every non-tombstone envelope, appended raw
   *        │    (reference `main.py:44-45` — the event-sourcing log)
-  *        └──► foreachBatch: incremental keyed merge into replica state
+  *        └──► foreachBatch: segment append into the LSM replica
   *
   * In production the source is `format("kafka")` with
   * `subscribe=source.dev.invoice` (reference `main.py:25-29`); tests use the
@@ -30,11 +30,6 @@ object CdcStream {
     * after-image (None = delete marker, kept for idempotent re-merge).
     */
   final case class KeyState(pos: Long, after: Option[CdcSchema.Invoice])
-
-  /** State/snapshot schema: one row per key — the latest event's position
-    * and after-image (null after = tombstone marker kept for idempotent
-    * re-merge), plus one `key IS NULL` row carrying the truncate horizon.
-    */
 
   /** Kafka ingress (production): value bytes → normalized changelog.
     *
@@ -103,25 +98,15 @@ object CdcStream {
     * older event cannot resurrect a deleted key — which makes the step
     * idempotent and insensitive to batch boundaries (proven by
     * CdcPropertySpec: any split of the changelog folds to the same state).
-    */
-  /** Optional knobs of [[mergeBatch]]:
+    * The state holds one row per key (latest pos and after-image) plus one
+    * `key IS NULL` row carrying the truncate horizon. `JdbcSink` folds each
+    * micro-batch to one row per key with it.
     *
-    * `tombstoneGcBelow` — tombstone GC: delete markers whose pos is below
-    * the given watermark are dropped from the merged state. Without GC the
-    * marker set grows monotonically with every key ever deleted — at scale
-    * it eventually dominates the state. The caller supplies a redelivery
-    * watermark (a position at-or-below which the source can no longer
-    * redeliver, e.g. the committed checkpoint offset minus the broker's
-    * max redelivery window); GC'ing above that watermark re-opens the
-    * resurrection window idempotency closes, so the default keeps all
-    * markers.
-    *
-    * `spec` — the table shape (like `CdcApply.snapshotFor`): key column
+    * `spec` is the table shape (like `CdcApply.snapshotFor`): key column
     * read from the spec, image type inferred from the batch's `after`
     * column, so the same fold maintains any table.
     */
   def mergeBatch(state: DataFrame, batch: DataFrame,
-                 tombstoneGcBelow: Option[Long] = None,
                  spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec): DataFrame = {
     val imageType = batch.schema("after").dataType
       .asInstanceOf[org.apache.spark.sql.types.StructType]
@@ -155,14 +140,10 @@ object CdcStream {
       .agg(max_by(struct(col("pos"), col("after")), col("pos")).as("m"))
       .select(col("key"), col("m.pos").as("pos"), col("m.after").as("after"))
 
-    val gced = tombstoneGcBelow match {
-      case Some(wm) => merged.filter(col("after").isNotNull || col("pos") >= wm)
-      case None => merged
-    }
     val horizonRow = horizon.select(
       lit(null).cast(keyType).as("key"), col("h").as("pos"),
       lit(null).cast(imageType).as("after"))
-    gced.unionByName(horizonRow)
+    merged.unionByName(horizonRow)
   }
 
   /** Empty state (schema only) for an arbitrary table shape. */
@@ -195,219 +176,48 @@ object CdcStream {
         col("order_id").cast("long").as("order_id"),
         col("invoice_number").cast("long").as("invoice_number"))
 
-  /** Run a changelog stream to a versioned parquet state + audit log.
+  /** The complete live ingress topology in one stream, from raw envelope
+    * values (Kafka record values / file lines) into the LSM replica, with
+    * the table's column DDL applied live. The reference's capture scope is
+    * the whole `dev` database with schema-change events on (its
+    * `debezium-config-push.sh:16-21`); this runner lets a live replica
+    * follow those statements.
     *
-    * Each micro-batch: (1) append the audit projection; (2) merge into the
-    * keyed state, written to `stateDir/v=<batchId+1>` — versioned dirs make
-    * the write atomic-by-rename and replay after checkpoint recovery
-    * idempotent (a re-run batch overwrites its own version, and merge
-    * idempotency makes the content identical); (3) prune versions older
-    * than the newest `retainVersions` (a long-running stream would
-    * otherwise grow storage without bound — one O(|state|) copy per batch).
-    * The newest version is never pruned, and keeping ≥2 means a crash
-    * mid-write of v=n+1 still recovers from v=n.
-    */
-  def run(changelog: DataFrame, auditDir: String, stateDir: String,
-          checkpointDir: String, retainVersions: Int = 3,
-          spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
-          tombstoneGcBelow: Option[Long] = None): StreamingQuery = {
-    require(retainVersions >= 2, "retainVersions must be >= 2 (current + recovery)")
-    changelog.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        val batch = rawBatch.persist() // the body runs several actions; scan once
-        try applyVersionedBatch(batch, batchId, auditDir, stateDir,
-          retainVersions, spec, tombstoneGcBelow)
-        finally batch.unpersist()
-        ()
-      }
-      .start()
-  }
-
-  /** One micro-batch of the versioned writer: audit append + merge into
-    * `v=<batchId+1>` + retention pruning. Shared by [[run]] and
-    * [[runRouted]].
-    */
-  private def applyVersionedBatch(batch: DataFrame, batchId: Long,
-                                  auditDir: String, stateDir: String,
-                                  retainVersions: Int,
-                                  spec: CdcSchema.CdcTableSpec,
-                                  tombstoneGcBelow: Option[Long]): Unit = {
-    val spark = batch.sparkSession
-    writeAudit(batch, auditDir, batchId)
-    val versions = listVersions(spark, stateDir)
-    // A state version newer than this batch's own output means the
-    // checkpoint was reset against a retained stateDir — the fold
-    // would silently freeze. Fail loudly instead.
-    versions.headOption.foreach(v => require(v <= batchId + 1,
-      s"stateDir has version v=$v but the stream is at batch $batchId: " +
-        "checkpointDir and stateDir must be retained (or cleared) together"))
-    // Replay correctness: prev is the newest version AT OR BELOW
-    // batchId — NEVER v=batchId+1, which is this replay's own
-    // (possibly partial) crashed output and also the path the write
-    // below overwrites (read-and-overwrite would fail or corrupt).
-    val prev = versions.find(_ <= batchId) match {
-      case Some(v) => spark.read.parquet(s"$stateDir/v=$v")
-      case None => emptyStateFor(spark, spec, batch.schema("after").dataType
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-    }
-    mergeBatch(prev, batch, tombstoneGcBelow, spec)
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$stateDir/v=${batchId + 1}")
-    pruneVersions(spark, stateDir, keep = retainVersions)
-  }
-
-  /** The COMPLETE live ingress topology in one stream, from raw envelope
-    * values (Kafka record values / file lines): each micro-batch parses
-    * the envelopes ONCE (the JSON parse is the dominant ingress cost at
-    * scale — persisting the raw strings alone would re-parse per sink)
-    * and routes three ways — malformed envelopes → dead-letter
-    * quarantine, Debezium schema-change events → schema-history log, data
-    * envelopes → audit + versioned state merge. Every sink is idempotent
-    * under checkpoint replay (per-batch partition dirs for
-    * quarantine/history/audit, idempotent merge for state), so the whole
-    * topology keeps the exactly-once argument.
+    * Per batch: (1) schema-change events route to
+    * `schemaHistoryDir/batch=<id>`; (2) the accumulated history —
+    * `tableName`'s own statements, pos-ordered — folds via
+    * [[graft.cdc.SchemaEvolution.evolveFull]] into the final (spec, type)
+    * plus the epoch list (a bounded driver-side read: O(schema changes),
+    * never O(events)); (3) malformed envelopes fork off to
+    * `deadLetterDir/batch=<id>` ([[Changelog.deadLettersEpochs]]); (4) the
+    * batch parses once, epoch-sliced ([[Changelog.fromEnvelopeJsonEpochs]]
+    * — each event under the schema its pos lived in, normalized to the
+    * final shape by logical column identity); (5) the LSM step appends
+    * the batch and folds at the default segment bound, exactly as
+    * [[runPartitionedLsm]] does. Add-only evolution is the case where the
+    * history holds only ADD/MODIFY, which `evolveFull` folds as `evolve`
+    * does; a DDL-free history is the plain replica. Every sink is
+    * idempotent under checkpoint replay (per-batch partition dirs, the
+    * manifest's replay fingerprint), so the topology keeps the
+    * exactly-once argument.
     *
-    * Fixed to the invoice wire format: the envelope parse schema and the
-    * ingress validity gate are invoice-shaped, so this runner does not
-    * take a `CdcTableSpec` (a spec parameter here could not actually
-    * change the parsed image shape — columns would silently drop at
-    * parse time). Generic table shapes enter via [[run]] with a
-    * caller-built changelog. `kafkaTsCol` (e.g. from
-    * `fromKafkaRelation`-style ingress) keeps the audit log on Kafka
-    * ingest time per the reference contract.
+    * Segments written under an older schema cannot be read back by a
+    * null-filling schema pin alone: a RENAME changes the at-rest field
+    * name and a re-added namesake must not inherit pre-drop values. So
+    * every segment and every compaction output is stamped with a schema
+    * watermark (the max DDL pos folded when it was written) before the
+    * manifest names it, and every read goes through
+    * [[remappedBucketRead]]. Read the replica with
+    * [[partitionedSnapshotEvolved]].
     */
   def runRouted(raw: DataFrame, valueCol: String,
                 deadLetterDir: String, schemaHistoryDir: String,
                 auditDir: String, stateDir: String, checkpointDir: String,
-                retainVersions: Int = 3,
-                kafkaTsCol: Option[String] = None,
-                tombstoneGcBelow: Option[Long] = None): StreamingQuery = {
-    require(retainVersions >= 2, "retainVersions must be >= 2 (current + recovery)")
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        // parse once, route with three filters over the cached parse
-        val parsed = Changelog.parsedEnvelopes(rawBatch, valueCol).persist()
-        try {
-          Changelog.deadLettersOfParsed(parsed, valueCol)
-            .write.mode("overwrite").parquet(s"$deadLetterDir/batch=$batchId")
-          Changelog.schemaHistoryOfParsed(parsed)
-            .write.mode("overwrite").parquet(s"$schemaHistoryDir/batch=$batchId")
-          val changelog = Changelog.changelogOfParsed(parsed, kafkaTsCol)
-          applyVersionedBatch(changelog, batchId, auditDir, stateDir,
-            retainVersions, CdcSchema.invoiceSpec, tombstoneGcBelow)
-        } finally parsed.unpersist()
-        ()
-      }
-      .start()
-  }
-
-  /** [[runRouted]] × [[runPartitioned]] with LIVE schema evolution: the
-    * routed ingress over raw envelope strings, re-deriving the table spec
-    * from the accumulated DDL history before every micro-batch merge.
-    *
-    * Per batch: (1) schema-change events are routed to
-    * `schemaHistoryDir/batch=<id>` (substring-gated parse, idempotent
-    * overwrite); (2) the ACCUMULATED history — prior batches plus this
-    * one — evolves the base spec (`SchemaEvolution.evolve`, a bounded
-    * driver-side read: O(schema changes), never O(events)); (3) the batch
-    * is parsed once under the evolved image type (pre-DDL envelopes
-    * null-fill); (4) dead letters fork off; (5) the ordinary
-    * manifest-committed bucket merge runs with the evolved spec, reading
-    * prior state under the evolved schema — buckets written before the
-    * DDL null-fill at read time ([[BucketState.readBuckets]]), so an
-    * ADD COLUMN rewrites NOTHING: untouched buckets stay as-is and widen
-    * lazily as they are next merged. Read the replica with
-    * [[partitionedSnapshotEvolved]].
-    *
-    * Replay safety is unchanged: the input fingerprint is computed over
-    * the evolved parse, and a committed batch's replay re-derives the
-    * identical spec from the identical history — same fingerprint, same
-    * no-op.
-    */
-  def runRoutedEvolving(raw: DataFrame, valueCol: String,
-                        deadLetterDir: String, schemaHistoryDir: String,
-                        auditDir: String, stateDir: String, checkpointDir: String,
-                        nBuckets: Int = 64,
-                        spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
-                        imageType: org.apache.spark.sql.types.StructType =
-                          CdcSchema.invoiceType,
-                        tableName: String = "invoice"): StreamingQuery =
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        val spark = rawBatch.sparkSession
-        val cached = rawBatch.persist() // history route + parse + dead letters
-        try {
-          Changelog.schemaHistory(cached, valueCol)
-            .write.mode("overwrite").parquet(s"$schemaHistoryDir/batch=$batchId")
-          val (espec, etype) =
-            evolvedSpec(spark, schemaHistoryDir, spec, imageType, tableName)
-          val parsed = Changelog.parsedEnvelopes(cached, valueCol, etype)
-          Changelog.deadLettersOfParsed(parsed, valueCol)
-            .write.mode("overwrite").parquet(s"$deadLetterDir/batch=$batchId")
-          // validity stays gated on the BASE spec: added columns are
-          // nullable, so their absence is data, not a partial parse
-          val changelog = Changelog.changelogOfParsed(parsed, None, spec)
-          applyPartitionedBatch(changelog, batchId, auditDir, stateDir,
-            nBuckets, espec,
-            stateReadSchema = Some(stateSchemaFor(espec, etype)))
-        } finally cached.unpersist()
-        ()
-      }
-      .start()
-
-  /** [[runRoutedEvolving]] with FULL column DDL applied live — the
-    * streaming counterpart of [[graft.cdc.SchemaEvolution.evolveFull]]:
-    * a mid-stream DROP / RENAME / CHANGE is reflected in the replica
-    * instead of held inert. The reference's capture scope is the whole
-    * `dev` database with schema-change events on
-    * (`/root/reference/debezium-config-push.sh:16-21`); this is the
-    * runner that lets a live replica actually FOLLOW those statements.
-    *
-    * Per batch: (1) schema-change events route to
-    * `schemaHistoryDir/batch=<id>` (idempotent overwrite); (2) the
-    * ACCUMULATED history — `tableName`'s own statements, pos-ordered —
-    * folds via `evolveFull` into the final (spec, type) plus the epoch
-    * list; (3) the batch parses ONCE epoch-sliced
-    * ([[Changelog.fromEnvelopeJsonEpochs]] — each event under the schema
-    * its pos lived in, normalized to the final shape by logical column
-    * identity); (4) dead letters ([[Changelog.deadLettersEpochs]]) fork
-    * off the same cached batch; (5) the manifest-committed bucket merge
-    * runs under the final spec.
-    *
-    * State written under an OLDER schema cannot be read back by a
-    * null-filling schema pin alone — a RENAME changes the at-rest field
-    * name (null-fill would silently erase the column) and a re-added
-    * namesake must NOT inherit pre-drop values. So each staged version
-    * dir is stamped with a SCHEMA WATERMARK sidecar (the max DDL pos
-    * folded when it was written) via the `onStaged` hook — written
-    * before the manifest commit, so a committed version can never lack
-    * its watermark — and the `stateReader` hook replaces the bucket read
-    * with a PER-VERSION identity remap: each version's files are read
-    * under their own schema and remapped to the current shape by
-    * [[graft.cdc.SchemaEvolution.identityRemapAt]] (rename follows the
-    * identity, drop nulls it, fresh columns null-fill). Cost is the same
-    * partition-pruned read as before — the remap is a per-version
-    * projection, no extra pass, no state rewrite at DDL time.
-    *
-    * Replay safety is unchanged: a committed batch's replay re-derives
-    * the identical epochs from the identical history, so the input
-    * fingerprint matches and the batch no-ops. Read the replica with
-    * [[partitionedSnapshotEvolvedFull]].
-    */
-  def runRoutedEvolvingFull(raw: DataFrame, valueCol: String,
-                            deadLetterDir: String, schemaHistoryDir: String,
-                            auditDir: String, stateDir: String, checkpointDir: String,
-                            nBuckets: Int = 64,
-                            spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
-                            imageType: org.apache.spark.sql.types.StructType =
-                              CdcSchema.invoiceType,
-                            tableName: String = "invoice"): StreamingQuery =
+                nBuckets: Int = 64,
+                spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
+                imageType: org.apache.spark.sql.types.StructType =
+                  CdcSchema.invoiceType,
+                tableName: String = "invoice"): StreamingQuery =
     raw.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -422,13 +232,13 @@ object CdcStream {
             graft.cdc.SchemaEvolution.evolveFull(spec, imageType, ddls)
           Changelog.deadLettersEpochs(cached, epochs, etype, valueCol)
             .write.mode("overwrite").parquet(s"$deadLetterDir/batch=$batchId")
-          val changelog = Changelog.fromEnvelopeJsonEpochs(cached, epochs, etype, valueCol)
           val watermark = ddls.map(_._1).maxOption.getOrElse(Long.MinValue)
-          applyPartitionedBatch(changelog, batchId, auditDir, stateDir,
-            nBuckets, espec,
-            stateReader = Some(relevant => remappedBucketRead(
-              spark, stateDir, relevant, spec, imageType, ddls, espec, etype)),
-            onStaged = Some(dir => writeSchemaWatermark(spark, dir, watermark)))
+          lsmStep(Changelog.fromEnvelopeJsonEpochs(cached, epochs, etype, valueCol),
+            batchId, auditDir, stateDir, nBuckets, espec,
+            CompactWhenSegments, asyncCompaction = false,
+            stateReader = Some(remappedBucketRead(
+              spark, stateDir, _, spec, imageType, ddls, espec, etype)),
+            onStaged = Some(writeSchemaWatermark(spark, _, watermark)))
         } finally cached.unpersist()
         ()
       }
@@ -436,12 +246,12 @@ object CdcStream {
 
   /** `tableName`'s own full-DDL history implied by a schema-history dir:
     * (pos, statement) in pos order — the bounded driver-side read
-    * (O(schema changes), never O(events)) both the live runner and the
-    * snapshot reader fold.
+    * (O(schema changes), never O(events)) the live runner, the snapshot
+    * reader and [[evolvedSpec]] fold.
     */
   private def fullHistory(spark: SparkSession, schemaHistoryDir: String,
                           tableName: String): Seq[(Long, String)] = {
-    val fs = hadoopFs(spark, schemaHistoryDir)
+    val fs = BucketState.hadoopFs(spark, schemaHistoryDir)
     if (!fs.exists(new org.apache.hadoop.fs.Path(schemaHistoryDir))) Seq.empty
     else spark.read.parquet(schemaHistoryDir)
       .orderBy("pos").select("pos", "ddl").collect()
@@ -450,16 +260,17 @@ object CdcStream {
   }
 
   /** Sidecar file stamping a staged version dir with the schema
-    * watermark (max folded DDL pos) it was written under. Written by the
-    * full-DDL runner's `onStaged` hook — after the version's parquet,
-    * BEFORE the manifest commit — so a committed version always carries
-    * it; a replayed batch re-stages the dir and re-stamps identically.
+    * watermark (max folded DDL pos) it was written under. Written by
+    * [[runRouted]]'s `onStaged` hook into every segment and every
+    * compaction output — after the version's parquet, BEFORE the manifest
+    * commit — so a committed version always carries it; a replayed batch
+    * re-stages the dir and re-stamps identically.
     */
   private val SchemaWatermarkFile = "_SCHEMA_WATERMARK"
 
   private def writeSchemaWatermark(spark: SparkSession, versionDir: String,
                                    watermark: Long): Unit = {
-    val fs = hadoopFs(spark, versionDir)
+    val fs = BucketState.hadoopFs(spark, versionDir)
     val out = fs.create(
       new org.apache.hadoop.fs.Path(s"$versionDir/$SchemaWatermarkFile"), true)
     try out.write(watermark.toString.getBytes("UTF-8")) finally out.close()
@@ -467,7 +278,7 @@ object CdcStream {
 
   private def readSchemaWatermark(spark: SparkSession,
                                   versionDir: String): Option[Long] = {
-    val fs = hadoopFs(spark, versionDir)
+    val fs = BucketState.hadoopFs(spark, versionDir)
     val p = new org.apache.hadoop.fs.Path(s"$versionDir/$SchemaWatermarkFile")
     if (!fs.exists(p)) None
     else {
@@ -477,16 +288,16 @@ object CdcStream {
     }
   }
 
-  /** Bucket read with PER-VERSION identity remap — the full-DDL
-    * `stateReader`: each referenced version's relevant buckets are one
-    * [[BucketState.readBuckets]] call under that version's own at-rest
-    * (footer) schema, projected to the CURRENT shape through the identity
-    * map at its schema watermark — a renamed column's values follow the
-    * identity to the new name, a dropped column's values retire, a
-    * re-added namesake null-fills (pre-drop values must not resurface). A
-    * version dir with no watermark sidecar (written before full-DDL mode)
-    * reads under current names — add-only evolution never renames, so its
-    * names are already final.
+  /** The routed replica's segment reader: `relevant`'s version dirs
+    * grouped by schema watermark, each group one [[BucketState.readBuckets]]
+    * call under its own at-rest (footer) schema, projected to the CURRENT
+    * shape through the identity map at that watermark — a renamed
+    * column's values follow the identity to the new name, a dropped
+    * column's values retire, a re-added namesake null-fills (pre-drop
+    * values must not resurface). A version dir with no watermark (written
+    * by [[runPartitionedLsm]] or [[retractLsmKeys]]) reads under current
+    * names. A read therefore builds one relation per schema epoch, not
+    * one per segment.
     */
   private def remappedBucketRead(spark: SparkSession, stateDir: String,
                                  relevant: Map[Long, Set[Long]],
@@ -496,20 +307,23 @@ object CdcStream {
                                  espec: CdcSchema.CdcTableSpec,
                                  etype: org.apache.spark.sql.types.StructType): DataFrame = {
     import org.apache.spark.sql.types.StructType
-    val pairs = relevant.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) }
-    if (pairs.isEmpty)
+    val watermarks = relevant.values.flatten.toSeq.distinct
+      .map(v => v -> readSchemaWatermark(spark, s"$stateDir/v=$v")).toMap
+    val groups = relevant.toSeq
+      .flatMap { case (b, vs) => vs.map(v => (watermarks(v), b, v)) }
+      .groupBy(_._1).toSeq.sortBy(_._1)
+    if (groups.isEmpty)
       return emptyStateFor(spark, espec, etype).withColumn("p", lit(-1L))
     val keyType = etype(espec.key).dataType
-    pairs.groupBy(_._1).toSeq.sortBy(_._1).map { case (v, entries) =>
-      val vdir = s"$stateDir/v=$v"
-      val remap: Map[String, Option[String]] = readSchemaWatermark(spark, vdir) match {
-        case Some(w) =>
-          graft.cdc.SchemaEvolution.identityRemapAt(spec, imageType, ddls, w)
+    groups.map { case (w, entries) =>
+      val remap: Map[String, Option[String]] = w match {
+        case Some(wm) =>
+          graft.cdc.SchemaEvolution.identityRemapAt(spec, imageType, ddls, wm)
         case None => etype.fieldNames.map(n => n -> Option(n)).toMap
       }
       val df = BucketState.readBuckets(spark, stateDir,
-        entries.map { case (_, b) => b -> Set(v) }.toMap,
-        sys.error("unreachable — version has buckets"))
+        entries.groupBy(_._2).map { case (b, es) => b -> es.map(_._3).toSet },
+        sys.error("unreachable — group has buckets"))
       val physAfter = df.schema("after").dataType.asInstanceOf[StructType]
       val afterCol = when(col("after").isNull, lit(null).cast(etype)).otherwise(struct(
         etype.fields.map { f =>
@@ -524,23 +338,23 @@ object CdcStream {
     }.reduce(_.unionByName(_))
   }
 
-  /** [[partitionedSnapshotFor]] under FULL column DDL: the manifest's
-    * buckets read through the per-version identity remap, folded to the
-    * final-shape replica.
+  /** Replica snapshot of a [[runRouted]] state dir under the schema its
+    * history dir implies: segments read through [[remappedBucketRead]]
+    * and folded like [[partitionedSnapshotLsm]].
     */
-  def partitionedSnapshotEvolvedFull(spark: SparkSession, stateDir: String,
-                                     schemaHistoryDir: String,
-                                     spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
-                                     imageType: org.apache.spark.sql.types.StructType =
-                                       CdcSchema.invoiceType,
-                                     tableName: String = "invoice"): DataFrame = {
+  def partitionedSnapshotEvolved(spark: SparkSession, stateDir: String,
+                                 schemaHistoryDir: String,
+                                 spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
+                                 imageType: org.apache.spark.sql.types.StructType =
+                                   CdcSchema.invoiceType,
+                                 tableName: String = "invoice"): DataFrame = {
     val ddls = fullHistory(spark, schemaHistoryDir, tableName)
     val (espec, etype, _) =
       graft.cdc.SchemaEvolution.evolveFull(spec, imageType, ddls)
-    snapshotOfFor(
-      remappedBucketRead(spark, stateDir, readManifest(spark, stateDir).buckets,
-        spec, imageType, ddls, espec, etype).drop("p"),
-      espec)
+    val segs = readLsm(spark, stateDir, BucketState.readManifest(spark, stateDir),
+      emptyStateFor(spark, espec, etype),
+      Some(remappedBucketRead(spark, stateDir, _, spec, imageType, ddls, espec, etype)))
+    snapshotOfFor(resolveSegments(segs.events, segs.horizon()), espec)
   }
 
   /** The evolved (spec, imageType) implied by a schema-history dir — the
@@ -549,7 +363,8 @@ object CdcStream {
     * are routed by their parsed target table and only `tableName`'s own
     * DDL evolves this spec — another table's ALTER cannot desync it
     * (statements with no parseable ALTER TABLE target were already inert
-    * in the fold and stay filtered here).
+    * in the fold and stay filtered here). Folded by
+    * [[graft.cdc.SchemaEvolution.evolveFull]], like [[runRouted]].
     */
   def evolvedSpec(spark: SparkSession, schemaHistoryDir: String,
                   spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
@@ -557,66 +372,9 @@ object CdcStream {
                     CdcSchema.invoiceType,
                   tableName: String = "invoice")
       : (CdcSchema.CdcTableSpec, org.apache.spark.sql.types.StructType) = {
-    val fs = hadoopFs(spark, schemaHistoryDir)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(schemaHistoryDir)))
-      return (spec, imageType)
-    val ddls = spark.read.parquet(schemaHistoryDir)
-      .orderBy("pos").select("ddl").collect().map(_.getString(0)).toSeq
-      .filter(graft.cdc.SchemaEvolution.targetTable(_).contains(tableName))
-    graft.cdc.SchemaEvolution.evolve(spec, imageType, ddls)
-  }
-
-  /** State-file schema of the partitioned replica for a (spec, image)
-    * pair, INCLUDING the `p` partition column — the explicit read schema
-    * the evolving merge pins bucket reads to.
-    */
-  private def stateSchemaFor(spec: CdcSchema.CdcTableSpec,
-                             imageType: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("key", imageType(spec.key).dataType),
-      StructField("pos", LongType),
-      StructField("after", imageType),
-      StructField("p", LongType)))
-  }
-
-  /** [[partitionedSnapshotFor]] under the schema implied by the history
-    * dir: old narrow bucket files null-fill the added columns at read
-    * time.
-    */
-  def partitionedSnapshotEvolved(spark: SparkSession, stateDir: String,
-                                 schemaHistoryDir: String,
-                                 spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
-                                 imageType: org.apache.spark.sql.types.StructType =
-                                   CdcSchema.invoiceType,
-                                 tableName: String = "invoice"): DataFrame = {
-    val (espec, etype) =
-      evolvedSpec(spark, schemaHistoryDir, spec, imageType, tableName)
-    snapshotOfFor(
-      BucketState.readBuckets(spark, stateDir,
-        readManifest(spark, stateDir).buckets,
-        emptyStateFor(spark, espec, etype).withColumn("p", lit(-1L)),
-        Some(stateSchemaFor(espec, etype))).drop("p"),
-      espec)
-  }
-
-  /** Version numbers under `stateDir`, newest first. */
-  private def listVersions(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val fs = hadoopFs(spark, stateDir)
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-      .map(_.getPath.getName.stripPrefix("v=").toLong)
-      .sorted(Ordering[Long].reverse)
-  }
-
-  /** Delete `v=<n>` dirs older than the newest `keep` (post-commit GC). */
-  private def pruneVersions(spark: SparkSession, stateDir: String, keep: Int): Unit = {
-    val fs = hadoopFs(spark, stateDir)
-    listVersions(spark, stateDir).drop(keep)
-      .foreach(v => fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/v=$v"), true))
+    val (espec, etype, _) = graft.cdc.SchemaEvolution.evolveFull(
+      spec, imageType, fullHistory(spark, schemaHistoryDir, tableName))
+    (espec, etype)
   }
 
   /** Idempotent audit append: each micro-batch owns the partition dir
@@ -663,52 +421,6 @@ object CdcStream {
       .toDF("order_id", "invoice_number")
   }
 
-  /** Bucketed incremental state: the 100 TB shape of the merge.
-    *
-    * [[run]] rewrites the whole state per micro-batch — O(|state|), fine
-    * for small replicas, wrong at scale. Here the state lives as parquet
-    * hash-partitioned by `p = pmod(key, nBuckets)` for integral keys,
-    * `p = pmod(xxhash64(key), nBuckets)` otherwise (horizon row in
-    * `p = -1`), generic over the table via `spec`; each micro-batch:
-    *
-    *  1. computes the touched buckets from the batch's keys (a ≤ nBuckets
-    *     driver-side collect);
-    *  2. reads ONLY those buckets back (partition-pruned scan);
-    *  3. merges (same [[mergeBatch]] fold — buckets partition the
-    *     keyspace, so per-bucket merge ≡ global merge);
-    *  4. rewrites only the touched partition dirs via dynamic partition
-    *     overwrite.
-    *
-    * Cost per batch is O(|touched buckets|) ≈ O(|delta|), independent of
-    * total state size. A TRUNCATE touches every bucket by definition (the
-    * horizon invalidates rows everywhere) — that one rare event pays a
-    * full rewrite, which is exactly what a truncate is.
-    *
-    * Commit protocol (version-pointer, single-writer): the state is a
-    * manifest-committed table. Bucket data lives under immutable
-    * `v=<batch>/p=<bucket>/` dirs; a single `_CURRENT` manifest maps each
-    * bucket to the version that owns its current data. A batch (1) writes
-    * its touched buckets under its own `v=<batchId+1>/` (never visible to
-    * readers until committed; a checkpoint-replayed batch overwrites its
-    * own version dir, and merge idempotency makes the content identical),
-    * (2) atomically renames a new `_CURRENT` over the old one — THE commit
-    * point, all buckets switch at once — then (3) deletes version dirs no
-    * manifest entry references. A crash before (2) leaves `_CURRENT`
-    * pointing at complete pre-batch state (no lost buckets — the window
-    * the old dynamic-partition-overwrite scheme could not close); a crash
-    * after (2) leaves garbage dirs that the next batch's GC removes.
-    */
-  def runPartitioned(changelog: DataFrame, auditDir: String, stateDir: String,
-                     checkpointDir: String, nBuckets: Int = 64,
-                     spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec): StreamingQuery =
-    changelog.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        applyPartitionedBatch(rawBatch, batchId, auditDir, stateDir, nBuckets, spec)
-      }
-      .start()
-
   /** Bucket function by key type: integral keys bucket by value modulus
     * (deterministic, human-inspectable `p=` dirs, and the layout the
     * partition specs pin); any other key type hashes first. Both are pure
@@ -724,194 +436,40 @@ object CdcStream {
     }
   }
 
-  /** One [[runPartitioned]] micro-batch, callable from any foreachBatch
-    * wrapper (the evolving ingress re-derives `spec` per batch before
-    * delegating here). `stateReadSchema`, when given, pins the bucket
-    * reads to an explicit (wider) schema so state written under an older
-    * image struct null-fills instead of failing the union — see
-    * `BucketState.readBuckets`. `stateReader`, when given, REPLACES the
-    * bucket read entirely (it receives the relevant slice of the
-    * manifest and must return state in the CURRENT merge schema — the
-    * full-DDL runner's per-version identity remap). `onStaged` runs with
-    * the freshly staged version dir path BEFORE the manifest commit —
-    * the full-DDL runner writes its schema-watermark sidecar there, so a
-    * commit can never reference a version whose watermark is missing.
-    */
-  private[graft] def applyPartitionedBatch(
-      rawBatch: DataFrame, batchId: Long, auditDir: String, stateDir: String,
-      nBuckets: Int, spec: CdcSchema.CdcTableSpec,
-      stateReadSchema: Option[org.apache.spark.sql.types.StructType] = None,
-      stateReader: Option[Map[Long, Set[Long]] => DataFrame] = None,
-      onStaged: Option[String => Unit] = None): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val spark = rawBatch.sparkSession
-    val bucketOf = bucketFn(nBuckets) _
-    // opt-in phase timing (SPARK_GRAFT_COMMIT_TRACE=1): the commit path
-    // is latency-critical, so its cost must be attributable per phase,
-    // not guessed — LatencySoak quantifies the total, this names it
-    val trace = sys.env.contains("SPARK_GRAFT_COMMIT_TRACE")
-    def tr[T](tag: String)(f: => T): T =
-      if (!trace) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[commit-trace] b$batchId $tag ${(System.nanoTime() - t0) / 1e6}%.0f ms")
-        r
-      }
-    val batch = rawBatch.persist() // 2 more actions below; scan the source once
-    // The audit append is independent of the merge until the commit
-    // point, so it runs CONCURRENTLY with the stats pass + state merge
-    // (two driver threads, two Spark jobs over the same cached batch) and
-    // is awaited before the manifest rename — audit durable before the
-    // commit names the version, exactly the old ordering, minus the
-    // serialized wall time. At micro-batch cadence this overlap is a
-    // direct commit-latency cut (LatencySoak measures it).
-    val auditF = Future { writeAudit(batch, auditDir, batchId) }
-    try {
-        val imageType = batch.schema("after").dataType
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        val keyType = imageType(spec.key).dataType
-
-        // ONE action for input fingerprint + touched buckets + truncate
-        // flag (was three — each a full pass over the cached batch, pure
-        // per-commit fixed overhead at micro-batch sizes). The
-        // fingerprint formula is bit-identical to
-        // BucketState.inputFingerprint: manifests recorded by either
-        // path replay against the other.
-        val statCols = batch.columns.sorted.map(c => s"`$c`").mkString(", ")
-        val statRow = tr("stats")(batch.select(
-            expr(s"xxhash64(struct($statCols))").as("h"),
-            bucketOf(
-              coalesce(col(s"after.${spec.key}"), col(s"before.${spec.key}")),
-              keyType).as("p"),
-            (col("before").isNull && col("after").isNull).cast("int").as("t"))
-          .agg(coalesce(bit_xor(col("h")), lit(0L)), count(lit(1)),
-            collect_set(col("p")), coalesce(max(col("t")), lit(0)))
-          .collect()(0))
-        val hasTruncate = statRow.getInt(3) > 0
-        val batchBuckets = statRow.getSeq[Long](2)
-
-        val m = readManifest(spark, stateDir)
-        val manifest = m.buckets
-        val batchFp = statRow.getLong(0) ^
-          java.lang.Long.rotateLeft(statRow.getLong(1), 32)
-        // Stale-checkpoint + replay-of-committed-batch guards live in
-        // BucketState.checkBatch (shared with IncrementalDedup): a
-        // manifest committed beyond this batch fails loudly; a manifest
-        // committed AT this batch no-ops iff the recorded input
-        // fingerprint matches (else the checkpoint was reset against
-        // retained state). Proceed carries the physical version dir —
-        // batchId+1 until a compaction has renumbered past it.
-        BucketState.checkBatch(m, batchId, batchFp) match {
-          case BucketState.AlreadyCommitted =>
-          // The batch's effect is durable — re-merging would read bucket
-          // dirs under its own version while overwriting that very dir.
-          // The audit rewrite is idempotent; just redo the GC the crash
-          // may have skipped.
-          Await.result(auditF, Duration.Inf)
-          BucketState.gcVersions(spark, stateDir)
-          case BucketState.Proceed(newVersion) =>
-        val touched = (batchBuckets :+ -1L).toSet
-        val prev =
-          if (manifest.isEmpty)
-            emptyStateFor(spark, spec, imageType).withColumn("p", lit(-1L))
-          else {
-            // horizon moved ⇒ every bucket is affected; otherwise read
-            // only the touched buckets (partition-pruned per version dir)
-            val relevant =
-              if (hasTruncate) manifest
-              else manifest.view.filterKeys(touched).toMap
-            stateReader match {
-              case Some(rd) => rd(relevant)
-              case None => BucketState.readBuckets(spark, stateDir, relevant,
-                emptyStateFor(spark, spec, imageType).withColumn("p", lit(-1L)),
-                stateReadSchema)
-            }
-          }
-
-        // (1) Stage this batch's buckets under its OWN version dir —
-        // strictly newer than anything `prev` reads (checkBatch
-        // guarantees it), so no overwrite-what-you-read hazard and no
-        // extra staging copy. repartition by p, RIGHT-SIZED to the
-        // touched-bucket count: a delta touching 5 of 64 buckets gets 5
-        // merge tasks, not shuffle-partitions-many mostly-empty ones —
-        // scheduling overhead is the dominant per-commit cost at
-        // micro-batch sizes, and one task per bucket dir still writes
-        // one file per dir (a big backfill touches every bucket, so its
-        // task count is nBuckets — same layout as before).
-        tr("merge_write")(mergeBatch(prev.drop("p"), batch, spec = spec)
-          .withColumn("p",
-            when(col("key").isNull, lit(-1L))
-              .otherwise(bucketOf(col("key"), keyType)))
-          .repartition(touched.size, col("p"))
-          .write.mode("overwrite").partitionBy("p").parquet(s"$stateDir/v=$newVersion"))
-        onStaged.foreach(_(s"$stateDir/v=$newVersion"))
-
-        // Buckets actually present in the output (a truncate can empty a
-        // bucket entirely — it must drop out of the manifest, the case
-        // dynamic partition overwrite silently got wrong).
-        val outBuckets = tr("list_buckets")(listBuckets(spark, s"$stateDir/v=$newVersion"))
-        val base = if (hasTruncate) Map.empty[Long, Set[Long]] else manifest
-        val next = (base -- touched) ++ outBuckets.map(_ -> Set(newVersion))
-
-        // (2) THE commit point: atomic rename over _CURRENT. The fp line
-        // records the LOGICAL batch version (batchId+1) — what a replay
-        // will look for — independent of the physical dir number. Audit
-        // durability precedes the commit (await), as before.
-        tr("audit_await")(Await.result(auditF, Duration.Inf))
-        tr("manifest_commit")(commitManifest(spark, stateDir, next, Some((batchId + 1) -> batchFp)))
-
-        // (3) GC version dirs nothing references anymore.
-        tr("gc")(BucketState.gcVersions(spark, stateDir))
-        }
-    } finally {
-      // sync the audit job before dropping the cache it reads (an early
-      // throw above must not leave it racing a recompute); result/failure
-      // was already propagated at the commit sites
-      Await.ready(auditF, Duration.Inf)
-      batch.unpersist()
-    }
-    ()
-  }
-
   // ---------------------------------------------------------------- LSM
 
-  /** LSM-style replica: the sub-second-commit shape of the merge.
-    *
-    * [[runPartitioned]] replace-merges every touched bucket per
-    * micro-batch — commit cost O(touched state), which under uniform key
-    * arrival is the WHOLE replica (the latency soak's measured ~700 ms
-    * merge+write floor at 100k keys). Here a batch appends ONLY its own
-    * net per-key delta as one immutable segment per touched bucket —
+  /** The LSM replica — the one live CDC state engine. A batch appends
+    * ONLY its own events as one immutable segment per touched bucket —
     * commit cost O(delta), independent of state size — and the per-key
     * winner is resolved at READ time across a bucket's segments
-    * (max-pos-per-key, the same fold), exactly the LSM trade the
+    * (max-pos-per-key, the [[mergeBatch]] fold), exactly the LSM trade the
     * incremental dedup index already runs ([[graft.operators.IncrementalDedup]]).
+    * The state is hash-partitioned by `p = pmod(key, nBuckets)` for
+    * integral keys, `p = pmod(xxhash64(key), nBuckets)` otherwise
+    * ([[bucketFn]]), generic over the table via `spec`.
     * Segments hold the RAW events (not a per-batch net effect), so the
     * retained log also answers position-granular time travel —
     * [[partitionedSnapshotLsmAsOf]] — until a compaction folds history
     * and advances the floor.
-    * [[BucketState]]'s manifest already supports many segments per
-    * bucket, so the commit protocol (stage → atomic `_CURRENT` rename →
-    * GC), the replay-fingerprint guard, and the stale-checkpoint check
-    * are IDENTICAL to the replace-merge path.
     *
-    * Semantics are unchanged (spec'd equal to [[runPartitioned]] on the
-    * same stream): a truncate APPENDS a horizon row — no rewrite at all,
+    * Commit protocol ([[BucketState]]): stage the segments under a
+    * reserved `v=<n>` dir → one atomic `_CURRENT` rename naming them →
+    * GC of unreferenced dirs. A crash before the rename leaves readers on
+    * complete pre-batch state; the manifest's recorded input fingerprint
+    * tells a replay of the committed batch (no-op) from a checkpoint reset
+    * against retained state (fails loudly).
+    *
+    * A truncate APPENDS a horizon row in `p = -1` — no rewrite at all,
     * the read filters `pos > max(horizon)` across segments and
     * compaction erases below-horizon rows for good; delete markers
     * resolve by max pos like every other row. Read amplification grows
-    * one raw-log segment per touched bucket per batch until [[compactLsm]] folds
-    * them — bounded adaptively at `compactWhenSegments` by the measured
-    * max segments-per-bucket, the same policy (and argument) as the
-    * dedup index. Choose by workload: replace-merge keeps zero-cost
-    * reads and pays O(state) commits; LSM keeps O(delta) commits and
-    * pays bounded-K reads — at 100 TB with a latency SLO, LSM is the
-    * shape, with compaction running off the hot path.
-    */
-  /** `asyncCompaction = true` moves the fold OFF the hot path: when the
+    * one raw-log segment per touched bucket per batch until [[compactLsm]]
+    * folds them — bounded adaptively at `compactWhenSegments` by the
+    * measured max segments-per-bucket, the same policy (and argument) as
+    * the dedup index. A read is one scan at any segment count
+    * ([[readLsm]]).
+    *
+    * `asyncCompaction = true` moves the fold OFF the hot path: when the
     * segment bound trips, compaction runs on a background thread while
     * the stream keeps committing O(delta) batches (the manifest-lock /
     * reserved-version / in-flight-GC protocol in [[BucketState]] makes
@@ -925,22 +483,39 @@ object CdcStream {
   def runPartitionedLsm(changelog: DataFrame, auditDir: String, stateDir: String,
                         checkpointDir: String, nBuckets: Int = 64,
                         spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
-                        compactWhenSegments: Int = 8,
+                        compactWhenSegments: Int = CompactWhenSegments,
                         asyncCompaction: Boolean = false): StreamingQuery =
     changelog.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        applyLsmBatch(rawBatch, batchId, auditDir, stateDir, nBuckets, spec)
-        val spark = rawBatch.sparkSession
-        val m = readManifest(spark, stateDir)
-        val maxSegs =
-          if (m.buckets.isEmpty) 0 else m.buckets.values.map(_.size).max
-        if (compactWhenSegments > 0 && maxSegs >= compactWhenSegments)
-          maybeCompact(spark, stateDir, nBuckets, spec, asyncCompaction)
-        ()
+        lsmStep(rawBatch, batchId, auditDir, stateDir, nBuckets, spec,
+          compactWhenSegments, asyncCompaction)
       }
       .start()
+
+  /** Max segments per bucket at which both runners fold by default. */
+  private val CompactWhenSegments = 8
+
+  /** One micro-batch of either runner: [[applyLsmBatch]], then a
+    * [[maybeCompact]] once the max segments-per-bucket reaches
+    * `compactWhenSegments` (0 = never). `stateReader` and `onStaged` are
+    * the schema hooks of [[readLsm]] / [[applyLsmBatch]] / [[compactLsm]].
+    */
+  private def lsmStep(batch: DataFrame, batchId: Long, auditDir: String,
+                      stateDir: String, nBuckets: Int, spec: CdcSchema.CdcTableSpec,
+                      compactWhenSegments: Int, asyncCompaction: Boolean,
+                      stateReader: Option[Map[Long, Set[Long]] => DataFrame] = None,
+                      onStaged: Option[String => Unit] = None): Unit = {
+    applyLsmBatch(batch, batchId, auditDir, stateDir, nBuckets, spec, onStaged)
+    val spark = batch.sparkSession
+    val m = BucketState.readManifest(spark, stateDir)
+    val maxSegs =
+      if (m.buckets.isEmpty) 0 else m.buckets.values.map(_.size).max
+    if (compactWhenSegments > 0 && maxSegs >= compactWhenSegments)
+      maybeCompact(spark, stateDir, nBuckets, spec, asyncCompaction,
+        stateReader, onStaged)
+  }
 
   private val compactingFlags =
     scala.collection.concurrent.TrieMap.empty[String, java.util.concurrent.atomic.AtomicBoolean]
@@ -958,14 +533,18 @@ object CdcStream {
     */
   private[graft] def maybeCompact(spark: SparkSession, stateDir: String,
                                   nBuckets: Int, spec: CdcSchema.CdcTableSpec,
-                                  async: Boolean): Unit =
-    if (!async) compactLsm(spark, stateDir, nBuckets, spec)
+                                  async: Boolean,
+                                  stateReader: Option[Map[Long, Set[Long]] => DataFrame] = None,
+                                  onStaged: Option[String => Unit] = None): Unit = {
+    def fold(): Unit = compactLsm(spark, stateDir, nBuckets, spec,
+      stateReader = stateReader, onStaged = onStaged)
+    if (!async) fold()
     else {
       val flag = compactingFlags.getOrElseUpdate(
         stateDir, new java.util.concurrent.atomic.AtomicBoolean(false))
       if (flag.compareAndSet(false, true)) {
         val t = new Thread(() => {
-          try compactLsm(spark, stateDir, nBuckets, spec)
+          try fold()
           catch {
             case e: Throwable =>
               System.err.println(s"[lsm] background compaction failed: ${e.getMessage}")
@@ -975,6 +554,7 @@ object CdcStream {
         t.start()
       }
     }
+  }
 
   /** One LSM micro-batch: audit + stats + the raw-log segment write all
     * CONCURRENT (three driver threads, three Spark jobs over the same
@@ -992,11 +572,16 @@ object CdcStream {
     * common path saves a full serialized Spark-job round-trip, which at
     * micro-batch cadence is pure commit latency (LatencySoak measures it,
     * SPARK_GRAFT_COMMIT_TRACE=1 itemizes it).
+    *
+    * `onStaged` runs with the staged version dir BEFORE the manifest
+    * commit ([[runRouted]] stamps its schema watermark there), so a
+    * commit can never name a version that lacks its stamp.
     */
   private[graft] def applyLsmBatch(rawBatch: DataFrame, batchId: Long,
                                    auditDir: String, stateDir: String,
                                    nBuckets: Int,
-                                   spec: CdcSchema.CdcTableSpec): Unit = {
+                                   spec: CdcSchema.CdcTableSpec,
+                                   onStaged: Option[String => Unit] = None): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -1028,7 +613,7 @@ object CdcStream {
           .collect()(0)
       }
 
-      val m = readManifest(spark, stateDir)
+      val m = BucketState.readManifest(spark, stateDir)
       // Physical staging version: strictly above every referenced dir and
       // at least the logical batch version — same value checkBatch's
       // Proceed would carry, derivable before the fingerprint exists.
@@ -1070,6 +655,7 @@ object CdcStream {
           .repartition(nBuckets, col("p"))
           .write.mode("overwrite").partitionBy("p")
           .parquet(s"$stateDir/v=$newVersion"))
+        onStaged.foreach(_(s"$stateDir/v=$newVersion"))
         val statRow = tr("stats_await")(Await.result(statF, Duration.Inf))
         val batchFp = statRow.getLong(0) ^
           java.lang.Long.rotateLeft(statRow.getLong(1), 32)
@@ -1081,17 +667,17 @@ object CdcStream {
             Await.result(auditF, Duration.Inf)
           case BucketState.Proceed(_) =>
             val outBuckets =
-              tr("list_buckets")(listBuckets(spark, s"$stateDir/v=$newVersion"))
+              tr("list_buckets")(BucketState.listBuckets(spark, s"$stateDir/v=$newVersion"))
             tr("audit_await")(Await.result(auditF, Duration.Inf))
             // Commit under the manifest lock against a FRESH read: a
             // background compaction may have swapped segment sets since
             // this batch's check read — folding the stale snapshot in
             // here would resurrect compacted-away segments.
             tr("manifest_commit")(BucketState.manifestLock(stateDir).synchronized {
-              val mNow = readManifest(spark, stateDir)
+              val mNow = BucketState.readManifest(spark, stateDir)
               val merged = outBuckets.foldLeft(mNow.buckets)((acc, b) =>
                 acc.updated(b, acc.getOrElse(b, Set.empty[Long]) + newVersion))
-              commitManifest(spark, stateDir, merged, Some((batchId + 1) -> batchFp))
+              BucketState.commitManifest(spark, stateDir, merged, Some((batchId + 1) -> batchFp))
             })
             committed = true
         }
@@ -1177,7 +763,7 @@ object CdcStream {
       .select(col("key"), lit(throughPos).as("pos"),
         lit(null).cast(imageType).as("after"),
         lit(LsmRetractBucket).as("p"))
-    val m0 = readManifest(spark, stateDir)
+    val m0 = BucketState.readManifest(spark, stateDir)
     // an empty replica has nothing to erase — and committing a
     // tombstone-only version there would be misread as batch progress
     // by checkBatch's pre-fingerprint bucket-max fallback
@@ -1190,11 +776,11 @@ object CdcStream {
       tombs.coalesce(1).write.mode("overwrite").partitionBy("p")
         .parquet(s"$stateDir/v=$newVersion")
       // an empty key frame stages no partition — commit nothing
-      if (listBuckets(spark, s"$stateDir/v=$newVersion")
+      if (BucketState.listBuckets(spark, s"$stateDir/v=$newVersion")
             .contains(LsmRetractBucket))
         BucketState.manifestLock(stateDir).synchronized {
-          val mNow = readManifest(spark, stateDir)
-          commitManifest(spark, stateDir,
+          val mNow = BucketState.readManifest(spark, stateDir)
+          BucketState.commitManifest(spark, stateDir,
             mNow.buckets.updated(LsmRetractBucket,
               mNow.buckets.getOrElse(LsmRetractBucket, Set.empty[Long]) + newVersion),
             mNow.fp)
@@ -1228,23 +814,30 @@ object CdcStream {
     * [[BucketState.readBuckets]] call under one footer schema, so the
     * read's job count does not grow with the segment count. The horizon
     * and tombstone scans run only when the manifest holds those buckets.
-    * `empty` is the zero-state of an empty store.
+    * `empty` is the zero-state of an empty store. `stateReader`, when
+    * given, replaces that bucket read: it receives a slice of the manifest
+    * and returns its rows (with `p`) in the current schema — the routed
+    * replica's [[remappedBucketRead]].
     */
   private def readLsm(spark: SparkSession, stateDir: String,
-                      m: BucketState.Manifest, empty: => DataFrame): LsmSegments = {
+                      m: BucketState.Manifest, empty: => DataFrame,
+                      stateReader: Option[Map[Long, Set[Long]] => DataFrame] = None)
+      : LsmSegments = {
     if (m.buckets.isEmpty) return LsmSegments(empty, None, None)
-    val schema = BucketState.segmentSchema(spark, stateDir, m.buckets)
+    val read = stateReader.getOrElse {
+      val schema = BucketState.segmentSchema(spark, stateDir, m.buckets)
+      (sub: Map[Long, Set[Long]]) => BucketState.readBuckets(spark, stateDir, sub,
+        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema),
+        Some(schema))
+    }
     def scan(inBucket: Long => Boolean): Option[DataFrame] = {
       val sub = m.buckets.filter { case (b, _) => inBucket(b) }
-      if (sub.isEmpty) None
-      else Some(BucketState.readBuckets(spark, stateDir, sub,
-        sys.error("unreachable — sub-manifest non-empty"), Some(schema)).drop("p"))
+      if (sub.isEmpty) None else Some(read(sub).drop("p"))
     }
     val tombs = scan(_ == LsmRetractBucket).map(_
       .groupBy(col("key")).agg(max(col("pos")).as("rpos"))
       .withColumnRenamed("key", "_rkey"))
-    val events = scan(_ >= 0).getOrElse(spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema).drop("p"))
+    val events = read(m.buckets.filter { case (b, _) => b >= 0 }).drop("p")
     LsmSegments(maskRetracted(events, tombs),
       scan(_ == -1L).map(_.select(col("pos"))), tombs)
   }
@@ -1264,8 +857,7 @@ object CdcStream {
     * fold: max-pos winner per key, winners at or below `horizon` (a
     * one-row `h` frame, broadcast; None ≡ `Long.MinValue`) erased, delete
     * markers retained. Buckets partition the keyspace, so per-bucket
-    * resolution ≡ global resolution (the same argument as the
-    * replace-merge).
+    * resolution ≡ global resolution.
     */
   private[graft] def resolveSegments(events: DataFrame,
                                      horizon: Option[DataFrame]): DataFrame = {
@@ -1286,7 +878,7 @@ object CdcStream {
                              spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
                              imageType: org.apache.spark.sql.types.StructType =
                                CdcSchema.invoiceType): DataFrame = {
-    val segs = readLsm(spark, stateDir, readManifest(spark, stateDir),
+    val segs = readLsm(spark, stateDir, BucketState.readManifest(spark, stateDir),
       emptyStateFor(spark, spec, imageType))
     snapshotOfFor(resolveSegments(segs.events, segs.horizon()), spec)
   }
@@ -1296,8 +888,8 @@ object CdcStream {
     * with `pos <= asOfPos` is exactly a replay of the stream's prefix
     * (max-pos winner per key among events ≤ asOfPos, horizon = the
     * largest truncate ≤ asOfPos). The append-only layout gets this for
-    * free; the replace-merge replica cannot answer it at all (each merge
-    * overwrites per-key history in place).
+    * free; a replace-merge replica could not answer it at all (each
+    * merge overwrites per-key history in place).
     *
     * Validity floor: [[compactLsm]] collapses each key's history to its
     * single winner, so every compaction ADVANCES the oldest answerable
@@ -1322,7 +914,7 @@ object CdcStream {
     // the retraction mask applies UNFILTERED by the as-of point: erased
     // history must not resurrect in any time-travel view (see the
     // retraction section — per-key truncate semantics)
-    val segs = readLsm(spark, stateDir, readManifest(spark, stateDir),
+    val segs = readLsm(spark, stateDir, BucketState.readManifest(spark, stateDir),
       emptyStateFor(spark, spec, imageType))
     snapshotOfFor(
       resolveSegments(segs.events.filter(col("pos") <= asOfPos),
@@ -1363,7 +955,7 @@ object CdcStream {
     // masked on BOTH prefix views: a retracted key reports no net change
     // (a retraction is not a CDC event — downstream stores receive the
     // takedown out-of-band; see the retraction section)
-    val segs = readLsm(spark, stateDir, readManifest(spark, stateDir),
+    val segs = readLsm(spark, stateDir, BucketState.readManifest(spark, stateDir),
       emptyStateFor(spark, spec, imageType))
     // BOTH prefix winners from ONE keyed aggregation over ONE segment
     // scan (two resolveSegments calls would read the log twice): the
@@ -1438,12 +1030,16 @@ object CdcStream {
     * resolve(old ∪ late)). The replay fingerprint is taken from the fresh
     * read, never the stale snapshot, so a concurrent batch's progress
     * record is preserved. `beforeSwap` is a test seam: it runs after the
-    * fold, before the locked swap.
+    * fold, before the locked swap. `stateReader` and `onStaged` are the
+    * [[readLsm]] / [[applyLsmBatch]] hooks: the fold reads through the
+    * first and stamps its output dir with the second before the swap.
     */
   def compactLsm(spark: SparkSession, stateDir: String, nBuckets: Int,
                  spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
-                 beforeSwap: () => Unit = () => ()): Unit = {
-    val m = readManifest(spark, stateDir)
+                 beforeSwap: () => Unit = () => (),
+                 stateReader: Option[Map[Long, Set[Long]] => DataFrame] = None,
+                 onStaged: Option[String => Unit] = None): Unit = {
+    val m = BucketState.readManifest(spark, stateDir)
     // nothing to fold on an empty store, or one holding only retraction
     // tombstones (a takedown can precede the first data batch)
     if (!m.buckets.keys.exists(_ != LsmRetractBucket)) return
@@ -1456,7 +1052,7 @@ object CdcStream {
       // not events — a null-image tombstone reaching resolveSegments
       // would read as a delete marker)
       val segs = readLsm(spark, stateDir, m,
-        sys.error("unreachable — manifest non-empty"))
+        sys.error("unreachable — manifest non-empty"), stateReader)
       val horizon = segs.horizon()
       val winners = resolveSegments(segs.events, horizon)
       // (a `Long.MinValue` row — written by older folds — is dropped too)
@@ -1501,12 +1097,13 @@ object CdcStream {
           .repartition(col("p"))
           .write.mode("overwrite").partitionBy("p")
           .parquet(s"$stateDir/v=$newVersion")
+        onStaged.foreach(_(s"$stateDir/v=$newVersion"))
         writeTtFloor(spark, stateDir,
           math.max(folded, readTtFloor(spark, stateDir)))
-        val outBuckets = listBuckets(spark, s"$stateDir/v=$newVersion").toSet
+        val outBuckets = BucketState.listBuckets(spark, s"$stateDir/v=$newVersion").toSet
         beforeSwap()
         val next = BucketState.manifestLock(stateDir).synchronized {
-          val mNow = readManifest(spark, stateDir)
+          val mNow = BucketState.readManifest(spark, stateDir)
           val merged = (mNow.buckets.keySet ++ outBuckets).flatMap { b =>
             val late = mNow.buckets.getOrElse(b, Set.empty[Long]) --
               m.buckets.getOrElse(b, Set.empty[Long])
@@ -1514,67 +1111,11 @@ object CdcStream {
               (if (outBuckets.contains(b)) Set(newVersion) else Set.empty[Long])
             if (segs.isEmpty) None else Some(b -> segs)
           }.toMap
-          commitManifest(spark, stateDir, merged, mNow.fp)
+          BucketState.commitManifest(spark, stateDir, merged, mNow.fp)
           merged
         }
         BucketState.gcVersions(spark, stateDir)
       } finally resolved.unpersist()
     } finally BucketState.releaseVersion(stateDir, newVersion)
-  }
-
-  // Manifest-committed bucket-state plumbing lives in [[BucketState]]
-  // (shared with operators.IncrementalDedup); these aliases keep the
-  // replica-specific call sites terse.
-  private def readManifest(spark: SparkSession, stateDir: String) =
-    BucketState.readManifest(spark, stateDir)
-
-  private def inputFingerprint(batch: DataFrame): Long =
-    BucketState.inputFingerprint(batch)
-
-  private def commitManifest(spark: SparkSession, stateDir: String,
-                             manifest: Map[Long, Set[Long]],
-                             fp: Option[(Long, Long)]): Unit =
-    BucketState.commitManifest(spark, stateDir, manifest, fp)
-
-  private def readBuckets(spark: SparkSession, stateDir: String,
-                          manifest: Map[Long, Set[Long]]): DataFrame =
-    BucketState.readBuckets(spark, stateDir, manifest,
-      emptyState(spark).withColumn("p", lit(-1L)))
-
-  private def listBuckets(spark: SparkSession, versionDir: String): Seq[Long] =
-    BucketState.listBuckets(spark, versionDir)
-
-  private def hadoopFs(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
-    BucketState.hadoopFs(spark, path)
-
-  /** Replica snapshot of a bucketed state dir, resolved through the
-    * `_CURRENT` manifest — readers never see an uncommitted version dir.
-    */
-  def partitionedSnapshot(spark: SparkSession, stateDir: String): DataFrame =
-    snapshotOf(readBuckets(spark, stateDir, readManifest(spark, stateDir).buckets).drop("p"))
-
-  /** [[partitionedSnapshot]] for an arbitrary table spec (no UInt64
-    * widening — natural column types).
-    */
-  def partitionedSnapshotFor(spark: SparkSession, stateDir: String,
-                             spec: CdcSchema.CdcTableSpec): DataFrame =
-    snapshotOfFor(
-      readBuckets(spark, stateDir, readManifest(spark, stateDir).buckets).drop("p"), spec)
-
-  /** Newest state version under `stateDir`, if any. */
-  def latestStateVersion(spark: SparkSession, stateDir: String): Option[(Long, DataFrame)] = {
-    val fs = hadoopFs(spark, stateDir)
-    val root = new org.apache.hadoop.fs.Path(stateDir)
-    if (!fs.exists(root)) None
-    else {
-      val versions = fs.listStatus(root).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("v="))
-        .map(_.getPath.getName.stripPrefix("v=").toLong)
-      if (versions.isEmpty) None
-      else {
-        val v = versions.max
-        Some((v, spark.read.parquet(s"$stateDir/v=$v")))
-      }
-    }
   }
 }

@@ -175,7 +175,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     // two triggers in file-mtime order
     assert(new java.io.File(s"$in/b1.json").setLastModified(
       new java.io.File(s"$in/b2.json").lastModified() - 60000))
-    val q = graft.streaming.CdcStream.runRoutedEvolving(
+    val q = graft.streaming.CdcStream.runRouted(
       spark.readStream.option("maxFilesPerTrigger", 1).text(in)
         .withColumnRenamed("value", "raw"), "raw",
       s"$base/dead", s"$base/schema", s"$base/audit", s"$base/state", s"$base/ckpt")
@@ -210,7 +210,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     ).mkString("\n").getBytes("UTF-8"))
     assert(new java.io.File(s"$in/b1.json").setLastModified(
       new java.io.File(s"$in/b2.json").lastModified() - 60000))
-    val q = graft.streaming.CdcStream.runRoutedEvolving(
+    val q = graft.streaming.CdcStream.runRouted(
       spark.readStream.option("maxFilesPerTrigger", 1).text(in)
         .withColumnRenamed("value", "raw"), "raw",
       s"$base/dead", s"$base/schema", s"$base/audit", s"$base/state", s"$base/ckpt")
@@ -313,7 +313,7 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     ).mkString("\n").getBytes("UTF-8"))
     assert(new java.io.File(s"$in/b1.json").setLastModified(
       new java.io.File(s"$in/b2.json").lastModified() - 60000))
-    val q = graft.streaming.CdcStream.runRoutedEvolving(
+    val q = graft.streaming.CdcStream.runRouted(
       spark.readStream.option("maxFilesPerTrigger", 1).text(in)
         .withColumnRenamed("value", "raw"), "raw",
       s"$base/dead", s"$base/schema", s"$base/audit", s"$base/state", s"$base/ckpt")
@@ -489,12 +489,12 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     import java.nio.file.{Files, Paths}
     val base = Files.createTempDirectory("graft-evolve-full").toString
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
-    def stream() = graft.streaming.CdcStream.runRoutedEvolvingFull(
+    def stream() = graft.streaming.CdcStream.runRouted(
       spark.readStream.option("maxFilesPerTrigger", 1).text(in)
         .withColumnRenamed("value", "raw"), "raw",
       s"$base/dead", s"$base/schema", s"$base/audit", s"$base/state", s"$base/ckpt",
       nBuckets = 4)
-    def snap() = graft.streaming.CdcStream.partitionedSnapshotEvolvedFull(
+    def snap() = graft.streaming.CdcStream.partitionedSnapshotEvolved(
       spark, s"$base/state", s"$base/schema")
 
     // ---- run 1: base inserts, then RENAME with a post-rename rewrite
@@ -549,5 +549,77 @@ class SchemaEvolutionSpec extends AnyFunSuite {
     stream().awaitTermination(120000)
     assert(snap().collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
       === Seq((1, 11), (2, 20), (3, 30), (4, 40)))
+  }
+
+  test("live full-DDL stream: compaction folds across RENAME + DROP, replica unchanged") {
+    import java.nio.file.{Files, Paths}
+    val base = Files.createTempDirectory("graft-evolve-fold").toString
+    val in = s"$base/in"; Files.createDirectories(Paths.get(in))
+    val t0 = System.currentTimeMillis()
+    def ddl(pos: Long, stmt: String) =
+      s"""{"payload":{"source":{"pos":$pos},"ts_ms":$pos,"databaseName":"dev","ddl":"ALTER TABLE invoice $stmt"}}"""
+    def ins(pos: Long, after: String) =
+      s"""{"payload":{"after":$after,"source":{"pos":$pos}}}"""
+    def del(pos: Long, before: String) =
+      s"""{"payload":{"before":$before,"after":null,"source":{"pos":$pos}}}"""
+    // one file per micro-batch, every one carrying data, so each batch
+    // appends one segment to the single bucket
+    val batches = Seq(
+      Seq(ins(1, """{"order_id":1,"invoice_number":10}"""),
+        ins(2, """{"order_id":2,"invoice_number":20}""")),
+      Seq(ddl(10, "ADD COLUMN region VARCHAR(16)"),
+        ins(11, """{"order_id":3,"invoice_number":30,"region":"emea"}""")),
+      Seq(ins(20, """{"order_id":1,"invoice_number":11,"region":"apac"}""")),
+      Seq(ddl(30, "RENAME COLUMN invoice_number TO inv_no"),
+        ins(31, """{"order_id":2,"inv_no":21,"region":null}""")),
+      Seq(ins(40, """{"order_id":4,"inv_no":40,"region":"amer"}""")),
+      Seq(del(50, """{"order_id":3,"inv_no":30,"region":"emea"}""")),
+      Seq(ddl(60, "DROP COLUMN region"),
+        ins(61, """{"order_id":5,"inv_no":50}""")),
+      // the 8th segment trips the fold (default bound 8)
+      Seq(ins(70, """{"order_id":4,"inv_no":41}""")),
+      // after the fold: a RENAME the folded segment must follow, and a
+      // re-added namesake that must not resurface pre-drop values
+      Seq(ddl(80, "RENAME COLUMN inv_no TO invoice_no"),
+        ddl(81, "ADD COLUMN region VARCHAR(16)"),
+        ins(82, """{"order_id":6,"invoice_no":60,"region":"emea"}""")))
+    def write(i: Int): Unit = {
+      val f = Paths.get(s"$in/b$i.json")
+      Files.write(f, batches(i).mkString("\n").getBytes("UTF-8"))
+      assert(f.toFile.setLastModified(t0 - (batches.size - i) * 60000L))
+    }
+    def run(): Unit = graft.streaming.CdcStream.runRouted(
+      spark.readStream.option("maxFilesPerTrigger", 1).text(in)
+        .withColumnRenamed("value", "raw"), "raw",
+      s"$base/dead", s"$base/schema", s"$base/audit", s"$base/state", s"$base/ckpt",
+      nBuckets = 1).awaitTermination(120000)
+    def segments(): Seq[Long] = graft.streaming.BucketState
+      .readManifest(spark, s"$base/state").buckets.getOrElse(0L, Set.empty[Long])
+      .toSeq.sorted
+    def assertMatchesBatch(upTo: Int): Unit = {
+      val got = graft.streaming.CdcStream.partitionedSnapshotEvolved(
+        spark, s"$base/state", s"$base/schema")
+      val want = SchemaEvolution.snapshotEvolvedFull(spark.createDataset(
+        batches.take(upTo).flatten)(org.apache.spark.sql.Encoders.STRING).toDF("value"))
+      assert(got.columns.toSeq === want.columns.toSeq)
+      assert(got.collect().toSeq === want.collect().toSeq)
+    }
+
+    (0 until 7).foreach(write); run()
+    assert(segments().size === 7)
+    assertMatchesBatch(7)
+
+    write(7); run()
+    val folded = segments()
+    assert(folded.size === 1, s"fold did not trip: $folded")
+    assert(new java.io.File(s"$base/state/v=${folded.head}/_SCHEMA_WATERMARK").exists())
+    assertMatchesBatch(8)
+
+    write(8); run()
+    assert(segments().size === 2)
+    assertMatchesBatch(9)
+    assert(graft.streaming.CdcStream.partitionedSnapshotEvolved(
+        spark, s"$base/state", s"$base/schema").columns.toSeq ===
+      Seq("order_id", "invoice_no", "region"))
   }
 }

@@ -12,9 +12,9 @@ import graft.TestSpark
 
 /** The append-only (LSM) replica: per-batch delta segments + read-time
   * max-pos-per-key resolution + adaptive compaction must be
-  * OBSERVATIONALLY IDENTICAL to the replace-merge replica on the same
-  * stream — same snapshots, same replay guarantees — while never reading
-  * or rewriting prior state in the commit path.
+  * OBSERVATIONALLY IDENTICAL to the batch apply of the same changelog —
+  * same snapshots, same replay guarantees — while never reading or
+  * rewriting prior state in the commit path.
   */
 class LsmReplicaSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -42,10 +42,10 @@ class LsmReplicaSpec extends AnyFunSuite {
     }
   }
 
-  test("LSM snapshot equals replace-merge snapshot: updates, deletes, truncate, stragglers") {
+  test("LSM snapshot equals the batch apply: updates, deletes, truncate, stragglers") {
     val base = Files.createTempDirectory("graft-lsm-eq").toString
     val in = s"$base/in"
-    writeBatches(in, Seq(
+    val batches = Seq(
       Seq(env(1, 1, Some(10)), env(2, 2, Some(20)), env(3, 3, Some(30)),
         env(4, 4, Some(40))),
       // delete k3, update k1, then TRUNCATE at 10 (erases 1-4 incl. the
@@ -53,20 +53,20 @@ class LsmReplicaSpec extends AnyFunSuite {
       Seq(env(5, 3, None), env(6, 1, Some(11)), trunc(10), env(11, 5, Some(50))),
       // straggler BELOW the horizon redelivered late (must stay out),
       // update k5, insert k6
-      Seq(env(4, 4, Some(40)), env(12, 5, Some(51)), env(13, 6, Some(60)))))
+      Seq(env(4, 4, Some(40)), env(12, 5, Some(51)), env(13, 6, Some(60))))
+    writeBatches(in, batches)
 
     def changelog() = CdcStream.fromFiles(spark, in, Some(1))
-    CdcStream.runPartitioned(changelog(), s"$base/auditA", s"$base/stateA",
-      s"$base/ckptA", nBuckets = 4).awaitTermination(120000)
     CdcStream.runPartitionedLsm(changelog(), s"$base/auditB", s"$base/stateB",
       s"$base/ckptB", nBuckets = 4).awaitTermination(120000)
 
-    val merge = CdcStream.partitionedSnapshot(spark, s"$base/stateA")
+    val batchApply = graft.cdc.CdcApply.snapshot(graft.cdc.Changelog.fromEnvelopeJson(
+        spark.createDataset(batches.flatten)(Encoders.STRING).toDF("value")))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     def lsm() = CdcStream.partitionedSnapshotLsm(spark, s"$base/stateB")
       .collect().map(r => (r.getInt(0).toLong, r.getInt(1).toLong)).toSeq
-    assert(merge === Seq((5L, 51L), (6L, 60L)))
-    assert(lsm() === merge)
+    assert(batchApply === Seq((5L, 51L), (6L, 60L)))
+    assert(lsm() === batchApply)
 
     // truncate APPENDED: segments from pre-truncate batches are still
     // referenced (no rewrite happened) until compaction folds them
@@ -76,7 +76,7 @@ class LsmReplicaSpec extends AnyFunSuite {
     // restart with no new input: replay no-ops, snapshot unchanged
     CdcStream.runPartitionedLsm(changelog(), s"$base/auditB", s"$base/stateB",
       s"$base/ckptB", nBuckets = 4).awaitTermination(120000)
-    assert(lsm() === merge)
+    assert(lsm() === batchApply)
   }
 
   test("adaptive compaction bounds segments per bucket and preserves the snapshot") {

@@ -7,8 +7,15 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.cdc.{CdcApply, Changelog}
 
+/** The LSM replica's snapshot as `(order_id, invoice_number)` pairs. */
+private object LsmRows {
+  def apply(spark: org.apache.spark.sql.SparkSession, stateDir: String): Seq[(Long, Long)] =
+    CdcStream.partitionedSnapshotLsm(spark, stateDir).collect()
+      .map(r => (r.getInt(0).toLong, r.getInt(1).toLong)).toSeq
+}
+
 /** End-to-end Structured Streaming: envelope JSON files → file-source
-  * stream → foreachBatch incremental merge → versioned state + audit log.
+  * stream → foreachBatch segment append → LSM replica + audit log.
   * The final streamed state must equal the batch apply of the same
   * changelog (stream/batch unification — SURVEY.md §2.10 backfill row).
   */
@@ -37,14 +44,11 @@ class StreamingSpec extends AnyFunSuite {
 
     val stream = CdcStream.fromFiles(spark, in)
     assert(stream.isStreaming)
-    // maxFilesPerTrigger=1 would pin 2 micro-batches; AvailableNow already
-    // splits per file listing order here — assert via state versions below.
-    val q = CdcStream.run(stream, s"$base/audit", s"$base/state", s"$base/ckpt")
+    val q = CdcStream.runPartitionedLsm(stream, s"$base/audit", s"$base/state",
+      s"$base/ckpt")
     q.awaitTermination(120000)
 
-    val Some((_, state)) = CdcStream.latestStateVersion(spark, s"$base/state")
-    val streamed = CdcStream.snapshotOf(state).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val streamed = LsmRows(spark, s"$base/state")
 
     val batch = Changelog.fromEnvelopeJson(
       spark.createDataset(lines1 ++ lines2)(org.apache.spark.sql.Encoders.STRING).toDF("value"))
@@ -64,45 +68,23 @@ class StreamingSpec extends AnyFunSuite {
     val base = Files.createTempDirectory("graft-replay").toString
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     Files.write(Paths.get(s"$in/b1.json"), lines1.mkString("\n").getBytes("UTF-8"))
-    val q1 = CdcStream.run(CdcStream.fromFiles(spark, in),
+    val q1 = CdcStream.runPartitionedLsm(CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt")
     q1.awaitTermination(120000) // batch 0 committed -> v=1
-    // Simulate batch 1 crashing mid-state-write: a garbage v=2 dir exists
-    // but the checkpoint never committed. The replay of batch 1 must fold
-    // v=1 + batch, NOT read the garbage it is about to overwrite.
+    // Simulate batch 1 crashing mid-segment-write: a garbage v=2 dir
+    // exists but the manifest never named it. The replay of batch 1 must
+    // stage over it, NEVER read the garbage it is about to overwrite.
     Files.createDirectories(Paths.get(s"$base/state/v=2"))
     Files.write(Paths.get(s"$base/state/v=2/part-corrupt.parquet"),
       "not parquet".getBytes("UTF-8"))
     Files.write(Paths.get(s"$in/b2.json"), lines2.mkString("\n").getBytes("UTF-8"))
-    val q2 = CdcStream.run(CdcStream.fromFiles(spark, in),
+    val q2 = CdcStream.runPartitionedLsm(CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt")
     q2.awaitTermination(120000)
-    val Some((v, state)) = CdcStream.latestStateVersion(spark, s"$base/state")
-    assert(v === 2)
-    val snap = CdcStream.snapshotOf(state).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val m = BucketState.readManifest(spark, s"$base/state")
+    assert(m.buckets.values.flatten.max === 2)
+    val snap = LsmRows(spark, s"$base/state")
     assert(snap === Seq((1L, 10L), (2L, 21L), (4L, 40L)))
-  }
-
-  test("version pruning keeps the newest retainVersions dirs only") {
-    val base = Files.createTempDirectory("graft-retain").toString
-    val in = s"$base/in"; Files.createDirectories(Paths.get(in))
-    // four single-line files → up to 4 micro-batches under AvailableNow;
-    // force one file per trigger via separate runs to pin version count
-    (1 to 4).foreach { i =>
-      Files.write(Paths.get(s"$in/b$i.json"),
-        env("null", s"""{"order_id":$i,"invoice_number":${i * 10}}""", "c", i).getBytes)
-      val q = CdcStream.run(CdcStream.fromFiles(spark, in),
-        s"$base/audit", s"$base/state", s"$base/ckpt", retainVersions = 2)
-      q.awaitTermination(120000)
-    }
-    val versions = new java.io.File(s"$base/state").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("v=")).map(_.getName).sorted.toSeq
-    assert(versions.size <= 2, s"old versions not pruned: $versions")
-    // newest version carries the full fold regardless of pruning
-    val Some((_, state)) = CdcStream.latestStateVersion(spark, s"$base/state")
-    val snap = CdcStream.snapshotOf(state).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(snap === (1 to 4).map(i => (i.toLong, i * 10L)))
   }
 
   test("runRouted: one stream feeds quarantine, schema history, audit, and state") {
@@ -118,11 +100,14 @@ class StreamingSpec extends AnyFunSuite {
       s"$base/dead", s"$base/schema", s"$base/audit", s"$base/state", s"$base/ckpt")
     q.awaitTermination(120000)
 
-    // data events folded into state; DDL did NOT act as a truncate
-    val Some((_, state)) = CdcStream.latestStateVersion(spark, s"$base/state")
-    val snap = CdcStream.snapshotOf(state).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(snap === Seq((1L, 10L), (2L, 20L), (3L, 30L)))
+    // data events folded into state; DDL did NOT act as a truncate. The
+    // ADD COLUMN gives the replica a `note` column, null for every row
+    val replica = CdcStream.partitionedSnapshotEvolved(
+      spark, s"$base/state", s"$base/schema")
+    assert(replica.columns.toSeq === Seq("order_id", "invoice_number", "note"))
+    val snap = replica.collect()
+      .map(r => (r.getInt(0).toLong, r.getInt(1).toLong, r.getAs[String]("note"))).toSeq
+    assert(snap === Seq((1L, 10L, null), (2L, 20L, null), (3L, 30L, null)))
     // audit carries exactly the data envelopes
     assert(spark.read.parquet(s"$base/audit").count() === 3)
     // quarantine holds the garbage line with raw bytes
@@ -147,52 +132,30 @@ class StreamingSpec extends AnyFunSuite {
     val half2 = log.crossJoin(broadcast(mid)).filter(col("pos") > col("m")).drop("m")
     val imageType = graft.cdc.CdcSchema.wideType
     val s0 = CdcStream.emptyStateFor(spark2, spec, imageType)
-    val s1 = CdcStream.mergeBatch(s0, half1, None, spec).localCheckpoint()
-    val s2 = CdcStream.mergeBatch(s1, half2, None, spec).localCheckpoint()
+    val s1 = CdcStream.mergeBatch(s0, half1, spec).localCheckpoint()
+    val s2 = CdcStream.mergeBatch(s1, half2, spec).localCheckpoint()
     val streamed = CdcStream.snapshotOfFor(s2, spec)
     val expected = graft.cdc.CdcApply.snapshotFor(log, spec)
     assert(streamed.exceptAll(expected).isEmpty && expected.exceptAll(streamed).isEmpty)
     assert(streamed.count() === expected.count() && expected.count() > 0)
   }
 
-  test("tombstone GC drops old delete markers but keeps the at-least-once window") {
-    import org.apache.spark.sql.functions.col
-    val batch1 = Changelog.fromEnvelopeJson(
-      spark.createDataset(Seq(
-        env("null", """{"order_id":1,"invoice_number":10}""", "c", 1),
-        env("null", """{"order_id":2,"invoice_number":20}""", "c", 2),
-        env("""{"order_id":1,"invoice_number":10}""", "null", "d", 3)))(
-        org.apache.spark.sql.Encoders.STRING).toDF("value"))
-    val s1 = CdcStream.mergeBatch(CdcStream.emptyState(spark), batch1)
-    // marker for key 1 present without GC
-    assert(s1.filter(col("key") === 1 && col("after").isNull).count() === 1)
-    // GC watermark above the marker's pos → marker dropped, live key kept
-    val s2 = CdcStream.mergeBatch(CdcStream.emptyState(spark), batch1, Some(4L))
-    assert(s2.filter(col("key") === 1).count() === 0)
-    assert(s2.filter(col("key") === 2).count() === 1)
-    // watermark at-or-below the marker's pos → marker retained (idempotency
-    // window still open for redelivery of pos <= 3)
-    val s3 = CdcStream.mergeBatch(CdcStream.emptyState(spark), batch1, Some(3L))
-    assert(s3.filter(col("key") === 1 && col("after").isNull).count() === 1)
-  }
-
   test("restarted stream with new data continues from checkpointed state") {
     val base = Files.createTempDirectory("graft-stream2").toString
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     Files.write(Paths.get(s"$in/b1.json"), lines1.mkString("\n").getBytes("UTF-8"))
-    val q1 = CdcStream.run(CdcStream.fromFiles(spark, in),
+    val q1 = CdcStream.runPartitionedLsm(CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt")
     q1.awaitTermination(120000)
 
     Files.write(Paths.get(s"$in/b2.json"), lines2.mkString("\n").getBytes("UTF-8"))
-    val q2 = CdcStream.run(CdcStream.fromFiles(spark, in),
+    val q2 = CdcStream.runPartitionedLsm(CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt")
     q2.awaitTermination(120000)
 
-    val Some((v, state)) = CdcStream.latestStateVersion(spark, s"$base/state")
-    assert(v >= 2) // two distinct micro-batches across the restart
-    val streamed = CdcStream.snapshotOf(state).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val m = BucketState.readManifest(spark, s"$base/state")
+    assert(m.buckets.values.flatten.max >= 2) // two distinct micro-batches across the restart
+    val streamed = LsmRows(spark, s"$base/state")
     assert(streamed === Seq((1L, 10L), (2L, 21L), (4L, 40L)))
   }
 }
@@ -235,7 +198,9 @@ class TypedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
   }
 }
 
-/** Bucketed incremental state: only touched partitions rewrite. */
+/** Bucketed LSM state: only touched buckets gain a segment; replay,
+  * checkpoint-reset and crash guards hold across the manifest commit.
+  */
 class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
 
@@ -251,7 +216,7 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     Files.write(Paths.get(s"$in/b1.json"), Seq(
       env("null", """{"order_id":0,"invoice_number":5}""", "c", 1),
       env("null", """{"order_id":1,"invoice_number":10}""", "c", 2)).mkString("\n").getBytes)
-    val q1 = graft.streaming.CdcStream.runPartitioned(
+    val q1 = graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt", n)
     q1.awaitTermination(120000)
@@ -262,18 +227,17 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     // batch 2: key 2 only (bucket 2) — bucket 1 must not be rewritten
     Files.write(Paths.get(s"$in/b2.json"), Seq(
       env("null", """{"order_id":2,"invoice_number":20}""", "c", 3)).mkString("\n").getBytes)
-    val q2 = graft.streaming.CdcStream.runPartitioned(
+    val q2 = graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt", n)
     q2.awaitTermination(120000)
     val bucket1After = new java.io.File(s"$base/state/v=1/p=1").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(f => (f.getName, f.lastModified)).toSet
     assert(bucket1After === bucket1File, "untouched bucket was rewritten")
-    // v=1 still referenced (buckets 0,1), v=2 holds bucket 2 + horizon
+    // v=1 still referenced (buckets 0,1), v=2 holds bucket 2
     assert(new java.io.File(s"$base/state/v=1").exists())
     assert(new java.io.File(s"$base/state/v=2").exists())
-    val snap = graft.streaming.CdcStream.partitionedSnapshot(spark, s"$base/state")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val snap = LsmRows(spark, s"$base/state")
     assert(snap === Seq((0L, 5L), (1L, 10L), (2L, 20L)))
   }
 
@@ -283,31 +247,29 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     Files.write(Paths.get(s"$in/b1.json"), Seq(
       env("null", """{"order_id":0,"invoice_number":5}""", "c", 1)).mkString("\n").getBytes)
-    graft.streaming.CdcStream.runPartitioned(
+    graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt", 8).awaitTermination(120000)
     Files.write(Paths.get(s"$in/b2.json"), Seq(
       env("null", """{"order_id":1,"invoice_number":10}""", "c", 2)).mkString("\n").getBytes)
-    graft.streaming.CdcStream.runPartitioned(
+    graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt", 8).awaitTermination(120000)
 
-    graft.streaming.BucketState.compact(spark, s"$base/state")
+    graft.streaming.CdcStream.compactLsm(spark, s"$base/state", 8)
     val m = graft.streaming.BucketState.readManifest(spark, s"$base/state")
     assert(m.buckets.values.flatten.toSet.size === 1)
-    val snap1 = graft.streaming.CdcStream.partitionedSnapshot(spark, s"$base/state")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val snap1 = LsmRows(spark, s"$base/state")
     assert(snap1 === Seq((0L, 5L), (1L, 10L)))
 
     // the stream picks up where it left off, physical dirs renumbered
     // past the compaction version
     Files.write(Paths.get(s"$in/b3.json"), Seq(
       env("null", """{"order_id":2,"invoice_number":20}""", "c", 3)).mkString("\n").getBytes)
-    graft.streaming.CdcStream.runPartitioned(
+    graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt", 8).awaitTermination(120000)
-    val snap2 = graft.streaming.CdcStream.partitionedSnapshot(spark, s"$base/state")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val snap2 = LsmRows(spark, s"$base/state")
     assert(snap2 === Seq((0L, 5L), (1L, 10L), (2L, 20L)))
   }
 
@@ -318,12 +280,11 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     Files.write(Paths.get(s"$in/b1.json"), Seq(
       env("null", """{"order_id":1,"invoice_number":10}""", "c", 1),
       env("null", """{"order_id":2,"invoice_number":20}""", "c", 2)).mkString("\n").getBytes)
-    val q1 = graft.streaming.CdcStream.runPartitioned(
+    val q1 = graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt", 8)
     q1.awaitTermination(120000)
-    val committed = graft.streaming.CdcStream.partitionedSnapshot(spark, s"$base/state")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val committed = LsmRows(spark, s"$base/state")
     assert(committed === Seq((1L, 10L), (2L, 20L)))
     // Crash landed AFTER the manifest commit but BEFORE the streaming
     // checkpoint commit: batch 0 re-runs against a manifest that already
@@ -333,12 +294,11 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     // the foreachBatch sees the identical (batchId=0, manifest→v=1)
     // state either way and must take the no-op branch, not
     // read-and-overwrite v=1.
-    val q2 = graft.streaming.CdcStream.runPartitioned(
+    val q2 = graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt2", 8)
     q2.awaitTermination(120000)
-    val replayed = graft.streaming.CdcStream.partitionedSnapshot(spark, s"$base/state")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val replayed = LsmRows(spark, s"$base/state")
     assert(replayed === committed, "replay of a committed batch changed state")
   }
 
@@ -363,17 +323,18 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     val stream = Changelog.fromEnvelopeJsonFor(
       spark.readStream.text(in).withColumnRenamed("value", "raw"),
       skuSpec, skuType, "raw")
-    val q = graft.streaming.CdcStream.runPartitioned(
+    val q = graft.streaming.CdcStream.runPartitionedLsm(
       stream, s"$base/audit", s"$base/state", s"$base/ckpt", 8, skuSpec)
     q.awaitTermination(120000)
-    // hash-bucketed dirs (never a cast of the string key), horizon in p=-1
+    // hash-bucketed dirs (never a cast of the string key); no p=-1
+    // without a truncate — the LSM writes a horizon only for one
     val dirs = new java.io.File(s"$base/state/v=1").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
-    assert(dirs.contains("p=-1") && dirs.exists(_ != "p=-1"), dirs.mkString(","))
-    assert(dirs.forall(d => d.stripPrefix("p=").toLong >= -1L
+    assert(!dirs.contains("p=-1") && dirs.nonEmpty, dirs.mkString(","))
+    assert(dirs.forall(d => d.stripPrefix("p=").toLong >= 0L
       && d.stripPrefix("p=").toLong < 8L), dirs.mkString(","))
     val snap = graft.streaming.CdcStream
-      .partitionedSnapshotFor(spark, s"$base/state", skuSpec)
+      .partitionedSnapshotLsm(spark, s"$base/state", skuSpec, skuType)
       .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
     assert(snap === Seq(("ab-1", 6), ("zz-9", 7)))
   }
@@ -384,7 +345,7 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     val in = s"$base/in"; Files.createDirectories(Paths.get(in))
     Files.write(Paths.get(s"$in/b1.json"), Seq(
       env("null", """{"order_id":1,"invoice_number":10}""", "c", 1)).mkString("\n").getBytes)
-    val q1 = graft.streaming.CdcStream.runPartitioned(
+    val q1 = graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt", 8)
     q1.awaitTermination(120000)
@@ -395,7 +356,7 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     val in2 = s"$base/in2"; Files.createDirectories(Paths.get(in2))
     Files.write(Paths.get(s"$in2/c1.json"), Seq(
       env("null", """{"order_id":7,"invoice_number":70}""", "c", 9)).mkString("\n").getBytes)
-    val q2 = graft.streaming.CdcStream.runPartitioned(
+    val q2 = graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in2),
       s"$base/audit2", s"$base/state", s"$base/ckpt_reset", 8)
     val e = intercept[Exception](q2.awaitTermination(120000))
@@ -404,8 +365,7 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(messages(e).exists(_.contains("fingerprint")),
       s"expected the fingerprint guard, got: ${messages(e).mkString(" | ")}")
     // the guarded state is untouched
-    val snap = graft.streaming.CdcStream.partitionedSnapshot(spark, s"$base/state")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val snap = LsmRows(spark, s"$base/state")
     assert(snap === Seq((1L, 10L)))
   }
 
@@ -416,12 +376,11 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     Files.write(Paths.get(s"$in/b1.json"), Seq(
       env("null", """{"order_id":0,"invoice_number":5}""", "c", 1),
       env("null", """{"order_id":1,"invoice_number":10}""", "c", 2)).mkString("\n").getBytes)
-    val q1 = graft.streaming.CdcStream.runPartitioned(
+    val q1 = graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt", 8)
     q1.awaitTermination(120000)
-    val committed = graft.streaming.CdcStream.partitionedSnapshot(spark, s"$base/state")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val committed = LsmRows(spark, s"$base/state")
     assert(committed === Seq((0L, 5L), (1L, 10L)))
 
     // Simulate a writer killed between stage (version dir written) and
@@ -434,20 +393,18 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
 
     // Readers resolve through _CURRENT: the staged-but-uncommitted version
     // is invisible, and no pre-crash bucket is lost.
-    val afterCrash = graft.streaming.CdcStream.partitionedSnapshot(spark, s"$base/state")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val afterCrash = LsmRows(spark, s"$base/state")
     assert(afterCrash === committed, "uncommitted version leaked or a bucket was lost")
 
     // The recovered writer re-runs; its commit GCs the unreferenced dir.
     Files.write(Paths.get(s"$in/b2.json"), Seq(
       env("null", """{"order_id":2,"invoice_number":20}""", "c", 3)).mkString("\n").getBytes)
-    val q2 = graft.streaming.CdcStream.runPartitioned(
+    val q2 = graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt", 8)
     q2.awaitTermination(120000)
     assert(!new java.io.File(s"$base/state/v=77").exists(), "orphan version dir not GC'd")
-    val finalSnap = graft.streaming.CdcStream.partitionedSnapshot(spark, s"$base/state")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val finalSnap = LsmRows(spark, s"$base/state")
     assert(finalSnap === Seq((0L, 5L), (1L, 10L), (2L, 20L)))
   }
 
@@ -458,19 +415,18 @@ class PartitionedStateSpec extends org.scalatest.funsuite.AnyFunSuite {
     Files.write(Paths.get(s"$in/b1.json"), Seq(
       env("null", """{"order_id":3,"invoice_number":30}""", "c", 1),
       env("null", """{"order_id":12,"invoice_number":120}""", "c", 2)).mkString("\n").getBytes)
-    val q1 = graft.streaming.CdcStream.runPartitioned(
+    val q1 = graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt", 8)
     q1.awaitTermination(120000)
     Files.write(Paths.get(s"$in/b2.json"), Seq(
       env("null", "null", "t", 3),
       env("null", """{"order_id":7,"invoice_number":70}""", "c", 4)).mkString("\n").getBytes)
-    val q2 = graft.streaming.CdcStream.runPartitioned(
+    val q2 = graft.streaming.CdcStream.runPartitionedLsm(
       graft.streaming.CdcStream.fromFiles(spark, in),
       s"$base/audit", s"$base/state", s"$base/ckpt", 8)
     q2.awaitTermination(120000)
-    val snap = graft.streaming.CdcStream.partitionedSnapshot(spark, s"$base/state")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val snap = LsmRows(spark, s"$base/state")
     assert(snap === Seq((7L, 70L)))
   }
 }

@@ -11,13 +11,17 @@
 set -u
 KILLS=${1:-12}
 KEYS=${2:-4000000}
-OUT=${3:-/tmp/chaos_lsm.json}
+OUT=${3:-${TMPDIR:-/tmp}/chaos_lsm.json}
 SEED=${CHAOS_SEED:-13}
 CPUS=${SPARK_GRAFT_CPUS:-24}
 MIN_S=${CHAOS_MIN_S:-8}
 SPAN_S=${CHAOS_SPAN_S:-30}
-BASE=$(mktemp -d /tmp/graft-lsmchaos-XXXX)
-cd /root/repo
+# work dir under $TMPDIR; JVM heap = half of MemTotal in GB, clamped to
+# [2, 24] (the tier-1 SPARK_DRIVER_MEM rule with the old fixed 24g as cap)
+BASE=$(mktemp -d "${TMPDIR:-/tmp}/graft-lsmchaos-XXXX")
+HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 24 ? 24 : g) "g"}' \
+  /proc/meminfo 2>/dev/null || echo 2g)
+cd "$(dirname "$0")/.."
 
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
@@ -36,7 +40,7 @@ while :; do
   LOG="$BASE/run$attempt.log"
   LOCAL="$BASE/spark-local-$attempt"
   rm -rf "$BASE/spark-local-$((attempt - 1))"
-  SPARK_GRAFT_CPUS=$CPUS java $ADD_OPENS -Xmx24g \
+  SPARK_GRAFT_CPUS=$CPUS java $ADD_OPENS -Xmx"$HEAP" \
     -Dspark.ui.enabled=false -Dspark.local.dir="$LOCAL" \
     -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
     graft.LsmChaosSoak "$KEYS" "$BASE/work" \

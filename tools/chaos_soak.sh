@@ -14,7 +14,7 @@ set -u
 KILLS=${1:-20}
 DOCS=${2:-300000}
 BATCHES=${3:-12}
-OUT=${4:-/tmp/chaos_soak.json}
+OUT=${4:-${TMPDIR:-/tmp}/chaos_soak.json}
 SEED=${CHAOS_SEED:-12}
 CPUS=${SPARK_GRAFT_CPUS:-24}
 # kill window (seconds after launch): uniform in [MIN, MIN+SPAN). Size it
@@ -22,8 +22,12 @@ CPUS=${SPARK_GRAFT_CPUS:-24}
 # JVM startup (~13s) or first-attempt corpus generation
 MIN_S=${CHAOS_MIN_S:-5}
 SPAN_S=${CHAOS_SPAN_S:-25}
-BASE=$(mktemp -d /tmp/graft-chaos-XXXX)
-cd /root/repo
+# work dir under $TMPDIR; JVM heap = half of MemTotal in GB, clamped to
+# [2, 24] (the tier-1 SPARK_DRIVER_MEM rule with the old fixed 24g as cap)
+BASE=$(mktemp -d "${TMPDIR:-/tmp}/graft-chaos-XXXX")
+HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 24 ? 24 : g) "g"}' \
+  /proc/meminfo 2>/dev/null || echo 2g)
+cd "$(dirname "$0")/.."
 
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
@@ -47,7 +51,7 @@ while :; do
   # SPARK_GRAFT_CHAOS makes the soak SIGKILL itself once at the vector
   # cutover's pre-rename seam (marker-guarded), so one kill is always
   # guaranteed to land mid-cutover regardless of the random schedule
-  SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_CHAOS=1 java $ADD_OPENS -Xmx24g \
+  SPARK_GRAFT_CPUS=$CPUS SPARK_GRAFT_CHAOS=1 java $ADD_OPENS -Xmx"$HEAP" \
     -Dspark.ui.enabled=false -Dspark.local.dir="$LOCAL" \
     -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
     graft.PipelineSoak "$DOCS" "$BATCHES" "$BASE/work" 0.5 \
