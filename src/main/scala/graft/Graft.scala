@@ -37,6 +37,13 @@ object Graft {
     spark
   }
 
+  /** `local[N]`, N from `SPARK_GRAFT_CPUS`, else every core: the master
+    * the soak and probe mains pass to [[session]].
+    */
+  def localMaster: String =
+    s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors().toString)}]"
+
   /** Register every fixture table as a temp view so the whole engine
     * surface is reachable from `spark.sql` text.
     */

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throughput soak for the incremental corpus indexes: generate an N-doc
@@ -47,14 +46,7 @@ object IngestSoak {
     require(mode == "exact" || mode == "neardup",
       s"mode must be exact|neardup, got $mode")
     val async = args.lift(6).contains("async")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
 
     ScaleProbe.writeDocuments(spark, s"$base/corpus", nDocs)

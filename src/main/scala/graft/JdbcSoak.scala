@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** External-replica throughput soak: the [[Soak]] workload applied to a
@@ -32,15 +31,7 @@ object JdbcSoak {
       System.err.println("[jdbc-soak] DuckDB JDBC driver not on classpath; nothing to measure")
       return
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
 
     val in = s"$base/in"

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -27,7 +26,8 @@ import org.apache.spark.sql.streaming.Trigger
   * trade-off is what this soak quantifies for README.
   *
   * Reported twice: overall, and STEADY-STATE (first two batches dropped —
-  * they carry one-time JVM/codegen warmup, not the operating regime).
+  * they carry one-time JVM/codegen warmup, not the operating regime; the
+  * `steady_*` percentiles are `null` when no batch is past them).
   *
   * Usage: `graft.LatencySoak [nTicks] [perTick] [tickMs] [triggerMs] [workDir] [nBuckets]`
   * (defaults 60 × 2000 events, 250 ms tick, 1000 ms trigger, 64
@@ -56,6 +56,13 @@ object LatencySoak {
     }.mkString(",")
   }
 
+  /** The `p`-quantile of an ascending array (nearest rank, rounded
+    * down); `None` when there are no samples.
+    */
+  private[graft] def percentile(sorted: Array[Long], p: Double): Option[Long] =
+    if (sorted.isEmpty) None
+    else Some(sorted(math.min(sorted.length - 1, (p * sorted.length).toInt)))
+
   def main(args: Array[String]): Unit = {
     val nTicks = args.headOption.map(_.toInt).getOrElse(60)
     val perTick = args.lift(1).map(_.toInt).getOrElse(2000)
@@ -64,21 +71,13 @@ object LatencySoak {
     val base = args.lift(4).filter(_.nonEmpty).getOrElse(
       Files.createTempDirectory("graft-latency").toString)
     val nBuckets = args.lift(5).map(_.toInt).getOrElse(64)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // AQE is a per-stage re-planning pass — pure win on big shuffles,
-    // pure latency tax at micro-batch sizes (every exchange becomes a
-    // separately scheduled+re-optimized stage). The latency soak's job
-    // is to find the commit floor, so AQE defaults OFF here (the batch
-    // engine keeps it on); SPARK_GRAFT_AQE=1 measures the difference.
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "0") == "1"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", aqe.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(Graft.localMaster)
+    // AQE is a per-stage re-planning pass — a win on big shuffles, a
+    // latency tax at micro-batch sizes (every exchange becomes a
+    // separately scheduled, re-optimized stage). The soak's job is to
+    // find the commit floor, so AQE is off here (the batch engine keeps
+    // it on; the measured AQE-on difference was ±0).
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("WARN")
 
     val in = s"$base/in"
@@ -211,11 +210,11 @@ object LatencySoak {
     import scala.jdk.CollectionConverters._
     val ls = latencies.asScala.map(_.longValue()).toArray.sorted
     require(ls.length == total, s"drained ${ls.length} of $total events")
-    def pctOf(a: Array[Long])(p: Double) =
-      a(math.min(a.length - 1, (p * a.length).toInt))
-    val pct = pctOf(ls) _
+    def pct(p: Double) = percentile(ls, p).fold("null")(_.toString)
     val st = steady.asScala.map(_.longValue()).toArray.sorted
-    val sp = if (st.nonEmpty) pctOf(st) _ else pct
+    // no batch past warm-up ⇒ no steady-state figure at all (null), never
+    // the warm-up percentiles under the steady_* keys
+    def sp(p: Double) = percentile(st, p).fold("null")(_.toString)
     val cs = commitCosts.asScala.map(_.longValue()).toArray.sorted
     // per-batch observed max segments-per-bucket (read amplification) —
     // boundedness under BACKGROUND compaction is the claim being

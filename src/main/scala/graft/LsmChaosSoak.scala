@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Crash-replay soak for the CDC LSM replica at facts volume: stream the
@@ -26,15 +25,7 @@ object LsmChaosSoak {
     val nKeys = args.headOption.map(_.toInt).getOrElse(4000000)
     val base = args.lift(1).filter(_.nonEmpty).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-lsm-chaos").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
 
     // input generated ONCE per workDir — a resumed run must see the same

@@ -120,14 +120,7 @@ object PipelineSoak {
       java.nio.file.Files.createTempDirectory("graft-pipeline-soak").toString)
     val tau = args.lift(3).map(_.toDouble).getOrElse(0.5)
     val compactWhenSegments = 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
@@ -234,11 +227,6 @@ object PipelineSoak {
         // pin the gated frame once instead of re-filtering the batch
         val gated = batch.filter(gate).persist()
         try {
-          def timed[T](f: => T): (T, Double) = {
-            val t = System.nanoTime()
-            val r = f
-            (r, (System.nanoTime() - t) / 1e9)
-          }
           // the eval suite grows at the half-way drop — a version-guarded
           // publish, so replays and relaunches never double-publish
           if (batchId >= PublishDrop &&
@@ -268,7 +256,7 @@ object PipelineSoak {
           // (current on first run, pinned on replay) — the per-batch
           // survivor trace is keyed by batchId (idempotent overwrite on
           // replay) and is what decon_diff reads back
-          val (deconAndTrace, tDecon) = timed {
+          val (deconAndTrace, tDecon) = Trace.timed("pipeline", "decon", batchId) {
             val ver = operators.EvalSet.versionForBatch(s, evalDir,
               evalVerDir, batchId)
             val (hashes, bloom) = evalState(ver)
@@ -347,7 +335,7 @@ object PipelineSoak {
             // (cascade-immune), released below after the nd ingest.
             val preReadF = bands0F.map(b0 =>
               operators.IncrementalNearDup.preReadTouched(s, ndDir, b0))
-            val (exactSurvivors, tExact) = timed(
+            val (exactSurvivors, tExact) = Trace.timed("pipeline", "exact", batchId)(
               operators.IncrementalDedup.ingest(s, exactDir, deconned, batchId,
                 retractIds = retractIds))
             val bands0 = Await.result(bands0F, Duration.Inf)
@@ -370,13 +358,16 @@ object PipelineSoak {
               // the pre-read must settle BEFORE bands0 unpersists: its
               // checkpoint job reads the superset ladder's cached blocks
               val preRead = Await.result(preReadF, Duration.Inf)
-              val (_, tBands) = timed { bands.count(); bands0.unpersist() }
-              val ((admitted, edgesSeen, edgesBatch), tNd) = timed {
-                try operators.IncrementalNearDup.ingestWithEdges(s, ndDir,
-                  ndInput, batchId, bandsIn = Some(bands),
-                  retractIds = retractIds, prevBandsIn = Some(preRead))
-                finally preRead.unpersist(blocking = false)
+              val (_, tBands) = Trace.timed("pipeline", "bands", batchId) {
+                bands.count(); bands0.unpersist()
               }
+              val ((admitted, edgesSeen, edgesBatch), tNd) =
+                Trace.timed("pipeline", "nd", batchId) {
+                  try operators.IncrementalNearDup.ingestWithEdges(s, ndDir,
+                    ndInput, batchId, bandsIn = Some(bands),
+                    retractIds = retractIds, prevBandsIn = Some(preRead))
+                  finally preRead.unpersist(blocking = false)
+                }
               try {
                 // stage 5 ∥ stage 6: keep-best retention and the vector
                 // ingest run concurrently — independent stores, inputs
@@ -385,11 +376,11 @@ object PipelineSoak {
                 // ingest releases its scratch as a tracked persistent-RDD
                 // diff, which would sweep the vector ingest's in-flight
                 // retraction frame.
-                val kbF = Future(timed(
+                val kbF = Future(Trace.timed("pipeline", "kb", batchId)(
                   operators.IncrementalKeepBest.ingest(s, kbDir, ndInput,
                     batchId, edgesIn = Some((edgesSeen, edgesBatch)),
                     retractIds = retractIds)))
-                val vecIngest = () => timed(
+                val vecIngest = () => Trace.timed("pipeline", "vec", batchId)(
                   operators.IncrementalVecIndex.ingest(s, vecDir,
                     admitted.select(col("doc_id").as("vec_id"),
                       pseudoEmbedding(col("doc_id")).as("embedding")),
@@ -453,7 +444,7 @@ object PipelineSoak {
                     .select(col("doc_id").as("vec_id"),
                       pseudoEmbedding(col("doc_id")).as("embedding"))
                   serveThread.start()
-                  val (_, tCut) = timed(
+                  val (_, tCut) = Trace.timed("pipeline", "cutover", batchId)(
                     operators.IncrementalVecIndex.cutover(s, vecDir,
                       genCorpus, beforeSwap = beforeSwap))
                   serving.set(false)

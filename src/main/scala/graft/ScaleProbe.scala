@@ -96,14 +96,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val baseN = args.headOption.map(_.toLong).getOrElse(5000L)
     val workDir = args.lift(1).getOrElse("/tmp/graft_scaleprobe")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
 
     val dirs = Seq(("x1", baseN), ("x10", baseN * 10)).map { case (tag, n) =>

@@ -51,15 +51,7 @@ object ScaleUp {
       case None          => "full"
     }
     val docsOnly = mode == "docs"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
 
     // key-shift constants: > any sf0.1 key domain, round for debuggability.

@@ -47,15 +47,7 @@ object Soak {
     val nKeys = args.headOption.map(_.toInt).getOrElse(600000)
     val base = args.lift(1).filter(_.nonEmpty).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-soak").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall instrumentation for the vector-index generation cutover: how
@@ -24,13 +23,7 @@ object VecCutoverProbe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
 
     val vecs = Tables.embeddings(spark, sfDir)
@@ -62,10 +55,7 @@ object VecCutoverProbe {
       .createTempDirectory("graft-cutover-probe").toString
     val ids = vecs.agg(min("vec_id"), max("vec_id")).collect()(0)
     val mid = (ids.getLong(0) + ids.getLong(1)) / 2
-    def timed[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
-    val (_, tIngest) = timed {
+    val (_, tIngest) = Trace.timed("vec_cutover_probe", "ingest", -1L) {
       operators.IncrementalVecIndex.ingest(spark, indexDir,
         vecs.filter(col("vec_id") <= mid), 0).count()
       operators.IncrementalVecIndex.ingest(spark, indexDir,
@@ -80,12 +70,12 @@ object VecCutoverProbe {
       }
       hits.sum / hits.length
     }
-    val (recallG1, tServe1) = timed(recallNow())
-    val (_, tCutover) = timed(
+    val (recallG1, tServe1) = Trace.timed("vec_cutover_probe", "serve_gen1", -1L)(recallNow())
+    val (_, tCutover) = Trace.timed("vec_cutover_probe", "cutover", -1L)(
       operators.IncrementalVecIndex.cutover(spark, indexDir, vecs))
-    val (recallG2, tServe2) = timed(recallNow())
+    val (recallG2, tServe2) = Trace.timed("vec_cutover_probe", "serve_gen2", -1L)(recallNow())
     operators.IncrementalVecIndex.gcGenerations(spark, indexDir)
-    val (recallG2PostGc, _) = timed(recallNow())
+    val recallG2PostGc = recallNow()
     graft.Shared.deleteDirTree(indexDir)
 
     println(s"""{"metric":"vec_cutover_recall","sf_dir":"$sfDir","vectors":$n,""" +

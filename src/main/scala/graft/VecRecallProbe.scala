@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall-vs-probe-width OPERATING-POINT curve for the incremental
@@ -39,14 +38,8 @@ import org.apache.spark.sql.functions._
 object VecRecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
 
     val vecs = Tables.embeddings(spark, sfDir)
@@ -60,12 +53,9 @@ object VecRecallProbe {
       Array.tabulate(64)(i =>
         math.sin(0.13 * (qi + 1) + i * 0.37) *
           math.cos(0.07 * (qi + 1) * (i + 1))))
-    def timed[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
     // exact ground truth: one distributed brute-force pass per query
-    val (exact, tExact) = timed(queries.map(q =>
+    val (exact, tExact) = Trace.timed("vec_recall_probe", "exact", -1L)(queries.map(q =>
       operators.Similarity.bruteTopkForVec(spark, sfDir, q)
         .collect().map(_.getLong(0)).toSeq))
 
@@ -73,7 +63,7 @@ object VecRecallProbe {
       .createTempDirectory("graft-recall-probe").toString
     val ids = vecs.agg(min("vec_id"), max("vec_id")).collect()(0)
     val mid = (ids.getLong(0) + ids.getLong(1)) / 2
-    val (_, tIngest) = timed {
+    val (_, tIngest) = Trace.timed("vec_recall_probe", "ingest", -1L) {
       operators.IncrementalVecIndex.ingest(spark, indexDir,
         vecs.filter(col("vec_id") <= mid), 0).count()
       operators.IncrementalVecIndex.ingest(spark, indexDir,
@@ -81,7 +71,7 @@ object VecRecallProbe {
     }
     // one pass over the 24 queries at (nProbe, rerank): recall@10 + sec
     def passAt(np: Int, rr: Int): (Double, Double) = {
-      val (r, tServe) = timed {
+      val (r, tServe) = Trace.timed("vec_recall_probe", "serve", -1L) {
         val perQ = queries.zip(exact).map { case (q, ex) =>
           val got = operators.IncrementalVecIndex
             .searchTopk(spark, indexDir, sfDir, q, nProbe = np, rerank = rr)
@@ -111,7 +101,7 @@ object VecRecallProbe {
       }
     }
     val gen1Cells = cellsNow()
-    val (g1, tG1) = timed(curve())
+    val (g1, tG1) = Trace.timed("vec_recall_probe", "gen1_curve", -1L)(curve())
     // the SECOND recall/latency axis at the documented operating width
     // (fraction 1/2 of gen-1 = nProbe 8): widen the ADC→exact re-rank
     // cut — isolates how much of the residual miss is the candidate cut
@@ -120,11 +110,11 @@ object VecRecallProbe {
     val rrCurve = reranks.map { rr =>
       val (r, t) = curveAt(gen1Cells / 2, rr); (rr, r, t)
     }
-    val (_, tCutover) = timed(
+    val (_, tCutover) = Trace.timed("vec_recall_probe", "cutover", -1L)(
       operators.IncrementalVecIndex.cutover(spark, indexDir, vecs))
     operators.IncrementalVecIndex.gcGenerations(spark, indexDir)
     val gen2Cells = cellsNow()
-    val (g2, tG2) = timed(curve())
+    val (g2, tG2) = Trace.timed("vec_recall_probe", "gen2_curve", -1L)(curve())
     graft.Shared.deleteDirTree(indexDir)
 
     def fmt(c: Seq[(Int, Double, Double)], f: ((Int, Double, Double)) => String) =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The session read view carried to the DECADE rung: the 5M-doc
@@ -26,22 +25,12 @@ import org.apache.spark.sql.functions._
 object ViewDecadeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/tmp/graft_sf100docs")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
     val ids = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
     val (lo, hi) = (ids.getLong(0), ids.getLong(1))
-    def timed[T](f: => T): (T, Double) = {
-      val t = System.nanoTime(); val r = f; (r, (System.nanoTime() - t) / 1e9)
-    }
     def storageMb: Long =
       spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / (1024 * 1024)
 
@@ -52,7 +41,7 @@ object ViewDecadeProbe {
     var chunkSec = List.empty[Double]
     var storMb = List.empty[Long]
     val admitted4 = cuts.sliding(2).zipWithIndex.map { case (Seq(a, b), i) =>
-      val (adm, t) = timed(
+      val (adm, t) = Trace.timed("view_decade_probe", "chunk", i)(
         operators.IncrementalNearDup.ingest(spark, dir4,
           docs.filter(col("doc_id") > a && col("doc_id") <= b),
           batchId = i, nBuckets = 16))
@@ -66,7 +55,7 @@ object ViewDecadeProbe {
     // ---- 2-chunk control on the same corpus (direct reads) ----------
     val dir2 = java.nio.file.Files.createTempDirectory("graft-vdp2").toString
     val mid = (lo + hi) / 2
-    val (admitted2, t2) = timed {
+    val (admitted2, t2) = Trace.timed("view_decade_probe", "two_chunk", -1L) {
       val a = operators.IncrementalNearDup.ingest(spark, dir2,
         docs.filter(col("doc_id") <= mid), batchId = 0, nBuckets = 16)
       val b = operators.IncrementalNearDup.ingest(spark, dir2,

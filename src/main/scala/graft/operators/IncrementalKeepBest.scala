@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 
+import graft.Trace
 import graft.streaming.BucketState
 
 /** Incremental QUALITY-AWARE RETENTION over a persisted banded-MinHash
@@ -238,18 +239,9 @@ object IncrementalKeepBest {
              edgesIn: Option[(DataFrame, DataFrame)] = None,
              retractIds: Option[DataFrame] = None): DataFrame = {
     require(nBuckets >= 2, "keep-best index needs >= 2 buckets (one is reserved for forwarding rows)")
-    // opt-in phase timing (SPARK_GRAFT_KB_TRACE=1) — the per-drop cost
-    // must be attributable per stage, not guessed (the pipeline soak
-    // quantifies the total, this names it)
-    val trace = sys.env.contains("SPARK_GRAFT_KB_TRACE")
-    def tr[T](tag: String)(f: => T): T =
-      if (!trace) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[kb-trace] b$batchId $tag ${(System.nanoTime() - t0) / 1e6}%.0f ms")
-        r
-      }
+    // every stage is a Trace span — the per-drop cost must be
+    // attributable per stage, not guessed (the pipeline soak quantifies
+    // the total, the spans name it)
     val newVersion = batchId + 1
     val membersDir = s"$indexDir/members/$newVersion"
     val clean = docs
@@ -277,7 +269,7 @@ object IncrementalKeepBest {
       // independent read-only actions over different frames, so they run
       // on two driver threads and overlap (guide §2.6) — the serial form
       // measured 1.2 s/ingest of pure back-to-back job latency.
-      val (batchFp, touched) = tr("fp_touched") {
+      val (batchFp, touched) = Trace.span("kb", "fp_touched", batchId) {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
@@ -336,7 +328,7 @@ object IncrementalKeepBest {
               var ownEdges = false
               val (edgesSeen, edgesBatch, memberBuckets) = edgesIn match {
                 case Some((es, eb)) =>
-                  val mb = tr("member_probe")(es
+                  val mb = Trace.span("kb", "member_probe", batchId)(es
                     .select(kindBucketOf(-2L, col("seen_id"), nBuckets).as("p"))
                     .distinct().collect().map(_.getLong(0)).toSet)
                   (es, eb, mb)
@@ -401,7 +393,8 @@ object IncrementalKeepBest {
                   // when-guarded max/mask restrict to batch-touched groups
                   // (c > stored ⟺ some batch row in the group) — identical
                   // to the r17 semi-join-restricted aggregate, two stages
-                  val guardRow = tr("occupancy_guard")(storedRows
+                  val guardRow = Trace.span("kb", "occupancy_guard", batchId,
+                      IncrementalNearDup.occupancyFields(cap))(storedRows
                     .unionByName(bands.select(col("band"), col("bh"),
                       lit(null).cast("long").as("m")))
                     .groupBy(col("band"), col("bh"))
@@ -421,10 +414,6 @@ object IncrementalKeepBest {
                       }.toSet
                     }
                   val canSaturate = !maxOcc.isNullAt(0) && maxOcc.getLong(0) > cap
-                  if (sys.env.contains("SPARK_GRAFT_ND_TRACE"))
-                    System.err.println(s"[nd-trace] kb maxOcc=" +
-                      s"${if (maxOcc.isNullAt(0)) 0L else maxOcc.getLong(0)} " +
-                      s"cap=$cap canSaturate=$canSaturate")
                   val prevBands =
                     if (canSaturate) {
                       val p = prevBands0.persist(Ser); scratchToRelease ::= p; p
@@ -458,8 +447,9 @@ object IncrementalKeepBest {
                   // rescue edges for saturated arrivals — zero probe jobs
                   // when the occupancy guard ruled saturation out (every
                   // driver scale), one cheap probe otherwise
-                  val anySaturated = rankedOpt.exists(r => tr("saturation_probe")(
-                    !r.filter(col("pred") > cap).limit(1).isEmpty))
+                  val anySaturated = rankedOpt.exists(r =>
+                    Trace.span("kb", "saturation_probe", batchId)(
+                      !r.filter(col("pred") > cap).limit(1).isEmpty))
                   val (rescueSeen, rescueBatch) =
                     if (!anySaturated)
                       (spark.range(0).select(col("id").as("doc_id"),
@@ -474,7 +464,7 @@ object IncrementalKeepBest {
                         .join(sigKeys, Seq("doc_id"))
                         .persist(Ser)
                       scratchToRelease ::= resc
-                      val skBuckets = tr("rescue_probe")(resc
+                      val skBuckets = Trace.span("kb", "rescue_probe", batchId)(resc
                         .select(kindBucketOf(-4L, col("sk"), nBuckets).as("p"))
                         .distinct().collect().map(_.getLong(0)).toSet)
                       // retracted recorded minima lose their anchor role
@@ -511,7 +501,7 @@ object IncrementalKeepBest {
                   // collect for >64-bucket stores
                   val probeBuckets: Set[Long] =
                     if (fusedProbe) maskBuckets
-                    else tr("cand_probe")(cand.select(col("seen_id"))
+                    else Trace.span("kb", "cand_probe", batchId)(cand.select(col("seen_id"))
                       .unionByName(rescueSeen.select(col("seen_id")))
                       .select(explode(array(
                         kindBucketOf(-1L, col("seen_id"), nBuckets),
@@ -551,8 +541,8 @@ object IncrementalKeepBest {
                     .unionByName(rescueBatch.select(col("doc_a").as("a"),
                       col("doc_b").as("b")))
                     .select(lit(1).as("kind"), col("a"), col("b"))
-                  val fused = tr("edges_ck")(seenTagged.unionByName(batchTagged)
-                    .distinct().localCheckpoint(eager = true))
+                  val fused = Trace.span("kb", "edges_ck", batchId)(seenTagged
+                    .unionByName(batchTagged).distinct().localCheckpoint(eager = true))
                   ownEdges = true
                   (fused.filter(col("kind") === 0)
                      .select(col("a").as("doc_id"), col("b").as("seen_id")),
@@ -581,7 +571,7 @@ object IncrementalKeepBest {
                 // no merges recorded yet (the common early-corpus state) ⇒
                 // every label IS its root: skip the fixpoint loop's
                 // join/persist/probe jobs entirely
-                val rootMap = tr("resolve")(
+                val rootMap = Trace.span("kb", "resolve", batchId)(
                   if (fwdAll.isEmpty)
                     seenLab.select(col("label").as("lbl")).distinct()
                       .withColumn("root", col("lbl")).persist()
@@ -612,7 +602,7 @@ object IncrementalKeepBest {
                 // 7 → 66 s kb drops in the 200k soak). Truncated lineage
                 // is immune, and the capped subgraph (≤ ~80M edges at the
                 // 5M-doc rung) fits checkpoint blocks comfortably.
-                val pairs = tr("subgraph_ck")(edgesBatch.unionByName(toRoot)
+                val pairs = Trace.span("kb", "subgraph_ck", batchId)(edgesBatch.unionByName(toRoot)
                   .localCheckpoint(eager = true))
                 val universe = clean.select(col("doc_id"))
                   .unionByName(pairs.select(col("doc_b").as("doc_id")))
@@ -632,13 +622,14 @@ object IncrementalKeepBest {
                   .map(_.toLong).getOrElse(2000000L)
                 val nEdges = pairs.count() // cached — metadata-cheap
                 val useUf = nEdges <= ufMax
-                val lab = tr(if (useUf) s"cc_uf($nEdges)" else s"cc_dist($nEdges)")({
+                val lab = Trace.span("kb", if (useUf) "cc_uf" else "cc_dist",
+                    batchId, (_: DataFrame) => Seq("edges" -> nEdges)) {
                   val l = (if (useUf)
                              unionFindLabels(spark, pairs, universe)
                            else Dedup.clustersOf(spark, pairs, universe))
                     .persist()
                   l.count(); l
-                })
+                }
 
                 // ---- new forwarding rows ------------------------------
                 // (a) real merges: an existing root whose component gained a
@@ -730,7 +721,7 @@ object IncrementalKeepBest {
                     nullSig.as("sig"), lit(null).cast("long").as("label"),
                     lit(null).cast("double").as("score"),
                     lit(Retraction.TombBucket).as("p"))))
-                tr("segment_write")(
+                Trace.span("kb", "segment_write", batchId)(
                   segWithTombs
                     .repartition(col("p"))
                     .write.mode("overwrite").partitionBy("p")
@@ -768,7 +759,7 @@ object IncrementalKeepBest {
         }
       } finally BucketState.releaseReads(lease)
       // conditional sweep — see IncrementalDedup.ingest's GC comment
-      tr("gc")(BucketState.gcVersionsIfDirty(spark, indexDir))
+      Trace.span("kb", "gc", batchId)(BucketState.gcVersionsIfDirty(spark, indexDir))
     } finally {
       if (ownBands) bandsOpt.foreach(_.unpersist())
       retract.foreach(_.unpersist())

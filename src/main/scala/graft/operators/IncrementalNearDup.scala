@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
+import graft.Trace
 import graft.functions.TextFns
 import graft.streaming.BucketState
 
@@ -149,18 +150,15 @@ object IncrementalNearDup {
     */
   val DefaultBucketCap = 2000L
 
-  /** Opt-in per-stage wall times (SPARK_GRAFT_ND_TRACE) — the kb-trace
-    * discipline: the per-drop cost must be attributable, not guessed.
+  /** Trace fields of an `occupancy_guard` span (shared with the
+    * keep-best guard): the largest combined bucket occupancy against the
+    * cap, i.e. whether the guard engaged the rank machinery or skipped it
+    * on this corpus.
     */
-  private val ndTrace = sys.env.contains("SPARK_GRAFT_ND_TRACE")
-  private def tr[T](tag: String)(f: => T): T =
-    if (!ndTrace) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(
-        f"[nd-trace] $tag ${(System.nanoTime() - t0) / 1e6}%.0f ms")
-      r
-    }
+  private[operators] def occupancyFields(cap: Long): Row => Trace.Fields = r => {
+    val maxOcc = if (r.isNullAt(0)) 0L else r.getLong(0)
+    Seq("max_occ" -> maxOcc, "cap" -> cap, "can_saturate" -> (maxOcc > cap))
+  }
 
   private[operators] def bucketCap(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.neardup.bucketCap")
@@ -387,7 +385,7 @@ object IncrementalNearDup {
   private def verifiedEdges(spark: SparkSession, indexDir: String,
                             m: BucketState.Manifest, bands: DataFrame,
                             touched: Set[Long], nBuckets: Int,
-                            tombs: Option[DataFrame],
+                            tombs: Option[DataFrame], batchId: Long,
                             replayFloor: Option[Long] = None,
                             prevBandsIn: Option[DataFrame] = None)
       : (DataFrame, DataFrame) = {
@@ -494,7 +492,8 @@ object IncrementalNearDup {
     val storedRows = storedTouched.select(col("band"), col("bh"),
       call_function("shiftleft", lit(1L),
         sigBucketOf(col("doc_id"), nBuckets).cast("int")).as("m"))
-    val guardRow = tr("occupancy_guard")(
+    val guardRow = Trace.span("nd", "occupancy_guard", batchId,
+        occupancyFields(cap))(
       storedRows
         .unionByName(bands.select(col("band"), col("bh"),
           lit(null).cast(LongType).as("m")))
@@ -513,12 +512,6 @@ object IncrementalNearDup {
           .toSet
       }
     val canSaturate = !maxOcc.isNullAt(0) && maxOcc.getLong(0) > cap
-    // opt-in evidence line for the decade rungs: proves whether the
-    // guard ENGAGED (rank machinery ran) or SKIPPED on a given corpus
-    if (sys.env.contains("SPARK_GRAFT_ND_TRACE"))
-      System.err.println(s"[nd-trace] maxOcc=" +
-        s"${if (maxOcc.isNullAt(0)) 0L else maxOcc.getLong(0)} cap=$cap " +
-        s"canSaturate=$canSaturate")
     // under a possibly-biting cap the restricted frame gains a second
     // consumer (withPred's bucket-count aggregate beside the candidate
     // join) — persist it there; the common unsaturated path leaves it
@@ -564,8 +557,9 @@ object IncrementalNearDup {
         // materializing ranked here (first consumer) keeps the rescue
         // branch to ONE cheap extra job when the guard could not rule
         // saturation out; when it could, no probe job runs at all
-        val anySaturated = rankedOpt.exists(r => tr("saturation_probe")(
-          !r.filter(col("pred") > cap).limit(1).isEmpty))
+        val anySaturated = rankedOpt.exists(r =>
+          Trace.span("nd", "saturation_probe", batchId)(
+            !r.filter(col("pred") > cap).limit(1).isEmpty))
         val (rescueSeen, rescueBatch) =
           if (!anySaturated)
             (spark.emptyDataFrame.select(lit(0L).as("doc_id"),
@@ -628,7 +622,7 @@ object IncrementalNearDup {
         // masked — a retracted doc's sig row can never surface
         val sigBuckets: Set[Long] =
           if (fusedProbe) maskBuckets
-          else tr("cand_probe")(cand
+          else Trace.span("nd", "cand_probe", batchId)(cand
             .select(sigBucketOf(col("seen_id"), nBuckets).as("p"))
             .distinct().collect().map(_.getLong(0)).toSet)
         val seenSigs = view.filter(col("p").isin(sigBuckets.toSeq: _*))
@@ -665,7 +659,7 @@ object IncrementalNearDup {
           .unionByName(rescueBatch.select(col("doc_a").as("a"),
             col("doc_b").as("b")))
           .select(lit(1).as("kind"), col("a"), col("b"))
-        val fused = tr("edges_ck")(mat(
+        val fused = Trace.span("nd", "edges_ck", batchId)(mat(
           seenTagged.unionByName(batchTagged).distinct()))
         (fused.filter(col("kind") === 0)
            .select(col("a").as("doc_id"), col("b").as("seen_id")),
@@ -693,7 +687,7 @@ object IncrementalNearDup {
     val retract = retractIds.map(Retraction.normIds(_).persist())
     var edges: Option[(DataFrame, DataFrame)] = None
     try {
-      val (dataFp, touched) = tr("fp_touched")(
+      val (dataFp, touched) = Trace.span("nd", "fp_touched", batchId)(
         BucketState.inputFingerprintAndBuckets(
           bands.select(col("band"), col("bh"), col("doc_id")),
           bucketOf(nBuckets)))
@@ -736,7 +730,7 @@ object IncrementalNearDup {
               val floor =
                 if (minRow.isNullAt(0)) None else Some(minRow.getLong(0))
               edges = Some(verifiedEdges(spark, indexDir, m, bands, touched,
-                nBuckets, tombs, replayFloor = floor,
+                nBuckets, tombs, batchId, replayFloor = floor,
                 prevBandsIn = prevBandsIn))
             }
           case BucketState.Proceed(proposed) =>
@@ -746,7 +740,7 @@ object IncrementalNearDup {
               // admission answer and the captured edge feed derive from it
               val (pairsSeen, pairsBatch) =
                 verifiedEdges(spark, indexDir, m, bands, touched, nBuckets,
-                  tombs, prevBandsIn = prevBandsIn)
+                  tombs, batchId, prevBandsIn = prevBandsIn)
               if (captureEdges) edges = Some((pairsSeen, pairsBatch))
               // rejected: near-dup of a SMALLER seen doc, or of a smaller
               // doc in the SAME batch (regardless of that doc's own fate —
@@ -794,7 +788,7 @@ object IncrementalNearDup {
               val dataRows = bandKeys.unionByName(sigRows).unionByName(skRows)
                 .withColumn("p", bucketOf(nBuckets))
                 .unionByName(answerRows)
-              tr("segment_write")(
+              Trace.span("nd", "segment_write", batchId)(
                 retract.fold(dataRows)(r => dataRows.unionByName(
                     r.select(lit(-9L).as("band"), lit("").as("bh"),
                       col("doc_id"),
@@ -804,7 +798,7 @@ object IncrementalNearDup {
                   .repartition(col("p"))
                   .write.mode("overwrite").partitionBy("p")
                   .parquet(s"$indexDir/v=$physicalVersion"))
-              tr("claim_list_commit") {
+              Trace.span("nd", "claim_list_commit", batchId) {
                 BucketState.claimAnswer(spark, s"$indexDir/v=$physicalVersion",
                   admittedDir, admittedSchema)
               val outBuckets =
@@ -825,7 +819,7 @@ object IncrementalNearDup {
       // dir a mid-ingest background fold superseded. Conditional — runs
       // only when a fold left lease-spared dirs (or on the process's
       // first call, covering crash orphans).
-      tr("gc")(BucketState.gcVersionsIfDirty(spark, indexDir))
+      Trace.span("nd", "gc", batchId)(BucketState.gcVersionsIfDirty(spark, indexDir))
     } finally {
       if (ownBands) bands.unpersist()
       retract.foreach(_.unpersist())

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType, StructField, StructType}
 
-import graft.Tables
+import graft.{Tables, Trace}
 import graft.streaming.BucketState
 
 /** Incremental IVF-PQ vector index — the streaming form of
@@ -359,17 +359,8 @@ object IncrementalVecIndex {
     */
   def ingest(spark: SparkSession, indexDirIn: String, vecs: DataFrame,
              batchId: Long, retractIds: Option[DataFrame] = None): DataFrame = {
-    // opt-in phase timing (SPARK_GRAFT_VEC_TRACE=1) — the nd/kb trace
-    // discipline: per-drop cost must be attributable, not guessed
-    val trace = sys.env.contains("SPARK_GRAFT_VEC_TRACE")
-    def tr[T](tag: String)(f: => T): T =
-      if (!trace) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[vec-trace] $tag ${(System.nanoTime() - t0) / 1e6}%.0f ms")
-        r
-      }
+    // every stage is a Trace span, as in the nd/kb ingests: per-drop
+    // cost must be attributable, not guessed
     val indexDir = liveDir(spark, indexDirIn)
     val clean = cleanOf(vecs)
     // persisted for the ingest's duration (the sibling stores' rule): the
@@ -380,7 +371,7 @@ object IncrementalVecIndex {
     val retract = retractIds.map(r =>
       Retraction.normIds(r).withColumnRenamed("doc_id", "vec_id").persist())
     try {
-    val batchFp = tr("fingerprint")(
+    val batchFp = Trace.span("vec", "fingerprint", batchId)(
       Retraction.mixFp(BucketState.inputFingerprint(clean),
         retract.map(BucketState.inputFingerprint)))
     val (m, lease) = BucketState.readManifestLeased(spark, indexDir)
@@ -414,7 +405,7 @@ object IncrementalVecIndex {
               invalidateParams(indexDir)
               writeParams(spark, indexDir, cents, cbs, batchFp)
             }
-            val params = tr("read_params")(
+            val params = Trace.span("vec", "read_params", batchId)(
               cachedParams(spark, indexDir, frozen = m.buckets.nonEmpty))
             // the encode runs in the MAP stage of the p-exchange below,
             // so its parallelism is the INPUT's partition count — and
@@ -436,7 +427,7 @@ object IncrementalVecIndex {
             // (cell = -1, vec_id, codes = null, p = TombBucket)
             val dataRows = rows.withColumn("p",
               bucketCol(params.centroids.length, col("cell")))
-            tr("encode_write")(
+            Trace.span("vec", "encode_write", batchId)(
               retract.fold(dataRows)(r => dataRows.unionByName(
                   r.select(lit(-1L).as("cell"), col("vec_id"),
                     lit(null).cast(ArrayType(IntegerType, containsNull = false))
@@ -445,9 +436,9 @@ object IncrementalVecIndex {
                 .repartition(col("p"))
                 .write.mode("overwrite").partitionBy("p")
                 .parquet(s"$indexDir/v=$physicalVersion"))
-            val outBuckets = tr("list_buckets")(
+            val outBuckets = Trace.span("vec", "list_buckets", batchId)(
               BucketState.listBuckets(spark, s"$indexDir/v=$physicalVersion"))
-            tr("commit")(BucketState.manifestLock(indexDir).synchronized {
+            Trace.span("vec", "commit", batchId)(BucketState.manifestLock(indexDir).synchronized {
               val mNow = BucketState.readManifest(spark, indexDir)
               val next = outBuckets.foldLeft(mNow.buckets)((acc, b) =>
                 acc.updated(b, acc.getOrElse(b, Set.empty[Long]) + physicalVersion))
@@ -458,7 +449,7 @@ object IncrementalVecIndex {
       }
     } finally BucketState.releaseReads(lease)
     // conditional sweep — see IncrementalDedup.ingest's GC comment
-    tr("gc")(BucketState.gcVersionsIfDirty(spark, indexDir))
+    Trace.span("vec", "gc", batchId)(BucketState.gcVersionsIfDirty(spark, indexDir))
     } finally retract.foreach(_.unpersist())
     // the batch's answer is a pure function of the committed frozen
     // params — recomputing it (first run AND replay) is cheaper than

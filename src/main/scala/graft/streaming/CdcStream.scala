@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.Trace
 import graft.cdc.{CdcApply, CdcSchema, Changelog}
 
 /** The live CDC path: Structured Streaming over the envelope stream,
@@ -571,7 +572,7 @@ object CdcStream {
     * abandoned (released from in-flight, GC'd like a crash orphan) — the
     * common path saves a full serialized Spark-job round-trip, which at
     * micro-batch cadence is pure commit latency (LatencySoak measures it,
-    * SPARK_GRAFT_COMMIT_TRACE=1 itemizes it).
+    * its [[graft.Trace]] spans itemize it).
     *
     * `onStaged` runs with the staged version dir BEFORE the manifest
     * commit ([[runRouted]] stamps its schema watermark there), so a
@@ -587,15 +588,6 @@ object CdcStream {
     import scala.concurrent.ExecutionContext.Implicits.global
     val spark = rawBatch.sparkSession
     val bucketOf = bucketFn(nBuckets) _
-    val trace = sys.env.contains("SPARK_GRAFT_COMMIT_TRACE")
-    def tr[T](tag: String)(f: => T): T =
-      if (!trace) f
-      else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(
-          f"[commit-trace] b$batchId lsm-$tag ${(System.nanoTime() - t0) / 1e6}%.0f ms")
-        r
-      }
     val batch = rawBatch.persist()
     val auditF = Future { writeAudit(batch, auditDir, batchId) }
     try {
@@ -640,7 +632,7 @@ object CdcStream {
         // (the stats job is still running); at LSM bucket counts (≤64)
         // the empty shuffle partitions cost scheduling-only, and the
         // parquet writer emits no dir for them.
-        tr("segment_write")(batch
+        Trace.span("lsm", "segment_write", batchId)(batch
           .filter(
             coalesce(col(s"after.${spec.key}"), col(s"before.${spec.key}"))
               .isNotNull ||
@@ -656,7 +648,8 @@ object CdcStream {
           .write.mode("overwrite").partitionBy("p")
           .parquet(s"$stateDir/v=$newVersion"))
         onStaged.foreach(_(s"$stateDir/v=$newVersion"))
-        val statRow = tr("stats_await")(Await.result(statF, Duration.Inf))
+        val statRow =
+          Trace.span("lsm", "stats_await", batchId)(Await.result(statF, Duration.Inf))
         val batchFp = statRow.getLong(0) ^
           java.lang.Long.rotateLeft(statRow.getLong(1), 32)
         BucketState.checkBatch(m, batchId, batchFp) match {
@@ -666,28 +659,30 @@ object CdcStream {
             // the in-flight registration so the GC below removes it.
             Await.result(auditF, Duration.Inf)
           case BucketState.Proceed(_) =>
-            val outBuckets =
-              tr("list_buckets")(BucketState.listBuckets(spark, s"$stateDir/v=$newVersion"))
-            tr("audit_await")(Await.result(auditF, Duration.Inf))
+            val outBuckets = Trace.span("lsm", "list_buckets", batchId)(
+              BucketState.listBuckets(spark, s"$stateDir/v=$newVersion"))
+            Trace.span("lsm", "audit_await", batchId)(Await.result(auditF, Duration.Inf))
             // Commit under the manifest lock against a FRESH read: a
             // background compaction may have swapped segment sets since
             // this batch's check read — folding the stale snapshot in
             // here would resurrect compacted-away segments.
-            tr("manifest_commit")(BucketState.manifestLock(stateDir).synchronized {
-              val mNow = BucketState.readManifest(spark, stateDir)
-              val merged = outBuckets.foldLeft(mNow.buckets)((acc, b) =>
-                acc.updated(b, acc.getOrElse(b, Set.empty[Long]) + newVersion))
-              BucketState.commitManifest(spark, stateDir, merged, Some((batchId + 1) -> batchFp))
-            })
+            Trace.span("lsm", "manifest_commit", batchId)(
+              BucketState.manifestLock(stateDir).synchronized {
+                val mNow = BucketState.readManifest(spark, stateDir)
+                val merged = outBuckets.foldLeft(mNow.buckets)((acc, b) =>
+                  acc.updated(b, acc.getOrElse(b, Set.empty[Long]) + newVersion))
+                BucketState.commitManifest(spark, stateDir, merged,
+                  Some((batchId + 1) -> batchFp))
+              })
             committed = true
         }
       } finally BucketState.releaseVersion(stateDir, newVersion)
       // GC after release: on the commit path the new dir is manifest-
       // referenced (live); on the abandon path it is now unreferenced and
       // unregistered, so this sweep removes it like any crash orphan.
-      tr("gc")(BucketState.gcVersions(spark, stateDir))
-      if (!committed && trace)
-        System.err.println(s"[commit-trace] b$batchId lsm-abandoned v=$newVersion")
+      Trace.span("lsm", "gc", batchId, (_: Unit) =>
+          if (committed) Nil else Seq("abandoned_v" -> newVersion))(
+        BucketState.gcVersions(spark, stateDir))
     } finally {
       Await.ready(auditF, Duration.Inf)
       batch.unpersist()

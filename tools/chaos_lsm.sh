@@ -21,6 +21,11 @@ SPAN_S=${CHAOS_SPAN_S:-30}
 BASE=$(mktemp -d "${TMPDIR:-/tmp}/graft-lsmchaos-XXXX")
 HEAP=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 24 ? 24 : g) "g"}' \
   /proc/meminfo 2>/dev/null || echo 2g)
+# every attempt appends its phase spans (graft.Trace) to one file BESIDE
+# the work dir, which a fresh-corpus restart removes: one per-phase
+# record across all SIGKILL relaunches
+export SPARK_GRAFT_TRACE="$BASE/trace.jsonl"
+echo "[chaos-lsm] phase trace: $SPARK_GRAFT_TRACE"
 cd "$(dirname "$0")/.."
 
 ADD_OPENS=""
