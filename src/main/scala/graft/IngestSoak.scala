@@ -29,10 +29,10 @@ import org.apache.spark.sql.functions._
   * protocol makes that safe), so drop times stay O(batch) even in the
   * drops where the fold trips.
   *
-  * Usage: `graft.IngestSoak [nDocs] [nBatches] [workDir] [compactEvery]
-  * [compactWhenSegments] [mode] [async]` — at most one compaction policy
-  * nonzero; mode `exact` (default) | `neardup`; `async` = `async` to
-  * dispatch folds off the hot path.
+  * Usage: `graft.IngestSoak [nDocs] [nBatches] [workDir]
+  * [compactWhenSegments] [mode] [async]` — `compactWhenSegments` 0
+  * (default) never folds; mode `exact` (default) | `neardup`; `async` =
+  * `async` to dispatch folds off the hot path.
   */
 object IngestSoak {
   def main(args: Array[String]): Unit = {
@@ -40,12 +40,11 @@ object IngestSoak {
     val nBatches = args.lift(1).map(_.toInt).getOrElse(8)
     val base = args.lift(2).filter(_.nonEmpty).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-ingest-soak").toString)
-    val compactEvery = args.lift(3).map(_.toInt).getOrElse(0)
-    val compactWhenSegments = args.lift(4).map(_.toInt).getOrElse(0)
-    val mode = args.lift(5).getOrElse("exact")
+    val compactWhenSegments = args.lift(3).map(_.toInt).getOrElse(0)
+    val mode = args.lift(4).getOrElse("exact")
     require(mode == "exact" || mode == "neardup",
       s"mode must be exact|neardup, got $mode")
-    val async = args.lift(6).contains("async")
+    val async = args.lift(5).contains("async")
     val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
 
@@ -84,11 +83,11 @@ object IngestSoak {
     val q =
       if (mode == "exact")
         operators.IncrementalDedup.runIngest(stream, indexDir, s"$base/ckpt",
-          compactEvery = compactEvery, compactWhenSegments = compactWhenSegments,
+          compactWhenSegments = compactWhenSegments,
           onBatch = onB, asyncCompaction = async)
       else
         operators.IncrementalNearDup.runIngest(stream, indexDir, s"$base/ckpt",
-          compactEvery = compactEvery, compactWhenSegments = compactWhenSegments,
+          compactWhenSegments = compactWhenSegments,
           onBatch = onB, asyncCompaction = async)
     q.processAllAvailable(); q.stop()
     // a still-running background fold finishes or dies staged-only; wait
@@ -128,11 +127,11 @@ object IngestSoak {
       if (mode == "exact")
         operators.IncrementalDedup.snapshot(spark, indexDir).count()
       else operators.IncrementalNearDup.admittedSnapshot(spark, indexDir).count()
-    val buckets = streaming.BucketState.readManifest(spark, indexDir).buckets
-    val versions = buckets.values.flatten.toSet.size
+    val mEnd = streaming.BucketState.readManifest(spark, indexDir)
+    val versions = mEnd.buckets.values.flatten.toSet.size
     // read amplification: segments a snapshot/anti-join must merge per
     // bucket — the quantity the compaction policy exists to bound
-    val maxSegs = if (buckets.isEmpty) 0 else buckets.values.map(_.size).max
+    val maxSegs = mEnd.maxSegments
     import scala.jdk.CollectionConverters._
     val ends = batchEnds.asScala.map(_.longValue()).toArray.sorted
     val drops = (t0 +: ends.dropRight(1)).zip(ends)
@@ -143,7 +142,6 @@ object IngestSoak {
     val (h1, h2) = drops.splitAt(drops.length / 2)
     val dropsJson = drops.map(d => f"$d%.3f").mkString("[", ",", "]")
     println(s"""{"metric":"ingest_soak","mode":"$mode","docs":$nDocs,"batches":$nBatches,""" +
-      s""""compact_every":$compactEvery,""" +
       s""""compact_when_segments":$compactWhenSegments,"async":$async,""" +
       s""""sec":${math.round(sec * 1000) / 1000.0},""" +
       s""""docs_per_sec":${math.round(nDocs / sec)},""" +

@@ -159,9 +159,8 @@ object LatencySoak {
         // a background thread (asyncCompaction protocol), never billed to
         // delivery latency and never blocking the next trigger.
         val commit = System.currentTimeMillis()
-        val m = streaming.BucketState.readManifest(batch.sparkSession, s"$base/state")
-        val maxSegs =
-          if (m.buckets.isEmpty) 0 else m.buckets.values.map(_.size).max
+        val maxSegs = streaming.BucketState
+          .readManifest(batch.sparkSession, s"$base/state").maxSegments
         segsObserved.add(maxSegs.toLong) // per-batch observed read amplification
         if (maxSegs >= 8) {
           compactions.incrementAndGet()
@@ -220,9 +219,7 @@ object LatencySoak {
     // boundedness under BACKGROUND compaction is the claim being
     // verified, so report the worst observed and the final.
     val segsSeen = segsObserved.asScala.map(_.longValue()).toArray
-    val mEnd = streaming.BucketState.readManifest(spark, s"$base/state")
-    val segsEnd =
-      if (mEnd.buckets.isEmpty) 0 else mEnd.buckets.values.map(_.size).max
+    val segsEnd = streaming.BucketState.readManifest(spark, s"$base/state").maxSegments
     println(s"""{"metric":"latency_soak","events":$total,"ticks":$nTicks,""" +
       s""""tick_ms":$tickMs,"trigger_ms":$triggerMs,"buckets":$nBuckets,""" +
       s""""batches":${cs.length},""" +

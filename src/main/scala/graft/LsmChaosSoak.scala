@@ -80,7 +80,7 @@ object LsmChaosSoak {
     takedown.start()
     q.processAllAvailable(); q.stop()
     takedown.join(600000)
-    while (streaming.CdcStream.compactionInFlight(s"$base/state"))
+    while (streaming.BucketState.compactionInFlight(s"$base/state"))
       Thread.sleep(100)
     val streamSec = (System.nanoTime() - t0) / 1e9
 

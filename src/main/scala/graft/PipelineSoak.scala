@@ -511,12 +511,9 @@ object PipelineSoak {
           (vecLive, compactWhenSegments + 3,
             operators.Retraction.foldTombstones(_, "vec_id")))
         folds.foreach { case (d, threshold, resolve) =>
-          val m = streaming.BucketState.readManifest(s, d)
-          val maxSegs =
-            if (m.buckets.isEmpty) 0 else m.buckets.values.map(_.size).max
-          if (maxSegs >= threshold)
+          if (streaming.BucketState.readManifest(s, d).maxSegments >= threshold)
             streaming.BucketState.maybeCompactConcurrent(s, d, async = true,
-              resolve = resolve)
+              streaming.BucketState.unionFold(resolve))
         }
         batchEnds.add(System.nanoTime())
         ()

@@ -16,8 +16,9 @@ import graft.streaming.BucketState
   * (`p = pmod(xxhash64(fp), nBuckets)`): an incoming batch reads only the
   * buckets its own fingerprints hash into (partition-pruned paths) and
   * APPENDS one immutable segment holding only its survivors — prior
-  * segments are never rewritten (LSM-style; `BucketState.compact` folds
-  * the segment list back to one). Both I/O sides are O(batch): at 100 TB
+  * segments are never rewritten (LSM-style; the one fold,
+  * `BucketState.compactConcurrent`, folds the segment list back to one).
+  * Both I/O sides are O(batch): at 100 TB
   * of state a 1 GB drop reads just the fingerprint column store of the
   * touched buckets, never the corpus, and writes only its own new
   * fingerprints. The `_CURRENT` manifest rename is the single commit
@@ -89,12 +90,12 @@ object IncrementalDedup {
       val batchFp = Retraction.mixFp(dataFp,
         retract.map(BucketState.inputFingerprint))
 
-      // Leased manifest read + locked fresh-read commit: the concurrent-
-      // writer protocol (applyLsmBatch pattern) that makes a BACKGROUND
-      // compactConcurrent safe. The lease pins every referenced version
-      // dir against the compaction's GC while the anti-join below is
-      // still scanning it; the locked commit merges this batch's segment
-      // into the manifest AS IT IS at commit time, so a swap that landed
+      // Leased manifest read + the one append commit: the concurrent-
+      // writer protocol that makes a BACKGROUND compactConcurrent safe.
+      // The lease pins every referenced version dir against the fold's
+      // GC while the anti-join below is still scanning it;
+      // BucketState.commitAppend merges this batch's segment into the
+      // manifest AS IT IS at commit time, so a swap that landed
       // mid-ingest is preserved rather than clobbered.
       val (m, lease) = BucketState.readManifestLeased(spark, indexDir)
       try {
@@ -163,15 +164,8 @@ object IncrementalDedup {
               BucketState.claimAnswer(spark, s"$indexDir/v=$physicalVersion",
                 survivorsDir, survivorSchema)
 
-              val outBuckets =
-                BucketState.listBuckets(spark, s"$indexDir/v=$physicalVersion")
-              BucketState.manifestLock(indexDir).synchronized {
-                val mNow = BucketState.readManifest(spark, indexDir)
-                val next = outBuckets.foldLeft(mNow.buckets)((acc, b) =>
-                  acc.updated(b, acc.getOrElse(b, Set.empty[Long]) + physicalVersion))
-                BucketState.commitManifest(spark, indexDir, next,
-                  Some(newVersion -> batchFp))
-              }
+              BucketState.commitAppend(spark, indexDir, physicalVersion,
+                Some(newVersion -> batchFp), "exact", batchId)
             } finally BucketState.releaseVersion(indexDir, physicalVersion)
         }
       } finally BucketState.releaseReads(lease)
@@ -193,22 +187,14 @@ object IncrementalDedup {
     * contract (a crash between the manifest commit and the checkpoint
     * commit replays the batch; the fingerprint check makes it a no-op).
     *
-    * Two compaction policies, at most one active (both fold the
-    * accumulated segments back to one dir from the stream's own thread,
-    * so the single-writer contract holds):
-    *
-    *  - `compactEvery` = N: fixed cadence, every N batches. Bounds read
-    *    amplification at N segments/bucket, but fires on schedule even
-    *    when the state shape doesn't need it — a narrow drop that touched
-    *    3 of 64 buckets still triggers a whole-index rewrite.
-    *  - `compactWhenSegments` = K: ADAPTIVE — compact when the MEASURED
-    *    max segments-per-bucket (one tiny manifest read per batch)
-    *    reaches K. Read amplification is bounded at K by construction,
-    *    and the rewrite runs only when the state shape demands it: skewed
-    *    or narrow drops accumulate segments per bucket slowly, so the
-    *    index can absorb many more batches between rewrites than any
-    *    cadence guess for the same bound. This is the production knob;
-    *    cadence remains for deterministic-schedule tests.
+    * Compaction policy, `compactWhenSegments` = K (0 = never): fold when
+    * the MEASURED max segments-per-bucket (one tiny manifest read per
+    * batch) reaches K. Read amplification is bounded at K by
+    * construction, and the rewrite runs only when the state shape
+    * demands it: skewed or narrow drops accumulate segments per bucket
+    * slowly, so the index absorbs many more batches between rewrites
+    * than a fixed cadence would for the same bound (README "Measured
+    * throughput", the `IngestSoak` table).
     *
     * `onBatch` (batchId, maxSegmentsPerBucket-after-ingest) is a probe
     * hook for soaks/specs; default no-op.
@@ -221,34 +207,24 @@ object IncrementalDedup {
     * Default stays synchronous: deterministic segment counts for specs.
     */
   def runIngest(docs: DataFrame, indexDir: String, checkpointDir: String,
-                compactEvery: Int = 0, compactWhenSegments: Int = 0,
-                nBuckets: Int = 64,
+                compactWhenSegments: Int = 0, nBuckets: Int = 64,
                 onBatch: (Long, Int) => Unit = (_, _) => (),
                 asyncCompaction: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(compactEvery == 0 || compactWhenSegments == 0,
-      "set at most one compaction policy: compactEvery (cadence) or " +
-        "compactWhenSegments (adaptive)")
+      : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         ingest(spark, indexDir, batch, batchId, nBuckets = nBuckets)
-        val m = BucketState.readManifest(spark, indexDir)
-        val maxSegs =
-          if (m.buckets.isEmpty) 0 else m.buckets.values.map(_.size).max
+        val maxSegs = BucketState.readManifest(spark, indexDir).maxSegments
         onBatch(batchId, maxSegs)
-        val due =
-          (compactEvery > 0 && (batchId + 1) % compactEvery == 0) ||
-            (compactWhenSegments > 0 && maxSegs >= compactWhenSegments)
-        if (due)
+        if (compactWhenSegments > 0 && maxSegs >= compactWhenSegments)
           BucketState.maybeCompactConcurrent(spark, indexDir, asyncCompaction,
-            resolve = Retraction.foldTombstones(_, "doc_id"))
+            BucketState.unionFold(Retraction.foldTombstones(_, "doc_id")))
         ()
       }
       .start()
-  }
 
   /** The full deduped corpus registry: every admitted (fp, doc_id),
     * resolved through the committed manifest, minus stored takedowns.

@@ -746,15 +746,8 @@ object IncrementalKeepBest {
                 seenLab.unpersist()
                 if (ownEdges) edgesSeen.unpersist()
               } finally scratchToRelease.foreach(_.unpersist())
-              val outBuckets =
-                BucketState.listBuckets(spark, s"$indexDir/v=$physicalVersion")
-              BucketState.manifestLock(indexDir).synchronized {
-                val mNow = BucketState.readManifest(spark, indexDir)
-                val next = outBuckets.foldLeft(mNow.buckets)((acc, b) =>
-                  acc.updated(b, acc.getOrElse(b, Set.empty[Long]) + physicalVersion))
-                BucketState.commitManifest(spark, indexDir, next,
-                  Some(newVersion -> batchFp))
-              }
+              BucketState.commitAppend(spark, indexDir, physicalVersion,
+                Some(newVersion -> batchFp), "kb", batchId)
             } finally BucketState.releaseVersion(indexDir, physicalVersion)
         }
       } finally BucketState.releaseReads(lease)

@@ -798,19 +798,11 @@ object IncrementalNearDup {
                   .repartition(col("p"))
                   .write.mode("overwrite").partitionBy("p")
                   .parquet(s"$indexDir/v=$physicalVersion"))
-              Trace.span("nd", "claim_list_commit", batchId) {
+              Trace.span("nd", "claim_answer", batchId)(
                 BucketState.claimAnswer(spark, s"$indexDir/v=$physicalVersion",
-                  admittedDir, admittedSchema)
-              val outBuckets =
-                BucketState.listBuckets(spark, s"$indexDir/v=$physicalVersion")
-              BucketState.manifestLock(indexDir).synchronized {
-                val mNow = BucketState.readManifest(spark, indexDir)
-                val next = outBuckets.foldLeft(mNow.buckets)((acc, b) =>
-                  acc.updated(b, acc.getOrElse(b, Set.empty[Long]) + physicalVersion))
-                BucketState.commitManifest(spark, indexDir, next,
-                  Some(newVersion -> batchFp))
-              }
-              }
+                  admittedDir, admittedSchema))
+              BucketState.commitAppend(spark, indexDir, physicalVersion,
+                Some(newVersion -> batchFp), "nd", batchId)
             } finally BucketState.releaseVersion(indexDir, physicalVersion)
         }
       } finally BucketState.releaseReads(lease)
@@ -829,41 +821,31 @@ object IncrementalNearDup {
 
   /** Streaming ingress for the near-dup index — same contract surface as
     * [[IncrementalDedup.runIngest]]: one [[ingest]] per micro-batch keyed
-    * by the checkpoint's batchId, adaptive (`compactWhenSegments`) or
-    * cadence (`compactEvery`) folding, optionally dispatched to a
-    * background thread (`asyncCompaction` — safe by the locked
-    * leased-read protocol [[ingest]] uses).
+    * by the checkpoint's batchId, adaptive (`compactWhenSegments`)
+    * folding, optionally dispatched to a background thread
+    * (`asyncCompaction` — safe by the locked leased-read protocol
+    * [[ingest]] uses).
     */
   def runIngest(docs: DataFrame, indexDir: String, checkpointDir: String,
-                compactEvery: Int = 0, compactWhenSegments: Int = 0,
-                nBuckets: Int = 64,
+                compactWhenSegments: Int = 0, nBuckets: Int = 64,
                 onBatch: (Long, Int) => Unit = (_, _) => (),
                 asyncCompaction: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    require(compactEvery == 0 || compactWhenSegments == 0,
-      "set at most one compaction policy: compactEvery (cadence) or " +
-        "compactWhenSegments (adaptive)")
+      : org.apache.spark.sql.streaming.StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         ingest(spark, indexDir, batch, batchId, nBuckets = nBuckets)
-        val m = BucketState.readManifest(spark, indexDir)
-        val maxSegs =
-          if (m.buckets.isEmpty) 0 else m.buckets.values.map(_.size).max
+        val maxSegs = BucketState.readManifest(spark, indexDir).maxSegments
         onBatch(batchId, maxSegs)
-        val due =
-          (compactEvery > 0 && (batchId + 1) % compactEvery == 0) ||
-            (compactWhenSegments > 0 && maxSegs >= compactWhenSegments)
-        if (due)
+        if (compactWhenSegments > 0 && maxSegs >= compactWhenSegments)
           BucketState.maybeCompactConcurrent(spark, indexDir, asyncCompaction,
-            resolve = Retraction.foldTombstones(_, "doc_id",
-              keepTombstones = true))
+            BucketState.unionFold(Retraction.foldTombstones(_, "doc_id",
+              keepTombstones = true)))
         ()
       }
       .start()
-  }
 
   /** Every admitted doc_id across all committed ingest batches, minus
     * every stored takedown — the surviving curated corpus. Materialized

@@ -436,15 +436,8 @@ object IncrementalVecIndex {
                 .repartition(col("p"))
                 .write.mode("overwrite").partitionBy("p")
                 .parquet(s"$indexDir/v=$physicalVersion"))
-            val outBuckets = Trace.span("vec", "list_buckets", batchId)(
-              BucketState.listBuckets(spark, s"$indexDir/v=$physicalVersion"))
-            Trace.span("vec", "commit", batchId)(BucketState.manifestLock(indexDir).synchronized {
-              val mNow = BucketState.readManifest(spark, indexDir)
-              val next = outBuckets.foldLeft(mNow.buckets)((acc, b) =>
-                acc.updated(b, acc.getOrElse(b, Set.empty[Long]) + physicalVersion))
-              BucketState.commitManifest(spark, indexDir, next,
-                Some((batchId + 1) -> batchFp))
-            })
+            BucketState.commitAppend(spark, indexDir, physicalVersion,
+              Some((batchId + 1) -> batchFp), "vec", batchId)
           } finally BucketState.releaseVersion(indexDir, physicalVersion)
       }
     } finally BucketState.releaseReads(lease)
@@ -559,7 +552,7 @@ object IncrementalVecIndex {
   def maybeCompactConcurrent(spark: SparkSession, indexDir: String,
                              async: Boolean = false): Unit =
     BucketState.maybeCompactConcurrent(spark, liveDir(spark, indexDir), async,
-      resolve = Retraction.foldTombstones(_, "vec_id"))
+      BucketState.unionFold(Retraction.foldTombstones(_, "vec_id")))
 
   /** Build generation N+1 from the accumulated corpus and atomically cut
     * the serving pointer over to it. The old generation serves every
@@ -625,13 +618,7 @@ object IncrementalVecIndex {
     BucketState.commitManifest(spark, nextDir, buckets, Some(v -> h))
     beforeSwap()
     // THE cutover: one atomic pointer rename
-    val fs = BucketState.hadoopFs(spark, indexDir)
-    val tmp = new org.apache.hadoop.fs.Path(s"$indexDir/_GEN.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(nextGen.toString.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(genPtr(indexDir).toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, genPtr(indexDir), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    BucketState.writeAtomically(spark, genPtr(indexDir).toString, nextGen.toString)
     nextGen
   }
 

@@ -39,8 +39,9 @@ import org.apache.spark.sql.functions._
   *  - CALLER CONTRACT: retracted ids name PREVIOUSLY-INGESTED ids.
   *    Ingestion is ascending, so no future row can match an existing
   *    tombstone — which is what lets compaction drop masked rows AND
-  *    the tombstones masking them in one fold ([[graft.streaming
-  *    .BucketState.compact]]'s `resolve` hook). Retracting a
+  *    the tombstones masking them in one fold (the `resolve` of the
+  *    store's [[graft.streaming.BucketState.unionFold]], run by the one
+  *    fold, `BucketState.compactConcurrent`). Retracting a
   *    never-ingested id masks nothing and is dropped at the next fold.
   */
 private[graft] object Retraction {

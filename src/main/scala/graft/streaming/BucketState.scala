@@ -2,16 +2,21 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Trace
+
 /** Manifest-committed, bucket-partitioned persistent state — the shared
-  * durability substrate and the one segment reader under every bucketed
-  * store: the CDC LSM replica (`CdcStream.readLsm`, plain and
-  * schema-remapped) and the four curation stores
+  * durability substrate under every bucketed store: the CDC LSM replica
+  * (`CdcStream`) and the four curation stores
   * (`operators.IncrementalDedup`, `IncrementalNearDup`,
-  * `IncrementalKeepBest`, `IncrementalVecIndex`).
+  * `IncrementalKeepBest`, `IncrementalVecIndex`). It holds the store
+  * protocol's three shared parts: the one segment reader
+  * ([[readBuckets]]), the one append commit ([[commitAppend]]) and the
+  * one fold ([[compactConcurrent]], dispatched by
+  * [[maybeCompactConcurrent]]).
   *
   * Layout: `stateDir/v=<version>/p=<bucket>/` parquet files in immutable version
-  * dirs plus a `_CURRENT` manifest mapping each live bucket to the version
-  * that last rewrote it. A writer stages a new version dir, then commits
+  * dirs plus a `_CURRENT` manifest listing each live bucket's segments
+  * (versions). A writer stages a new version dir, then commits
   * with ONE atomic rename of `_CURRENT` — a crash before the rename leaves
   * readers on complete pre-batch state; a crash after leaves garbage dirs
   * the next batch's GC removes. The manifest also records the committing
@@ -32,7 +37,12 @@ private[graft] object BucketState {
   /** Parsed `_CURRENT`: bucket → version, plus the committing batch's
     * (version, input fingerprint).
     */
-  final case class Manifest(buckets: Map[Long, Set[Long]], fp: Option[(Long, Long)])
+  final case class Manifest(buckets: Map[Long, Set[Long]], fp: Option[(Long, Long)]) {
+    /** The most segments any one bucket lists (0 when empty): the read
+      * amplification every compaction policy bounds.
+      */
+    def maxSegments: Int = if (buckets.isEmpty) 0 else buckets.values.map(_.size).max
+  }
 
   // ---- concurrent-writer coordination (in-process) -------------------
   //
@@ -206,7 +216,7 @@ private[graft] object BucketState {
   // stored read) never caches, so it never pays the view's extra
   // store materialization — at the 5M-doc decade rung that
   // materialization would be the dominant new cost for zero reuse.
-  // Folds seed this with the folded pairs (compact/compactConcurrent),
+  // Folds seed this with the folded pairs (compactConcurrent),
   // so a post-fold stream resumes caching on its first read.
   private val lastSeen =
     scala.collection.concurrent.TrieMap.empty[String, Set[(Long, Long)]]
@@ -401,19 +411,7 @@ private[graft] object BucketState {
                          m: Manifest, layoutId: String): Unit = {
     val fs = hadoopFs(spark, stateDir)
     val p = new org.apache.hadoop.fs.Path(s"$stateDir/_LAYOUT")
-    // stamp via tmp + atomic rename (the manifest pattern): the earlier
-    // direct create-then-write left an EMPTY stamp when a SIGKILL landed
-    // between the create and the write, and every relaunch then refused
-    // the store as a layout mismatch — caught by the r15 chaos soak
-    // (kill 15 of 20 landed exactly in that window on the kb overlay)
-    def stamp(): Unit = {
-      val tmp = new org.apache.hadoop.fs.Path(s"$stateDir/_LAYOUT.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(layoutId.getBytes("UTF-8")) finally out.close()
-      org.apache.hadoop.fs.FileContext.getFileContext(p.toUri,
-          spark.sparkContext.hadoopConfiguration)
-        .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
+    def stamp(): Unit = writeAtomically(spark, s"$stateDir/_LAYOUT", layoutId)
     if (fs.exists(p)) {
       val in = fs.open(p)
       val found =
@@ -436,11 +434,10 @@ private[graft] object BucketState {
   }
 
   /** `_CURRENT` manifest: one `bucket,version` line per live SEGMENT
-    * (a bucket may list several — [[compact]] leaves exactly one per
-    * bucket, append-only writers like the dedup index and the CDC replica
-    * accumulate one per contributing batch, LSM-style) plus
-    * one `fp,version,hash` line for the committing batch. Empty = no
-    * committed state.
+    * (a bucket may list several — every writer's [[commitAppend]] adds
+    * one per contributing batch, LSM-style, and [[compactConcurrent]]
+    * leaves one per folded bucket) plus one `fp,version,hash` line for
+    * the committing batch. Empty = no committed state.
     */
   def readManifest(spark: SparkSession, stateDir: String): Manifest = {
     val fs = hadoopFs(spark, stateDir)
@@ -497,10 +494,11 @@ private[graft] object BucketState {
     * PHYSICAL version dir to stage under when the batch should proceed —
     * strictly greater than every referenced dir (so the pre-state read
     * can never touch the dir being written), and equal to the batch's
-    * logical version `batchId+1` until a [[compact]] has renumbered dirs
-    * past it. The last committed DATA version is the manifest's fp line
-    * (which compaction preserves verbatim), falling back to the bucket
-    * max for pre-fingerprint manifests (where physical == logical).
+    * logical version `batchId+1` until a [[compactConcurrent]] fold has
+    * renumbered dirs past it. The last committed DATA version is the
+    * manifest's fp line (which the fold preserves verbatim), falling back
+    * to the bucket max for pre-fingerprint manifests (where physical ==
+    * logical).
     */
   def checkBatch(m: Manifest, batchId: Long, batchFp: Long): BatchCheck = {
     val logical = batchId + 1
@@ -537,35 +535,71 @@ private[graft] object BucketState {
   case object AlreadyCommitted extends BatchCheck
   final case class Proceed(physicalVersion: Long) extends BatchCheck
 
+  /** Replace the small file at `path` with `text` in one atomic step:
+    * write a `.tmp` sibling, CLOSE it, then FileContext.rename(OVERWRITE),
+    * the atomic-replace primitive (plain FileSystem.rename won't clobber
+    * on local/HDFS). A reader sees the old file or the whole new one,
+    * never a torn one: the `_LAYOUT` stamp was once a direct
+    * create-then-write, and a SIGKILL between the two left it EMPTY, so
+    * every relaunch refused the store (the r15 chaos soak, kill 15 of
+    * 20). On stores without atomic rename the deployment pins these
+    * files elsewhere.
+    */
+  def writeAtomically(spark: SparkSession, path: String, text: String): Unit = {
+    val dest = new org.apache.hadoop.fs.Path(path)
+    val tmp = new org.apache.hadoop.fs.Path(s"$path.tmp")
+    val out = hadoopFs(spark, path).create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    org.apache.hadoop.fs.FileContext.getFileContext(dest.toUri,
+        spark.sparkContext.hadoopConfiguration)
+      .rename(tmp, dest, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+  }
+
+  /** Write `_CURRENT` whole. Writers commit through [[commitAppend]] or
+    * [[compactConcurrent]], which call this under [[manifestLock]]
+    * against a fresh read; only a dir with no concurrent writer (a
+    * freshly staged vector-index generation) may call it directly.
+    */
   def commitManifest(spark: SparkSession, stateDir: String,
                      manifest: Map[Long, Set[Long]],
-                     fp: Option[(Long, Long)]): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$stateDir/_CURRENT.tmp")
-    val cur = new org.apache.hadoop.fs.Path(s"$stateDir/_CURRENT")
-    val fs = hadoopFs(spark, stateDir)
-    val out = fs.create(tmp, true)
-    try out.write(
+                     fp: Option[(Long, Long)]): Unit =
+    writeAtomically(spark, s"$stateDir/_CURRENT",
       (manifest.toSeq.flatMap { case (b, vs) => vs.map(b -> _) }.sorted
         .map { case (b, v) => s"$b,$v" }
-        ++ fp.map { case (v, h) => s"fp,$v,$h" }).mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // FileContext.rename(OVERWRITE) is the atomic-replace primitive
-    // (plain FileSystem.rename won't clobber on local/HDFS). On stores
-    // without atomic rename the deployment pins the manifest elsewhere.
-    org.apache.hadoop.fs.FileContext.getFileContext(cur.toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, cur, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        ++ fp.map { case (v, h) => s"fp,$v,$h" }).mkString("\n"))
+
+  /** The one append commit: add staged version `version` to every bucket
+    * its dir holds and commit with `fp`, the batch's replay record (None
+    * keeps the manifest's current one — a commit that is not a stream
+    * batch, like an LSM retraction, must not disturb the replay chain).
+    * The merge runs under [[manifestLock]] against a FRESH read: a
+    * background fold may have swapped segment sets since the writer's
+    * own manifest read, and folding that stale snapshot in would
+    * resurrect compacted-away segments. The listing and the commit are
+    * the `list_buckets` and `manifest_commit` spans of `store`, `batch`.
+    */
+  def commitAppend(spark: SparkSession, stateDir: String, version: Long,
+                   fp: Option[(Long, Long)], store: String, batch: Long): Unit = {
+    val staged = Trace.span(store, "list_buckets", batch)(
+      listBuckets(spark, s"$stateDir/v=$version"))
+    Trace.span(store, "manifest_commit", batch)(manifestLock(stateDir).synchronized {
+      val m = readManifest(spark, stateDir)
+      commitManifest(spark, stateDir,
+        staged.foldLeft(m.buckets)((acc, b) =>
+          acc.updated(b, acc.getOrElse(b, Set.empty[Long]) + version)),
+        fp.orElse(m.fp))
+    })
   }
 
   /** The one segment reader: the rows of every `(version, bucket)` leaf
     * dir `manifest` references, with a `long` `p` bucket column. Every
     * bucketed store reads through here — the four curation stores,
-    * [[readStoreView]], [[compact]] and [[compactConcurrent]], the LSM
-    * replica (`CdcStream.readLsm` splits its reserved buckets over it) and
-    * its schema-evolving reads (one call per schema watermark, each
-    * remapped). Only the
-    * referenced leaf dirs are read (partition-pruned by construction), and
-    * building the frame runs no Spark job: the leaf dirs come from the
+    * [[readStoreView]], [[unionFold]], the LSM replica (`CdcStream.readLsm`,
+    * which its fold reads through too, splits its reserved buckets over
+    * it) and its schema-evolving reads (one call per schema watermark,
+    * each remapped). Only the referenced leaf dirs are read
+    * (partition-pruned by construction), and building the frame runs no
+    * Spark job: the leaf dirs come from the
     * manifest, the schema from [[segmentSchema]]'s footer read, and a
     * relation over at most `parallelPartitionDiscovery.threshold` root
     * paths lists them on the driver — past that, one relation per chunk,
@@ -681,124 +715,109 @@ private[graft] object BucketState {
       .map(_.getPath.getName.stripPrefix("p=").toLong)
   }
 
-  /** Compact a bucket-state dir: rewrite every live bucket into ONE fresh
-    * version dir and repoint the whole manifest at it. After many
-    * incremental batches the manifest references many versions (one
-    * pruned read per referenced version on every lookup, and each
-    * version dir holds small files); compaction restores one-dir state
-    * with the same atomic-rename commit — readers switch from the old
-    * manifest to the new in one rename, and the superseded dirs are
-    * GC'd after. The version number advances past everything referenced
-    * so an in-flight writer's stale-manifest guard still holds.
-    * Preserves the recorded (version, fingerprint) pair so a crash-replay
-    * of the LAST data batch still recognizes itself after a compaction.
-    *
-    * Single-writer contract (same as the data path): run compaction in a
-    * maintenance window or from the owning stream's thread — a writer
-    * that read the manifest BEFORE a concurrent compaction committed
-    * would stage against superseded dirs and clobber the compaction at
-    * its own commit.
-    */
-  /** `resolve` (both compaction forms): a store-supplied fold applied to
-    * the unioned rows before the rewrite — identity by default (plain
-    * union stores), a tombstone fold for stores with retraction
-    * ([[graft.operators.Retraction]]): masked data rows AND the
-    * tombstones masking them drop together, which is sound because a
-    * tombstone can never mask a FUTURE row (ingestion is ascending and
-    * tombstones name already-ingested ids), so once the fold has
-    * applied a tombstone to every stored row, nothing it could ever
-    * mask remains — including under compactConcurrent's mid-fold late
-    * segments (late data ids are above the tombstone's; a late
-    * RETRACTION segment survives the swap verbatim and folds next
-    * time). `resolve` must preserve the `p` column and must not move
-    * rows across buckets.
-    */
-  def compact(spark: SparkSession, stateDir: String,
-              resolve: DataFrame => DataFrame = identity): Unit = {
-    val m = readManifest(spark, stateDir)
-    if (m.buckets.isEmpty) return
-    val newVersion = m.buckets.values.flatten.max + 1
-    val all = resolve(readBuckets(spark, stateDir, m.buckets,
-      // non-empty manifest ⇒ the empty fallback is never consulted
-      sys.error("unreachable")))
-    all.repartition(org.apache.spark.sql.functions.col("p"))
-      .write.mode("overwrite").partitionBy("p")
-      .parquet(s"$stateDir/v=$newVersion")
-    val next = listBuckets(spark, s"$stateDir/v=$newVersion")
-      .map(_ -> Set(newVersion)).toMap
-    commitManifest(spark, stateDir, next, m.fp)
-    // the session view is stale by key after the fold (its pairs were
-    // just superseded) — retire it NOW so its lease doesn't defer the
-    // GC below, and seed the streaming signature with the folded pairs
-    // so a live stream resumes caching on its first post-fold read
-    invalidateView(stateDir)
-    lastSeen.put(stateDir,
-      next.toSeq.flatMap { case (b, vs) => vs.map(v => (v, b)) }.toSet)
-    markGcDirty(stateDir) // superseded dirs exist until the sweep below
-    gcVersions(spark, stateDir)
-  }
+  // ---- the one fold ----------------------------------------------------
+  //
+  // Every bucketed store compacts through [[compactConcurrent]]: the
+  // four curation stores with [[unionFold]], the CDC LSM replica with
+  // its own fold (`CdcStream.compactLsm`). A store supplies only what
+  // its fold writes; the reservation, the locked segment-preserving
+  // swap, the view bookkeeping and the GC are this one code.
 
-  /** [[compact]] made safe to run CONCURRENTLY with append-only locked
-    * writers — the index analog of the CDC replica's `compactLsm`, for
-    * state whose resolution is a plain union (the incremental dedup and
-    * near-dup indexes: segments are disjoint row appends, so
-    * union(folded ∪ late) ≡ union(old ∪ late) trivially and the
-    * segment-preserving swap argument carries over verbatim). The fold
-    * reads a manifest SNAPSHOT outside any lock and rewrites every
-    * referenced row into one reserved version dir; the swap runs under
-    * the manifest lock against a FRESH read, replacing only the segments
-    * it actually folded — segments a concurrent locked ingest appended
-    * mid-fold survive verbatim, and the replay fingerprint is taken from
-    * the fresh read so a concurrent batch's progress record is
-    * preserved. The snapshot's dirs can't be GC'd mid-fold: they stay
-    * manifest-referenced until this very swap (concurrent ingests only
-    * ADD segments), and at most one compaction runs per dir (callers
-    * gate with their own in-flight flag). `beforeSwap` is a test seam.
+  /** What one fold writes, built from the manifest snapshot it folds:
+    * `rows` (with `p`; no row may move across buckets) and `staged`, run
+    * on the written version dir before the swap — the LSM replica stamps
+    * its schema watermark and raises its time-travel floor there, so the
+    * swap can never name an unstamped dir.
+    */
+  final case class Folded(rows: DataFrame, staged: String => Unit = _ => ())
+
+  /** A store's fold of snapshot `m` of `stateDir`; None when `m` holds
+    * nothing to fold.
+    */
+  type Fold = (SparkSession, String, Manifest) => Option[Folded]
+
+  /** The curation stores' fold: every referenced row through `resolve` —
+    * identity for plain union stores, a tombstone fold for stores with
+    * retraction ([[graft.operators.Retraction]]): masked data rows AND
+    * the tombstones masking them drop together, which is sound because a
+    * tombstone can never mask a FUTURE row (ingestion is ascending and
+    * tombstones name already-ingested ids), so once the fold has applied
+    * a tombstone to every stored row, nothing it could ever mask remains
+    * — including mid-fold late segments (late data ids are above the
+    * tombstone's; a late RETRACTION segment survives the swap verbatim
+    * and folds next time). `resolve` must preserve the `p` column.
+    */
+  def unionFold(resolve: DataFrame => DataFrame = identity): Fold =
+    (spark, stateDir, m) =>
+      if (m.buckets.isEmpty) None
+      else Some(Folded(resolve(readBuckets(spark, stateDir, m.buckets,
+        sys.error("unreachable — manifest non-empty")))))
+
+  /** Compact a bucket-state dir: rewrite every live bucket into ONE fresh
+    * version dir and repoint the manifest at it. After many incremental
+    * batches a bucket lists many segments (one more leaf dir per read,
+    * each holding small files); the fold restores one segment per bucket
+    * with the same atomic-rename commit, and the superseded dirs are
+    * GC'd after.
     *
-    * Concurrent-writer requirement: every writer of `stateDir` must
-    * commit via a locked fresh-read merge (the `applyLsmBatch` pattern)
-    * and read prior state under a [[readManifestLeased]] lease —
-    * an unlocked read-modify-write commit would clobber this swap, and
-    * an unleased read would race the post-swap GC.
+    * SAFE TO RUN CONCURRENTLY with append-only writers that commit
+    * through [[commitAppend]] (the apply path and the ingests keep
+    * landing O(batch) commits while a fold runs off the hot path). The
+    * fold reads a manifest SNAPSHOT outside any lock and writes `fold`'s
+    * rows into one reserved version dir; the swap runs under the
+    * manifest lock against a FRESH read, replacing only the segments it
+    * actually folded — segments appended mid-fold survive verbatim,
+    * because every store's resolution is associative over segments
+    * (a union for the curation stores, max-pos per key and max horizon
+    * for the replica: resolve(folded ∪ late) ≡ resolve(old ∪ late)). The
+    * replay fingerprint is taken from the fresh read, so a concurrent
+    * batch's progress record is preserved (and a crash-replay of the
+    * last data batch still recognizes itself post-fold). The snapshot's
+    * dirs can't be GC'd mid-fold: they stay manifest-referenced until
+    * this very swap, and at most one fold runs per dir
+    * ([[maybeCompactConcurrent]]'s flag, or the caller's own thread).
+    * `beforeSwap` is a test seam: it runs after `staged`, before the
+    * locked swap. Readers of prior state must hold a
+    * [[readManifestLeased]] lease, or the post-swap GC could remove what
+    * they are scanning.
     */
   def compactConcurrent(spark: SparkSession, stateDir: String,
                         beforeSwap: () => Unit = () => (),
-                        resolve: DataFrame => DataFrame = identity): Unit = {
-    import org.apache.spark.sql.functions.col
+                        fold: Fold = unionFold()): Unit = {
     val m = readManifest(spark, stateDir)
-    if (m.buckets.isEmpty) return
-    val newVersion = reserveVersion(stateDir, m.buckets.values.flatten.max + 1)
-    try {
-      resolve(readBuckets(spark, stateDir, m.buckets,
-          sys.error("unreachable — manifest non-empty")))
-        .repartition(col("p"))
-        .write.mode("overwrite").partitionBy("p")
-        .parquet(s"$stateDir/v=$newVersion")
-      val outBuckets = listBuckets(spark, s"$stateDir/v=$newVersion").toSet
-      beforeSwap()
-      val merged = manifestLock(stateDir).synchronized {
-        val mNow = readManifest(spark, stateDir)
-        val out = (mNow.buckets.keySet ++ outBuckets).flatMap { b =>
-          val late = mNow.buckets.getOrElse(b, Set.empty[Long]) --
-            m.buckets.getOrElse(b, Set.empty[Long])
-          val segs = late ++
-            (if (outBuckets.contains(b)) Set(newVersion) else Set.empty[Long])
-          if (segs.isEmpty) None else Some(b -> segs)
-        }.toMap
-        commitManifest(spark, stateDir, out, mNow.fp)
-        out
-      }
-      // retire the (now stale-by-key) session view so its lease doesn't
-      // defer the sweep, and seed the streaming signature with the
-      // folded pairs so the live stream resumes caching on its first
-      // post-fold read; a concurrent ingest mid-read is safe — blocks
-      // recompute from files its OWN lease still pins
-      invalidateView(stateDir)
-      lastSeen.put(stateDir, merged.toSeq
-        .flatMap { case (b, vs) => vs.map(v => (v, b)) }.toSet)
-      markGcDirty(stateDir) // superseded dirs exist until the sweep below
-      gcVersions(spark, stateDir)
-    } finally releaseVersion(stateDir, newVersion)
+    fold(spark, stateDir, m).foreach { f =>
+      val newVersion = reserveVersion(stateDir, m.buckets.values.flatten.max + 1)
+      val dir = s"$stateDir/v=$newVersion"
+      try {
+        f.rows.repartition(org.apache.spark.sql.functions.col("p"))
+          .write.mode("overwrite").partitionBy("p").parquet(dir)
+        f.staged(dir)
+        val outBuckets = listBuckets(spark, dir).toSet
+        beforeSwap()
+        val merged = manifestLock(stateDir).synchronized {
+          val mNow = readManifest(spark, stateDir)
+          val out = (mNow.buckets.keySet ++ outBuckets).flatMap { b =>
+            val late = mNow.buckets.getOrElse(b, Set.empty[Long]) --
+              m.buckets.getOrElse(b, Set.empty[Long])
+            val segs = late ++
+              (if (outBuckets.contains(b)) Set(newVersion) else Set.empty[Long])
+            if (segs.isEmpty) None else Some(b -> segs)
+          }.toMap
+          commitManifest(spark, stateDir, out, mNow.fp)
+          out
+        }
+        // retire the (now stale-by-key) session view so its lease doesn't
+        // defer the sweep, and seed the streaming signature with the
+        // folded pairs so the live stream resumes caching on its first
+        // post-fold read; a concurrent ingest mid-read is safe — blocks
+        // recompute from files its OWN lease still pins
+        invalidateView(stateDir)
+        lastSeen.put(stateDir, merged.toSeq
+          .flatMap { case (b, vs) => vs.map(v => (v, b)) }.toSet)
+        markGcDirty(stateDir) // superseded dirs exist until the sweep below
+        gcVersions(spark, stateDir)
+      } finally releaseVersion(stateDir, newVersion)
+    }
   }
 
   private val compactingFlags =
@@ -810,27 +829,26 @@ private[graft] object BucketState {
   def compactionInFlight(stateDir: String): Boolean =
     compactingFlags.get(stateDir).exists(_.get())
 
-  /** Run [[compactConcurrent]] now (sync) or on a background daemon
-    * thread (async, at most one in flight per state dir — a trip while
-    * one is running is a no-op; the running fold will observe the extra
-    * segments on its next trip). Same dispatch contract as the CDC
-    * replica's `maybeCompact`.
+  /** The one fold dispatcher: run [[compactConcurrent]] with `fold` now
+    * (sync) or on a background daemon thread (async, at most one in
+    * flight per state dir — a trip while one is running is a no-op; the
+    * running fold will observe the extra segments on its next trip).
     */
   def maybeCompactConcurrent(spark: SparkSession, stateDir: String,
-                             async: Boolean,
-                             resolve: DataFrame => DataFrame = identity): Unit =
-    if (!async) compactConcurrent(spark, stateDir, resolve = resolve)
+                             async: Boolean, fold: Fold = unionFold()): Unit =
+    if (!async) compactConcurrent(spark, stateDir, fold = fold)
     else {
       val flag = compactingFlags.getOrElseUpdate(
         stateDir, new java.util.concurrent.atomic.AtomicBoolean(false))
       if (flag.compareAndSet(false, true)) {
         val t = new Thread(() => {
-          try compactConcurrent(spark, stateDir, resolve = resolve)
+          try compactConcurrent(spark, stateDir, fold = fold)
           catch {
             case e: Throwable =>
-              System.err.println(s"[index] background compaction failed: ${e.getMessage}")
+              System.err.println(
+                s"[compact] background compaction of $stateDir failed: ${e.getMessage}")
           } finally flag.set(false)
-        }, s"index-compact-${stateDir.hashCode}")
+        }, s"compact-${stateDir.hashCode}")
         t.setDaemon(true)
         t.start()
       }
@@ -849,8 +867,8 @@ private[graft] object BucketState {
     * must survive until its own commit or abandonment.
     *
     * Only the SNAPSHOT (manifest read + dir listing) holds the lock; the
-    * recursive deletes run outside it, so a concurrent locked commit (the
-    * LSM apply path, compactLsm) never waits behind filesystem deletes —
+    * recursive deletes run outside it, so a concurrent locked commit
+    * ([[commitAppend]], a fold's swap) never waits behind filesystem deletes —
     * on an object store with many dead version dirs that wait would land
     * directly on the sub-second commit latency the LSM path exists for.
     * Deleting outside the lock is safe because doomed-ness is stable: a
@@ -859,10 +877,9 @@ private[graft] object BucketState {
     * hands out monotonically-increasing, never-reused numbers and every
     * writer registers its version in-flight BEFORE staging a byte, so no
     * later commit can reference a number that was already dead.
-    * Unlocked commit paths (`IncrementalDedup`, [[compact]]) are
-    * protected not by this lock but by their documented
-    * single-writer contract: they never run concurrently with anything
-    * that could GC their dirs.
+    * Every commit path is locked ([[commitAppend]], [[compactConcurrent]]);
+    * the one direct [[commitManifest]] caller, a vector-index cutover,
+    * commits a fresh generation dir that no other writer or GC knows yet.
     */
   def gcVersions(spark: SparkSession, stateDir: String): Unit = {
     val doomed = manifestLock(stateDir).synchronized {

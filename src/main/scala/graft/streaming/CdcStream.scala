@@ -510,52 +510,23 @@ object CdcStream {
                       onStaged: Option[String => Unit] = None): Unit = {
     applyLsmBatch(batch, batchId, auditDir, stateDir, nBuckets, spec, onStaged)
     val spark = batch.sparkSession
-    val m = BucketState.readManifest(spark, stateDir)
-    val maxSegs =
-      if (m.buckets.isEmpty) 0 else m.buckets.values.map(_.size).max
-    if (compactWhenSegments > 0 && maxSegs >= compactWhenSegments)
+    if (compactWhenSegments > 0 &&
+        BucketState.readManifest(spark, stateDir).maxSegments >= compactWhenSegments)
       maybeCompact(spark, stateDir, nBuckets, spec, asyncCompaction,
         stateReader, onStaged)
   }
 
-  private val compactingFlags =
-    scala.collection.concurrent.TrieMap.empty[String, java.util.concurrent.atomic.AtomicBoolean]
-
-  /** Is a background compaction currently running for `stateDir`?
-    * (Test/ops visibility — the data path never needs to ask.)
-    */
-  private[graft] def compactionInFlight(stateDir: String): Boolean =
-    compactingFlags.get(stateDir).exists(_.get())
-
-  /** Run [[compactLsm]] now (sync) or on a background thread (async,
-    * at most one in flight per state dir — a trip while one is already
-    * running is a no-op; the running fold will observe the extra
-    * segments on its next trip).
+  /** Run [[compactLsm]]'s fold through the one dispatcher,
+    * [[BucketState.maybeCompactConcurrent]]: now (sync) or on a
+    * background thread (async, at most one in flight per state dir).
     */
   private[graft] def maybeCompact(spark: SparkSession, stateDir: String,
                                   nBuckets: Int, spec: CdcSchema.CdcTableSpec,
                                   async: Boolean,
                                   stateReader: Option[Map[Long, Set[Long]] => DataFrame] = None,
-                                  onStaged: Option[String => Unit] = None): Unit = {
-    def fold(): Unit = compactLsm(spark, stateDir, nBuckets, spec,
-      stateReader = stateReader, onStaged = onStaged)
-    if (!async) fold()
-    else {
-      val flag = compactingFlags.getOrElseUpdate(
-        stateDir, new java.util.concurrent.atomic.AtomicBoolean(false))
-      if (flag.compareAndSet(false, true)) {
-        val t = new Thread(() => {
-          try fold()
-          catch {
-            case e: Throwable =>
-              System.err.println(s"[lsm] background compaction failed: ${e.getMessage}")
-          } finally flag.set(false)
-        }, s"lsm-compact-${stateDir.hashCode}")
-        t.setDaemon(true)
-        t.start()
-      }
-    }
-  }
+                                  onStaged: Option[String => Unit] = None): Unit =
+    BucketState.maybeCompactConcurrent(spark, stateDir, async,
+      lsmFold(nBuckets, stateReader, onStaged))
 
   /** One LSM micro-batch: audit + stats + the raw-log segment write all
     * CONCURRENT (three driver threads, three Spark jobs over the same
@@ -576,7 +547,8 @@ object CdcStream {
     *
     * `onStaged` runs with the staged version dir BEFORE the manifest
     * commit ([[runRouted]] stamps its schema watermark there), so a
-    * commit can never name a version that lacks its stamp.
+    * commit can never name a version that lacks its stamp. The audit is
+    * awaited before the commit too, so it is durable before the rename.
     */
   private[graft] def applyLsmBatch(rawBatch: DataFrame, batchId: Long,
                                    auditDir: String, stateDir: String,
@@ -659,21 +631,9 @@ object CdcStream {
             // the in-flight registration so the GC below removes it.
             Await.result(auditF, Duration.Inf)
           case BucketState.Proceed(_) =>
-            val outBuckets = Trace.span("lsm", "list_buckets", batchId)(
-              BucketState.listBuckets(spark, s"$stateDir/v=$newVersion"))
             Trace.span("lsm", "audit_await", batchId)(Await.result(auditF, Duration.Inf))
-            // Commit under the manifest lock against a FRESH read: a
-            // background compaction may have swapped segment sets since
-            // this batch's check read — folding the stale snapshot in
-            // here would resurrect compacted-away segments.
-            Trace.span("lsm", "manifest_commit", batchId)(
-              BucketState.manifestLock(stateDir).synchronized {
-                val mNow = BucketState.readManifest(spark, stateDir)
-                val merged = outBuckets.foldLeft(mNow.buckets)((acc, b) =>
-                  acc.updated(b, acc.getOrElse(b, Set.empty[Long]) + newVersion))
-                BucketState.commitManifest(spark, stateDir, merged,
-                  Some((batchId + 1) -> batchFp))
-              })
+            BucketState.commitAppend(spark, stateDir, newVersion,
+              Some((batchId + 1) -> batchFp), "lsm", batchId)
             committed = true
         }
       } finally BucketState.releaseVersion(stateDir, newVersion)
@@ -726,9 +686,9 @@ object CdcStream {
   //    exists, and every read skips the bucket read and the mask join
   //    (the hasTombs discipline).
   //
-  // Commit protocol: reserved version + locked fresh-read merge with the
-  // manifest fp preserved (the compaction discipline — a retraction is
-  // not a stream batch and must not disturb the batchId replay chain).
+  // Commit protocol: reserved version + the one append commit with the
+  // manifest fp kept (a retraction is not a stream batch and must not
+  // disturb the batchId replay chain).
   // Safe concurrent with the live apply path and a background fold; a
   // crash before the rename leaves an invisible staged dir (GC'd), a
   // re-issued retraction just stacks duplicate tombstones (the mask
@@ -770,16 +730,8 @@ object CdcStream {
     try {
       tombs.coalesce(1).write.mode("overwrite").partitionBy("p")
         .parquet(s"$stateDir/v=$newVersion")
-      // an empty key frame stages no partition — commit nothing
-      if (BucketState.listBuckets(spark, s"$stateDir/v=$newVersion")
-            .contains(LsmRetractBucket))
-        BucketState.manifestLock(stateDir).synchronized {
-          val mNow = BucketState.readManifest(spark, stateDir)
-          BucketState.commitManifest(spark, stateDir,
-            mNow.buckets.updated(LsmRetractBucket,
-              mNow.buckets.getOrElse(LsmRetractBucket, Set.empty[Long]) + newVersion),
-            mNow.fp)
-        }
+      // an empty key frame stages no partition, so the commit adds nothing
+      BucketState.commitAppend(spark, stateDir, newVersion, None, "lsm", -1L)
     } finally BucketState.releaseVersion(stateDir, newVersion)
     BucketState.gcVersions(spark, stateDir)
   }
@@ -994,84 +946,58 @@ object CdcStream {
     }
   }
 
-  private def writeTtFloor(spark: SparkSession, stateDir: String,
-                           floor: Long): Unit = {
-    val tmp = new org.apache.hadoop.fs.Path(s"$stateDir/_TTFLOOR.tmp")
-    val cur = new org.apache.hadoop.fs.Path(s"$stateDir/_TTFLOOR")
-    val fs = BucketState.hadoopFs(spark, stateDir)
-    val out = fs.create(tmp, true)
-    try out.write(floor.toString.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(cur.toUri,
-        spark.sparkContext.hadoopConfiguration)
-      .rename(tmp, cur, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
   /** Fold an LSM state's segment lists back to one resolved version per
     * bucket: below-horizon rows are erased for good, delete markers and
     * retraction tombstones survive, and the whole manifest repoints in one
     * atomic rename. A horizon row is written only when a truncate was
     * folded — an absent `p = -1` bucket already reads as `Long.MinValue`.
-    * The recorded (version, fingerprint) pair is preserved so a
-    * crash-replay of the last data batch still recognizes itself
-    * post-compaction.
     *
-    * SAFE TO RUN CONCURRENTLY with the apply path (this is the
-    * "compaction off the hot path" contract): the fold reads a manifest
-    * snapshot outside any lock, and the final swap runs under the
-    * per-state-dir manifest lock against a FRESH read, replacing only the
-    * segments it actually folded — segments a concurrent batch appended
-    * mid-fold survive verbatim (resolution is max-pos-per-key and
-    * max-horizon, both associative, so resolve(folded ∪ late) ≡
-    * resolve(old ∪ late)). The replay fingerprint is taken from the fresh
-    * read, never the stale snapshot, so a concurrent batch's progress
-    * record is preserved. `beforeSwap` is a test seam: it runs after the
-    * fold, before the locked swap. `stateReader` and `onStaged` are the
-    * [[readLsm]] / [[applyLsmBatch]] hooks: the fold reads through the
+    * This is [[BucketState.compactConcurrent]] with the replica's fold
+    * ([[lsmFold]]), so it is SAFE TO RUN CONCURRENTLY with the apply path
+    * (the "compaction off the hot path" contract): segments a concurrent
+    * batch appends mid-fold survive the swap verbatim (resolution is
+    * max-pos-per-key and max-horizon, both associative), and the replay
+    * fingerprint is preserved. `beforeSwap` is a test seam: it runs after
+    * the fold, before the locked swap. `stateReader` and `onStaged` are
+    * the [[readLsm]] / [[applyLsmBatch]] hooks: the fold reads through the
     * first and stamps its output dir with the second before the swap.
     */
   def compactLsm(spark: SparkSession, stateDir: String, nBuckets: Int,
                  spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
                  beforeSwap: () => Unit = () => (),
                  stateReader: Option[Map[Long, Set[Long]] => DataFrame] = None,
-                 onStaged: Option[String => Unit] = None): Unit = {
-    val m = BucketState.readManifest(spark, stateDir)
-    // nothing to fold on an empty store, or one holding only retraction
-    // tombstones (a takedown can precede the first data batch)
-    if (!m.buckets.keys.exists(_ != LsmRetractBucket)) return
-    val bucketOf = bucketFn(nBuckets) _
-    val newVersion = BucketState.reserveVersion(
-      stateDir, m.buckets.values.flatten.max + 1)
-    try {
-      // the fold applies the retraction mask, so erased rows leave the
-      // disk here; tombstones themselves are read separately (they are
-      // not events — a null-image tombstone reaching resolveSegments
-      // would read as a delete marker)
-      val segs = readLsm(spark, stateDir, m,
-        sys.error("unreachable — manifest non-empty"), stateReader)
-      val horizon = segs.horizon()
-      val winners = resolveSegments(segs.events, horizon)
-      // (a `Long.MinValue` row — written by older folds — is dropped too)
-      val resolved = horizon.fold(winners)(h => winners.unionByName(h
-        .filter(col("h") > Long.MinValue).select(
-          lit(null).cast(winners.schema("key").dataType).as("key"),
-          col("h").as("pos"),
-          lit(null).cast(winners.schema("after").dataType).as("after"))))
-        .persist()
-      try {
-        val keyType = resolved.schema("key").dataType
-        // Per-key history at or below every folded position is gone now:
-        // advance the time-travel floor to the max folded position (the
-        // global max pos is always some key's winner, or the horizon row).
-        // Written BEFORE the manifest rename — a crash between the two
-        // leaves the floor conservatively high, never an answerable-looking
-        // but history-less as-of. (Positions a concurrent batch appends
-        // mid-fold are strictly above the folded max — stream positions
-        // are monotone — so the floor never covers unfolded history.
-        // With a retraction mask the max is over SURVIVING rows — still
-        // correct: every masked row above it is erased from every as-of
-        // view too, so no read between the two maxima can differ.)
-        val folded = resolved.agg(coalesce(max(col("pos")), lit(Long.MinValue)))
-          .collect()(0).getLong(0)
+                 onStaged: Option[String => Unit] = None): Unit =
+    BucketState.compactConcurrent(spark, stateDir, beforeSwap,
+      lsmFold(nBuckets, stateReader, onStaged))
+
+  /** The replica's fold for [[BucketState.compactConcurrent]]: [[readLsm]]
+    * then [[resolveSegments]] under the horizon, plus the horizon row and
+    * the kept tombstones; before the swap, the `onStaged` stamp and the
+    * raised `_TTFLOOR`.
+    */
+  private def lsmFold(nBuckets: Int,
+                      stateReader: Option[Map[Long, Set[Long]] => DataFrame],
+                      onStaged: Option[String => Unit]): BucketState.Fold =
+    (spark, stateDir, m) =>
+      // nothing to fold on an empty store, or one holding only retraction
+      // tombstones (a takedown can precede the first data batch)
+      if (!m.buckets.keys.exists(_ != LsmRetractBucket)) None
+      else {
+        val bucketOf = bucketFn(nBuckets) _
+        // the fold applies the retraction mask, so erased rows leave the
+        // disk here; tombstones themselves are read separately (they are
+        // not events — a null-image tombstone reaching resolveSegments
+        // would read as a delete marker)
+        val segs = readLsm(spark, stateDir, m,
+          sys.error("unreachable — manifest non-empty"), stateReader)
+        val horizon = segs.horizon()
+        val winners = resolveSegments(segs.events, horizon)
+        // (a `Long.MinValue` row — written by older folds — is dropped too)
+        val resolved = horizon.fold(winners)(h => winners.unionByName(h
+          .filter(col("h") > Long.MinValue).select(
+            lit(null).cast(winners.schema("key").dataType).as("key"),
+            col("h").as("pos"),
+            lit(null).cast(winners.schema("after").dataType).as("after"))))
         // tombstones SURVIVE the fold, deduped to one per-key max-rpos
         // row: events may arrive out of order (the file-source batches
         // shuffle the keyspace), so no fold can prove a horizon will
@@ -1084,33 +1010,34 @@ object CdcStream {
           .select(col("_rkey").as("key"), col("rpos").as("pos"),
             lit(null).cast(resolved.schema("after").dataType).as("after"),
             lit(LsmRetractBucket).as("p")))
-        val outRows = resolved
-          .withColumn("p",
-            when(col("key").isNull, lit(-1L))
-              .otherwise(bucketOf(col("key"), keyType)))
-        keptTombs.fold(outRows)(outRows.unionByName(_))
-          .repartition(col("p"))
-          .write.mode("overwrite").partitionBy("p")
-          .parquet(s"$stateDir/v=$newVersion")
-        onStaged.foreach(_(s"$stateDir/v=$newVersion"))
-        writeTtFloor(spark, stateDir,
-          math.max(folded, readTtFloor(spark, stateDir)))
-        val outBuckets = BucketState.listBuckets(spark, s"$stateDir/v=$newVersion").toSet
-        beforeSwap()
-        val next = BucketState.manifestLock(stateDir).synchronized {
-          val mNow = BucketState.readManifest(spark, stateDir)
-          val merged = (mNow.buckets.keySet ++ outBuckets).flatMap { b =>
-            val late = mNow.buckets.getOrElse(b, Set.empty[Long]) --
-              m.buckets.getOrElse(b, Set.empty[Long])
-            val segs = late ++
-              (if (outBuckets.contains(b)) Set(newVersion) else Set.empty[Long])
-            if (segs.isEmpty) None else Some(b -> segs)
-          }.toMap
-          BucketState.commitManifest(spark, stateDir, merged, mNow.fp)
-          merged
-        }
-        BucketState.gcVersions(spark, stateDir)
-      } finally resolved.unpersist()
-    } finally BucketState.releaseVersion(stateDir, newVersion)
-  }
+        val outRows = resolved.withColumn("p",
+          when(col("key").isNull, lit(-1L))
+            .otherwise(bucketOf(col("key"), resolved.schema("key").dataType)))
+        Some(BucketState.Folded(keptTombs.fold(outRows)(outRows.unionByName(_)),
+          staged = dir => {
+            onStaged.foreach(_(dir))
+            // Per-key history at or below every folded position is gone
+            // now: advance the time-travel floor to the max folded
+            // position. That is the max pos of the resolved rows, which is
+            // the max over the (masked) events and horizon rows: the
+            // global max event is its key's winner unless the horizon
+            // covers it, and then the horizon row carries the max. Read
+            // off the pos column alone, not the resolution. Written
+            // BEFORE the manifest rename — a crash between the two leaves
+            // the floor conservatively high, never an answerable-looking
+            // but history-less as-of. (Positions a concurrent batch
+            // appends mid-fold are strictly above the folded max — stream
+            // positions are monotone — so the floor never covers unfolded
+            // history. With a retraction mask the max is over SURVIVING
+            // rows — still correct: every masked row above it is erased
+            // from every as-of view too, so no read between the two
+            // maxima can differ.)
+            val pos = segs.events.select(col("pos"))
+            val folded = segs.horizonRows.fold(pos)(pos.union)
+              .agg(coalesce(max(col("pos")), lit(Long.MinValue)))
+              .collect()(0).getLong(0)
+            BucketState.writeAtomically(spark, s"$stateDir/_TTFLOOR",
+              math.max(folded, readTtFloor(spark, stateDir)).toString)
+          }))
+      }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{IncrementalKeepBest, IncrementalNearDup, IncrementalVecIndex}
+import graft.operators.{IncrementalDedup, IncrementalKeepBest, IncrementalNearDup,
+  IncrementalVecIndex}
 import graft.streaming.CdcStream
 
 /** The in-program trace: every store phase that fires writes one
@@ -38,6 +39,8 @@ class TraceSpec extends AnyFunSuite {
         Seq(env(1, 1, 10), env(2, 2, 20), env(3, 1, 11)))(Encoders.STRING)
         .toDF("value")),
       batchId, s"$base/audit", s"$base/state", 4, graft.cdc.CdcSchema.invoiceSpec)
+    val survivors = IncrementalDedup.ingest(spark, s"$base/exact", docs, batchId,
+      nBuckets = 4)
     val (admitted, es, eb) = IncrementalNearDup.ingestWithEdges(
       spark, s"$base/nd", docs, batchId, nBuckets = 4)
     IncrementalKeepBest.ingest(spark, s"$base/kb", docs, batchId, nBuckets = 4,
@@ -47,6 +50,7 @@ class TraceSpec extends AnyFunSuite {
         .select(col("vec_id"), col("embedding")), batchId).count()
     Map(
       "lsm" -> sorted(CdcStream.partitionedSnapshotLsm(spark, s"$base/state")),
+      "exact" -> sorted(survivors),
       "nd" -> sorted(admitted),
       "kb" -> sorted(IncrementalKeepBest.snapshot(spark, s"$base/kb")),
       "vec" -> sorted(IncrementalVecIndex.snapshot(spark, s"$base/vec")))
@@ -64,12 +68,13 @@ class TraceSpec extends AnyFunSuite {
     val always = Map(
       "lsm" -> Seq("segment_write", "stats_await", "list_buckets",
         "audit_await", "manifest_commit", "gc"),
+      "exact" -> Seq("list_buckets", "manifest_commit"),
       "nd" -> Seq("fp_touched", "occupancy_guard", "edges_ck",
-        "segment_write", "claim_list_commit", "gc"),
+        "segment_write", "claim_answer", "list_buckets", "manifest_commit", "gc"),
       "kb" -> Seq("fp_touched", "member_probe", "resolve", "subgraph_ck",
-        "segment_write", "gc"),
+        "segment_write", "list_buckets", "manifest_commit", "gc"),
       "vec" -> Seq("fingerprint", "read_params", "encode_write",
-        "list_buckets", "commit", "gc"))
+        "list_buckets", "manifest_commit", "gc"))
     always.foreach { case (store, phases) =>
       val ofStore = lines.filter(_.get("store").asText == store)
       assert(ofStore.map(_.get("phase").asText).toSet.subsetOf(

@@ -109,26 +109,6 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(snap === Set(1L, 2L, 6L)) // doc 5 is duplicate content across batches
   }
 
-  test("runIngest compactEvery bounds segments while the stream runs") {
-    import org.apache.spark.sql.types._
-    val in = java.nio.file.Files.createTempDirectory("increm-autoc").toString
-    val dir = tmp(); val ckpt = tmp()
-    (0 until 4).foreach { b =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/d$b.json"),
-        s"""{"doc_id":${b + 1},"text":"w$b x$b"}""".getBytes)
-    }
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val q = IncrementalDedup.runIngest(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(in),
-      dir, ckpt, compactEvery = 2)
-    q.processAllAvailable(); q.stop()
-    assert(IncrementalDedup.snapshot(spark, dir).count() === 4)
-    val live = graft.streaming.BucketState.readManifest(spark, dir)
-      .buckets.values.flatten.toSet
-    assert(live.size <= 2, s"segments not compacted: $live")
-  }
-
   test("adaptive policy: compacts when MEASURED segments/bucket reach the bound") {
     import org.apache.spark.sql.types._
     val in = java.nio.file.Files.createTempDirectory("increm-adapt").toString
@@ -168,7 +148,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // 64 buckets, four distinct single-doc drops: each touches its own
     // bucket (deterministic — xxhash64 over fixed fps), so measured
     // segments/bucket stays 1 and the adaptive policy never rewrites —
-    // where compactEvery=2 would have compacted the index twice
+    // where a fold every 2 batches would have compacted the index twice
     val q = IncrementalDedup.runIngest(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(in),
       dir, ckpt, compactWhenSegments = 2, nBuckets = 64)
@@ -177,19 +157,6 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val live = graft.streaming.BucketState.readManifest(spark, dir)
       .buckets.values.flatten.toSet
     assert(live.size === 4, s"adaptive policy must not have compacted: $live")
-  }
-
-  test("cadence and adaptive compaction policies are mutually exclusive") {
-    import org.apache.spark.sql.types._
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType)))
-    val stream = spark.readStream.schema(schema)
-      .json(java.nio.file.Files.createTempDirectory("increm-excl").toString)
-    val e = intercept[IllegalArgumentException] {
-      IncrementalDedup.runIngest(stream, tmp(), tmp(),
-        compactEvery = 2, compactWhenSegments = 2)
-    }
-    assert(e.getMessage.contains("at most one compaction policy"))
   }
 
   test("compaction folds many versions into one; reads and ingest continue") {
@@ -201,7 +168,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val before = IncrementalDedup.snapshot(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
 
-    graft.streaming.BucketState.compact(spark, dir)
+    graft.streaming.BucketState.compactConcurrent(spark, dir)
     val m = graft.streaming.BucketState.readManifest(spark, dir)
     assert(m.buckets.values.flatten.toSet.size === 1, "one live version after compaction")
     val after = IncrementalDedup.snapshot(spark, dir)

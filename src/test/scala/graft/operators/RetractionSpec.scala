@@ -55,7 +55,8 @@ class RetractionSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("fingerprint"))
 
     // compaction folds masked rows AND tombstones; answers unchanged
-    BucketState.compact(spark, d, Retraction.foldTombstones(_, "doc_id"))
+    BucketState.compactConcurrent(spark, d,
+      fold = BucketState.unionFold(Retraction.foldTombstones(_, "doc_id")))
     assert(idsOf(IncrementalDedup.snapshot(spark, d)) === Set(3L, 4L, 5L))
     assert(!BucketState.readManifest(spark, d).buckets
       .contains(Retraction.TombBucket),
@@ -86,8 +87,9 @@ class RetractionSpec extends AnyFunSuite {
     // relation (the admitted registry is immutable per-batch files and
     // needs its standing mask); admissions keep running against the
     // surviving index (5 near-dups the surviving 3 → rejected)
-    BucketState.compact(spark, d,
-      Retraction.foldTombstones(_, "doc_id", keepTombstones = true))
+    BucketState.compactConcurrent(spark, d,
+      fold = BucketState.unionFold(
+        Retraction.foldTombstones(_, "doc_id", keepTombstones = true)))
     assert(idsOf(IncrementalNearDup.admittedSnapshot(spark, d)) === Set(2L, 3L))
     val b2 = Seq((5L, tA)).toDF("doc_id", "text")
     IncrementalNearDup.ingest(spark, d, b2, 2, nBuckets = 8).count()
@@ -158,8 +160,9 @@ class RetractionSpec extends AnyFunSuite {
     assert(!snap2.exists(_._1 == 1L))
     assert(snap2.exists(_._1 == 10L))
     // compaction folds tombstones (forwarding rows exempt); unchanged
-    BucketState.compact(spark, d,
-      Retraction.foldTombstones(_, "doc_id", exempt = Some(col("band") === -3L)))
+    BucketState.compactConcurrent(spark, d,
+      fold = BucketState.unionFold(Retraction.foldTombstones(_, "doc_id",
+        exempt = Some(col("band") === -3L))))
     val snap3 = IncrementalKeepBest.snapshot(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toList
     assert(snap3 === snap2.sortBy(_._1))
@@ -187,7 +190,8 @@ class RetractionSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(!top1.contains(victim))
     // compaction fold: same surviving rows, same serving answer
-    BucketState.compact(spark, d, Retraction.foldTombstones(_, "vec_id"))
+    BucketState.compactConcurrent(spark, d,
+      fold = BucketState.unionFold(Retraction.foldTombstones(_, "vec_id")))
     val top2 = IncrementalVecIndex.searchTopk(spark, d, dir, q)
       .collect().map(_.getLong(0)).toSeq
     assert(top2 === top1)

@@ -62,7 +62,8 @@ class StoreViewSpec extends AnyFunSuite {
     viewEqualsDirect(dir)
     // fold: pairs are REMOVED from the manifest — full-reset path
     // (the exact store's own fold resolve, as the soak wires it)
-    BucketState.compact(spark, dir, Retraction.foldTombstones(_, "doc_id"))
+    BucketState.compactConcurrent(spark, dir,
+      fold = BucketState.unionFold(Retraction.foldTombstones(_, "doc_id")))
     viewEqualsDirect(dir)
     // append after the reset
     IncrementalDedup.ingest(spark, dir, docsOf(30L -> "mm nn"), batchId = 3)

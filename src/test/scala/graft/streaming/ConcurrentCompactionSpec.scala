@@ -12,8 +12,9 @@ import graft.TestSpark
   * segment, clobbering its replay-progress record, colliding on a
   * version dir, or GC-ing a staged-but-uncommitted write. The protocol
   * under test is [[BucketState]]'s manifest lock + reserved versions +
-  * in-flight GC sparing, and [[CdcStream.compactLsm]]'s
-  * segment-preserving swap (fold a snapshot, replace ONLY what was
+  * in-flight GC sparing, and the one fold's segment-preserving swap
+  * ([[BucketState.compactConcurrent]], which [[CdcStream.compactLsm]]
+  * runs with the replica's fold: fold a snapshot, replace ONLY what was
   * folded, re-read the fingerprint fresh).
   */
 class ConcurrentCompactionSpec extends AnyFunSuite {
@@ -144,9 +145,9 @@ class ConcurrentCompactionSpec extends AnyFunSuite {
           graft.cdc.CdcSchema.invoiceSpec, async = true)
     }
     val deadline = System.currentTimeMillis() + 60000
-    while (CdcStream.compactionInFlight(s"$base/state") &&
+    while (BucketState.compactionInFlight(s"$base/state") &&
       System.currentTimeMillis() < deadline) Thread.sleep(100)
-    assert(!CdcStream.compactionInFlight(s"$base/state"))
+    assert(!BucketState.compactionInFlight(s"$base/state"))
 
     // serial truth: last write per key
     val expected = (1 to 8).map { k =>
