@@ -63,8 +63,7 @@ object IncrementalDedup {
   def ingest(spark: SparkSession, indexDir: String, docs: DataFrame,
              batchId: Long, nBuckets: Int = 64,
              retractIds: Option[DataFrame] = None): DataFrame = {
-    val newVersion = batchId + 1
-    val survivorsDir = s"$indexDir/survivors/$newVersion"
+    val survivorsDir = s"$indexDir/survivors/${batchId + 1}"
     val retract = retractIds.map(Retraction.normIds(_).persist())
 
     // in-batch winners: min doc_id per fingerprint — a plain groupBy
@@ -90,93 +89,62 @@ object IncrementalDedup {
       val batchFp = Retraction.mixFp(dataFp,
         retract.map(BucketState.inputFingerprint))
 
-      // Leased manifest read + the one append commit: the concurrent-
-      // writer protocol that makes a BACKGROUND compactConcurrent safe.
-      // The lease pins every referenced version dir against the fold's
-      // GC while the anti-join below is still scanning it;
-      // BucketState.commitAppend merges this batch's segment into the
-      // manifest AS IT IS at commit time, so a swap that landed
-      // mid-ingest is preserved rather than clobbered.
-      val (m, lease) = BucketState.readManifestLeased(spark, indexDir)
-      try {
-        // Stale-sequence + committed-replay guards shared with the CDC
-        // replica (BucketState.checkBatch): a committed replay is durable —
-        // survivors were staged before the commit rename — but only if the
-        // recorded input fingerprint proves this really is the same batch.
-        BucketState.checkBatch(m, batchId, batchFp) match {
-          case BucketState.AlreadyCommitted => ()
-          case BucketState.Proceed(proposed) =>
-            val physicalVersion = BucketState.reserveVersion(indexDir, proposed)
-            try {
-              // manifest-keyed session view: per drop the registry read
-              // is one batch-sized delta leaf, the touched prune an
-              // in-memory filter (see BucketState.readStoreView)
-              val prev = BucketState
-                .readStoreView(spark, indexDir, m, emptyIdx(spark))
-                .filter(col("p").isin(touched.toSeq: _*))
-              // surviving view: stored tombstones ∪ this batch's own
-              // retraction set mask the fingerprint registry BEFORE the
-              // batch's admissions (on replay the batch's tombstones are
-              // already stored — same set, same view, bit-identical).
-              // Takedown-free stores (no tombstone bucket in the
-              // manifest, no retraction in-flight) skip the mask — the
-              // r14 read path, restored (Retraction.hasTombs)
-              val tombs: Option[DataFrame] =
-                if (retract.isEmpty && !Retraction.hasTombs(m)) None
-                else {
-                  val stored = Retraction.storedTombs(spark, indexDir, m,
-                    emptyIdx(spark), "doc_id")
-                  Some(retract.fold(stored)(stored.unionByName(_).distinct()))
-                }
-              val prevLive = Retraction.maskIfAny(prev, tombs, "doc_id")
+      // The one batch protocol (BucketState.appendBatch): the lease pins
+      // every version dir the anti-join below scans against a concurrent
+      // fold's GC, the replay check makes a committed batch a no-op — its
+      // survivors were staged before the commit rename, but only if the
+      // recorded input fingerprint proves this really is the same batch —
+      // and the commit merges this batch's segment into the manifest AS IT
+      // IS at commit time, so a mid-ingest swap is preserved.
+      BucketState.appendBatch(spark, indexDir, "exact", batchId, batchFp) {
+        (m, versionDir) =>
+          // manifest-keyed session view: per drop the registry read is one
+          // batch-sized delta leaf, the touched prune an in-memory filter
+          // (see BucketState.readStoreView)
+          val prev = BucketState
+            .readStoreView(spark, indexDir, m, emptyIdx(spark))
+            .filter(col("p").isin(touched.toSeq: _*))
+          // surviving view: stored tombstones ∪ this batch's own retraction
+          // set mask the fingerprint registry BEFORE the batch's admissions
+          // (on replay the batch's tombstones are already stored — same
+          // set, same view, bit-identical); skipped on a takedown-free
+          // store (Retraction.tombsOf)
+          val prevLive = Retraction.maskIfAny(prev,
+            Retraction.tombsOf(spark, indexDir, m, emptyIdx(spark), "doc_id", retract),
+            "doc_id")
 
-              val survivors = batchFps
-                .join(prevLive.select(col("fp")), Seq("fp"), "left_anti")
-                .persist()
+          val survivors = batchFps
+            .join(prevLive.select(col("fp")), Seq("fp"), "left_anti")
+            .persist()
 
-              // ONE staging job: the batch's index SEGMENT (append-only
-              // LSM — the new version dir holds ONLY this batch's
-              // survivors; prior segments are never rewritten, so bytes
-              // written per batch are O(batch), not O(touched state);
-              // the first formulation rewrote prev ∪ survivors per
-              // touched bucket — quadratic total writes, measured by
-              // graft.IngestSoak) PLUS the batch's durable survivor
-              // ANSWER riding the same write under the reserved staging
-              // bucket, renamed out before the commit (claimAnswer —
-              // the r15 form ran these as two jobs per batch). Both
-              // branches read the SAME persisted frame; the manifest
-              // rename below stays the only commit point, so crash
-              // consistency is unchanged. Read amplification grows one
-              // segment per batch until a compaction folds them.
-              val segRows = survivors
-                .withColumn("p", bucketOf(col("fp"), nBuckets))
-                .unionByName(survivors
-                  .withColumn("p", lit(BucketState.AnswerBucket)))
-              // tombstone rows ride the same segment and the same
-              // commit: (fp = null, doc_id, p = TombBucket)
-              retract.fold(segRows)(r => segRows.unionByName(
-                  r.select(lit(null).cast(StringType).as("fp"),
-                    col("doc_id"), lit(Retraction.TombBucket).as("p"))))
-                .repartition(col("p"))
-                .write.mode("overwrite").partitionBy("p")
-                .parquet(s"$indexDir/v=$physicalVersion")
-              survivors.unpersist()
-              BucketState.claimAnswer(spark, s"$indexDir/v=$physicalVersion",
-                survivorsDir, survivorSchema)
-
-              BucketState.commitAppend(spark, indexDir, physicalVersion,
-                Some(newVersion -> batchFp), "exact", batchId)
-            } finally BucketState.releaseVersion(indexDir, physicalVersion)
-        }
-      } finally BucketState.releaseReads(lease)
-      // GC AFTER the lease release (reads are done): this batch's own
-      // lease would otherwise spare every dir a mid-ingest background
-      // fold superseded — and since no later GC is guaranteed to run,
-      // the folded dirs would leak on disk past the last batch.
-      // Conditional: an append-only ingest creates no garbage of its
-      // own, so the sweep runs only when a fold left lease-spared dirs
-      // behind (or on the process's first call — crash orphans).
-      BucketState.gcVersionsIfDirty(spark, indexDir)
+          // ONE staging job: the batch's index SEGMENT (append-only LSM —
+          // the new version dir holds ONLY this batch's survivors; prior
+          // segments are never rewritten, so bytes written per batch are
+          // O(batch), not O(touched state); the first formulation
+          // rewrote prev ∪ survivors per touched bucket — quadratic total
+          // writes, measured by graft.IngestSoak) PLUS the batch's durable
+          // survivor ANSWER riding the same write under the reserved
+          // staging bucket, renamed out before the commit (claimAnswer —
+          // the r15 form ran these as two jobs per batch). Both branches
+          // read the SAME persisted frame; the manifest rename stays the
+          // only commit point, so crash consistency is unchanged. Read
+          // amplification grows one segment per batch until a compaction
+          // folds them.
+          val segRows = survivors
+            .withColumn("p", bucketOf(col("fp"), nBuckets))
+            .unionByName(survivors
+              .withColumn("p", lit(BucketState.AnswerBucket)))
+          // tombstone rows ride the same segment and the same commit:
+          // (fp = null, doc_id, p = TombBucket)
+          retract.fold(segRows)(r => segRows.unionByName(
+              r.select(lit(null).cast(StringType).as("fp"),
+                col("doc_id"), lit(Retraction.TombBucket).as("p"))))
+            .repartition(col("p"))
+            .write.mode("overwrite").partitionBy("p")
+            .parquet(versionDir)
+          survivors.unpersist()
+          BucketState.claimAnswer(spark, versionDir, survivorsDir, survivorSchema)
+      }
     } finally { batchFps.unpersist(); retract.foreach(_.unpersist()) }
     spark.read.schema(survivorSchema).parquet(survivorsDir)
   }
@@ -202,15 +170,18 @@ object IncrementalDedup {
   /** `asyncCompaction = true` dispatches the due fold to a background
     * thread ([[BucketState.maybeCompactConcurrent]]) instead of running
     * it from the stream's thread — ingest commits keep landing O(batch)
-    * while the index folds, made safe by the locked leased-read commit
-    * protocol [[ingest]] now uses (the CDC LSM contract, carried over).
+    * while the index folds, made safe by the batch protocol [[ingest]]
+    * runs ([[BucketState.appendBatch]]: leased read, locked commit).
     * Default stays synchronous: deterministic segment counts for specs.
     */
   def runIngest(docs: DataFrame, indexDir: String, checkpointDir: String,
                 compactWhenSegments: Int = 0, nBuckets: Int = 64,
                 onBatch: (Long, Int) => Unit = (_, _) => (),
                 asyncCompaction: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    // a (re)started stream sweeps once: a crashed writer may have left
+    // staged dirs this process never saw
+    BucketState.markGcDirty(indexDir)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -225,6 +196,7 @@ object IncrementalDedup {
         ()
       }
       .start()
+  }
 
   /** The full deduped corpus registry: every admitted (fp, doc_id),
     * resolved through the committed manifest, minus stored takedowns.
@@ -244,11 +216,9 @@ object IncrementalDedup {
         emptyIdx(spark))
       // data rows (fp non-null — tombstones carry a null fp) minus every
       // stored tombstone: the surviving registry (mask skipped entirely
-      // on a takedown-free store — Retraction.hasTombs)
+      // on a takedown-free store — Retraction.tombsOf)
       Retraction.maskIfAny(all.filter(col("fp").isNotNull),
-          if (Retraction.hasTombs(m))
-            Some(Retraction.storedTombs(spark, indexDir, m, emptyIdx(spark), "doc_id"))
-          else None, "doc_id")
+          Retraction.tombsOf(spark, indexDir, m, emptyIdx(spark), "doc_id"), "doc_id")
         .select(col("fp"), col("doc_id"))
         .localCheckpoint(eager = true)
     } finally BucketState.releaseReads(lease)

@@ -242,8 +242,7 @@ object IncrementalKeepBest {
     // every stage is a Trace span — the per-drop cost must be
     // attributable per stage, not guessed (the pipeline soak quantifies
     // the total, the spans name it)
-    val newVersion = batchId + 1
-    val membersDir = s"$indexDir/members/$newVersion"
+    val membersDir = s"$indexDir/members/${batchId + 1}"
     val clean = docs
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
@@ -280,479 +279,463 @@ object IncrementalKeepBest {
           retract.map(BucketState.inputFingerprint))
         (fp, Await.result(touchedF, Duration.Inf))
       }
-      val (m, lease) = BucketState.readManifestLeased(spark, indexDir)
-      try {
-        BucketState.checkOrStampLayout(spark, indexDir, m,
-          if (overlay) "keepbest-overlay-v1" else "keepbest-v2")
-        // surviving-view mask — stored tombstones ∪ this batch's own set
-        // (identical on first run and replay; see IncrementalNearDup);
-        // None on a takedown-free store (mask skipped — Retraction.hasTombs)
-        val tombs: Option[DataFrame] =
-          if (retract.isEmpty && !Retraction.hasTombs(m)) None
-          else {
-            val stored = Retraction.storedTombs(spark, indexDir, m,
-              emptyIdx(spark), "doc_id")
-            Some(retract.fold(stored)(stored.unionByName(_).distinct()))
-          }
-        BucketState.checkBatch(m, batchId, batchFp) match {
-          case BucketState.AlreadyCommitted => ()
-          case BucketState.Proceed(proposed) =>
-            val physicalVersion = BucketState.reserveVersion(indexDir, proposed)
-            val sc = spark.sparkContext
-            // everything persisted/checkpointed from here to the segment
-            // write is batch-local scratch — released as one tracked diff
-            // after the writes land (nothing in this store's protocol
-            // persists RDDs concurrently: compactConcurrent is a pure
-            // read→write and the single-writer contract excludes other
-            // ingests, so the diff captures only this thread's blocks)
-            val before = sc.getPersistentRDDs.keySet.toSet
-            try {
-              // all stored reads in this ingest go through the manifest-
-              // keyed session view (BucketState.readStoreView): per drop
-              // the parquet cost is one batch-sized delta leaf and every
-              // bucket prune an in-memory filter; this store's tracked-
-              // diff scratch sweeps subtract viewRddIds so the view's
-              // blocks survive them
-              val view = BucketState.readStoreView(spark, indexDir, m,
-                emptyIdx(spark))
-              def readKind(buckets: Set[Long], kind: Long): DataFrame =
-                view.filter(col("p").isin(buckets.toSeq: _*))
-                  .filter(col("band") === kind)
+      // the one batch protocol (BucketState.appendBatch — see
+      // IncrementalDedup.ingest) with this store's layout stamp
+      BucketState.appendBatch(spark, indexDir, "kb", batchId, batchFp,
+          Some(if (overlay) "keepbest-overlay-v1" else "keepbest-v2")) {
+        (m, versionDir) =>
+          // surviving-view mask — stored tombstones ∪ this batch's own set
+          // (identical on first run and replay; see IncrementalNearDup);
+          // None on a takedown-free store (Retraction.tombsOf)
+          val tombs = Retraction.tombsOf(spark, indexDir, m, emptyIdx(spark),
+            "doc_id", retract)
+          val sc = spark.sparkContext
+          // everything persisted/checkpointed from here to the segment
+          // write is batch-local scratch — released as one tracked diff
+          // after the writes land (nothing in this store's protocol
+          // persists RDDs concurrently: compactConcurrent is a pure
+          // read→write and the single-writer contract excludes other
+          // ingests, so the diff captures only this thread's blocks)
+          val before = sc.getPersistentRDDs.keySet.toSet
+          // all stored reads in this ingest go through the manifest-
+          // keyed session view (BucketState.readStoreView): per drop
+          // the parquet cost is one batch-sized delta leaf and every
+          // bucket prune an in-memory filter; this store's tracked-
+          // diff scratch sweeps subtract viewRddIds so the view's
+          // blocks survive them
+          val view = BucketState.readStoreView(spark, indexDir, m,
+            emptyIdx(spark))
+          def readKind(buckets: Set[Long], kind: Long): DataFrame =
+            view.filter(col("p").isin(buckets.toSeq: _*))
+              .filter(col("band") === kind)
 
-              // ---- edge discovery -----------------------------------
-              // overlay: edges arrive verified from the banded index;
-              // full mode discovers them from this store's own band/sig
-              // rows. Either way, downstream consumes (edgesSeen
-              // (doc_id, seen_id), edgesBatch (doc_a, doc_b)).
-              var scratchToRelease: List[DataFrame] = Nil
-              var ownEdges = false
-              val (edgesSeen, edgesBatch, memberBuckets) = edgesIn match {
-                case Some((es, eb)) =>
-                  val mb = Trace.span("kb", "member_probe", batchId)(es
-                    .select(kindBucketOf(-2L, col("seen_id"), nBuckets).as("p"))
+          // ---- edge discovery -----------------------------------
+          // overlay: edges arrive verified from the banded index;
+          // full mode discovers them from this store's own band/sig
+          // rows. Either way, downstream consumes (edgesSeen
+          // (doc_id, seen_id), edgesBatch (doc_a, doc_b)).
+          var scratchToRelease: List[DataFrame] = Nil
+          var ownEdges = false
+          val (edgesSeen, edgesBatch, memberBuckets) = edgesIn match {
+            case Some((es, eb)) =>
+              val mb = Trace.span("kb", "member_probe", batchId)(es
+                .select(kindBucketOf(-2L, col("seen_id"), nBuckets).as("p"))
+                .distinct().collect().map(_.getLong(0)).toSet)
+              (es, eb, mb)
+            case None =>
+              val Ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+              val bands = bandsOpt.get
+              // persisted: consumed twice (withPred's count + the
+              // candidate join); released with the batch scratch.
+              // Tombstone-masked: discovery runs against the
+              // surviving index (sig/member reads need no mask of
+              // their own — they only join on seen_ids drawn from
+              // this masked frame)
+              // guard input: UNRESTRICTED touched-bucket stored rows
+              // (join-free two-stage aggregate — see IncrementalNearDup's
+              // verifiedEdges for the restructuring and the equality
+              // argument); the candidate join keeps the batch-touched
+              // group restriction (exact refinement, measured 2.2%
+              // stored-row selectivity at the 1M soak), left lazy —
+              // the join is its only consumer on the unsaturated path
+              val batchGroups = bands.select(col("band"), col("bh"))
+                .distinct()
+              val storedTouched = Retraction.maskIfAny(
+                  view.filter(col("p").isin(touched.toSeq: _*))
+                  .filter(col("band") >= 0)
+                  .select(col("band"), col("bh"), col("doc_id")),
+                  tombs, "doc_id")
+              val prevBands0 = storedTouched
+                .join(batchGroups, Seq("band", "bh"), "left_semi")
+              // prefix-capped discovery + identical-signature rescue —
+              // the exact declared semantics of
+              // [[IncrementalNearDup.bucketCap]]; this path keeps its
+              // own copy because the store layouts differ and it fuses
+              // sig+member probes into ONE collect (job count is the
+              // dominant per-drop cost at small drops)
+              val cap = IncrementalNearDup.bucketCap(spark)
+              // saturation short-circuit — the verifiedEdges guard's
+              // verbatim: no bucket's combined occupancy above the cap
+              // ⇒ every row eligible, none rescue-bound, and the rank
+              // window + count join + probe are skipped (capped ≡
+              // uncapped below saturation is the spec'd identity).
+              // The SAME pass collects the sig+member probe buckets
+              // (the r14 standalone cand_probe collect, folded — the
+              // verifiedEdges argument verbatim): candidate seen_ids
+              // are stored docs in batch-touched (band,bh) groups,
+              // and a RESCUE partner shares every band group with its
+              // saturated batch doc (identical full signature ⇒
+              // identical band hashes), so its buckets are covered
+              // too; probing a superset is sound — both downstream
+              // reads re-join on seen_id. The probe set rides as a
+              // BITMASK (bit_or at both levels — O(1) aggregate
+              // state; see the IncrementalNearDup guard for why
+              // per-group collection dies at the decade), capping
+              // this fused form at 64 buckets — wider stores keep
+              // the standalone collect.
+              val fusedProbe = nBuckets <= 64
+              val storedRows = storedTouched.select(col("band"), col("bh"),
+                (call_function("shiftleft", lit(1L),
+                   kindBucketOf(-1L, col("doc_id"), nBuckets).cast("int"))
+                  .bitwiseOR(call_function("shiftleft", lit(1L),
+                    kindBucketOf(-2L, col("doc_id"), nBuckets).cast("int"))))
+                  .as("m"))
+              // when-guarded max/mask restrict to batch-touched groups
+              // (c > stored ⟺ some batch row in the group) — identical
+              // to the r17 semi-join-restricted aggregate, two stages
+              val guardRow = Trace.span("kb", "occupancy_guard", batchId,
+                  IncrementalNearDup.occupancyFields(cap))(storedRows
+                .unionByName(bands.select(col("band"), col("bh"),
+                  lit(null).cast("long").as("m")))
+                .groupBy(col("band"), col("bh"))
+                .agg(count(lit(1)).as("c"), count(col("m")).as("stored"),
+                  bit_or(col("m")).as("mm"))
+                .agg(max(when(col("c") > col("stored"), col("c"))).as("mx"),
+                  bit_or(when(col("c") > col("stored"), col("mm")))
+                    .as("mask"))
+                .collect()(0))
+              val maxOcc = guardRow
+              lazy val maskBuckets: Set[Long] =
+                if (guardRow.isNullAt(1)) Set.empty
+                else {
+                  val mask = guardRow.getLong(1)
+                  (0 until 64).collect {
+                    case b if (mask & (1L << b)) != 0 => b.toLong
+                  }.toSet
+                }
+              val canSaturate = !maxOcc.isNullAt(0) && maxOcc.getLong(0) > cap
+              val prevBands =
+                if (canSaturate) {
+                  val p = prevBands0.persist(Ser); scratchToRelease ::= p; p
+                } else prevBands0
+              val rankedOpt =
+                if (canSaturate) {
+                  val r = IncrementalNearDup.withPred(bands, prevBands)
+                    .persist(Ser)
+                  scratchToRelease ::= r
+                  Some(r)
+                } else None
+              val elig = rankedOpt.map(_.filter(col("pred") <= cap))
+                .getOrElse(bands.select(col("band"), col("bh"), col("doc_id")))
+              // NARROW candidate pairs — sigs re-joined only inside
+              // the verify stage; see IncrementalNearDup.verifiedEdges
+              // for the measured sf100 disk-death the wide form caused
+              // fused path: the es checkpoint is the frame's only
+              // consumer, no persist; the >64-bucket fallback probes
+              // it too, so it persists with the batch scratch
+              val cand0 = elig.as("b").join(prevBands.as("i"),
+                  col("b.band") === col("i.band") && col("b.bh") === col("i.bh") &&
+                    col("i.doc_id") < col("b.doc_id"))
+                .select(col("b.doc_id").as("doc_id"),
+                  col("i.doc_id").as("seen_id"))
+                .distinct()
+              val cand =
+                if (fusedProbe) cand0
+                else { val c = cand0.persist(Ser); scratchToRelease ::= c; c }
+              val batchSigs = bands.filter(col("band") === 0L)
+                .select(col("doc_id"), col("sig"))
+              // rescue edges for saturated arrivals — zero probe jobs
+              // when the occupancy guard ruled saturation out (every
+              // driver scale), one cheap probe otherwise
+              val anySaturated = rankedOpt.exists(r =>
+                Trace.span("kb", "saturation_probe", batchId)(
+                  !r.filter(col("pred") > cap).limit(1).isEmpty))
+              val (rescueSeen, rescueBatch) =
+                if (!anySaturated)
+                  (spark.range(0).select(col("id").as("doc_id"),
+                     col("id").as("seen_id")),
+                   spark.range(0).select(col("id").as("doc_a"),
+                     col("id").as("doc_b")))
+                else {
+                  val sigKeys = batchSigs.select(col("doc_id"),
+                    IncrementalNearDup.sigKey(col("sig")).as("sk"))
+                  val resc = rankedOpt.get.filter(col("pred") > cap)
+                    .select(col("doc_id")).distinct()
+                    .join(sigKeys, Seq("doc_id"))
+                    .persist(Ser)
+                  scratchToRelease ::= resc
+                  val skBuckets = Trace.span("kb", "rescue_probe", batchId)(resc
+                    .select(kindBucketOf(-4L, col("sk"), nBuckets).as("p"))
                     .distinct().collect().map(_.getLong(0)).toSet)
-                  (es, eb, mb)
-                case None =>
-                  val Ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-                  val bands = bandsOpt.get
-                  // persisted: consumed twice (withPred's count + the
-                  // candidate join); released with the batch scratch.
-                  // Tombstone-masked: discovery runs against the
-                  // surviving index (sig/member reads need no mask of
-                  // their own — they only join on seen_ids drawn from
-                  // this masked frame)
-                  // guard input: UNRESTRICTED touched-bucket stored rows
-                  // (join-free two-stage aggregate — see IncrementalNearDup's
-                  // verifiedEdges for the restructuring and the equality
-                  // argument); the candidate join keeps the batch-touched
-                  // group restriction (exact refinement, measured 2.2%
-                  // stored-row selectivity at the 1M soak), left lazy —
-                  // the join is its only consumer on the unsaturated path
-                  val batchGroups = bands.select(col("band"), col("bh"))
-                    .distinct()
-                  val storedTouched = Retraction.maskIfAny(
-                      view.filter(col("p").isin(touched.toSeq: _*))
-                      .filter(col("band") >= 0)
-                      .select(col("band"), col("bh"), col("doc_id")),
-                      tombs, "doc_id")
-                  val prevBands0 = storedTouched
-                    .join(batchGroups, Seq("band", "bh"), "left_semi")
-                  // prefix-capped discovery + identical-signature rescue —
-                  // the exact declared semantics of
-                  // [[IncrementalNearDup.bucketCap]]; this path keeps its
-                  // own copy because the store layouts differ and it fuses
-                  // sig+member probes into ONE collect (job count is the
-                  // dominant per-drop cost at small drops)
-                  val cap = IncrementalNearDup.bucketCap(spark)
-                  // saturation short-circuit — the verifiedEdges guard's
-                  // verbatim: no bucket's combined occupancy above the cap
-                  // ⇒ every row eligible, none rescue-bound, and the rank
-                  // window + count join + probe are skipped (capped ≡
-                  // uncapped below saturation is the spec'd identity).
-                  // The SAME pass collects the sig+member probe buckets
-                  // (the r14 standalone cand_probe collect, folded — the
-                  // verifiedEdges argument verbatim): candidate seen_ids
-                  // are stored docs in batch-touched (band,bh) groups,
-                  // and a RESCUE partner shares every band group with its
-                  // saturated batch doc (identical full signature ⇒
-                  // identical band hashes), so its buckets are covered
-                  // too; probing a superset is sound — both downstream
-                  // reads re-join on seen_id. The probe set rides as a
-                  // BITMASK (bit_or at both levels — O(1) aggregate
-                  // state; see the IncrementalNearDup guard for why
-                  // per-group collection dies at the decade), capping
-                  // this fused form at 64 buckets — wider stores keep
-                  // the standalone collect.
-                  val fusedProbe = nBuckets <= 64
-                  val storedRows = storedTouched.select(col("band"), col("bh"),
-                    (call_function("shiftleft", lit(1L),
-                       kindBucketOf(-1L, col("doc_id"), nBuckets).cast("int"))
-                      .bitwiseOR(call_function("shiftleft", lit(1L),
-                        kindBucketOf(-2L, col("doc_id"), nBuckets).cast("int"))))
-                      .as("m"))
-                  // when-guarded max/mask restrict to batch-touched groups
-                  // (c > stored ⟺ some batch row in the group) — identical
-                  // to the r17 semi-join-restricted aggregate, two stages
-                  val guardRow = Trace.span("kb", "occupancy_guard", batchId,
-                      IncrementalNearDup.occupancyFields(cap))(storedRows
-                    .unionByName(bands.select(col("band"), col("bh"),
-                      lit(null).cast("long").as("m")))
-                    .groupBy(col("band"), col("bh"))
-                    .agg(count(lit(1)).as("c"), count(col("m")).as("stored"),
-                      bit_or(col("m")).as("mm"))
-                    .agg(max(when(col("c") > col("stored"), col("c"))).as("mx"),
-                      bit_or(when(col("c") > col("stored"), col("mm")))
-                        .as("mask"))
-                    .collect()(0))
-                  val maxOcc = guardRow
-                  lazy val maskBuckets: Set[Long] =
-                    if (guardRow.isNullAt(1)) Set.empty
-                    else {
-                      val mask = guardRow.getLong(1)
-                      (0 until 64).collect {
-                        case b if (mask & (1L << b)) != 0 => b.toLong
-                      }.toSet
-                    }
-                  val canSaturate = !maxOcc.isNullAt(0) && maxOcc.getLong(0) > cap
-                  val prevBands =
-                    if (canSaturate) {
-                      val p = prevBands0.persist(Ser); scratchToRelease ::= p; p
-                    } else prevBands0
-                  val rankedOpt =
-                    if (canSaturate) {
-                      val r = IncrementalNearDup.withPred(bands, prevBands)
-                        .persist(Ser)
-                      scratchToRelease ::= r
-                      Some(r)
-                    } else None
-                  val elig = rankedOpt.map(_.filter(col("pred") <= cap))
-                    .getOrElse(bands.select(col("band"), col("bh"), col("doc_id")))
-                  // NARROW candidate pairs — sigs re-joined only inside
-                  // the verify stage; see IncrementalNearDup.verifiedEdges
-                  // for the measured sf100 disk-death the wide form caused
-                  // fused path: the es checkpoint is the frame's only
-                  // consumer, no persist; the >64-bucket fallback probes
-                  // it too, so it persists with the batch scratch
-                  val cand0 = elig.as("b").join(prevBands.as("i"),
-                      col("b.band") === col("i.band") && col("b.bh") === col("i.bh") &&
-                        col("i.doc_id") < col("b.doc_id"))
-                    .select(col("b.doc_id").as("doc_id"),
-                      col("i.doc_id").as("seen_id"))
-                    .distinct()
-                  val cand =
-                    if (fusedProbe) cand0
-                    else { val c = cand0.persist(Ser); scratchToRelease ::= c; c }
-                  val batchSigs = bands.filter(col("band") === 0L)
-                    .select(col("doc_id"), col("sig"))
-                  // rescue edges for saturated arrivals — zero probe jobs
-                  // when the occupancy guard ruled saturation out (every
-                  // driver scale), one cheap probe otherwise
-                  val anySaturated = rankedOpt.exists(r =>
-                    Trace.span("kb", "saturation_probe", batchId)(
-                      !r.filter(col("pred") > cap).limit(1).isEmpty))
-                  val (rescueSeen, rescueBatch) =
-                    if (!anySaturated)
-                      (spark.range(0).select(col("id").as("doc_id"),
-                         col("id").as("seen_id")),
-                       spark.range(0).select(col("id").as("doc_a"),
-                         col("id").as("doc_b")))
-                    else {
-                      val sigKeys = batchSigs.select(col("doc_id"),
-                        IncrementalNearDup.sigKey(col("sig")).as("sk"))
-                      val resc = rankedOpt.get.filter(col("pred") > cap)
-                        .select(col("doc_id")).distinct()
-                        .join(sigKeys, Seq("doc_id"))
-                        .persist(Ser)
-                      scratchToRelease ::= resc
-                      val skBuckets = Trace.span("kb", "rescue_probe", batchId)(resc
-                        .select(kindBucketOf(-4L, col("sk"), nBuckets).as("p"))
-                        .distinct().collect().map(_.getLong(0)).toSet)
-                      // retracted recorded minima lose their anchor role
-                      // — the IncrementalNearDup takedown semantics
-                      val storedMin = Retraction.maskIfAny(
-                          readKind(skBuckets, -4L), tombs, "doc_id")
-                        .select(col("bh").as("sk"), col("doc_id").as("cand_id"))
-                      val seenMin = resc.join(storedMin, Seq("sk"))
-                        .filter(col("cand_id") < col("doc_id"))
-                        .groupBy(col("doc_id"))
-                        .agg(min(col("cand_id")).as("smin"))
-                      val batchMin = resc.join(
-                          sigKeys.select(col("sk"), col("doc_id").as("odoc")),
-                          Seq("sk"))
-                        .filter(col("odoc") < col("doc_id"))
-                        .groupBy(col("doc_id"))
-                        .agg(min(col("odoc")).as("bmin"))
-                      val both = seenMin
-                        .join(batchMin, Seq("doc_id"), "full_outer")
-                        .persist(Ser)
-                      scratchToRelease ::= both
-                      (both.filter(col("smin").isNotNull &&
-                           (col("bmin").isNull || col("smin") < col("bmin")))
-                         .select(col("doc_id"), col("smin").as("seen_id")),
-                       both.filter(col("bmin").isNotNull &&
-                           (col("smin").isNull || col("bmin") <= col("smin")))
-                         .select(col("doc_id").as("doc_a"),
-                           col("bmin").as("doc_b")))
-                    }
-                  // sig + member probe buckets: the guard aggregate's
-                  // bitmask (rescue partners' buckets included — see
-                  // that comment for why identical signatures put them
-                  // in batch-touched groups), or the r14 standalone
-                  // collect for >64-bucket stores
-                  val probeBuckets: Set[Long] =
-                    if (fusedProbe) maskBuckets
-                    else Trace.span("kb", "cand_probe", batchId)(cand.select(col("seen_id"))
-                      .unionByName(rescueSeen.select(col("seen_id")))
-                      .select(explode(array(
-                        kindBucketOf(-1L, col("seen_id"), nBuckets),
-                        kindBucketOf(-2L, col("seen_id"), nBuckets))).as("p"))
-                      .distinct().collect().map(_.getLong(0)).toSet)
-                  val seenSigs = readKind(probeBuckets, -1L)
-                    .select(col("doc_id").as("seen_id"), col("sig").as("seen_sig"))
-                  // ONE tagged frame, ONE checkpoint action — the r14 nd
-                  // fusion mirrored (the split form ran the seen-side
-                  // verify as its own job, then re-ran the batch-side
-                  // verify inside the subgraph checkpoint): both edge
-                  // kinds verify in one job, where AQE can reuse the
-                  // shared band/sig exchanges across the two subtrees.
-                  // Local checkpoint, not persist: consumed across the
-                  // scratch releases below (same cascade immunity as the
-                  // subgraph — see that comment). distinct() over
-                  // (kind, a, b) ≡ the per-kind distincts.
-                  val seenTagged = cand.join(seenSigs, Seq("seen_id"))
-                    .join(batchSigs, Seq("doc_id"))
-                    .filter(IncrementalNearDup.nearDup(col("sig"), col("seen_sig")))
-                    .select(col("doc_id").as("a"), col("seen_id").as("b"))
-                    .unionByName(rescueSeen.select(col("doc_id").as("a"),
-                      col("seen_id").as("b")))
-                    .select(lit(0).as("kind"), col("a"), col("b"))
-                  val batchTagged = elig.as("x").join(
-                      bands.select(col("band"), col("bh"), col("doc_id")).as("y"),
-                      col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-                        col("y.doc_id") < col("x.doc_id"))
-                    .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-                    .distinct()
-                    .join(batchSigs.select(col("doc_id").as("doc_a"),
-                      col("sig").as("sig_a")), Seq("doc_a"))
-                    .join(batchSigs.select(col("doc_id").as("doc_b"),
-                      col("sig").as("sig_b")), Seq("doc_b"))
-                    .filter(IncrementalNearDup.nearDup(col("sig_a"), col("sig_b")))
-                    .select(col("doc_a").as("a"), col("doc_b").as("b"))
-                    .unionByName(rescueBatch.select(col("doc_a").as("a"),
-                      col("doc_b").as("b")))
-                    .select(lit(1).as("kind"), col("a"), col("b"))
-                  val fused = Trace.span("kb", "edges_ck", batchId)(seenTagged
-                    .unionByName(batchTagged).distinct().localCheckpoint(eager = true))
-                  ownEdges = true
-                  (fused.filter(col("kind") === 0)
-                     .select(col("a").as("doc_id"), col("b").as("seen_id")),
-                   fused.filter(col("kind") === 1)
-                     .select(col("a").as("doc_a"), col("b").as("doc_b")),
-                   probeBuckets)
-              }
-              try {
-                // ---- seen-side label resolution -----------------------
-                val seenLab = edgesSeen.join(
-                    readKind(memberBuckets, -2L)
-                      .select(col("doc_id").as("seen_id"), col("label")),
-                    Seq("seen_id"))
-                  .select(col("doc_id"), col("seen_id"), col("label"))
-                  .persist()
-                // the forwarding relation lives in ONE constant bucket
-                // (merge-bounded and tiny — see fwdRows below), so it is
-                // read ONCE per batch and the fixpoint loop joins against
-                // the persisted frame; the first formulation re-opened
-                // the scattered per-(version, bucket) files every round
-                // and measured 0.36 → 3.8 s/drop over 8 drops in the
-                // traced 200k pipeline soak
-                val fwdAll = readKind(Set(fwdBucket(nBuckets)), -3L)
-                  .select(col("doc_id").as("from"), col("label").as("to"))
-                  .persist()
-                // no merges recorded yet (the common early-corpus state) ⇒
-                // every label IS its root: skip the fixpoint loop's
-                // join/persist/probe jobs entirely
-                val rootMap = Trace.span("kb", "resolve", batchId)(
-                  if (fwdAll.isEmpty)
-                    seenLab.select(col("label").as("lbl")).distinct()
-                      .withColumn("root", col("lbl")).persist()
-                  else resolve(
-                    seenLab.select(col("label").as("lbl")).distinct(),
-                    _ => fwdAll))
-
-                // ---- batch-subgraph components ------------------------
-                // nodes: batch docs + the existing roots its edges reach;
-                // cost is edge-shaped (Dedup.clustersOf over this subgraph),
-                // the corpus is never touched. The subgraph frames MUST be
-                // materialized (eager localCheckpoint) before the loop:
-                // clustersOf re-reads its edge list every propagation
-                // round, and a lazy edge list re-runs the whole upstream
-                // (index bucket reads + sig fetch + est joins) per round —
-                // measured as per-drop growth in the 500k pipeline soak
-                // before this truncation.
-                val toRoot = seenLab
-                  .join(rootMap, seenLab("label") === rootMap("lbl"))
-                  .select(col("doc_id").as("doc_a"), col("root").as("doc_b"))
-                  .distinct()
-                // eager local checkpoint, deliberately NOT persist+count:
-                // the CC loop re-reads this frame every round, and a
-                // cached plan that still references this batch's scratch
-                // frames gets its buffers cleared by the CacheManager
-                // recache cascade when they unpersist — the persist form
-                // re-ran the whole upstream once per action (measured
-                // 7 → 66 s kb drops in the 200k soak). Truncated lineage
-                // is immune, and the capped subgraph (≤ ~80M edges at the
-                // 5M-doc rung) fits checkpoint blocks comfortably.
-                val pairs = Trace.span("kb", "subgraph_ck", batchId)(edgesBatch.unionByName(toRoot)
-                  .localCheckpoint(eager = true))
-                val universe = clean.select(col("doc_id"))
-                  .unionByName(pairs.select(col("doc_b").as("doc_id")))
-                  .distinct()
-                // Two-regime component pass. The batch subgraph is
-                // edge-bounded (near-dup relations of ONE drop), so for
-                // any realistic drop it fits the driver: a union-find
-                // over the collected edges replaces the distributed
-                // label-propagation loop's ~6-8 jobs with one bounded
-                // collect — the same bounded-collect class as the sig-
-                // bucket lists (measured: the loop dominated the per-
-                // ingest job count at small drops). Past the threshold
-                // (conf `spark.graft.keepbest.ufMaxEdges`) the exact
-                // same contract runs distributed via Dedup.clustersOf.
-                val ufMax = spark.conf
-                  .getOption("spark.graft.keepbest.ufMaxEdges")
-                  .map(_.toLong).getOrElse(2000000L)
-                val nEdges = pairs.count() // cached — metadata-cheap
-                val useUf = nEdges <= ufMax
-                val lab = Trace.span("kb", if (useUf) "cc_uf" else "cc_dist",
-                    batchId, (_: DataFrame) => Seq("edges" -> nEdges)) {
-                  val l = (if (useUf)
-                             unionFindLabels(spark, pairs, universe)
-                           else Dedup.clustersOf(spark, pairs, universe))
-                    .persist()
-                  l.count(); l
+                  // retracted recorded minima lose their anchor role
+                  // — the IncrementalNearDup takedown semantics
+                  val storedMin = Retraction.maskIfAny(
+                      readKind(skBuckets, -4L), tombs, "doc_id")
+                    .select(col("bh").as("sk"), col("doc_id").as("cand_id"))
+                  val seenMin = resc.join(storedMin, Seq("sk"))
+                    .filter(col("cand_id") < col("doc_id"))
+                    .groupBy(col("doc_id"))
+                    .agg(min(col("cand_id")).as("smin"))
+                  val batchMin = resc.join(
+                      sigKeys.select(col("sk"), col("doc_id").as("odoc")),
+                      Seq("sk"))
+                    .filter(col("odoc") < col("doc_id"))
+                    .groupBy(col("doc_id"))
+                    .agg(min(col("odoc")).as("bmin"))
+                  val both = seenMin
+                    .join(batchMin, Seq("doc_id"), "full_outer")
+                    .persist(Ser)
+                  scratchToRelease ::= both
+                  (both.filter(col("smin").isNotNull &&
+                       (col("bmin").isNull || col("smin") < col("bmin")))
+                     .select(col("doc_id"), col("smin").as("seen_id")),
+                   both.filter(col("bmin").isNotNull &&
+                       (col("smin").isNull || col("bmin") <= col("smin")))
+                     .select(col("doc_id").as("doc_a"),
+                       col("bmin").as("doc_b")))
                 }
+              // sig + member probe buckets: the guard aggregate's
+              // bitmask (rescue partners' buckets included — see
+              // that comment for why identical signatures put them
+              // in batch-touched groups), or the r14 standalone
+              // collect for >64-bucket stores
+              val probeBuckets: Set[Long] =
+                if (fusedProbe) maskBuckets
+                else Trace.span("kb", "cand_probe", batchId)(cand.select(col("seen_id"))
+                  .unionByName(rescueSeen.select(col("seen_id")))
+                  .select(explode(array(
+                    kindBucketOf(-1L, col("seen_id"), nBuckets),
+                    kindBucketOf(-2L, col("seen_id"), nBuckets))).as("p"))
+                  .distinct().collect().map(_.getLong(0)).toSet)
+              val seenSigs = readKind(probeBuckets, -1L)
+                .select(col("doc_id").as("seen_id"), col("sig").as("seen_sig"))
+              // ONE tagged frame, ONE checkpoint action — the r14 nd
+              // fusion mirrored (the split form ran the seen-side
+              // verify as its own job, then re-ran the batch-side
+              // verify inside the subgraph checkpoint): both edge
+              // kinds verify in one job, where AQE can reuse the
+              // shared band/sig exchanges across the two subtrees.
+              // Local checkpoint, not persist: consumed across the
+              // scratch releases below (same cascade immunity as the
+              // subgraph — see that comment). distinct() over
+              // (kind, a, b) ≡ the per-kind distincts.
+              val seenTagged = cand.join(seenSigs, Seq("seen_id"))
+                .join(batchSigs, Seq("doc_id"))
+                .filter(IncrementalNearDup.nearDup(col("sig"), col("seen_sig")))
+                .select(col("doc_id").as("a"), col("seen_id").as("b"))
+                .unionByName(rescueSeen.select(col("doc_id").as("a"),
+                  col("seen_id").as("b")))
+                .select(lit(0).as("kind"), col("a"), col("b"))
+              val batchTagged = elig.as("x").join(
+                  bands.select(col("band"), col("bh"), col("doc_id")).as("y"),
+                  col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
+                    col("y.doc_id") < col("x.doc_id"))
+                .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
+                .distinct()
+                .join(batchSigs.select(col("doc_id").as("doc_a"),
+                  col("sig").as("sig_a")), Seq("doc_a"))
+                .join(batchSigs.select(col("doc_id").as("doc_b"),
+                  col("sig").as("sig_b")), Seq("doc_b"))
+                .filter(IncrementalNearDup.nearDup(col("sig_a"), col("sig_b")))
+                .select(col("doc_a").as("a"), col("doc_b").as("b"))
+                .unionByName(rescueBatch.select(col("doc_a").as("a"),
+                  col("doc_b").as("b")))
+                .select(lit(1).as("kind"), col("a"), col("b"))
+              val fused = Trace.span("kb", "edges_ck", batchId)(seenTagged
+                .unionByName(batchTagged).distinct().localCheckpoint(eager = true))
+              ownEdges = true
+              (fused.filter(col("kind") === 0)
+                 .select(col("a").as("doc_id"), col("b").as("seen_id")),
+               fused.filter(col("kind") === 1)
+                 .select(col("a").as("doc_a"), col("b").as("doc_b")),
+               probeBuckets)
+          }
+          try {
+            // ---- seen-side label resolution -----------------------
+            val seenLab = edgesSeen.join(
+                readKind(memberBuckets, -2L)
+                  .select(col("doc_id").as("seen_id"), col("label")),
+                Seq("seen_id"))
+              .select(col("doc_id"), col("seen_id"), col("label"))
+              .persist()
+            // the forwarding relation lives in ONE constant bucket
+            // (merge-bounded and tiny — see fwdRows below), so it is
+            // read ONCE per batch and the fixpoint loop joins against
+            // the persisted frame; the first formulation re-opened
+            // the scattered per-(version, bucket) files every round
+            // and measured 0.36 → 3.8 s/drop over 8 drops in the
+            // traced 200k pipeline soak
+            val fwdAll = readKind(Set(fwdBucket(nBuckets)), -3L)
+              .select(col("doc_id").as("from"), col("label").as("to"))
+              .persist()
+            // no merges recorded yet (the common early-corpus state) ⇒
+            // every label IS its root: skip the fixpoint loop's
+            // join/persist/probe jobs entirely
+            val rootMap = Trace.span("kb", "resolve", batchId)(
+              if (fwdAll.isEmpty)
+                seenLab.select(col("label").as("lbl")).distinct()
+                  .withColumn("root", col("lbl")).persist()
+              else resolve(
+                seenLab.select(col("label").as("lbl")).distinct(),
+                _ => fwdAll))
 
-                // ---- new forwarding rows ------------------------------
-                // (a) real merges: an existing root whose component gained a
-                // smaller root; (b) path compression: every label we had to
-                // chase now points straight at its final root
-                val mergeFwd = lab
-                  .join(toRoot.select(col("doc_b").as("doc_id")).distinct(),
-                    Seq("doc_id"))
-                  .filter(col("cluster") =!= col("doc_id"))
-                  .select(col("doc_id").as("from"), col("cluster").as("to"))
-                val compressFwd = rootMap
-                  .join(lab, rootMap("root") === lab("doc_id"))
-                  .filter(col("lbl") =!= col("cluster"))
-                  .select(col("lbl").as("from"), col("cluster").as("to"))
-                val fwdNew = mergeFwd.unionByName(compressFwd).distinct()
+            // ---- batch-subgraph components ------------------------
+            // nodes: batch docs + the existing roots its edges reach;
+            // cost is edge-shaped (Dedup.clustersOf over this subgraph),
+            // the corpus is never touched. The subgraph frames MUST be
+            // materialized (eager localCheckpoint) before the loop:
+            // clustersOf re-reads its edge list every propagation
+            // round, and a lazy edge list re-runs the whole upstream
+            // (index bucket reads + sig fetch + est joins) per round —
+            // measured as per-drop growth in the 500k pipeline soak
+            // before this truncation.
+            val toRoot = seenLab
+              .join(rootMap, seenLab("label") === rootMap("lbl"))
+              .select(col("doc_id").as("doc_a"), col("root").as("doc_b"))
+              .distinct()
+            // eager local checkpoint, deliberately NOT persist+count:
+            // the CC loop re-reads this frame every round, and a
+            // cached plan that still references this batch's scratch
+            // frames gets its buffers cleared by the CacheManager
+            // recache cascade when they unpersist — the persist form
+            // re-ran the whole upstream once per action (measured
+            // 7 → 66 s kb drops in the 200k soak). Truncated lineage
+            // is immune, and the capped subgraph (≤ ~80M edges at the
+            // 5M-doc rung) fits checkpoint blocks comfortably.
+            val pairs = Trace.span("kb", "subgraph_ck", batchId)(edgesBatch.unionByName(toRoot)
+              .localCheckpoint(eager = true))
+            val universe = clean.select(col("doc_id"))
+              .unionByName(pairs.select(col("doc_b").as("doc_id")))
+              .distinct()
+            // Two-regime component pass. The batch subgraph is
+            // edge-bounded (near-dup relations of ONE drop), so for
+            // any realistic drop it fits the driver: a union-find
+            // over the collected edges replaces the distributed
+            // label-propagation loop's ~6-8 jobs with one bounded
+            // collect — the same bounded-collect class as the sig-
+            // bucket lists (measured: the loop dominated the per-
+            // ingest job count at small drops). Past the threshold
+            // (conf `spark.graft.keepbest.ufMaxEdges`) the exact
+            // same contract runs distributed via Dedup.clustersOf.
+            val ufMax = spark.conf
+              .getOption("spark.graft.keepbest.ufMaxEdges")
+              .map(_.toLong).getOrElse(2000000L)
+            val nEdges = pairs.count() // cached — metadata-cheap
+            val useUf = nEdges <= ufMax
+            val lab = Trace.span("kb", if (useUf) "cc_uf" else "cc_dist",
+                batchId, (_: DataFrame) => Seq("edges" -> nEdges)) {
+              val l = (if (useUf)
+                         unionFindLabels(spark, pairs, universe)
+                       else Dedup.clustersOf(spark, pairs, universe))
+                .persist()
+              l.count(); l
+            }
 
-                // ---- member rows for the whole batch ------------------
-                // persisted for the duration of the segment write: the
-                // sub-plan feeds TWO union branches (the durable answer
-                // rows and the registry's band=-2 rows) of the single
-                // segment job, and only `lab` underneath it is pinned —
-                // the `scored` side is a re-read of the batch source, so
-                // without the persist a non-deterministic caller frame
-                // could commit an answer file that diverges from the
-                // registry rows in the same commit (the same hazard class
-                // the vec ingest's retraction-frame persist closes).
-                // Released by the tracked-diff sweep below.
-                val members = scored
-                  .join(lab.withColumnRenamed("doc_id", "ldoc"),
-                    col("doc_id") === col("ldoc"), "left")
-                  .select(col("doc_id"),
-                    coalesce(col("cluster"), col("doc_id")).as("label"),
-                    col("score"))
-                  .persist()
+            // ---- new forwarding rows ------------------------------
+            // (a) real merges: an existing root whose component gained a
+            // smaller root; (b) path compression: every label we had to
+            // chase now points straight at its final root
+            val mergeFwd = lab
+              .join(toRoot.select(col("doc_b").as("doc_id")).distinct(),
+                Seq("doc_id"))
+              .filter(col("cluster") =!= col("doc_id"))
+              .select(col("doc_id").as("from"), col("cluster").as("to"))
+            val compressFwd = rootMap
+              .join(lab, rootMap("root") === lab("doc_id"))
+              .filter(col("lbl") =!= col("cluster"))
+              .select(col("lbl").as("from"), col("cluster").as("to"))
+            val fwdNew = mergeFwd.unionByName(compressFwd).distinct()
 
-                // the batch's durable member ANSWER rides the segment
-                // write under the reserved staging bucket (one job where
-                // r15 ran two — members.write, then a re-read to build
-                // the member rows) and is renamed out before the one
-                // atomic commit: five row kinds in full mode, member +
-                // fwd + answer in overlay mode (the banded index already
-                // holds the band/sig state an overlay would merely
-                // duplicate). The members sub-plan evaluates once per
-                // union branch — `lab` is persisted, the score map is a
-                // cheap re-read of the batch source.
-                val nullSig = lit(null).cast(ArrayType(LongType, containsNull = false))
-                val answerRows = members
-                  .select(lit(-6L).as("band"), lit("").as("bh"),
-                    col("doc_id"), nullSig.as("sig"), col("label"),
-                    col("score"))
-                val memberRows = members
-                  .select(lit(-2L).as("band"), col("doc_id").cast("string").as("bh"),
-                    col("doc_id"), nullSig.as("sig"), col("label"), col("score"))
-                val fwdRows = fwdNew
-                  .select(lit(-3L).as("band"), lit("fwd").as("bh"),
-                    col("from").as("doc_id"), nullSig.as("sig"),
-                    col("to").as("label"), lit(null).cast("double").as("score"))
-                val segRows = bandsOpt match {
-                  case Some(bands) =>
-                    val bandKeys = bands.select(col("band"), col("bh"), col("doc_id"),
-                      nullSig.as("sig"), lit(null).cast("long").as("label"),
-                      lit(null).cast("double").as("score"))
-                    val sigRows = bands.filter(col("band") === 0L)
-                      .select(lit(-1L).as("band"), col("doc_id").cast("string").as("bh"),
-                        col("doc_id"), col("sig"), lit(null).cast("long").as("label"),
-                        lit(null).cast("double").as("score"))
-                    // sig-key rows — the identical-signature rescue's
-                    // lookup relation (one narrow row per distinct sig per
-                    // batch, min doc_id; see the IncrementalNearDup layout)
-                    val skRows = bands.filter(col("band") === 0L)
-                      .select(IncrementalNearDup.sigKey(col("sig")).as("bh"),
-                        col("doc_id"))
-                      .groupBy(col("bh")).agg(min(col("doc_id")).as("doc_id"))
-                      .select(lit(-4L).as("band"), col("bh"), col("doc_id"),
-                        nullSig.as("sig"), lit(null).cast("long").as("label"),
-                        lit(null).cast("double").as("score"))
-                    bandKeys.unionByName(sigRows).unionByName(skRows)
-                      .unionByName(memberRows).unionByName(fwdRows)
-                  case None => memberRows.unionByName(fwdRows)
-                }
-                // tombstone rows ride the same segment and commit:
-                // (band = -9, bh = "", doc_id, nulls, p = TombBucket)
-                val segAll = segRows.withColumn("p", bucketOf(nBuckets))
-                  .unionByName(answerRows
-                    .withColumn("p", lit(BucketState.AnswerBucket)))
-                val segWithTombs = retract.fold(segAll)(r =>
-                  segAll.unionByName(r.select(
-                    lit(-9L).as("band"), lit("").as("bh"), col("doc_id"),
+            // ---- member rows for the whole batch ------------------
+            // persisted for the duration of the segment write: the
+            // sub-plan feeds TWO union branches (the durable answer
+            // rows and the registry's band=-2 rows) of the single
+            // segment job, and only `lab` underneath it is pinned —
+            // the `scored` side is a re-read of the batch source, so
+            // without the persist a non-deterministic caller frame
+            // could commit an answer file that diverges from the
+            // registry rows in the same commit (the same hazard class
+            // the vec ingest's retraction-frame persist closes).
+            // Released by the tracked-diff sweep below.
+            val members = scored
+              .join(lab.withColumnRenamed("doc_id", "ldoc"),
+                col("doc_id") === col("ldoc"), "left")
+              .select(col("doc_id"),
+                coalesce(col("cluster"), col("doc_id")).as("label"),
+                col("score"))
+              .persist()
+
+            // the batch's durable member ANSWER rides the segment
+            // write under the reserved staging bucket (one job where
+            // r15 ran two — members.write, then a re-read to build
+            // the member rows) and is renamed out before the one
+            // atomic commit: five row kinds in full mode, member +
+            // fwd + answer in overlay mode (the banded index already
+            // holds the band/sig state an overlay would merely
+            // duplicate). The members sub-plan evaluates once per
+            // union branch — `lab` is persisted, the score map is a
+            // cheap re-read of the batch source.
+            val nullSig = lit(null).cast(ArrayType(LongType, containsNull = false))
+            val answerRows = members
+              .select(lit(-6L).as("band"), lit("").as("bh"),
+                col("doc_id"), nullSig.as("sig"), col("label"),
+                col("score"))
+            val memberRows = members
+              .select(lit(-2L).as("band"), col("doc_id").cast("string").as("bh"),
+                col("doc_id"), nullSig.as("sig"), col("label"), col("score"))
+            val fwdRows = fwdNew
+              .select(lit(-3L).as("band"), lit("fwd").as("bh"),
+                col("from").as("doc_id"), nullSig.as("sig"),
+                col("to").as("label"), lit(null).cast("double").as("score"))
+            val segRows = bandsOpt match {
+              case Some(bands) =>
+                val bandKeys = bands.select(col("band"), col("bh"), col("doc_id"),
+                  nullSig.as("sig"), lit(null).cast("long").as("label"),
+                  lit(null).cast("double").as("score"))
+                val sigRows = bands.filter(col("band") === 0L)
+                  .select(lit(-1L).as("band"), col("doc_id").cast("string").as("bh"),
+                    col("doc_id"), col("sig"), lit(null).cast("long").as("label"),
+                    lit(null).cast("double").as("score"))
+                // sig-key rows — the identical-signature rescue's
+                // lookup relation (one narrow row per distinct sig per
+                // batch, min doc_id; see the IncrementalNearDup layout)
+                val skRows = bands.filter(col("band") === 0L)
+                  .select(IncrementalNearDup.sigKey(col("sig")).as("bh"),
+                    col("doc_id"))
+                  .groupBy(col("bh")).agg(min(col("doc_id")).as("doc_id"))
+                  .select(lit(-4L).as("band"), col("bh"), col("doc_id"),
                     nullSig.as("sig"), lit(null).cast("long").as("label"),
-                    lit(null).cast("double").as("score"),
-                    lit(Retraction.TombBucket).as("p"))))
-                Trace.span("kb", "segment_write", batchId)(
-                  segWithTombs
-                    .repartition(col("p"))
-                    .write.mode("overwrite").partitionBy("p")
-                    .parquet(s"$indexDir/v=$physicalVersion"))
-                BucketState.claimAnswer(spark,
-                  s"$indexDir/v=$physicalVersion", membersDir, memberSchema)
+                    lit(null).cast("double").as("score"))
+                bandKeys.unionByName(sigRows).unionByName(skRows)
+                  .unionByName(memberRows).unionByName(fwdRows)
+              case None => memberRows.unionByName(fwdRows)
+            }
+            // tombstone rows ride the same segment and commit:
+            // (band = -9, bh = "", doc_id, nulls, p = TombBucket)
+            val segAll = segRows.withColumn("p", bucketOf(nBuckets))
+              .unionByName(answerRows
+                .withColumn("p", lit(BucketState.AnswerBucket)))
+            val segWithTombs = retract.fold(segAll)(r =>
+              segAll.unionByName(r.select(
+                lit(-9L).as("band"), lit("").as("bh"), col("doc_id"),
+                nullSig.as("sig"), lit(null).cast("long").as("label"),
+                lit(null).cast("double").as("score"),
+                lit(Retraction.TombBucket).as("p"))))
+            Trace.span("kb", "segment_write", batchId)(
+              segWithTombs
+                .repartition(col("p"))
+                .write.mode("overwrite").partitionBy("p")
+                .parquet(versionDir))
+            BucketState.claimAnswer(spark, versionDir, membersDir, memberSchema)
 
-                // release this batch's component-pass checkpoints (tracked
-                // diff — same exposure as clustersOf's own internal
-                // tracking: nothing in this store's protocol persists RDDs
-                // concurrently (compactConcurrent is a pure read→write and
-                // the single-writer contract excludes other ingests), so
-                // the diff captures only this thread's checkpoint blocks —
-                // MINUS the session view's leaves, whose blocks this
-                // ingest materialized inside the window but which outlive
-                // the batch by design (BucketState.viewRddIds)
-                lab.unpersist()
-                (sc.getPersistentRDDs.keySet.toSet -- before --
-                    BucketState.viewRddIds)
-                  .foreach(id => sc.getPersistentRDDs.get(id)
-                    .foreach(_.unpersist(blocking = false)))
-                seenLab.unpersist()
-                if (ownEdges) edgesSeen.unpersist()
-              } finally scratchToRelease.foreach(_.unpersist())
-              BucketState.commitAppend(spark, indexDir, physicalVersion,
-                Some(newVersion -> batchFp), "kb", batchId)
-            } finally BucketState.releaseVersion(indexDir, physicalVersion)
-        }
-      } finally BucketState.releaseReads(lease)
-      // conditional sweep — see IncrementalDedup.ingest's GC comment
-      Trace.span("kb", "gc", batchId)(BucketState.gcVersionsIfDirty(spark, indexDir))
+            // release this batch's component-pass checkpoints (tracked
+            // diff — same exposure as clustersOf's own internal
+            // tracking: nothing in this store's protocol persists RDDs
+            // concurrently (compactConcurrent is a pure read→write and
+            // the single-writer contract excludes other ingests), so
+            // the diff captures only this thread's checkpoint blocks —
+            // MINUS the session view's leaves, whose blocks this
+            // ingest materialized inside the window but which outlive
+            // the batch by design (BucketState.viewRddIds)
+            lab.unpersist()
+            (sc.getPersistentRDDs.keySet.toSet -- before --
+                BucketState.viewRddIds)
+              .foreach(id => sc.getPersistentRDDs.get(id)
+                .foreach(_.unpersist(blocking = false)))
+            seenLab.unpersist()
+            if (ownEdges) edgesSeen.unpersist()
+          } finally scratchToRelease.foreach(_.unpersist())
+      }
     } finally {
       if (ownBands) bandsOpt.foreach(_.unpersist())
       retract.foreach(_.unpersist())
@@ -784,12 +767,10 @@ object IncrementalKeepBest {
       emptyIdx(spark)).persist()
     // members minus stored takedowns: per cluster the best SURVIVING
     // member answers; forwarding rows stay (label graph, not members);
-    // mask skipped on a takedown-free store (Retraction.hasTombs)
+    // mask skipped on a takedown-free store (Retraction.tombsOf)
     val members = Retraction.maskIfAny(
         all.filter(col("band") === -2L),
-        if (Retraction.hasTombs(m))
-          Some(Retraction.storedTombs(spark, indexDir, m, emptyIdx(spark), "doc_id"))
-        else None, "doc_id")
+        Retraction.tombsOf(spark, indexDir, m, emptyIdx(spark), "doc_id"), "doc_id")
       .select(col("doc_id"), col("label"), col("score"))
     val fwdAll = all.filter(col("band") === -3L)
       .select(col("doc_id").as("from"), col("label").as("to"))

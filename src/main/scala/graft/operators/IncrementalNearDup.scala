@@ -679,8 +679,7 @@ object IncrementalNearDup {
                               retractIds: Option[DataFrame] = None,
                               prevBandsIn: Option[DataFrame] = None)
       : (DataFrame, Option[(DataFrame, DataFrame)]) = {
-    val newVersion = batchId + 1
-    val admittedDir = s"$indexDir/admitted/$newVersion"
+    val admittedDir = s"$indexDir/admitted/${batchId + 1}"
     val ownBands = bandsIn.isEmpty
     val bands = bandsIn.getOrElse(bandRowsOf(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
@@ -693,125 +692,100 @@ object IncrementalNearDup {
           bucketOf(nBuckets)))
       val batchFp = Retraction.mixFp(dataFp,
         retract.map(BucketState.inputFingerprint))
-      // Leased read + locked fresh-read commit: the concurrent-writer
-      // protocol that lets a background compactConcurrent fold this
-      // index while drops keep ingesting (see IncrementalDedup.ingest —
-      // identical argument: the lease pins the dirs the vsSeen join
-      // scans, the locked merge preserves a mid-ingest swap).
-      val (m, lease) = BucketState.readManifestLeased(spark, indexDir)
-      try {
-        // layout guard: a persisted older-layout index (v1: band rows
-        // carrying sig, no sig rows; v2: no sig-key rows, so the rescue
-        // would silently find no identical-signature partners) would
-        // read back incomplete and silently mis-admit — fail loudly
-        // instead (the docstring's no-cross-layout-durability promise,
-        // enforced).
-        BucketState.checkOrStampLayout(spark, indexDir, m, "neardup-v3")
-        // surviving-view mask: stored tombstones ∪ this batch's own
-        // retraction set — identical on first run (input supplies the
-        // not-yet-committed set) and replay (the set is stored); None
-        // on a takedown-free store (mask skipped — Retraction.hasTombs)
-        val tombs: Option[DataFrame] =
-          if (retract.isEmpty && !Retraction.hasTombs(m)) None
-          else {
-            val stored = Retraction.storedTombs(spark, indexDir, m,
-              emptyIdx(spark), "doc_id")
-            Some(retract.fold(stored)(stored.unionByName(_).distinct()))
-          }
-        BucketState.checkBatch(m, batchId, batchFp) match {
-          case BucketState.AlreadyCommitted =>
-            // a replayed batch still owes its consumer the edges (the
-            // overlay index may NOT have committed yet) — recompute them
-            // under this lease with the batch's own committed rows
-            // excluded (replayFloor), so the recomputed edges are
-            // bit-identical to the first run's; see verifiedEdges
-            if (captureEdges) {
-              val minRow = bands.agg(min(col("doc_id"))).collect()(0)
-              val floor =
-                if (minRow.isNullAt(0)) None else Some(minRow.getLong(0))
-              edges = Some(verifiedEdges(spark, indexDir, m, bands, touched,
-                nBuckets, tombs, batchId, replayFloor = floor,
-                prevBandsIn = prevBandsIn))
-            }
-          case BucketState.Proceed(proposed) =>
-            val physicalVersion = BucketState.reserveVersion(indexDir, proposed)
-            try {
-              // one candidate-discovery + est-verify pass; both the
-              // admission answer and the captured edge feed derive from it
-              val (pairsSeen, pairsBatch) =
-                verifiedEdges(spark, indexDir, m, bands, touched, nBuckets,
-                  tombs, batchId, prevBandsIn = prevBandsIn)
-              if (captureEdges) edges = Some((pairsSeen, pairsBatch))
-              // rejected: near-dup of a SMALLER seen doc, or of a smaller
-              // doc in the SAME batch (regardless of that doc's own fate —
-              // the contract compares against seen, not against admitted).
-              // The universe comes off the band-0 filter (exactly one row
-              // per signed doc — no distinct exchange), and an anti-join's
-              // right side needs no dedup.
-              val admitted = bands.filter(col("band") === 0L)
-                .select(col("doc_id"))
-                .join(pairsSeen.select(col("doc_id"))
-                    .unionByName(pairsBatch.select(col("doc_a").as("doc_id"))),
-                  Seq("doc_id"), "left_anti")
+      // The one batch protocol (BucketState.appendBatch — see
+      // IncrementalDedup.ingest): the lease pins the dirs the vsSeen join
+      // scans, the locked commit preserves a mid-ingest swap. The layout
+      // guard: a persisted older-layout index (v1: band rows carrying sig,
+      // no sig rows; v2: no sig-key rows, so the rescue would silently
+      // find no identical-signature partners) would read back incomplete
+      // and silently mis-admit — fail loudly instead (the docstring's
+      // no-cross-layout-durability promise, enforced). The surviving-view
+      // mask is stored tombstones ∪ this batch's own retraction set —
+      // identical on first run (input supplies the not-yet-committed set)
+      // and replay (the set is stored).
+      def tombs(m: BucketState.Manifest) =
+        Retraction.tombsOf(spark, indexDir, m, emptyIdx(spark), "doc_id", retract)
+      BucketState.appendBatch(spark, indexDir, "nd", batchId, batchFp,
+          Some("neardup-v3"))(
+        stage = (m, versionDir) => {
+          // one candidate-discovery + est-verify pass; both the
+          // admission answer and the captured edge feed derive from it
+          val (pairsSeen, pairsBatch) =
+            verifiedEdges(spark, indexDir, m, bands, touched, nBuckets,
+              tombs(m), batchId, prevBandsIn = prevBandsIn)
+          if (captureEdges) edges = Some((pairsSeen, pairsBatch))
+          // rejected: near-dup of a SMALLER seen doc, or of a smaller
+          // doc in the SAME batch (regardless of that doc's own fate —
+          // the contract compares against seen, not against admitted).
+          // The universe comes off the band-0 filter (exactly one row
+          // per signed doc — no distinct exchange), and an anti-join's
+          // right side needs no dedup.
+          val admitted = bands.filter(col("band") === 0L)
+            .select(col("doc_id"))
+            .join(pairsSeen.select(col("doc_id"))
+                .unionByName(pairsBatch.select(col("doc_a").as("doc_id"))),
+              Seq("doc_id"), "left_anti")
 
-              // the admitted ANSWER rides the segment write under the
-              // reserved staging bucket (one job where r15 ran two) and
-              // is renamed out before the one-rename commit — see
-              // BucketState.claimAnswer for the unchanged crash story
-              val nullSigA =
-                lit(null).cast(ArrayType(LongType, containsNull = false))
-              val answerRows = admitted.select(lit(-5L).as("band"),
-                lit("").as("bh"), col("doc_id"), nullSigA.as("sig"),
-                lit(BucketState.AnswerBucket).as("p"))
-              val bandKeys = bands.select(col("band"), col("bh"), col("doc_id"),
-                lit(null).cast(ArrayType(LongType, containsNull = false)).as("sig"))
-              // every doc with a signature has exactly one band-0 row
-              // (posexplode over sequence(0,7)), so sig rows derive from
-              // a narrow filter on the persisted bands — no extra shuffle
-              val sigRows = bands.filter(col("band") === 0L)
-                .select(lit(-1L).as("band"), col("doc_id").cast("string").as("bh"),
-                  col("doc_id"), col("sig"))
-              // sig-key rows (band = -4, bh = md5 of the full signature,
-              // doc_id = the batch's smallest doc with that signature) —
-              // the identical-signature rescue's lookup relation: one
-              // narrow row per distinct sig per batch; readers take the
-              // min over appended rows, so append-only stays correct and
-              // compaction needs no kind-specific merge
-              val skRows = bands.filter(col("band") === 0L)
-                .select(sigKey(col("sig")).as("bh"), col("doc_id"))
-                .groupBy(col("bh")).agg(min(col("doc_id")).as("doc_id"))
-                .select(lit(-4L).as("band"), col("bh"), col("doc_id"),
+          // the admitted ANSWER rides the segment write under the
+          // reserved staging bucket (one job where r15 ran two) and
+          // is renamed out before the one-rename commit — see
+          // BucketState.claimAnswer for the unchanged crash story
+          val nullSigA =
+            lit(null).cast(ArrayType(LongType, containsNull = false))
+          val answerRows = admitted.select(lit(-5L).as("band"),
+            lit("").as("bh"), col("doc_id"), nullSigA.as("sig"),
+            lit(BucketState.AnswerBucket).as("p"))
+          val bandKeys = bands.select(col("band"), col("bh"), col("doc_id"),
+            lit(null).cast(ArrayType(LongType, containsNull = false)).as("sig"))
+          // every doc with a signature has exactly one band-0 row
+          // (posexplode over sequence(0,7)), so sig rows derive from
+          // a narrow filter on the persisted bands — no extra shuffle
+          val sigRows = bands.filter(col("band") === 0L)
+            .select(lit(-1L).as("band"), col("doc_id").cast("string").as("bh"),
+              col("doc_id"), col("sig"))
+          // sig-key rows (band = -4, bh = md5 of the full signature,
+          // doc_id = the batch's smallest doc with that signature) —
+          // the identical-signature rescue's lookup relation: one
+          // narrow row per distinct sig per batch; readers take the
+          // min over appended rows, so append-only stays correct and
+          // compaction needs no kind-specific merge
+          val skRows = bands.filter(col("band") === 0L)
+            .select(sigKey(col("sig")).as("bh"), col("doc_id"))
+            .groupBy(col("bh")).agg(min(col("doc_id")).as("doc_id"))
+            .select(lit(-4L).as("band"), col("bh"), col("doc_id"),
+              lit(null).cast(ArrayType(LongType, containsNull = false))
+                .as("sig"))
+          // tombstone rows ride the same segment and the same commit:
+          // (band = -9, bh = "", doc_id, sig = null, p = TombBucket)
+          val dataRows = bandKeys.unionByName(sigRows).unionByName(skRows)
+            .withColumn("p", bucketOf(nBuckets))
+            .unionByName(answerRows)
+          Trace.span("nd", "segment_write", batchId)(
+            retract.fold(dataRows)(r => dataRows.unionByName(
+                r.select(lit(-9L).as("band"), lit("").as("bh"),
+                  col("doc_id"),
                   lit(null).cast(ArrayType(LongType, containsNull = false))
-                    .as("sig"))
-              // tombstone rows ride the same segment and the same commit:
-              // (band = -9, bh = "", doc_id, sig = null, p = TombBucket)
-              val dataRows = bandKeys.unionByName(sigRows).unionByName(skRows)
-                .withColumn("p", bucketOf(nBuckets))
-                .unionByName(answerRows)
-              Trace.span("nd", "segment_write", batchId)(
-                retract.fold(dataRows)(r => dataRows.unionByName(
-                    r.select(lit(-9L).as("band"), lit("").as("bh"),
-                      col("doc_id"),
-                      lit(null).cast(ArrayType(LongType, containsNull = false))
-                        .as("sig"),
-                      lit(Retraction.TombBucket).as("p"))))
-                  .repartition(col("p"))
-                  .write.mode("overwrite").partitionBy("p")
-                  .parquet(s"$indexDir/v=$physicalVersion"))
-              Trace.span("nd", "claim_answer", batchId)(
-                BucketState.claimAnswer(spark, s"$indexDir/v=$physicalVersion",
-                  admittedDir, admittedSchema))
-              BucketState.commitAppend(spark, indexDir, physicalVersion,
-                Some(newVersion -> batchFp), "nd", batchId)
-            } finally BucketState.releaseVersion(indexDir, physicalVersion)
-        }
-      } finally BucketState.releaseReads(lease)
-      // GC after the lease release — see IncrementalDedup.ingest: a GC
-      // under this batch's own lease would spare (and thus leak) every
-      // dir a mid-ingest background fold superseded. Conditional — runs
-      // only when a fold left lease-spared dirs (or on the process's
-      // first call, covering crash orphans).
-      Trace.span("nd", "gc", batchId)(BucketState.gcVersionsIfDirty(spark, indexDir))
+                    .as("sig"),
+                  lit(Retraction.TombBucket).as("p"))))
+              .repartition(col("p"))
+              .write.mode("overwrite").partitionBy("p")
+              .parquet(versionDir))
+          Trace.span("nd", "claim_answer", batchId)(
+            BucketState.claimAnswer(spark, versionDir,
+              admittedDir, admittedSchema))
+        },
+        // a replayed batch still owes its consumer the edges (the overlay
+        // index may NOT have committed yet) — recompute them under this
+        // lease with the batch's own committed rows excluded (replayFloor),
+        // so the recomputed edges are bit-identical to the first run's;
+        // see verifiedEdges
+        replay = m => if (captureEdges) {
+          val minRow = bands.agg(min(col("doc_id"))).collect()(0)
+          val floor = if (minRow.isNullAt(0)) None else Some(minRow.getLong(0))
+          edges = Some(verifiedEdges(spark, indexDir, m, bands, touched,
+            nBuckets, tombs(m), batchId, replayFloor = floor,
+            prevBandsIn = prevBandsIn))
+        })
     } finally {
       if (ownBands) bands.unpersist()
       retract.foreach(_.unpersist())
@@ -823,14 +797,15 @@ object IncrementalNearDup {
     * [[IncrementalDedup.runIngest]]: one [[ingest]] per micro-batch keyed
     * by the checkpoint's batchId, adaptive (`compactWhenSegments`)
     * folding, optionally dispatched to a background thread
-    * (`asyncCompaction` — safe by the locked leased-read protocol
-    * [[ingest]] uses).
+    * (`asyncCompaction` — safe by the batch protocol [[ingest]] runs,
+    * [[BucketState.appendBatch]]), one GC sweep at stream start.
     */
   def runIngest(docs: DataFrame, indexDir: String, checkpointDir: String,
                 compactWhenSegments: Int = 0, nBuckets: Int = 64,
                 onBatch: (Long, Int) => Unit = (_, _) => (),
                 asyncCompaction: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery =
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    BucketState.markGcDirty(indexDir)
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -846,6 +821,7 @@ object IncrementalNearDup {
         ()
       }
       .start()
+  }
 
   /** Every admitted doc_id across all committed ingest batches, minus
     * every stored takedown — the surviving curated corpus. Materialized
@@ -857,9 +833,7 @@ object IncrementalNearDup {
     val (m, lease) = BucketState.readManifestLeased(spark, indexDir)
     try Retraction.maskIfAny(
         spark.read.schema(admittedSchema).parquet(s"$indexDir/admitted/*"),
-        if (Retraction.hasTombs(m))
-          Some(Retraction.storedTombs(spark, indexDir, m, emptyIdx(spark), "doc_id"))
-        else None, "doc_id")
+        Retraction.tombsOf(spark, indexDir, m, emptyIdx(spark), "doc_id"), "doc_id")
       .localCheckpoint(eager = true)
     finally BucketState.releaseReads(lease)
   }

@@ -371,78 +371,68 @@ object IncrementalVecIndex {
     val retract = retractIds.map(r =>
       Retraction.normIds(r).withColumnRenamed("doc_id", "vec_id").persist())
     try {
-    val batchFp = Trace.span("vec", "fingerprint", batchId)(
-      Retraction.mixFp(BucketState.inputFingerprint(clean),
-        retract.map(BucketState.inputFingerprint)))
-    val (m, lease) = BucketState.readManifestLeased(spark, indexDir)
-    try {
-      BucketState.checkOrStampLayout(spark, indexDir, m, "vecindex-v2")
-      BucketState.checkBatch(m, batchId, batchFp) match {
-        case BucketState.AlreadyCommitted => ()
-        case BucketState.Proceed(proposed) =>
-          val physicalVersion = BucketState.reserveVersion(indexDir, proposed)
-          try {
-            // Frozen params are reusable only when they were trained on
-            // THIS input: once any batch has committed, the manifest
-            // fingerprint chain guarantees that (checkBatch fails loudly
-            // on divergence); before the first commit the params may be
-            // the residue of an aborted batch-0 attempt on DIFFERENT
-            // data — compare the marker's recorded training fingerprint
-            // and retrain/overwrite on mismatch (pure + deterministic,
-            // so a same-input replay rewrites byte-identical params).
-            val reusable = paramsExist(spark, indexDir) &&
-              (m.buckets.nonEmpty ||
-                paramsTrainFp(spark, indexDir).contains(batchFp))
-            if (!reusable) {
-              require(m.buckets.isEmpty,
-                s"index at $indexDir has committed segments but no readable " +
-                  "frozen params — the store is corrupt; rebuild the index")
-              // first-drop nlist: the conf if set, else the first-gen
-              // constant — nothing has accumulated yet; a corpus-sized
-              // nlist arrives with the first cutover's retrain
-              val (cents, cbs) =
-                train(spark, clean, _ => confCells(spark).getOrElse(Cells))
-              invalidateParams(indexDir)
-              writeParams(spark, indexDir, cents, cbs, batchFp)
-            }
-            val params = Trace.span("vec", "read_params", batchId)(
-              cachedParams(spark, indexDir, frozen = m.buckets.nonEmpty))
-            // the encode runs in the MAP stage of the p-exchange below,
-            // so its parallelism is the INPUT's partition count — and
-            // drop frames are routinely file-backed single-partition
-            // (the soak's admitted answer files; coalesce(1) callers).
-            // Measured at the 1M soak post-cutover: 3.9 s single-task
-            // encode_write at 529 cells vs 1.0 s at 16 — the argmin is
-            // cells×dims flops/row and one task paid all of it. A
-            // round-robin rebalance of the few-MB drop input restores
-            // map parallelism; skipped when the input is already
-            // parallel (a 2M-vector one-shot ingest must not pay a
-            // corpus-wide extra shuffle).
-            val nParts = spark.sessionState.conf.numShufflePartitions
-            val encIn =
-              if (clean.rdd.getNumPartitions < math.min(nParts, 8)) clean.repartition(nParts)
-              else clean
-            val rows = encodeWithParams(spark, params, encIn)
-            // tombstone rows ride the same segment and the same commit:
-            // (cell = -1, vec_id, codes = null, p = TombBucket)
-            val dataRows = rows.withColumn("p",
-              bucketCol(params.centroids.length, col("cell")))
-            Trace.span("vec", "encode_write", batchId)(
-              retract.fold(dataRows)(r => dataRows.unionByName(
-                  r.select(lit(-1L).as("cell"), col("vec_id"),
-                    lit(null).cast(ArrayType(IntegerType, containsNull = false))
-                      .as("codes"),
-                    lit(Retraction.TombBucket).as("p"))))
-                .repartition(col("p"))
-                .write.mode("overwrite").partitionBy("p")
-                .parquet(s"$indexDir/v=$physicalVersion"))
-            BucketState.commitAppend(spark, indexDir, physicalVersion,
-              Some((batchId + 1) -> batchFp), "vec", batchId)
-          } finally BucketState.releaseVersion(indexDir, physicalVersion)
+      val batchFp = Trace.span("vec", "fingerprint", batchId)(
+        Retraction.mixFp(BucketState.inputFingerprint(clean),
+          retract.map(BucketState.inputFingerprint)))
+      // the one batch protocol (BucketState.appendBatch — see
+      // IncrementalDedup.ingest) with this store's layout stamp
+      BucketState.appendBatch(spark, indexDir, "vec", batchId, batchFp,
+          Some("vecindex-v2")) { (m, versionDir) =>
+        // Frozen params are reusable only when they were trained on
+        // THIS input: once any batch has committed, the manifest
+        // fingerprint chain guarantees that (checkBatch fails loudly
+        // on divergence); before the first commit the params may be
+        // the residue of an aborted batch-0 attempt on DIFFERENT
+        // data — compare the marker's recorded training fingerprint
+        // and retrain/overwrite on mismatch (pure + deterministic,
+        // so a same-input replay rewrites byte-identical params).
+        val reusable = paramsExist(spark, indexDir) &&
+          (m.buckets.nonEmpty ||
+            paramsTrainFp(spark, indexDir).contains(batchFp))
+        if (!reusable) {
+          require(m.buckets.isEmpty,
+            s"index at $indexDir has committed segments but no readable " +
+              "frozen params — the store is corrupt; rebuild the index")
+          // first-drop nlist: the conf if set, else the first-gen
+          // constant — nothing has accumulated yet; a corpus-sized
+          // nlist arrives with the first cutover's retrain
+          val (cents, cbs) =
+            train(spark, clean, _ => confCells(spark).getOrElse(Cells))
+          invalidateParams(indexDir)
+          writeParams(spark, indexDir, cents, cbs, batchFp)
+        }
+        val params = Trace.span("vec", "read_params", batchId)(
+          cachedParams(spark, indexDir, frozen = m.buckets.nonEmpty))
+        // the encode runs in the MAP stage of the p-exchange below,
+        // so its parallelism is the INPUT's partition count — and
+        // drop frames are routinely file-backed single-partition
+        // (the soak's admitted answer files; coalesce(1) callers).
+        // Measured at the 1M soak post-cutover: 3.9 s single-task
+        // encode_write at 529 cells vs 1.0 s at 16 — the argmin is
+        // cells×dims flops/row and one task paid all of it. A
+        // round-robin rebalance of the few-MB drop input restores
+        // map parallelism; skipped when the input is already
+        // parallel (a 2M-vector one-shot ingest must not pay a
+        // corpus-wide extra shuffle).
+        val nParts = spark.sessionState.conf.numShufflePartitions
+        val encIn =
+          if (clean.rdd.getNumPartitions < math.min(nParts, 8)) clean.repartition(nParts)
+          else clean
+        val rows = encodeWithParams(spark, params, encIn)
+        // tombstone rows ride the same segment and the same commit:
+        // (cell = -1, vec_id, codes = null, p = TombBucket)
+        val dataRows = rows.withColumn("p",
+          bucketCol(params.centroids.length, col("cell")))
+        Trace.span("vec", "encode_write", batchId)(
+          retract.fold(dataRows)(r => dataRows.unionByName(
+              r.select(lit(-1L).as("cell"), col("vec_id"),
+                lit(null).cast(ArrayType(IntegerType, containsNull = false))
+                  .as("codes"),
+                lit(Retraction.TombBucket).as("p"))))
+            .repartition(col("p"))
+            .write.mode("overwrite").partitionBy("p")
+            .parquet(versionDir))
       }
-    } finally BucketState.releaseReads(lease)
-    // conditional sweep — see IncrementalDedup.ingest's GC comment
-    Trace.span("vec", "gc", batchId)(BucketState.gcVersionsIfDirty(spark, indexDir))
     } finally retract.foreach(_.unpersist())
     // the batch's answer is a pure function of the committed frozen
     // params — recomputing it (first run AND replay) is cheaper than
@@ -463,9 +453,7 @@ object IncrementalVecIndex {
     try Retraction.maskIfAny(
         BucketState.readBuckets(spark, indexDir, m.buckets, emptyIdx(spark))
           .filter(col("cell") >= 0),
-        if (Retraction.hasTombs(m))
-          Some(Retraction.storedTombs(spark, indexDir, m, emptyIdx(spark), "vec_id"))
-        else None, "vec_id")
+        Retraction.tombsOf(spark, indexDir, m, emptyIdx(spark), "vec_id"), "vec_id")
       .select(col("cell"), col("vec_id"), col("codes"))
       .localCheckpoint(eager = true)
     finally BucketState.releaseReads(lease)
@@ -525,9 +513,7 @@ object IncrementalVecIndex {
         if (cells <= MaxBuckets) pruned0
         else pruned0.filter(col("cell").isInCollection(probed))
       val idx = Retraction.maskIfAny(prunedRows,
-        if (Retraction.hasTombs(m))
-          Some(Retraction.storedTombs(s, indexDir, m, emptyIdx(s), "vec_id"))
-        else None, "vec_id")
+        Retraction.tombsOf(s, indexDir, m, emptyIdx(s), "vec_id"), "vec_id")
       val base = excludeId.map(id => idx.filter(col("vec_id") =!= id)).getOrElse(idx)
       val tables = Similarity.pqTablesFor(p.codebooks, qvec)
       val candidates = base

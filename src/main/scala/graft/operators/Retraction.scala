@@ -88,16 +88,26 @@ private[graft] object Retraction {
   def hasTombs(m: graft.streaming.BucketState.Manifest): Boolean =
     m.buckets.contains(TombBucket)
 
-  /** A store's stored tombstone ids (`idCol`) under manifest `m` — one
-    * pruned read of the reserved bucket. `empty` is the store's
-    * zero-state (with `p`).
+  /** The one tombstone mask of a store read under manifest `m`: its
+    * stored tombstone ids (`idCol`, one pruned read of the reserved
+    * bucket; `empty` is the store's zero-state with `p`), unioned and
+    * distinct with `pending` — a batch's own not-yet-committed retraction
+    * set — when given. None, so [[maskIfAny]] skips the read and the
+    * join, when the store holds no tombstones and nothing is pending. An
+    * ingest passes its retraction set; on replay that set is already
+    * stored, so both runs mask with the same ids.
     */
-  def storedTombs(spark: SparkSession, dir: String,
-                  m: graft.streaming.BucketState.Manifest,
-                  empty: => DataFrame, idCol: String): DataFrame =
-    graft.streaming.BucketState.readBuckets(spark, dir,
-      m.buckets.view.filterKeys(_ == TombBucket).toMap, empty)
-      .select(col(idCol))
+  def tombsOf(spark: SparkSession, dir: String,
+              m: graft.streaming.BucketState.Manifest,
+              empty: => DataFrame, idCol: String,
+              pending: Option[DataFrame] = None): Option[DataFrame] =
+    if (!hasTombs(m) && pending.isEmpty) None
+    else {
+      val stored = graft.streaming.BucketState.readBuckets(spark, dir,
+        m.buckets.view.filterKeys(_ == TombBucket).toMap, empty)
+        .select(col(idCol))
+      Some(pending.fold(stored)(stored.unionByName(_).distinct()))
+    }
 
   /** [[mask]] when the caller may have no tombstone relation at all —
     * `None` is the zero-cost identity (no read, no join).

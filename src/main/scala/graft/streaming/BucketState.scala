@@ -9,10 +9,19 @@ import graft.Trace
   * (`CdcStream`) and the four curation stores
   * (`operators.IncrementalDedup`, `IncrementalNearDup`,
   * `IncrementalKeepBest`, `IncrementalVecIndex`). It holds the store
-  * protocol's three shared parts: the one segment reader
-  * ([[readBuckets]]), the one append commit ([[commitAppend]]) and the
-  * one fold ([[compactConcurrent]], dispatched by
-  * [[maybeCompactConcurrent]]).
+  * protocol's shared parts: the one segment reader ([[readBuckets]]),
+  * the one batch protocol ([[appendBatch]]: leased read → layout and
+  * replay checks → reserve → stage → the one append commit
+  * [[commitAppend]] → release → GC), and the one fold
+  * ([[compactConcurrent]], dispatched by [[maybeCompactConcurrent]]).
+  * The LSM replica stages before its fingerprint exists, so it shares
+  * the parts below the check instead: [[stagingVersion]],
+  * [[commitAppend]], the release rule of [[releaseVersion]] and the
+  * conditional sweep [[gcVersionsIfDirty]].
+  *
+  * One GC rule: a reserved version released WITHOUT a commit (a failed
+  * stage, an abandoned replay, a fold that died before its swap) marks
+  * its dir GC-dirty, so the next writer's conditional sweep removes it.
   *
   * Layout: `stateDir/v=<version>/p=<bucket>/` parquet files in immutable version
   * dirs plus a `_CURRENT` manifest listing each live bucket's segments
@@ -98,9 +107,19 @@ private[graft] object BucketState {
     v
   }
 
-  /** Deregister an in-flight version (after its commit or abandonment). */
-  def releaseVersion(stateDir: String, v: Long): Unit =
-    inFlight.remove((stateDir, v))
+  /** Deregister an in-flight version after its commit or abandonment.
+    * An abandoned (`committed = false`) version leaves an unreferenced
+    * dir, so the release marks `stateDir` GC-dirty and the next
+    * [[gcVersionsIfDirty]] sweeps it. Both steps run under
+    * [[manifestLock]], so a concurrent GC snapshot either still sees the
+    * version in flight and is followed by the dirty mark, or sees it
+    * dead and sweeps it.
+    */
+  def releaseVersion(stateDir: String, v: Long, committed: Boolean = false): Unit =
+    manifestLock(stateDir).synchronized {
+      inFlight.remove((stateDir, v))
+      if (!committed) markGcDirty(stateDir)
+    }
 
   private def inFlightVersions(stateDir: String): Set[Long] =
     inFlight.keysIterator.collect { case (d, v) if d == stateDir => v }.toSet
@@ -490,20 +509,30 @@ private[graft] object BucketState {
       r.getSeq[Long](2).toSet)
   }
 
-  /** Check an incoming data batch against the manifest. Returns the
-    * PHYSICAL version dir to stage under when the batch should proceed —
-    * strictly greater than every referenced dir (so the pre-state read
-    * can never touch the dir being written), and equal to the batch's
-    * logical version `batchId+1` until a [[compactConcurrent]] fold has
-    * renumbered dirs past it. The last committed DATA version is the
+  /** The PHYSICAL version dir batch `batchId` stages under: strictly
+    * greater than every dir `m` references (so the pre-state read can
+    * never touch the dir being written), and equal to the batch's logical
+    * version `batchId+1` until a [[compactConcurrent]] fold has
+    * renumbered dirs past it. Needs no fingerprint, so the LSM replica
+    * reserves it before its stats job ends; `batchId = -1` (a commit that
+    * is not a stream batch) gives the bucket max + 1.
+    */
+  def stagingVersion(m: Manifest, batchId: Long): Long =
+    math.max(m.buckets.values.flatten.reduceOption(_ max _).getOrElse(0L) + 1,
+      batchId + 1)
+
+  /** Check an incoming data batch against the manifest: [[Proceed]] with
+    * its [[stagingVersion]], [[AlreadyCommitted]] for a replay of the
+    * manifest's last batch with the same fingerprint, or fail loudly on
+    * a stale or reset checkpoint. The last committed DATA version is the
     * manifest's fp line (which the fold preserves verbatim), falling back
     * to the bucket max for pre-fingerprint manifests (where physical ==
-    * logical).
+    * logical). Writers reach it through [[appendBatch]]; the LSM replica,
+    * which stages first, calls it before its commit.
     */
   def checkBatch(m: Manifest, batchId: Long, batchFp: Long): BatchCheck = {
     val logical = batchId + 1
-    val bucketMax = m.buckets.values.flatten.reduceOption(_ max _)
-    val lastData = m.fp.map(_._1).orElse(bucketMax)
+    val lastData = m.fp.map(_._1).orElse(m.buckets.values.flatten.reduceOption(_ max _))
     lastData match {
       case Some(v) if v > logical =>
         throw new IllegalArgumentException(
@@ -526,8 +555,7 @@ private[graft] object BucketState {
             "appears to have been reset against a retained state dir — retain " +
             "(or clear) both together")
         AlreadyCommitted
-      case _ =>
-        Proceed(math.max(bucketMax.getOrElse(0L) + 1, logical))
+      case _ => Proceed(stagingVersion(m, batchId))
     }
   }
 
@@ -589,6 +617,43 @@ private[graft] object BucketState {
           acc.updated(b, acc.getOrElse(b, Set.empty[Long]) + version)),
         fp.orElse(m.fp))
     })
+  }
+
+  /** The one batch protocol of the curation stores, in this order: the
+    * leased manifest read ([[readManifestLeased]]), the layout stamp
+    * check when `layout` is given ([[checkOrStampLayout]]), the replay
+    * check ([[checkBatch]]); on [[Proceed]] the reserved version,
+    * `stage(m, versionDir)` (the store's segment write and answer claim),
+    * [[commitAppend]] with the batch's replay record, and the release
+    * ([[releaseVersion]] — uncommitted on a throw, so the staged dir is
+    * swept); on [[AlreadyCommitted]] `replay(m)` under the same lease;
+    * then the lease release and, outside it, the `gc` span of
+    * [[gcVersionsIfDirty]]. The lease pins every dir the stage reads
+    * against a concurrent fold's GC; the GC runs after the release, or
+    * this batch's own lease would spare (and leak) the dirs a mid-ingest
+    * fold superseded.
+    */
+  def appendBatch(spark: SparkSession, stateDir: String, store: String,
+                  batchId: Long, batchFp: Long, layout: Option[String] = None)(
+      stage: (Manifest, String) => Unit,
+      replay: Manifest => Unit = _ => ()): Unit = {
+    val (m, lease) = readManifestLeased(spark, stateDir)
+    try {
+      layout.foreach(checkOrStampLayout(spark, stateDir, m, _))
+      checkBatch(m, batchId, batchFp) match {
+        case AlreadyCommitted => replay(m)
+        case Proceed(proposed) =>
+          val version = reserveVersion(stateDir, proposed)
+          var committed = false
+          try {
+            stage(m, s"$stateDir/v=$version")
+            commitAppend(spark, stateDir, version, Some((batchId + 1) -> batchFp),
+              store, batchId)
+            committed = true
+          } finally releaseVersion(stateDir, version, committed)
+      }
+    } finally releaseReads(lease)
+    Trace.span(store, "gc", batchId)(gcVersionsIfDirty(spark, stateDir))
   }
 
   /** The one segment reader: the rows of every `(version, bucket)` leaf
@@ -777,9 +842,11 @@ private[graft] object BucketState {
     * this very swap, and at most one fold runs per dir
     * ([[maybeCompactConcurrent]]'s flag, or the caller's own thread).
     * `beforeSwap` is a test seam: it runs after `staged`, before the
-    * locked swap. Readers of prior state must hold a
-    * [[readManifestLeased]] lease, or the post-swap GC could remove what
-    * they are scanning.
+    * locked swap. A fold that throws before its swap releases its
+    * version uncommitted, which marks the dir GC-dirty: the next
+    * writer's [[gcVersionsIfDirty]] removes the staged dir. Readers of
+    * prior state must hold a [[readManifestLeased]] lease, or the
+    * post-swap GC could remove what they are scanning.
     */
   def compactConcurrent(spark: SparkSession, stateDir: String,
                         beforeSwap: () => Unit = () => (),
@@ -788,6 +855,7 @@ private[graft] object BucketState {
     fold(spark, stateDir, m).foreach { f =>
       val newVersion = reserveVersion(stateDir, m.buckets.values.flatten.max + 1)
       val dir = s"$stateDir/v=$newVersion"
+      var committed = false
       try {
         f.rows.repartition(org.apache.spark.sql.functions.col("p"))
           .write.mode("overwrite").partitionBy("p").parquet(dir)
@@ -804,6 +872,7 @@ private[graft] object BucketState {
             if (segs.isEmpty) None else Some(b -> segs)
           }.toMap
           commitManifest(spark, stateDir, out, mNow.fp)
+          committed = true
           out
         }
         // retire the (now stale-by-key) session view so its lease doesn't
@@ -816,7 +885,7 @@ private[graft] object BucketState {
           .flatMap { case (b, vs) => vs.map(v => (v, b)) }.toSet)
         markGcDirty(stateDir) // superseded dirs exist until the sweep below
         gcVersions(spark, stateDir)
-      } finally releaseVersion(stateDir, newVersion)
+      } finally releaseVersion(stateDir, newVersion, committed)
     }
   }
 
@@ -923,26 +992,33 @@ private[graft] object BucketState {
     if (!allDeleted) markGcDirty(stateDir)
   }
 
-  // ---- conditional GC for the ingest hot path -------------------------
-  // An APPEND-ONLY ingest never supersedes a version dir, so its
+  // ---- conditional GC for the hot path ----------------------------------
+  // An APPEND-ONLY writer never supersedes a version dir, so its
   // end-of-batch gcVersions finds garbage only when (a) a fold completed
-  // mid-ingest and this ingest's own lease spared the folded dirs, or
-  // (b) a prior process crashed mid-stage. Both are rare next to the
-  // per-drop cadence, and the unconditional GC costs a locked manifest
+  // mid-batch and this batch's own lease spared the folded dirs, (b) a
+  // reserved version was released without a commit (a failed stage, the
+  // LSM's abandoned replay, a fold that died before its swap), or (c) a
+  // prior process or stream crashed mid-stage. All are rare next to the
+  // per-batch cadence, and the unconditional GC costs a locked manifest
   // read + a full dir listing per batch per store. `gcClean` tracks
-  // "the last GC swept everything" per state dir; folds clear it when
-  // they supersede dirs, and a fresh process starts with it empty so the
-  // first call always does a real sweep (covering crash orphans).
+  // "the last GC swept everything" per state dir; folds and uncommitted
+  // releases clear it, and a fresh process starts with it empty (the
+  // stream runners clear it at start) so the first call always does a
+  // real sweep (covering crash orphans).
   private val gcClean =
     scala.collection.concurrent.TrieMap.empty[String, Unit]
 
-  /** Mark `stateDir` as needing a GC pass (folds call this when they
-    * supersede version dirs).
+  /** Mark `stateDir` as needing a GC pass: a fold superseded dirs, a
+    * reserved version was released uncommitted, or a stream (re)starts
+    * over dirs a crashed writer may have left.
     */
   def markGcDirty(stateDir: String): Unit = gcClean.remove(stateDir)
 
   /** [[gcVersions]] unless the dir is known-clean: the last sweep
-    * deleted everything dead, and no fold has superseded dirs since.
+    * deleted everything dead, and since then no fold has superseded a
+    * dir and no reserved version was released without a commit. Every
+    * bucketed store's per-batch GC is this call ([[appendBatch]] and the
+    * LSM replica's apply and retraction).
     */
   def gcVersionsIfDirty(spark: SparkSession, stateDir: String): Unit =
     if (!gcClean.contains(stateDir)) gcVersions(spark, stateDir)

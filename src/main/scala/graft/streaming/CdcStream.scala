@@ -111,19 +111,14 @@ object CdcStream {
                  spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec): DataFrame = {
     val imageType = batch.schema("after").dataType
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val keyType = imageType(spec.key).dataType
-    val newHorizon = batch
-      .filter(col("before").isNull && col("after").isNull)
-      .agg(coalesce(max(col("pos")), lit(Long.MinValue)).as("bh"))
-    val oldHorizon = state
-      .filter(col("key").isNull)
-      .agg(coalesce(max(col("pos")), lit(Long.MinValue)).as("sh"))
-    val horizon = broadcast(
-      newHorizon.crossJoin(oldHorizon)
-        .select(greatest(col("bh"), col("sh")).as("h")))
-
+    val isTruncate = col("before").isNull && col("after").isNull
+    // the greater of the two horizons: a key whose max-pos winner is at
+    // or below it has every event at or below it, so resolving first and
+    // filtering the winners (resolveSegments) equals filtering first
+    val horizon = horizonOf(batch.filter(isTruncate).select(col("pos"))
+      .unionByName(state.filter(col("key").isNull).select(col("pos"))))
     val batchEvents = batch
-      .filter(!(col("before").isNull && col("after").isNull))
+      .filter(!isTruncate)
       .select(
         coalesce(col(s"after.${spec.key}"), col(s"before.${spec.key}")).as("key"),
         col("pos"), col("after"))
@@ -133,19 +128,17 @@ object CdcStream {
       .filter(col("key").isNotNull)
     val stateEvents = state.filter(col("key").isNotNull)
       .select(col("key"), col("pos"), col("after"))
-
-    val merged = stateEvents.unionByName(batchEvents)
-      .crossJoin(horizon)
-      .filter(col("pos") > col("h"))
-      .groupBy(col("key"))
-      .agg(max_by(struct(col("pos"), col("after")), col("pos")).as("m"))
-      .select(col("key"), col("m.pos").as("pos"), col("m.after").as("after"))
-
-    val horizonRow = horizon.select(
-      lit(null).cast(keyType).as("key"), col("h").as("pos"),
-      lit(null).cast(imageType).as("after"))
-    merged.unionByName(horizonRow)
+    resolveSegments(stateEvents.unionByName(batchEvents), Some(horizon))
+      .unionByName(horizon.select(
+        lit(null).cast(imageType(spec.key).dataType).as("key"), col("h").as("pos"),
+        lit(null).cast(imageType).as("after")))
   }
+
+  /** The truncate horizon of `rows` (their max `pos`, `Long.MinValue`
+    * when there are none) as a one-row `h` frame.
+    */
+  private def horizonOf(rows: DataFrame): DataFrame =
+    rows.agg(coalesce(max(col("pos")), lit(Long.MinValue)).as("h"))
 
   /** Empty state (schema only) for an arbitrary table shape. */
   def emptyStateFor(spark: SparkSession, spec: CdcSchema.CdcTableSpec,
@@ -218,7 +211,8 @@ object CdcStream {
                 spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
                 imageType: org.apache.spark.sql.types.StructType =
                   CdcSchema.invoiceType,
-                tableName: String = "invoice"): StreamingQuery =
+                tableName: String = "invoice"): StreamingQuery = {
+    BucketState.markGcDirty(stateDir) // a (re)started stream sweeps once
     raw.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -244,6 +238,7 @@ object CdcStream {
         ()
       }
       .start()
+  }
 
   /** `tableName`'s own full-DDL history implied by a schema-history dir:
     * (pos, statement) in pos order — the bounded driver-side read
@@ -455,10 +450,11 @@ object CdcStream {
     *
     * Commit protocol ([[BucketState]]): stage the segments under a
     * reserved `v=<n>` dir → one atomic `_CURRENT` rename naming them →
-    * GC of unreferenced dirs. A crash before the rename leaves readers on
-    * complete pre-batch state; the manifest's recorded input fingerprint
-    * tells a replay of the committed batch (no-op) from a checkpoint reset
-    * against retained state (fails loudly).
+    * the conditional GC of unreferenced dirs (a stream start sweeps once
+    * for a crashed writer's orphans). A crash before the rename leaves
+    * readers on complete pre-batch state; the manifest's recorded input
+    * fingerprint tells a replay of the committed batch (no-op) from a
+    * checkpoint reset against retained state (fails loudly).
     *
     * A truncate APPENDS a horizon row in `p = -1` — no rewrite at all,
     * the read filters `pos > max(horizon)` across segments and
@@ -485,7 +481,8 @@ object CdcStream {
                         checkpointDir: String, nBuckets: Int = 64,
                         spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
                         compactWhenSegments: Int = CompactWhenSegments,
-                        asyncCompaction: Boolean = false): StreamingQuery =
+                        asyncCompaction: Boolean = false): StreamingQuery = {
+    BucketState.markGcDirty(stateDir) // a (re)started stream sweeps once
     changelog.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
@@ -494,6 +491,7 @@ object CdcStream {
           compactWhenSegments, asyncCompaction)
       }
       .start()
+  }
 
   /** Max segments per bucket at which both runners fold by default. */
   private val CompactWhenSegments = 8
@@ -533,17 +531,23 @@ object CdcStream {
     * cached batch), then manifest append-commit. No state read in the hot
     * path at all.
     *
-    * The stats action (fingerprint + touched buckets) does not gate the
-    * segment write: the staging version only needs to be strictly above
-    * everything the manifest references (`bucketMax+1`/`batchId+1`, no
-    * fingerprint required), and the replay/stale-checkpoint decision
-    * ([[BucketState.checkBatch]]) only gates the COMMIT. So the write is
-    * staged optimistically in parallel with the stats pass; on the rare
-    * replay of an already-committed batch the staged dir is simply
-    * abandoned (released from in-flight, GC'd like a crash orphan) — the
+    * The stats action (the batch's [[BucketState.inputFingerprint]]) does
+    * not gate the segment write: the staging version
+    * ([[BucketState.stagingVersion]]) needs no fingerprint, and the
+    * replay/stale-checkpoint decision ([[BucketState.checkBatch]]) only
+    * gates the COMMIT. So the write is staged optimistically in parallel
+    * with the stats pass; on the rare replay of an already-committed
+    * batch the staged dir is abandoned (released uncommitted, which marks
+    * the dir GC-dirty, and swept by this batch's conditional GC) — the
     * common path saves a full serialized Spark-job round-trip, which at
     * micro-batch cadence is pure commit latency (LatencySoak measures it,
-    * its [[graft.Trace]] spans itemize it).
+    * its [[graft.Trace]] spans itemize it). This order is why the replica
+    * does not run [[BucketState.appendBatch]], which checks first: that
+    * would serialize the stats job onto the commit latency, and the
+    * curation stores must not stage first (a replay would re-claim a
+    * committed batch's answer against post-commit state). It shares the
+    * staging version, [[BucketState.commitAppend]], the release rule and
+    * the conditional sweep instead.
     *
     * `onStaged` runs with the staged version dir BEFORE the manifest
     * commit ([[runRouted]] stamps its schema watermark there), so a
@@ -563,31 +567,15 @@ object CdcStream {
     val batch = rawBatch.persist()
     val auditF = Future { writeAudit(batch, auditDir, batchId) }
     try {
-      val imageType = batch.schema("after").dataType
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      val keyType = imageType(spec.key).dataType
-      val statCols = batch.columns.sorted.map(c => s"`$c`").mkString(", ")
-      val statF = Future {
-        batch.select(
-            expr(s"xxhash64(struct($statCols))").as("h"),
-            bucketOf(
-              coalesce(col(s"after.${spec.key}"), col(s"before.${spec.key}")),
-              keyType).as("p"))
-          .agg(coalesce(bit_xor(col("h")), lit(0L)), count(lit(1)))
-          .collect()(0)
-      }
-
+      val keyType = batch.schema("after").dataType
+        .asInstanceOf[org.apache.spark.sql.types.StructType](spec.key).dataType
+      val statF = Future(BucketState.inputFingerprint(batch))
       val m = BucketState.readManifest(spark, stateDir)
-      // Physical staging version: strictly above every referenced dir and
-      // at least the logical batch version — same value checkBatch's
-      // Proceed would carry, derivable before the fingerprint exists.
-      val proposed = math.max(
-        m.buckets.values.flatten.reduceOption(_ max _).getOrElse(0L) + 1,
-        batchId + 1)
       // Version reserved (not manifest-derived): unique vs a concurrent
       // background compaction, and in-flight-registered so the
       // compaction's GC spares the staged dir while it is being written.
-      val newVersion = BucketState.reserveVersion(stateDir, proposed)
+      val newVersion =
+        BucketState.reserveVersion(stateDir, BucketState.stagingVersion(m, batchId))
       var committed = false
       try {
         // the RAW per-event rows — the segment IS the log. No in-batch
@@ -600,8 +588,8 @@ object CdcStream {
         // key-null horizon-row shape directly; the key gate keeps a
         // hand-built keyless non-truncate event from poisoning the
         // horizon (same guard as mergeBatch's ingress).
-        // repartition(nBuckets): the touched-bucket count isn't known yet
-        // (the stats job is still running); at LSM bucket counts (≤64)
+        // repartition(nBuckets): no job computes the touched-bucket
+        // count before this write; at LSM bucket counts (≤64)
         // the empty shuffle partitions cost scheduling-only, and the
         // parquet writer emits no dir for them.
         Trace.span("lsm", "segment_write", batchId)(batch
@@ -620,15 +608,13 @@ object CdcStream {
           .write.mode("overwrite").partitionBy("p")
           .parquet(s"$stateDir/v=$newVersion"))
         onStaged.foreach(_(s"$stateDir/v=$newVersion"))
-        val statRow =
+        val batchFp =
           Trace.span("lsm", "stats_await", batchId)(Await.result(statF, Duration.Inf))
-        val batchFp = statRow.getLong(0) ^
-          java.lang.Long.rotateLeft(statRow.getLong(1), 32)
         BucketState.checkBatch(m, batchId, batchFp) match {
           case BucketState.AlreadyCommitted =>
             // Replay of a committed batch: the optimistically staged dir
             // is surplus — fall through to the finally, which releases
-            // the in-flight registration so the GC below removes it.
+            // it uncommitted so the GC below removes it.
             Await.result(auditF, Duration.Inf)
           case BucketState.Proceed(_) =>
             Trace.span("lsm", "audit_await", batchId)(Await.result(auditF, Duration.Inf))
@@ -636,13 +622,14 @@ object CdcStream {
               Some((batchId + 1) -> batchFp), "lsm", batchId)
             committed = true
         }
-      } finally BucketState.releaseVersion(stateDir, newVersion)
+      } finally BucketState.releaseVersion(stateDir, newVersion, committed)
       // GC after release: on the commit path the new dir is manifest-
-      // referenced (live); on the abandon path it is now unreferenced and
-      // unregistered, so this sweep removes it like any crash orphan.
+      // referenced (live) and the sweep runs only if something else left
+      // garbage; on the abandon path the release marked the dir dirty,
+      // so this sweep removes the staged dir like any crash orphan.
       Trace.span("lsm", "gc", batchId, (_: Unit) =>
           if (committed) Nil else Seq("abandoned_v" -> newVersion))(
-        BucketState.gcVersions(spark, stateDir))
+        BucketState.gcVersionsIfDirty(spark, stateDir))
     } finally {
       Await.ready(auditF, Duration.Inf)
       batch.unpersist()
@@ -726,14 +713,16 @@ object CdcStream {
       s"retractLsmKeys($stateDir): retract after the first data batch " +
         "has committed — an empty replica has no history to erase")
     val newVersion = BucketState.reserveVersion(stateDir,
-      m0.buckets.values.flatten.reduceOption(_ max _).getOrElse(0L) + 1)
+      BucketState.stagingVersion(m0, -1L))
+    var committed = false
     try {
       tombs.coalesce(1).write.mode("overwrite").partitionBy("p")
         .parquet(s"$stateDir/v=$newVersion")
       // an empty key frame stages no partition, so the commit adds nothing
       BucketState.commitAppend(spark, stateDir, newVersion, None, "lsm", -1L)
-    } finally BucketState.releaseVersion(stateDir, newVersion)
-    BucketState.gcVersions(spark, stateDir)
+      committed = true
+    } finally BucketState.releaseVersion(stateDir, newVersion, committed)
+    BucketState.gcVersionsIfDirty(spark, stateDir)
   }
 
   /** One LSM read's inputs, split by reserved bucket:
@@ -752,8 +741,7 @@ object CdcStream {
       * ≤ it, `Long.MinValue` if none) as a one-row `h` frame.
       */
     def horizon(through: Long = Long.MaxValue): Option[DataFrame] =
-      horizonRows.map(_.filter(col("pos") <= through)
-        .agg(coalesce(max(col("pos")), lit(Long.MinValue)).as("h")))
+      horizonRows.map(r => horizonOf(r.filter(col("pos") <= through)))
   }
 
   /** One LSM read, split by reserved bucket: the events (`p ≥ 0`),

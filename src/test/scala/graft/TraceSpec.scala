@@ -68,7 +68,7 @@ class TraceSpec extends AnyFunSuite {
     val always = Map(
       "lsm" -> Seq("segment_write", "stats_await", "list_buckets",
         "audit_await", "manifest_commit", "gc"),
-      "exact" -> Seq("list_buckets", "manifest_commit"),
+      "exact" -> Seq("list_buckets", "manifest_commit", "gc"),
       "nd" -> Seq("fp_touched", "occupancy_guard", "edges_ck",
         "segment_write", "claim_answer", "list_buckets", "manifest_commit", "gc"),
       "kb" -> Seq("fp_touched", "member_probe", "resolve", "subgraph_ck",
