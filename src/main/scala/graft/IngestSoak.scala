@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
   * corpus (ScaleProbe's deterministic generator — bounded dup clusters,
   * so admitted counts stay predictable), split it into K parquet drops,
   * stream them through the index's `runIngest` (one manifest-committed
-  * ingest per micro-batch against the persisted index), then assert the
-  * final state EQUALS the one-shot computation over the whole corpus and
-  * print one JSON line with docs/s.
+  * ingest per micro-batch against the persisted index), then check the
+  * final state EQUALS the one-shot computation over the whole corpus:
+  * print one JSON line with docs/s and its `snapshot_diff`, and exit 1
+  * when that diff is not 0.
   *
   * Two modes:
   *  - `exact`   — `IncrementalDedup` fingerprint index; final registry ≡
@@ -152,5 +153,6 @@ object IngestSoak {
       s""""live_versions":$versions,"max_segments_per_bucket":$maxSegs,""" +
       s""""max_segments_observed":${observedMax.get()}}""")
     spark.stop()
+    if (diff != 0) sys.exit(1)
   }
 }

@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * what a networked store (the reference's ClickHouse) charges for.
   *
   * Usage: `graft.JdbcSoak [nKeys] [nBatches] [workDir]` — needs the
-  * DuckDB JDBC jar on the classpath (pre-warmed coursier cache); exits
-  * with a clear note if absent.
+  * DuckDB JDBC jar on the classpath (pre-warmed coursier cache); without
+  * it the soak has nothing to check and exits 2 with a note.
   */
 object JdbcSoak {
   def main(args: Array[String]): Unit = {
@@ -29,7 +29,7 @@ object JdbcSoak {
     try Class.forName("org.duckdb.DuckDBDriver")
     catch { case _: ClassNotFoundException =>
       System.err.println("[jdbc-soak] DuckDB JDBC driver not on classpath; nothing to measure")
-      return
+      sys.exit(2)
     }
     val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")

@@ -25,22 +25,17 @@ import graft.streaming.BucketState
   * over the union — per cluster (= min doc_id of the connected
   * component of the verified near-dup graph) the row (cluster, best
   * doc_id, best score, n_members), max score winning, min doc_id on
-  * ties. The edge predicate is the prefix-capped graph DECLARED at
-  * [[IncrementalNearDup.bucketCap]]: same shingle window, same 60-bit
-  * md5, same 32 permutations, same 8×4 banding
-  * ([[IncrementalNearDup.bandRowsOf]] — one hash ladder, drift
-  * impossible), est-Jaccard ≥ 0.5 via [[IncrementalNearDup.nearDup]],
-  * banded candidates bounded per bucket by the cap with saturated
-  * arrivals routed through the identical-signature rescue. The cap is
-  * the r12 contract's "declared future knob", landed: the uncapped
-  * form produced a measured 122M-edge batch subgraph at the 5M-doc
-  * sf100 rung and ran a 64 GB disk to death, exactly the degeneracy
-  * class the one-shot rung's [[Dedup.LshBucketCap]] bounds. Below the
-  * cap (every scale through sf10 — measured max bucket 857) the graph
-  * IS the uncapped graph, so all prior-round artifacts are unchanged;
-  * where the cap bites, the DuckDB oracle replays the identical
-  * prefix-capped semantics, so streamed ≡ batch replay still gates
-  * every scale.
+  * ties. The edges are the prefix-capped verified graph DECLARED at
+  * [[IncrementalNearDup]]'s bucket cap, and this store does not discover
+  * them: every batch takes the verified edges that
+  * [[IncrementalNearDup.ingestWithEdges]] returns for the same batch
+  * (same shingle window, same 60-bit md5, same 32 permutations, same
+  * 8×4 banding, est-Jaccard ≥ 0.5, banded candidates bounded per bucket
+  * by the cap with saturated arrivals routed through the identical-
+  * signature rescue). The banded corpus is stored and probed once, in
+  * the near-dup index, and both DuckDB oracles replay the one graph
+  * ([[IncrementalNearDup.cappedGraphCtes]]), so streamed ≡ batch replay
+  * gates every scale, including corpora where the cap bites.
   *
   * WHY CLUSTERS ARE HARD INCREMENTALLY (and what this does about it):
   * a new document can BRIDGE two existing clusters, so cluster
@@ -58,29 +53,22 @@ import graft.streaming.BucketState
   * length reads correctly.
   *
   * Index layout (one [[BucketState]] store, one manifest, one atomic
-  * commit per batch — layout stamp `keepbest-v2`): five row kinds under
-  * one schema `(band, bh, doc_id, sig, label, score)`, bucketed by
-  * `xxhash64(band, bh)`:
-  *  - band rows `(band ∈ [0,8), bh, doc_id)` — LSH keys, the batch's
-  *    candidate probe reads only the buckets its own band rows hash
-  *    into (partition-pruned paths);
-  *  - sig rows `(band = -1, bh = doc_id, sig)` — one 32-slot signature
-  *    per doc, fetched only for the buckets candidate seen-ids hash to;
+  * commit per batch — layout stamp `keepbest-overlay-v1`): two row
+  * kinds under one schema `(band, bh, doc_id, sig, label, score)`
+  * (`sig` always null), bucketed by `xxhash64(band, bh)`:
   *  - member rows `(band = -2, bh = doc_id, label, score)` — the
   *    doc's insert-time cluster root and quality score, fetched only
-  *    for candidate seen-ids;
+  *    for the buckets the batch's seen edge ends hash to;
   *  - fwd rows `(band = -3, bh = "fwd", doc_id = from, label = to)` —
   *    the union-find forwarding relation, pinned to ONE constant bucket
   *    and read as one bounded frame per batch (merge-bounded, path-
   *    compressed — see [[fwdBucket]] for why it wants the opposite
-  *    layout from the corpus-proportional row kinds);
-  *  - sig-key rows `(band = -4, bh = md5(sig), doc_id = batch min)` —
-  *    the identical-signature rescue's lookup relation (one narrow row
-  *    per distinct sig per batch; readers min over appended rows).
-  * Every read side is O(batch ∪ touched index): the corpus is never
-  * rescanned, and at 100 TB a drop moves only its own band keys, the
-  * signatures/members of its collision candidates, and the (merge-
-  * bounded, path-compressed) forwarding rows of the labels it touches.
+  *    layout from the member rows).
+  * Besides them a segment carries the batch's staged member answer
+  * (`band = -6`, renamed out before the commit) and its tombstones
+  * (`band = -9`). Every read side is O(batch ∪ touched index): the
+  * corpus is never rescanned, and a drop moves only the members of its
+  * edges' seen ends and the forwarding rows of the labels it touches.
   * The per-batch component pass runs over the BATCH SUBGRAPH only
   * (batch docs + the existing roots its edges reach) — label
   * propagation cost is edge-shaped, never corpus-shaped.
@@ -97,9 +85,9 @@ object IncrementalKeepBest {
     StructField("doc_id", LongType), StructField("label", LongType),
     StructField("score", DoubleType)))
 
-  /** Corpus-proportional row kinds (band/sig/member) hash over buckets
+  /** Member rows (corpus-proportional) hash over buckets
     * `[0, nBuckets-1)`; bucket `nBuckets-1` is RESERVED for forwarding
-    * rows alone. Unlike the other kinds — spread for pruned point
+    * rows alone. Unlike the member rows — spread for pruned point
     * reads — the forwarding relation is bounded by the number of CLUSTER
     * MERGES ever performed and path compression keeps it near-minimal,
     * so the resolver wants the opposite layout: the whole relation in
@@ -209,36 +197,39 @@ object IncrementalKeepBest {
     * batchId + same input → idempotent no-op returning the same rows;
     * different input fails loudly.
     */
-  /** `edgesIn`: OVERLAY mode — the store is layered on a banded
-    * [[IncrementalNearDup]] index that already discovered and est-verified
-    * this batch's near-dup edges ([[IncrementalNearDup.ingestWithEdges]]).
-    * The overlay persists ONLY member + forwarding rows (layout stamp
-    * `keepbest-overlay-v1`): no duplicate band/sig state at rest (at
-    * 100 TB, storing the banded corpus once per retention policy is the
-    * waste), no duplicate candidate probe/sig fetch/verify per drop (the
-    * pipeline's measured kb-dominance was exactly this duplicated work).
-    * Contract: the overlay must consume the SAME batch sequence as the
+  /** `edgesIn`: this batch's verified near-dup edges `(edgesSeen
+    * (doc_id, seen_id), edgesBatch (doc_a, doc_b))` as returned by
+    * [[IncrementalNearDup.ingestWithEdges]] for the SAME batch — the
+    * store is layered on that banded index, which discovers and
+    * est-verifies the one declared edge graph, and persists ONLY member
+    * + forwarding rows (layout stamp `keepbest-overlay-v1`): the banded
+    * corpus is stored and probed once, in the near-dup index, however
+    * many retention policies layer on it. Required: `None` fails loudly.
+    * Contract: the store must consume the SAME batch sequence as the
     * banded index supplying its edges — one foreachBatch feeding both is
     * the enforcement point (the shared batchId + fingerprint guards make
-    * a replay of either side idempotent). A full-mode store and an
-    * overlay store are mutually unreadable by stamp.
+    * a replay of either side idempotent).
     */
   /** `retractIds`: an optional takedown set committed WITH this batch —
-    * member, band, sig and sig-key rows of the named ids are masked from
-    * stored reads and the snapshot (the cluster's best becomes the best
-    * SURVIVING member; a fully-retracted cluster disappears until a new
-    * arrival re-populates it). Forwarding rows are EXEMPT: they are
-    * label-graph edges keyed by cluster labels, not member rows — a
-    * retracted doc whose id names a cluster label keeps naming it, the
-    * way a dropped min-id keeps naming a component in any union-find.
-    * See [[Retraction]] for the shared takedown design.
+    * member rows of the named ids are masked from stored reads and the
+    * snapshot here (the cluster's best becomes the best SURVIVING
+    * member; a fully-retracted cluster disappears until a new arrival
+    * re-populates it), while the near-dup index the edges come from
+    * masks their band, sig and sig-key rows when it is given the same
+    * set. Forwarding rows are EXEMPT: they are label-graph edges keyed
+    * by cluster labels, not member rows — a retracted doc whose id names
+    * a cluster label keeps naming it, the way a dropped min-id keeps
+    * naming a component in any union-find. See [[Retraction]] for the
+    * shared takedown design.
     */
   def ingest(spark: SparkSession, indexDir: String, docs: DataFrame,
              batchId: Long, nBuckets: Int = 64,
-             bandsIn: Option[DataFrame] = None,
-             edgesIn: Option[(DataFrame, DataFrame)] = None,
+             edgesIn: Option[(DataFrame, DataFrame)],
              retractIds: Option[DataFrame] = None): DataFrame = {
     require(nBuckets >= 2, "keep-best index needs >= 2 buckets (one is reserved for forwarding rows)")
+    require(edgesIn.isDefined, "keep-best layers on a near-dup index: pass " +
+      "the batch's verified edges from IncrementalNearDup.ingestWithEdges as edgesIn")
+    val (edgesSeen, edgesBatch) = edgesIn.get
     // every stage is a Trace span — the per-drop cost must be
     // attributable per stage, not guessed (the pipeline soak quantifies
     // the total, the spans name it)
@@ -246,49 +237,21 @@ object IncrementalKeepBest {
     val clean = docs
       .filter(col("doc_id").isNotNull && col("text").isNotNull)
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-    val overlay = edgesIn.isDefined
-    // bandsIn: caller-shared bandRowsOf(docs) — see the IncrementalNearDup
-    // ingest doc; bandRowsOf null-filters itself, so bands-of-docs equals
-    // bands-of-clean and the fingerprint (over clean) is unchanged.
-    // Overlay mode never touches band rows at all (edges arrive verified).
-    val ownBands = !overlay && bandsIn.isEmpty
-    val bandsOpt: Option[DataFrame] =
-      if (overlay) None
-      else Some(bandsIn.getOrElse(IncrementalNearDup.bandRowsOf(clean)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)))
     // narrow single-consumer map (the members projection) — no persist
     val scored = clean
       .select(col("doc_id"), TextAnalysis.scoreExpr(col("text")).as("score"))
     val retract = retractIds.map(Retraction.normIds(_).persist())
     try {
       // fingerprint covers the FULL batch (short no-shingle docs are
-      // members too, so they must perturb it); touched band buckets come
-      // off the persisted band rows (full mode only — the overlay's
-      // segment holds no band rows to probe). The two probes are
-      // independent read-only actions over different frames, so they run
-      // on two driver threads and overlap (guide §2.6) — the serial form
-      // measured 1.2 s/ingest of pure back-to-back job latency.
-      val (batchFp, touched) = Trace.span("kb", "fp_touched", batchId) {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val touchedF = Future(
-          bandsOpt.map(_.select(bucketOf(nBuckets).as("p")).distinct()
-            .collect().map(_.getLong(0)).toSet).getOrElse(Set.empty[Long]))
-        val fp = Retraction.mixFp(BucketState.inputFingerprint(clean),
-          retract.map(BucketState.inputFingerprint))
-        (fp, Await.result(touchedF, Duration.Inf))
-      }
+      // members too, so they must perturb it)
+      val batchFp = Trace.span("kb", "fp_touched", batchId)(
+        Retraction.mixFp(BucketState.inputFingerprint(clean),
+          retract.map(BucketState.inputFingerprint)))
       // the one batch protocol (BucketState.appendBatch — see
       // IncrementalDedup.ingest) with this store's layout stamp
       BucketState.appendBatch(spark, indexDir, "kb", batchId, batchFp,
-          Some(if (overlay) "keepbest-overlay-v1" else "keepbest-v2")) {
+          Some("keepbest-overlay-v1")) {
         (m, versionDir) =>
-          // surviving-view mask — stored tombstones ∪ this batch's own set
-          // (identical on first run and replay; see IncrementalNearDup);
-          // None on a takedown-free store (Retraction.tombsOf)
-          val tombs = Retraction.tombsOf(spark, indexDir, m, emptyIdx(spark),
-            "doc_id", retract)
           val sc = spark.sparkContext
           // everything persisted/checkpointed from here to the segment
           // write is batch-local scratch — released as one tracked diff
@@ -308,438 +271,182 @@ object IncrementalKeepBest {
           def readKind(buckets: Set[Long], kind: Long): DataFrame =
             view.filter(col("p").isin(buckets.toSeq: _*))
               .filter(col("band") === kind)
+          // member rows of the seen ends of this batch's edges: one
+          // bounded probe of the buckets they hash to
+          val memberBuckets = Trace.span("kb", "member_probe", batchId)(edgesSeen
+            .select(kindBucketOf(-2L, col("seen_id"), nBuckets).as("p"))
+            .distinct().collect().map(_.getLong(0)).toSet)
+          // ---- seen-side label resolution -----------------------
+          val seenLab = edgesSeen.join(
+              readKind(memberBuckets, -2L)
+                .select(col("doc_id").as("seen_id"), col("label")),
+              Seq("seen_id"))
+            .select(col("doc_id"), col("seen_id"), col("label"))
+            .persist()
+          // the forwarding relation lives in ONE constant bucket
+          // (merge-bounded and tiny — see fwdRows below), so it is
+          // read ONCE per batch and the fixpoint loop joins against
+          // the persisted frame; the first formulation re-opened
+          // the scattered per-(version, bucket) files every round
+          // and measured 0.36 → 3.8 s/drop over 8 drops in the
+          // traced 200k pipeline soak
+          val fwdAll = readKind(Set(fwdBucket(nBuckets)), -3L)
+            .select(col("doc_id").as("from"), col("label").as("to"))
+            .persist()
+          // no merges recorded yet (the common early-corpus state) ⇒
+          // every label IS its root: skip the fixpoint loop's
+          // join/persist/probe jobs entirely
+          val rootMap = Trace.span("kb", "resolve", batchId)(
+            if (fwdAll.isEmpty)
+              seenLab.select(col("label").as("lbl")).distinct()
+                .withColumn("root", col("lbl")).persist()
+            else resolve(
+              seenLab.select(col("label").as("lbl")).distinct(),
+              _ => fwdAll))
 
-          // ---- edge discovery -----------------------------------
-          // overlay: edges arrive verified from the banded index;
-          // full mode discovers them from this store's own band/sig
-          // rows. Either way, downstream consumes (edgesSeen
-          // (doc_id, seen_id), edgesBatch (doc_a, doc_b)).
-          var scratchToRelease: List[DataFrame] = Nil
-          var ownEdges = false
-          val (edgesSeen, edgesBatch, memberBuckets) = edgesIn match {
-            case Some((es, eb)) =>
-              val mb = Trace.span("kb", "member_probe", batchId)(es
-                .select(kindBucketOf(-2L, col("seen_id"), nBuckets).as("p"))
-                .distinct().collect().map(_.getLong(0)).toSet)
-              (es, eb, mb)
-            case None =>
-              val Ser = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
-              val bands = bandsOpt.get
-              // persisted: consumed twice (withPred's count + the
-              // candidate join); released with the batch scratch.
-              // Tombstone-masked: discovery runs against the
-              // surviving index (sig/member reads need no mask of
-              // their own — they only join on seen_ids drawn from
-              // this masked frame)
-              // guard input: UNRESTRICTED touched-bucket stored rows
-              // (join-free two-stage aggregate — see IncrementalNearDup's
-              // verifiedEdges for the restructuring and the equality
-              // argument); the candidate join keeps the batch-touched
-              // group restriction (exact refinement, measured 2.2%
-              // stored-row selectivity at the 1M soak), left lazy —
-              // the join is its only consumer on the unsaturated path
-              val batchGroups = bands.select(col("band"), col("bh"))
-                .distinct()
-              val storedTouched = Retraction.maskIfAny(
-                  view.filter(col("p").isin(touched.toSeq: _*))
-                  .filter(col("band") >= 0)
-                  .select(col("band"), col("bh"), col("doc_id")),
-                  tombs, "doc_id")
-              val prevBands0 = storedTouched
-                .join(batchGroups, Seq("band", "bh"), "left_semi")
-              // prefix-capped discovery + identical-signature rescue —
-              // the exact declared semantics of
-              // [[IncrementalNearDup.bucketCap]]; this path keeps its
-              // own copy because the store layouts differ and it fuses
-              // sig+member probes into ONE collect (job count is the
-              // dominant per-drop cost at small drops)
-              val cap = IncrementalNearDup.bucketCap(spark)
-              // saturation short-circuit — the verifiedEdges guard's
-              // verbatim: no bucket's combined occupancy above the cap
-              // ⇒ every row eligible, none rescue-bound, and the rank
-              // window + count join + probe are skipped (capped ≡
-              // uncapped below saturation is the spec'd identity).
-              // The SAME pass collects the sig+member probe buckets
-              // (the r14 standalone cand_probe collect, folded — the
-              // verifiedEdges argument verbatim): candidate seen_ids
-              // are stored docs in batch-touched (band,bh) groups,
-              // and a RESCUE partner shares every band group with its
-              // saturated batch doc (identical full signature ⇒
-              // identical band hashes), so its buckets are covered
-              // too; probing a superset is sound — both downstream
-              // reads re-join on seen_id. The probe set rides as a
-              // BITMASK (bit_or at both levels — O(1) aggregate
-              // state; see the IncrementalNearDup guard for why
-              // per-group collection dies at the decade), capping
-              // this fused form at 64 buckets — wider stores keep
-              // the standalone collect.
-              val fusedProbe = nBuckets <= 64
-              val storedRows = storedTouched.select(col("band"), col("bh"),
-                (call_function("shiftleft", lit(1L),
-                   kindBucketOf(-1L, col("doc_id"), nBuckets).cast("int"))
-                  .bitwiseOR(call_function("shiftleft", lit(1L),
-                    kindBucketOf(-2L, col("doc_id"), nBuckets).cast("int"))))
-                  .as("m"))
-              // when-guarded max/mask restrict to batch-touched groups
-              // (c > stored ⟺ some batch row in the group) — identical
-              // to the r17 semi-join-restricted aggregate, two stages
-              val guardRow = Trace.span("kb", "occupancy_guard", batchId,
-                  IncrementalNearDup.occupancyFields(cap))(storedRows
-                .unionByName(bands.select(col("band"), col("bh"),
-                  lit(null).cast("long").as("m")))
-                .groupBy(col("band"), col("bh"))
-                .agg(count(lit(1)).as("c"), count(col("m")).as("stored"),
-                  bit_or(col("m")).as("mm"))
-                .agg(max(when(col("c") > col("stored"), col("c"))).as("mx"),
-                  bit_or(when(col("c") > col("stored"), col("mm")))
-                    .as("mask"))
-                .collect()(0))
-              val maxOcc = guardRow
-              lazy val maskBuckets: Set[Long] =
-                if (guardRow.isNullAt(1)) Set.empty
-                else {
-                  val mask = guardRow.getLong(1)
-                  (0 until 64).collect {
-                    case b if (mask & (1L << b)) != 0 => b.toLong
-                  }.toSet
-                }
-              val canSaturate = !maxOcc.isNullAt(0) && maxOcc.getLong(0) > cap
-              val prevBands =
-                if (canSaturate) {
-                  val p = prevBands0.persist(Ser); scratchToRelease ::= p; p
-                } else prevBands0
-              val rankedOpt =
-                if (canSaturate) {
-                  val r = IncrementalNearDup.withPred(bands, prevBands)
-                    .persist(Ser)
-                  scratchToRelease ::= r
-                  Some(r)
-                } else None
-              val elig = rankedOpt.map(_.filter(col("pred") <= cap))
-                .getOrElse(bands.select(col("band"), col("bh"), col("doc_id")))
-              // NARROW candidate pairs — sigs re-joined only inside
-              // the verify stage; see IncrementalNearDup.verifiedEdges
-              // for the measured sf100 disk-death the wide form caused
-              // fused path: the es checkpoint is the frame's only
-              // consumer, no persist; the >64-bucket fallback probes
-              // it too, so it persists with the batch scratch
-              val cand0 = elig.as("b").join(prevBands.as("i"),
-                  col("b.band") === col("i.band") && col("b.bh") === col("i.bh") &&
-                    col("i.doc_id") < col("b.doc_id"))
-                .select(col("b.doc_id").as("doc_id"),
-                  col("i.doc_id").as("seen_id"))
-                .distinct()
-              val cand =
-                if (fusedProbe) cand0
-                else { val c = cand0.persist(Ser); scratchToRelease ::= c; c }
-              val batchSigs = bands.filter(col("band") === 0L)
-                .select(col("doc_id"), col("sig"))
-              // rescue edges for saturated arrivals — zero probe jobs
-              // when the occupancy guard ruled saturation out (every
-              // driver scale), one cheap probe otherwise
-              val anySaturated = rankedOpt.exists(r =>
-                Trace.span("kb", "saturation_probe", batchId)(
-                  !r.filter(col("pred") > cap).limit(1).isEmpty))
-              val (rescueSeen, rescueBatch) =
-                if (!anySaturated)
-                  (spark.range(0).select(col("id").as("doc_id"),
-                     col("id").as("seen_id")),
-                   spark.range(0).select(col("id").as("doc_a"),
-                     col("id").as("doc_b")))
-                else {
-                  val sigKeys = batchSigs.select(col("doc_id"),
-                    IncrementalNearDup.sigKey(col("sig")).as("sk"))
-                  val resc = rankedOpt.get.filter(col("pred") > cap)
-                    .select(col("doc_id")).distinct()
-                    .join(sigKeys, Seq("doc_id"))
-                    .persist(Ser)
-                  scratchToRelease ::= resc
-                  val skBuckets = Trace.span("kb", "rescue_probe", batchId)(resc
-                    .select(kindBucketOf(-4L, col("sk"), nBuckets).as("p"))
-                    .distinct().collect().map(_.getLong(0)).toSet)
-                  // retracted recorded minima lose their anchor role
-                  // — the IncrementalNearDup takedown semantics
-                  val storedMin = Retraction.maskIfAny(
-                      readKind(skBuckets, -4L), tombs, "doc_id")
-                    .select(col("bh").as("sk"), col("doc_id").as("cand_id"))
-                  val seenMin = resc.join(storedMin, Seq("sk"))
-                    .filter(col("cand_id") < col("doc_id"))
-                    .groupBy(col("doc_id"))
-                    .agg(min(col("cand_id")).as("smin"))
-                  val batchMin = resc.join(
-                      sigKeys.select(col("sk"), col("doc_id").as("odoc")),
-                      Seq("sk"))
-                    .filter(col("odoc") < col("doc_id"))
-                    .groupBy(col("doc_id"))
-                    .agg(min(col("odoc")).as("bmin"))
-                  val both = seenMin
-                    .join(batchMin, Seq("doc_id"), "full_outer")
-                    .persist(Ser)
-                  scratchToRelease ::= both
-                  (both.filter(col("smin").isNotNull &&
-                       (col("bmin").isNull || col("smin") < col("bmin")))
-                     .select(col("doc_id"), col("smin").as("seen_id")),
-                   both.filter(col("bmin").isNotNull &&
-                       (col("smin").isNull || col("bmin") <= col("smin")))
-                     .select(col("doc_id").as("doc_a"),
-                       col("bmin").as("doc_b")))
-                }
-              // sig + member probe buckets: the guard aggregate's
-              // bitmask (rescue partners' buckets included — see
-              // that comment for why identical signatures put them
-              // in batch-touched groups), or the r14 standalone
-              // collect for >64-bucket stores
-              val probeBuckets: Set[Long] =
-                if (fusedProbe) maskBuckets
-                else Trace.span("kb", "cand_probe", batchId)(cand.select(col("seen_id"))
-                  .unionByName(rescueSeen.select(col("seen_id")))
-                  .select(explode(array(
-                    kindBucketOf(-1L, col("seen_id"), nBuckets),
-                    kindBucketOf(-2L, col("seen_id"), nBuckets))).as("p"))
-                  .distinct().collect().map(_.getLong(0)).toSet)
-              val seenSigs = readKind(probeBuckets, -1L)
-                .select(col("doc_id").as("seen_id"), col("sig").as("seen_sig"))
-              // ONE tagged frame, ONE checkpoint action — the r14 nd
-              // fusion mirrored (the split form ran the seen-side
-              // verify as its own job, then re-ran the batch-side
-              // verify inside the subgraph checkpoint): both edge
-              // kinds verify in one job, where AQE can reuse the
-              // shared band/sig exchanges across the two subtrees.
-              // Local checkpoint, not persist: consumed across the
-              // scratch releases below (same cascade immunity as the
-              // subgraph — see that comment). distinct() over
-              // (kind, a, b) ≡ the per-kind distincts.
-              val seenTagged = cand.join(seenSigs, Seq("seen_id"))
-                .join(batchSigs, Seq("doc_id"))
-                .filter(IncrementalNearDup.nearDup(col("sig"), col("seen_sig")))
-                .select(col("doc_id").as("a"), col("seen_id").as("b"))
-                .unionByName(rescueSeen.select(col("doc_id").as("a"),
-                  col("seen_id").as("b")))
-                .select(lit(0).as("kind"), col("a"), col("b"))
-              val batchTagged = elig.as("x").join(
-                  bands.select(col("band"), col("bh"), col("doc_id")).as("y"),
-                  col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-                    col("y.doc_id") < col("x.doc_id"))
-                .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-                .distinct()
-                .join(batchSigs.select(col("doc_id").as("doc_a"),
-                  col("sig").as("sig_a")), Seq("doc_a"))
-                .join(batchSigs.select(col("doc_id").as("doc_b"),
-                  col("sig").as("sig_b")), Seq("doc_b"))
-                .filter(IncrementalNearDup.nearDup(col("sig_a"), col("sig_b")))
-                .select(col("doc_a").as("a"), col("doc_b").as("b"))
-                .unionByName(rescueBatch.select(col("doc_a").as("a"),
-                  col("doc_b").as("b")))
-                .select(lit(1).as("kind"), col("a"), col("b"))
-              val fused = Trace.span("kb", "edges_ck", batchId)(seenTagged
-                .unionByName(batchTagged).distinct().localCheckpoint(eager = true))
-              ownEdges = true
-              (fused.filter(col("kind") === 0)
-                 .select(col("a").as("doc_id"), col("b").as("seen_id")),
-               fused.filter(col("kind") === 1)
-                 .select(col("a").as("doc_a"), col("b").as("doc_b")),
-               probeBuckets)
+          // ---- batch-subgraph components ------------------------
+          // nodes: batch docs + the existing roots its edges reach;
+          // cost is edge-shaped (Dedup.clustersOf over this subgraph),
+          // the corpus is never touched. The subgraph frames MUST be
+          // materialized (eager localCheckpoint) before the loop:
+          // clustersOf re-reads its edge list every propagation
+          // round, and a lazy edge list re-runs the whole upstream
+          // (member bucket read + label joins) per round —
+          // measured as per-drop growth in the 500k pipeline soak
+          // before this truncation.
+          val toRoot = seenLab
+            .join(rootMap, seenLab("label") === rootMap("lbl"))
+            .select(col("doc_id").as("doc_a"), col("root").as("doc_b"))
+            .distinct()
+          // eager local checkpoint, deliberately NOT persist+count:
+          // the CC loop re-reads this frame every round, and a
+          // cached plan that still references this batch's scratch
+          // frames gets its buffers cleared by the CacheManager
+          // recache cascade when they unpersist — the persist form
+          // re-ran the whole upstream once per action (measured
+          // 7 → 66 s kb drops in the 200k soak). Truncated lineage
+          // is immune, and the capped subgraph (≤ ~80M edges at the
+          // 5M-doc rung) fits checkpoint blocks comfortably.
+          val pairs = Trace.span("kb", "subgraph_ck", batchId)(edgesBatch.unionByName(toRoot)
+            .localCheckpoint(eager = true))
+          val universe = clean.select(col("doc_id"))
+            .unionByName(pairs.select(col("doc_b").as("doc_id")))
+            .distinct()
+          // Two-regime component pass. The batch subgraph is
+          // edge-bounded (near-dup relations of ONE drop), so for
+          // any realistic drop it fits the driver: a union-find
+          // over the collected edges replaces the distributed
+          // label-propagation loop's ~6-8 jobs with one bounded
+          // collect — the same bounded-collect class as the sig-
+          // bucket lists (measured: the loop dominated the per-
+          // ingest job count at small drops). Past the threshold
+          // (conf `spark.graft.keepbest.ufMaxEdges`) the exact
+          // same contract runs distributed via Dedup.clustersOf.
+          val ufMax = spark.conf
+            .getOption("spark.graft.keepbest.ufMaxEdges")
+            .map(_.toLong).getOrElse(2000000L)
+          val nEdges = pairs.count() // cached — metadata-cheap
+          val useUf = nEdges <= ufMax
+          val lab = Trace.span("kb", if (useUf) "cc_uf" else "cc_dist",
+              batchId, (_: DataFrame) => Seq("edges" -> nEdges)) {
+            val l = (if (useUf)
+                       unionFindLabels(spark, pairs, universe)
+                     else Dedup.clustersOf(spark, pairs, universe))
+              .persist()
+            l.count(); l
           }
-          try {
-            // ---- seen-side label resolution -----------------------
-            val seenLab = edgesSeen.join(
-                readKind(memberBuckets, -2L)
-                  .select(col("doc_id").as("seen_id"), col("label")),
-                Seq("seen_id"))
-              .select(col("doc_id"), col("seen_id"), col("label"))
-              .persist()
-            // the forwarding relation lives in ONE constant bucket
-            // (merge-bounded and tiny — see fwdRows below), so it is
-            // read ONCE per batch and the fixpoint loop joins against
-            // the persisted frame; the first formulation re-opened
-            // the scattered per-(version, bucket) files every round
-            // and measured 0.36 → 3.8 s/drop over 8 drops in the
-            // traced 200k pipeline soak
-            val fwdAll = readKind(Set(fwdBucket(nBuckets)), -3L)
-              .select(col("doc_id").as("from"), col("label").as("to"))
-              .persist()
-            // no merges recorded yet (the common early-corpus state) ⇒
-            // every label IS its root: skip the fixpoint loop's
-            // join/persist/probe jobs entirely
-            val rootMap = Trace.span("kb", "resolve", batchId)(
-              if (fwdAll.isEmpty)
-                seenLab.select(col("label").as("lbl")).distinct()
-                  .withColumn("root", col("lbl")).persist()
-              else resolve(
-                seenLab.select(col("label").as("lbl")).distinct(),
-                _ => fwdAll))
 
-            // ---- batch-subgraph components ------------------------
-            // nodes: batch docs + the existing roots its edges reach;
-            // cost is edge-shaped (Dedup.clustersOf over this subgraph),
-            // the corpus is never touched. The subgraph frames MUST be
-            // materialized (eager localCheckpoint) before the loop:
-            // clustersOf re-reads its edge list every propagation
-            // round, and a lazy edge list re-runs the whole upstream
-            // (index bucket reads + sig fetch + est joins) per round —
-            // measured as per-drop growth in the 500k pipeline soak
-            // before this truncation.
-            val toRoot = seenLab
-              .join(rootMap, seenLab("label") === rootMap("lbl"))
-              .select(col("doc_id").as("doc_a"), col("root").as("doc_b"))
-              .distinct()
-            // eager local checkpoint, deliberately NOT persist+count:
-            // the CC loop re-reads this frame every round, and a
-            // cached plan that still references this batch's scratch
-            // frames gets its buffers cleared by the CacheManager
-            // recache cascade when they unpersist — the persist form
-            // re-ran the whole upstream once per action (measured
-            // 7 → 66 s kb drops in the 200k soak). Truncated lineage
-            // is immune, and the capped subgraph (≤ ~80M edges at the
-            // 5M-doc rung) fits checkpoint blocks comfortably.
-            val pairs = Trace.span("kb", "subgraph_ck", batchId)(edgesBatch.unionByName(toRoot)
-              .localCheckpoint(eager = true))
-            val universe = clean.select(col("doc_id"))
-              .unionByName(pairs.select(col("doc_b").as("doc_id")))
-              .distinct()
-            // Two-regime component pass. The batch subgraph is
-            // edge-bounded (near-dup relations of ONE drop), so for
-            // any realistic drop it fits the driver: a union-find
-            // over the collected edges replaces the distributed
-            // label-propagation loop's ~6-8 jobs with one bounded
-            // collect — the same bounded-collect class as the sig-
-            // bucket lists (measured: the loop dominated the per-
-            // ingest job count at small drops). Past the threshold
-            // (conf `spark.graft.keepbest.ufMaxEdges`) the exact
-            // same contract runs distributed via Dedup.clustersOf.
-            val ufMax = spark.conf
-              .getOption("spark.graft.keepbest.ufMaxEdges")
-              .map(_.toLong).getOrElse(2000000L)
-            val nEdges = pairs.count() // cached — metadata-cheap
-            val useUf = nEdges <= ufMax
-            val lab = Trace.span("kb", if (useUf) "cc_uf" else "cc_dist",
-                batchId, (_: DataFrame) => Seq("edges" -> nEdges)) {
-              val l = (if (useUf)
-                         unionFindLabels(spark, pairs, universe)
-                       else Dedup.clustersOf(spark, pairs, universe))
-                .persist()
-              l.count(); l
-            }
+          // ---- new forwarding rows ------------------------------
+          // (a) real merges: an existing root whose component gained a
+          // smaller root; (b) path compression: every label we had to
+          // chase now points straight at its final root
+          val mergeFwd = lab
+            .join(toRoot.select(col("doc_b").as("doc_id")).distinct(),
+              Seq("doc_id"))
+            .filter(col("cluster") =!= col("doc_id"))
+            .select(col("doc_id").as("from"), col("cluster").as("to"))
+          val compressFwd = rootMap
+            .join(lab, rootMap("root") === lab("doc_id"))
+            .filter(col("lbl") =!= col("cluster"))
+            .select(col("lbl").as("from"), col("cluster").as("to"))
+          val fwdNew = mergeFwd.unionByName(compressFwd).distinct()
 
-            // ---- new forwarding rows ------------------------------
-            // (a) real merges: an existing root whose component gained a
-            // smaller root; (b) path compression: every label we had to
-            // chase now points straight at its final root
-            val mergeFwd = lab
-              .join(toRoot.select(col("doc_b").as("doc_id")).distinct(),
-                Seq("doc_id"))
-              .filter(col("cluster") =!= col("doc_id"))
-              .select(col("doc_id").as("from"), col("cluster").as("to"))
-            val compressFwd = rootMap
-              .join(lab, rootMap("root") === lab("doc_id"))
-              .filter(col("lbl") =!= col("cluster"))
-              .select(col("lbl").as("from"), col("cluster").as("to"))
-            val fwdNew = mergeFwd.unionByName(compressFwd).distinct()
+          // ---- member rows for the whole batch ------------------
+          // persisted for the duration of the segment write: the
+          // sub-plan feeds TWO union branches (the durable answer
+          // rows and the registry's band=-2 rows) of the single
+          // segment job, and only `lab` underneath it is pinned —
+          // the `scored` side is a re-read of the batch source, so
+          // without the persist a non-deterministic caller frame
+          // could commit an answer file that diverges from the
+          // registry rows in the same commit (the same hazard class
+          // the vec ingest's retraction-frame persist closes).
+          // Released by the tracked-diff sweep below.
+          val members = scored
+            .join(lab.withColumnRenamed("doc_id", "ldoc"),
+              col("doc_id") === col("ldoc"), "left")
+            .select(col("doc_id"),
+              coalesce(col("cluster"), col("doc_id")).as("label"),
+              col("score"))
+            .persist()
 
-            // ---- member rows for the whole batch ------------------
-            // persisted for the duration of the segment write: the
-            // sub-plan feeds TWO union branches (the durable answer
-            // rows and the registry's band=-2 rows) of the single
-            // segment job, and only `lab` underneath it is pinned —
-            // the `scored` side is a re-read of the batch source, so
-            // without the persist a non-deterministic caller frame
-            // could commit an answer file that diverges from the
-            // registry rows in the same commit (the same hazard class
-            // the vec ingest's retraction-frame persist closes).
-            // Released by the tracked-diff sweep below.
-            val members = scored
-              .join(lab.withColumnRenamed("doc_id", "ldoc"),
-                col("doc_id") === col("ldoc"), "left")
-              .select(col("doc_id"),
-                coalesce(col("cluster"), col("doc_id")).as("label"),
-                col("score"))
-              .persist()
+          // the batch's durable member ANSWER rides the segment
+          // write under the reserved staging bucket (one job where
+          // r15 ran two — members.write, then a re-read to build
+          // the member rows) and is renamed out before the one
+          // atomic commit with the member and fwd rows (the banded
+          // index this store layers on holds the band/sig state). The
+          // members sub-plan evaluates once per union branch — `lab`
+          // is persisted, the score map is a cheap re-read of the batch
+          // source.
+          val nullSig = lit(null).cast(ArrayType(LongType, containsNull = false))
+          val answerRows = members
+            .select(lit(-6L).as("band"), lit("").as("bh"),
+              col("doc_id"), nullSig.as("sig"), col("label"),
+              col("score"))
+          val memberRows = members
+            .select(lit(-2L).as("band"), col("doc_id").cast("string").as("bh"),
+              col("doc_id"), nullSig.as("sig"), col("label"), col("score"))
+          val fwdRows = fwdNew
+            .select(lit(-3L).as("band"), lit("fwd").as("bh"),
+              col("from").as("doc_id"), nullSig.as("sig"),
+              col("to").as("label"), lit(null).cast("double").as("score"))
+          // tombstone rows ride the same segment and commit:
+          // (band = -9, bh = "", doc_id, nulls, p = TombBucket)
+          val segAll = memberRows.unionByName(fwdRows)
+            .withColumn("p", bucketOf(nBuckets))
+            .unionByName(answerRows
+              .withColumn("p", lit(BucketState.AnswerBucket)))
+          val segWithTombs = retract.fold(segAll)(r =>
+            segAll.unionByName(r.select(
+              lit(-9L).as("band"), lit("").as("bh"), col("doc_id"),
+              nullSig.as("sig"), lit(null).cast("long").as("label"),
+              lit(null).cast("double").as("score"),
+              lit(Retraction.TombBucket).as("p"))))
+          Trace.span("kb", "segment_write", batchId)(
+            segWithTombs
+              .repartition(col("p"))
+              .write.mode("overwrite").partitionBy("p")
+              .parquet(versionDir))
+          BucketState.claimAnswer(spark, versionDir, membersDir, memberSchema)
 
-            // the batch's durable member ANSWER rides the segment
-            // write under the reserved staging bucket (one job where
-            // r15 ran two — members.write, then a re-read to build
-            // the member rows) and is renamed out before the one
-            // atomic commit: five row kinds in full mode, member +
-            // fwd + answer in overlay mode (the banded index already
-            // holds the band/sig state an overlay would merely
-            // duplicate). The members sub-plan evaluates once per
-            // union branch — `lab` is persisted, the score map is a
-            // cheap re-read of the batch source.
-            val nullSig = lit(null).cast(ArrayType(LongType, containsNull = false))
-            val answerRows = members
-              .select(lit(-6L).as("band"), lit("").as("bh"),
-                col("doc_id"), nullSig.as("sig"), col("label"),
-                col("score"))
-            val memberRows = members
-              .select(lit(-2L).as("band"), col("doc_id").cast("string").as("bh"),
-                col("doc_id"), nullSig.as("sig"), col("label"), col("score"))
-            val fwdRows = fwdNew
-              .select(lit(-3L).as("band"), lit("fwd").as("bh"),
-                col("from").as("doc_id"), nullSig.as("sig"),
-                col("to").as("label"), lit(null).cast("double").as("score"))
-            val segRows = bandsOpt match {
-              case Some(bands) =>
-                val bandKeys = bands.select(col("band"), col("bh"), col("doc_id"),
-                  nullSig.as("sig"), lit(null).cast("long").as("label"),
-                  lit(null).cast("double").as("score"))
-                val sigRows = bands.filter(col("band") === 0L)
-                  .select(lit(-1L).as("band"), col("doc_id").cast("string").as("bh"),
-                    col("doc_id"), col("sig"), lit(null).cast("long").as("label"),
-                    lit(null).cast("double").as("score"))
-                // sig-key rows — the identical-signature rescue's
-                // lookup relation (one narrow row per distinct sig per
-                // batch, min doc_id; see the IncrementalNearDup layout)
-                val skRows = bands.filter(col("band") === 0L)
-                  .select(IncrementalNearDup.sigKey(col("sig")).as("bh"),
-                    col("doc_id"))
-                  .groupBy(col("bh")).agg(min(col("doc_id")).as("doc_id"))
-                  .select(lit(-4L).as("band"), col("bh"), col("doc_id"),
-                    nullSig.as("sig"), lit(null).cast("long").as("label"),
-                    lit(null).cast("double").as("score"))
-                bandKeys.unionByName(sigRows).unionByName(skRows)
-                  .unionByName(memberRows).unionByName(fwdRows)
-              case None => memberRows.unionByName(fwdRows)
-            }
-            // tombstone rows ride the same segment and commit:
-            // (band = -9, bh = "", doc_id, nulls, p = TombBucket)
-            val segAll = segRows.withColumn("p", bucketOf(nBuckets))
-              .unionByName(answerRows
-                .withColumn("p", lit(BucketState.AnswerBucket)))
-            val segWithTombs = retract.fold(segAll)(r =>
-              segAll.unionByName(r.select(
-                lit(-9L).as("band"), lit("").as("bh"), col("doc_id"),
-                nullSig.as("sig"), lit(null).cast("long").as("label"),
-                lit(null).cast("double").as("score"),
-                lit(Retraction.TombBucket).as("p"))))
-            Trace.span("kb", "segment_write", batchId)(
-              segWithTombs
-                .repartition(col("p"))
-                .write.mode("overwrite").partitionBy("p")
-                .parquet(versionDir))
-            BucketState.claimAnswer(spark, versionDir, membersDir, memberSchema)
-
-            // release this batch's component-pass checkpoints (tracked
-            // diff — same exposure as clustersOf's own internal
-            // tracking: nothing in this store's protocol persists RDDs
-            // concurrently (compactConcurrent is a pure read→write and
-            // the single-writer contract excludes other ingests), so
-            // the diff captures only this thread's checkpoint blocks —
-            // MINUS the session view's leaves, whose blocks this
-            // ingest materialized inside the window but which outlive
-            // the batch by design (BucketState.viewRddIds)
-            lab.unpersist()
-            (sc.getPersistentRDDs.keySet.toSet -- before --
-                BucketState.viewRddIds)
-              .foreach(id => sc.getPersistentRDDs.get(id)
-                .foreach(_.unpersist(blocking = false)))
-            seenLab.unpersist()
-            if (ownEdges) edgesSeen.unpersist()
-          } finally scratchToRelease.foreach(_.unpersist())
+          // release this batch's component-pass checkpoints (tracked
+          // diff — same exposure as clustersOf's own internal
+          // tracking: nothing in this store's protocol persists RDDs
+          // concurrently (compactConcurrent is a pure read→write and
+          // the single-writer contract excludes other ingests), so
+          // the diff captures only this thread's checkpoint blocks —
+          // MINUS the session view's leaves, whose blocks this
+          // ingest materialized inside the window but which outlive
+          // the batch by design (BucketState.viewRddIds)
+          lab.unpersist()
+          (sc.getPersistentRDDs.keySet.toSet -- before --
+              BucketState.viewRddIds)
+            .foreach(id => sc.getPersistentRDDs.get(id)
+              .foreach(_.unpersist(blocking = false)))
+          seenLab.unpersist()
       }
-    } finally {
-      if (ownBands) bandsOpt.foreach(_.unpersist())
-      retract.foreach(_.unpersist())
-    }
+    } finally retract.foreach(_.unpersist())
     spark.read.schema(memberSchema).parquet(membersDir)
   }
 
@@ -802,7 +509,8 @@ object IncrementalKeepBest {
 
   // --------------------------------------------------- driver query
   /** Driver-facing demonstration: the documents table ingested as two
-    * ascending-doc_id drops through a fresh cluster index (the same
+    * ascending-doc_id drops through a fresh near-dup index and the
+    * cluster index layered on its verified edges (the same
     * mid-split shape as `dedup_incremental`/`dedup_neardup_incremental`;
     * the 3-chunk form and the merge/upgrade interleavings live in
     * `IncrementalKeepBestSpec`); the snapshot must equal the ONE-SHOT
@@ -822,14 +530,19 @@ object IncrementalKeepBest {
     val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val ids = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
     val mid = (ids.getLong(0) + ids.getLong(1)) / 2
-    ingest(s, indexDir, docs.filter(col("doc_id") <= mid), 0, nBuckets = 16)
-      .count()
-    ingest(s, indexDir, docs.filter(col("doc_id") > mid), 1, nBuckets = 16)
-      .count()
-    // snapshot() eagerly checkpoints, so the per-run index dir can be
-    // reclaimed on success (repeated verify/bench runs would otherwise
-    // accrete dead index state under /tmp)
-    val out = snapshot(s, indexDir)
+    // the pipeline's order per drop: the near-dup index discovers the
+    // batch's verified edges, the keep-best store layers on them
+    Seq(docs.filter(col("doc_id") <= mid), docs.filter(col("doc_id") > mid))
+      .zipWithIndex.foreach { case (drop, i) =>
+        val (_, es, eb) = IncrementalNearDup.ingestWithEdges(s,
+          s"$indexDir/nd", drop, i.toLong, nBuckets = 16)
+        ingest(s, s"$indexDir/kb", drop, i.toLong, nBuckets = 16,
+          edgesIn = Some((es, eb))).count()
+      }
+    // snapshot() eagerly checkpoints, so the per-run index dir (both
+    // stores) can be reclaimed on success (repeated verify/bench runs
+    // would otherwise accrete dead index state under /tmp)
+    val out = snapshot(s, s"$indexDir/kb")
     graft.Shared.deleteDirTree(indexDir)
     out
   }

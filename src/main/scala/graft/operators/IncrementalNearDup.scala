@@ -150,17 +150,16 @@ object IncrementalNearDup {
     */
   val DefaultBucketCap = 2000L
 
-  /** Trace fields of an `occupancy_guard` span (shared with the
-    * keep-best guard): the largest combined bucket occupancy against the
-    * cap, i.e. whether the guard engaged the rank machinery or skipped it
-    * on this corpus.
+  /** Trace fields of the `occupancy_guard` span: the largest combined
+    * bucket occupancy against the cap, i.e. whether the guard engaged the
+    * rank machinery or skipped it on this corpus.
     */
-  private[operators] def occupancyFields(cap: Long): Row => Trace.Fields = r => {
+  private def occupancyFields(cap: Long): Row => Trace.Fields = r => {
     val maxOcc = if (r.isNullAt(0)) 0L else r.getLong(0)
     Seq("max_occ" -> maxOcc, "cap" -> cap, "can_saturate" -> (maxOcc > cap))
   }
 
-  private[operators] def bucketCap(spark: SparkSession): Long =
+  private def bucketCap(spark: SparkSession): Long =
     spark.conf.getOption("spark.graft.neardup.bucketCap")
       .map(_.toLong).getOrElse(DefaultBucketCap)
 
@@ -180,7 +179,7 @@ object IncrementalNearDup {
     * ingestion contract every stored doc is smaller, so the stored
     * count is the stored-predecessor count.
     */
-  private[operators] def withPred(bands: DataFrame, prevBands: DataFrame)
+  private def withPred(bands: DataFrame, prevBands: DataFrame)
       : DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bh")).orderBy(col("doc_id"))
@@ -290,11 +289,11 @@ object IncrementalNearDup {
     * no-op returning the same admitted set; different input fails loudly.
     *
     * `bandsIn`: an optional PRE-COMPUTED (and caller-persisted)
-    * `bandRowsOf(docs)` — when two indexes consume the same batch (the
-    * pipeline runs near-dup admission and keep-best retention as
-    * parallel consumers), the shingle→minhash ladder is the dominant
-    * shared per-drop compute and must run once, not once per index. The
-    * caller owns its lifecycle; fingerprints are over band VALUES, so
+    * `bandRowsOf(docs)` — for a caller that needs the band rows itself
+    * (the pipeline pre-reads the touched groups from them while an
+    * upstream stage still runs), so the shingle→minhash ladder, the
+    * dominant per-drop compute, runs once per drop. The caller owns its
+    * lifecycle; fingerprints are over band VALUES, so
     * replay contracts are unchanged.
     */
   /** `retractIds`: an optional takedown set committed WITH this batch —
@@ -317,12 +316,12 @@ object IncrementalNearDup {
     * discovery read, and immune to the CacheManager recache cascade
     * that empties dependent cached plans when this scope releases its
     * scratch frames — see the verifiedEdges comment for the measured
-    * cost of getting that wrong). This is the feed an OVERLAY retention
-    * index
-    * ([[IncrementalKeepBest]] in overlay mode) consumes: at scale the
-    * banded corpus is stored and probed ONCE, and every retention policy
-    * layered on it reuses the one candidate-discovery + est-verify pass
-    * instead of duplicating band/sig state and compute per policy.
+    * cost of getting that wrong). This is the one edge feed of the
+    * retention index ([[IncrementalKeepBest]] takes it as `edgesIn`):
+    * the banded corpus is stored and probed ONCE, here, and every
+    * retention policy layered on it reuses the one candidate-discovery +
+    * est-verify pass instead of keeping band/sig state and compute of
+    * its own.
     *
     * Replay note: when the batch is already committed, the edges are
     * recomputed under the same lease with the batch's own committed rows
@@ -359,7 +358,7 @@ object IncrementalNearDup {
     * manifest `m` (the bucket dirs must be lease-pinned by the caller):
     * returns eagerly-checkpointed `(pairsSeen (doc_id, seen_id),
     * pairsBatch (doc_a, doc_b))` — the one edge pass both the admission
-    * answer and any overlay consumer derive from.
+    * answer and the keep-best consumer derive from.
     *
     * `replayFloor`: set ONLY by the AlreadyCommitted replay recompute,
     * whose manifest already holds the batch's own rows — stored rows with
@@ -774,11 +773,11 @@ object IncrementalNearDup {
             BucketState.claimAnswer(spark, versionDir,
               admittedDir, admittedSchema))
         },
-        // a replayed batch still owes its consumer the edges (the overlay
-        // index may NOT have committed yet) — recompute them under this
-        // lease with the batch's own committed rows excluded (replayFloor),
-        // so the recomputed edges are bit-identical to the first run's;
-        // see verifiedEdges
+        // a replayed batch still owes its consumer the edges (the
+        // keep-best index may NOT have committed yet) — recompute them
+        // under this lease with the batch's own committed rows excluded
+        // (replayFloor), so the recomputed edges are bit-identical to the
+        // first run's; see verifiedEdges
         replay = m => if (captureEdges) {
           val minRow = bands.agg(min(col("doc_id"))).collect()(0)
           val floor = if (minRow.isNullAt(0)) None else Some(minRow.getLong(0))

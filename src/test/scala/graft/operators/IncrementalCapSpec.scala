@@ -129,12 +129,13 @@ class IncrementalCapSpec extends AnyFunSuite {
           Dedup.clustersOf(spark, pairs, docs.select(col("doc_id"))), scored)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).sorted.toSeq
 
+      val nd = freshDir("cap-kb-nd")
       val dir = freshDir("cap-kb")
-      IncrementalKeepBest.ingest(spark, dir,
+      KeepBestFeed.ingest(spark, nd, dir,
         docs.filter(col("doc_id") <= 3), 0, nBuckets = 8).count()
-      IncrementalKeepBest.ingest(spark, dir,
+      KeepBestFeed.ingest(spark, nd, dir,
         docs.filter(col("doc_id") > 3 && col("doc_id") <= 6), 1, nBuckets = 8).count()
-      IncrementalKeepBest.ingest(spark, dir,
+      KeepBestFeed.ingest(spark, nd, dir,
         docs.filter(col("doc_id") > 6), 2, nBuckets = 8).count()
       val got = IncrementalKeepBest.snapshot(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).sorted.toSeq

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.streaming.BucketState
 
 /** The incremental keep-best retention index: streamed ingest must land
   * on exactly the one-shot keepBestOf answer — including the two things
@@ -52,15 +53,15 @@ class IncrementalKeepBestSpec extends AnyFunSuite {
         math.round(r.getDouble(2) * 1e12), r.getLong(3))).toSeq
 
   test("replace-on-better: a later higher-quality near-dup takes over the cluster") {
-    val dir = freshDir()
+    val nd = freshDir(); val dir = freshDir()
     // base doc is repetitive (low uniq ratio => low score); the later
     // variant shares most of its distinct shingles (J = 6/10) but is
     // all-distinct => higher score
     val low = "alpha beta gamma delta epsilon zeta eta theta alpha beta gamma delta epsilon zeta eta theta"
     val high = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val b0 = ingest0(dir, Seq((1L, low)), 0)
+    val b0 = ingest0(nd, dir, Seq((1L, low)), 0)
     assert(b0 === Seq((1L, 1L)))
-    IncrementalKeepBest.ingest(spark, dir, docsDf(Seq((2L, high))), 1, nBuckets = 4)
+    KeepBestFeed.ingest(spark, nd, dir, docsDf(Seq((2L, high))), 1, nBuckets = 4)
     val snap = IncrementalKeepBest.snapshot(spark, dir)
     val got = snap.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq
     // one cluster rooted at 1, kept doc upgraded to 2, two members
@@ -70,12 +71,12 @@ class IncrementalKeepBestSpec extends AnyFunSuite {
     assert(rows(snap) === rows(oneShot(docsDf(Seq((1L, low), (2L, high))))))
   }
 
-  private def ingest0(dir: String, docs: Seq[(Long, String)], id: Long) =
-    IncrementalKeepBest.ingest(spark, dir, docsDf(docs), id, nBuckets = 4)
+  private def ingest0(nd: String, dir: String, docs: Seq[(Long, String)], id: Long) =
+    KeepBestFeed.ingest(spark, nd, dir, docsDf(docs), id, nBuckets = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
 
   test("bridge batch merges two existing clusters into one (forwarding + compression)") {
-    val dir = freshDir()
+    val nd = freshDir(); val dir = freshDir()
     // Two disjoint-vocabulary docs in separate early batches (two
     // clusters), then a batch of CHAIN docs morphing vocab A into vocab B
     // three tokens per step — each adjacent pair shares ~84% of its
@@ -90,12 +91,12 @@ class IncrementalKeepBestSpec extends AnyFunSuite {
     val b = (0 until n).map(tok('b', _)).mkString(" ")
     def chain(step: Int) = (0 until n)
       .map(j => if (j < 3 * step) tok('b', j) else tok('a', j)).mkString(" ")
-    ingest0(dir, Seq((10L, a)), 0)
-    ingest0(dir, Seq((20L, b)), 1)
+    ingest0(nd, dir, Seq((10L, a)), 0)
+    ingest0(nd, dir, Seq((20L, b)), 1)
     // sanity: two clusters before the bridge batch
     assert(IncrementalKeepBest.snapshot(spark, dir).count() === 2)
     val bridge = (1 until 20).map(i => (30L + i, chain(i)))
-    IncrementalKeepBest.ingest(spark, dir, docsDf(bridge), 2, nBuckets = 4)
+    KeepBestFeed.ingest(spark, nd, dir, docsDf(bridge), 2, nBuckets = 4)
     val snap = IncrementalKeepBest.snapshot(spark, dir)
     val union = docsDf(Seq((10L, a), (20L, b)) ++ bridge)
     val expected = oneShot(union)
@@ -111,7 +112,7 @@ class IncrementalKeepBestSpec extends AnyFunSuite {
     // 20 — ingest must resolve it through the forwarding relation
     // (20 → 10, the constant-bucket read) and file the newcomer under 10
     val b2 = b + " extrawordone extrawordtwo extrawordthree"
-    val m = IncrementalKeepBest.ingest(spark, dir, docsDf(Seq((60L, b2))), 3,
+    val m = KeepBestFeed.ingest(spark, nd, dir, docsDf(Seq((60L, b2))), 3,
       nBuckets = 4).collect()
     assert(m.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq((60L, 10L)),
       "stale label not chased through forwarding")
@@ -125,12 +126,12 @@ class IncrementalKeepBestSpec extends AnyFunSuite {
     val ids = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
     val (lo, hi) = (ids.getLong(0), ids.getLong(1))
     val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    val dir = freshDir()
-    IncrementalKeepBest.ingest(spark, dir, docs.filter(col("doc_id") <= c1), 0,
+    val nd = freshDir(); val dir = freshDir()
+    KeepBestFeed.ingest(spark, nd, dir, docs.filter(col("doc_id") <= c1), 0,
       nBuckets = 8).count()
-    IncrementalKeepBest.ingest(spark, dir,
+    KeepBestFeed.ingest(spark, nd, dir,
       docs.filter(col("doc_id") > c1 && col("doc_id") <= c2), 1, nBuckets = 8).count()
-    IncrementalKeepBest.ingest(spark, dir, docs.filter(col("doc_id") > c2), 2,
+    KeepBestFeed.ingest(spark, nd, dir, docs.filter(col("doc_id") > c2), 2,
       nBuckets = 8).count()
     assert(rows(IncrementalKeepBest.snapshot(spark, dir)) === rows(oneShot(docs)))
   }
@@ -151,9 +152,9 @@ class IncrementalKeepBestSpec extends AnyFunSuite {
     def runWith(ufMax: String): Seq[(Long, Long, Long, Long)] = {
       spark.conf.set("spark.graft.keepbest.ufMaxEdges", ufMax)
       try {
-        val dir = freshDir()
+        val nd = freshDir(); val dir = freshDir()
         batches.zipWithIndex.foreach { case (docs, i) =>
-          IncrementalKeepBest.ingest(spark, dir, docsDf(docs), i, nBuckets = 4)
+          KeepBestFeed.ingest(spark, nd, dir, docsDf(docs), i, nBuckets = 4)
         }
         IncrementalKeepBest.snapshot(spark, dir).collect()
           .map(r => (r.getLong(0), r.getLong(1),
@@ -164,21 +165,26 @@ class IncrementalKeepBestSpec extends AnyFunSuite {
   }
 
   test("replay of a committed batch no-ops with the same members; changed input fails loudly") {
-    val dir = freshDir()
+    val nd = freshDir(); val dir = freshDir()
     val text = "one two three four five six seven eight nine ten eleven twelve thirteen"
-    val first = ingest0(dir, Seq((5L, text)), 0)
+    val first = ingest0(nd, dir, Seq((5L, text)), 0)
     assert(first === Seq((5L, 5L)))
-    val replay = ingest0(dir, Seq((5L, text)), 0)
+    val replay = ingest0(nd, dir, Seq((5L, text)), 0)
     assert(replay === first)
+    // the replayed edges with CHANGED docs: keep-best's own fingerprint
+    // guard must refuse them, not only the near-dup index's
+    val (_, es, eb) = IncrementalNearDup.ingestWithEdges(spark, nd,
+      docsDf(Seq((5L, text))), 0, nBuckets = 4)
     val e = intercept[IllegalArgumentException](
       IncrementalKeepBest.ingest(spark, dir,
-        docsDf(Seq((6L, text + " changed"))), 0, nBuckets = 4))
+        docsDf(Seq((6L, text + " changed"))), 0, nBuckets = 4,
+        edgesIn = Some((es, eb))))
     assert(e.getMessage.contains("fingerprint"))
   }
 
   test("short docs (no shingles) are singleton members with real scores") {
-    val dir = freshDir()
-    IncrementalKeepBest.ingest(spark, dir,
+    val nd = freshDir(); val dir = freshDir()
+    KeepBestFeed.ingest(spark, nd, dir,
       docsDf(Seq((1L, "just two"), (2L, "one"))), 0, nBuckets = 4)
     val snap = IncrementalKeepBest.snapshot(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSeq.sorted
@@ -237,17 +243,28 @@ class IncrementalKeepBestSpec extends AnyFunSuite {
     assert(rows(IncrementalKeepBest.snapshot(spark, kbDir)) === rows(snap))
   }
 
-  test("overlay and full-mode stores are mutually unreadable (layout stamp)") {
+  test("a store stamped keepbest-v2 by an older build fails loudly (layout stamp)") {
     val dir = freshDir()
     val text = "one two three four five six seven eight nine ten"
-    IncrementalKeepBest.ingest(spark, dir, docsDf(Seq((1L, text))), 0,
-      nBuckets = 4)
-    val empty = spark.createDataFrame(Seq((2L, "x"))).toDF("doc_a", "doc_b")
+    BucketState.checkOrStampLayout(spark, dir,
+      BucketState.readManifest(spark, dir), "keepbest-v2")
+    val empty = spark.createDataFrame(Seq((2L, 3L))).toDF("doc_a", "doc_b")
       .filter(col("doc_a") < 0)
     val es = empty.select(col("doc_a").as("doc_id"), col("doc_b").as("seen_id"))
     val e = intercept[IllegalArgumentException](
-      IncrementalKeepBest.ingest(spark, dir, docsDf(Seq((2L, text + " more"))),
-        1, nBuckets = 4, edgesIn = Some((es, empty))))
+      IncrementalKeepBest.ingest(spark, dir, docsDf(Seq((1L, text))),
+        0, nBuckets = 4, edgesIn = Some((es, empty))))
     assert(e.getMessage.contains("layout"))
+  }
+
+  test("an ingest without the near-dup index's edges fails loudly, naming ingestWithEdges") {
+    val dir = freshDir()
+    val e = intercept[IllegalArgumentException](
+      IncrementalKeepBest.ingest(spark, dir,
+        docsDf(Seq((1L, "one two three four five six seven"))), 0,
+        nBuckets = 4, edgesIn = None))
+    assert(e.getMessage.contains("ingestWithEdges"))
+    assert(!new java.io.File(s"$dir/_LAYOUT").exists(),
+      "a refused ingest must not stamp the store")
   }
 }

@@ -81,27 +81,28 @@ class IndexConcurrentCompactionSpec extends AnyFunSuite {
   }
 
   test("keep-best: an ingest committed mid-fold survives the swap — retention upgrade AND merge intact") {
-    val dir = s"${Files.createTempDirectory("graft-icc-kb").toString}/index"
+    val base = Files.createTempDirectory("graft-icc-kb").toString
+    val (nd, dir) = (s"$base/nd", s"$base/index")
     // two near-identical low/high-quality texts (J = 6/10 of the
     // replace-on-better spec corpus) in separate early batches, plus an
     // unrelated singleton
     val low = "alpha beta gamma delta epsilon zeta eta theta alpha beta gamma delta epsilon zeta eta theta"
     val high = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    IncrementalKeepBest.ingest(spark, dir,
+    KeepBestFeed.ingest(spark, nd, dir,
       docs(1L -> low, 2L -> "one two three four five six seven"),
       batchId = 0, nBuckets = 4)
     // mid-fold, the upgrade batch commits: doc 3 is the higher-quality
     // near-dup of doc 1 — the retention decision and its member/fwd
     // rows must survive the segment-preserving swap
     BucketState.compactConcurrent(spark, dir, beforeSwap = () =>
-      IncrementalKeepBest.ingest(spark, dir, docs(3L -> high),
+      KeepBestFeed.ingest(spark, nd, dir, docs(3L -> high),
         batchId = 1, nBuckets = 4))
     val got = IncrementalKeepBest.snapshot(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
     assert(got === Set((1L, 3L, 2L), (2L, 2L, 1L)),
       s"retention state lost or resurrected across the swap: $got")
     // replaying the mid-fold batch no-ops idempotently post-swap
-    val replay = IncrementalKeepBest.ingest(spark, dir, docs(3L -> high),
+    val replay = KeepBestFeed.ingest(spark, nd, dir, docs(3L -> high),
       batchId = 1, nBuckets = 4)
     assert(replay.collect().map(_.getLong(0)).toSeq === Seq(3L))
     val m = BucketState.readManifest(spark, dir)

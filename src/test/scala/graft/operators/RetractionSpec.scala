@@ -132,19 +132,20 @@ class RetractionSpec extends AnyFunSuite {
 
   // ---------------------------------------------------------- keep-best
   test("keep-best: the cluster answers with its best SURVIVING member; a fully-retracted cluster disappears") {
+    val nd = freshDir("ret-kb-nd")
     val d = freshDir("ret-kb")
     val t1 = "one cluster of very similar documents goes right here okay"
     val t2 = "a second unrelated cluster talks about mountains and rivers"
     val b0 = Seq((1L, t1), (2L, t1 + " extra"), (10L, t2))
       .toDF("doc_id", "text")
-    IncrementalKeepBest.ingest(spark, d, b0, 0, nBuckets = 8).count()
+    KeepBestFeed.ingest(spark, nd, d, b0, 0, nBuckets = 8).count()
     val snap0 = IncrementalKeepBest.snapshot(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toList
     val best1 = snap0.find(_._1 == 1L).get
     assert(best1._3 === 2L, "cluster {1,2} has two members")
     // retract the current best of cluster 1 → the other member answers
     val b1 = Seq.empty[(Long, String)].toDF("doc_id", "text")
-    IncrementalKeepBest.ingest(spark, d, b1, 1, nBuckets = 8,
+    KeepBestFeed.ingest(spark, nd, d, b1, 1, nBuckets = 8,
       retractIds = Some(Seq(best1._2).toDF("doc_id"))).count()
     val snap1 = IncrementalKeepBest.snapshot(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toList
@@ -153,7 +154,7 @@ class RetractionSpec extends AnyFunSuite {
     assert(Set(1L, 2L).contains(after1._2) && after1._2 != best1._2)
     // retract the survivor too → the cluster disappears entirely,
     // the unrelated cluster is untouched
-    IncrementalKeepBest.ingest(spark, d, b1, 2, nBuckets = 8,
+    KeepBestFeed.ingest(spark, nd, d, b1, 2, nBuckets = 8,
       retractIds = Some(Seq(after1._2).toDF("doc_id"))).count()
     val snap2 = IncrementalKeepBest.snapshot(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toList

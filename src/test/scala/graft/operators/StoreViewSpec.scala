@@ -119,30 +119,36 @@ class StoreViewSpec extends AnyFunSuite {
   }
 
   test("keep-best tracked sweep spares the view's blocks") {
+    val nd = tmp()
     val dir = tmp()
     def corpus(ids: Range, tag: String) = {
       import spark.implicits._
       ids.map(i => (i.toLong, s"$tag w$i x$i y$i z$i q$i"))
         .toDF("doc_id", "text")
     }
-    // full-mode ingests: reads 1 and 2 establish the streaming
-    // signature (read 2 extends read 1's pairs), so ingest 3 builds the
-    // view INSIDE the tracked-diff window; the sweep at the end of that
-    // ingest must leave the view's blocks cached
-    IncrementalKeepBest.ingest(spark, dir, corpus(1 to 30, "a"),
+    // keep-best ingests fed by a near-dup index: reads 1 and 2 establish
+    // the streaming signature (read 2 extends read 1's pairs), so ingest
+    // 3 builds the view INSIDE the tracked-diff window; the sweep at the
+    // end of that ingest must leave the view's blocks cached
+    KeepBestFeed.ingest(spark, nd, dir, corpus(1 to 30, "a"),
       batchId = 0)
-    IncrementalKeepBest.ingest(spark, dir, corpus(31 to 60, "b"),
+    KeepBestFeed.ingest(spark, nd, dir, corpus(31 to 60, "b"),
       batchId = 1)
-    IncrementalKeepBest.ingest(spark, dir, corpus(61 to 90, "c"),
+    KeepBestFeed.ingest(spark, nd, dir, corpus(61 to 90, "c"),
       batchId = 2)
+    // only the keep-best view's blocks may answer the check below: the
+    // near-dup index's view is released first
+    BucketState.invalidateViewsUnder(nd)
+    assert(BucketState.hasView(dir), "ingest 3 must build the keep-best view")
     val live = BucketState.viewRddIds
       .filter(spark.sparkContext.getPersistentRDDs.contains)
     assert(live.nonEmpty,
       "view blocks must survive the keep-best tracked-diff sweep")
     // and the store still answers correctly through the surviving view
-    IncrementalKeepBest.ingest(spark, dir, corpus(91 to 100, "a"),
+    KeepBestFeed.ingest(spark, nd, dir, corpus(91 to 100, "a"),
       batchId = 3)
     assert(IncrementalKeepBest.snapshot(spark, dir).count() > 0)
     BucketState.invalidateViewsUnder(dir)
+    BucketState.invalidateViewsUnder(nd)
   }
 }
