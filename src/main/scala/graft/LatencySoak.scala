@@ -119,8 +119,7 @@ object LatencySoak {
     val latencies = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
     val commitCosts = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
     val steady = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
-    val compactions = new java.util.concurrent.atomic.AtomicInteger(0)
-    val segsObserved = new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Long]()
+    val segsObserved = new java.util.concurrent.ConcurrentLinkedQueue[Integer]()
     val done = new java.util.concurrent.atomic.AtomicLong(0L)
     // first deferred-probe failure, surfaced at drain — the single-thread
     // executor would otherwise swallow it and turn a real error into a
@@ -159,15 +158,10 @@ object LatencySoak {
         // a background thread (asyncCompaction protocol), never billed to
         // delivery latency and never blocking the next trigger.
         val commit = System.currentTimeMillis()
-        val maxSegs = streaming.BucketState
-          .readManifest(batch.sparkSession, s"$base/state").maxSegments
-        segsObserved.add(maxSegs.toLong) // per-batch observed read amplification
-        if (maxSegs >= 8) {
-          compactions.incrementAndGet()
-          streaming.CdcStream.maybeCompact(
-            batch.sparkSession, s"$base/state", nBuckets,
-            cdc.CdcSchema.invoiceSpec, async = true)
-        }
+        // per-batch observed read amplification
+        segsObserved.add(streaming.BucketState.compactIfDue(batch.sparkSession,
+          s"$base/state", streaming.CdcStream.CompactWhenSegments, async = true,
+          streaming.CdcStream.lsmFold(nBuckets)))
         // The probe's stamp collect is measurement harness, not engine —
         // but run serially here it would still DELAY THE NEXT TRIGGER
         // (it re-parses the batch's JSON: a full Spark job, ~100-300 ms),
@@ -201,6 +195,11 @@ object LatencySoak {
     while (done.get() < total && probeError.get() == null &&
       System.currentTimeMillis() < deadline)
       Thread.sleep(200)
+    // wait for a background fold before the stop: it runs in the query's
+    // job group, so q.stop() would cancel it, and max_segs_final would
+    // describe a half-folded replica (no input is left, so no batch can
+    // trip another fold meanwhile)
+    while (streaming.BucketState.compactionInFlight(s"$base/state")) Thread.sleep(100)
     q.stop(); q.awaitTermination(60000)
     if (probeError.get() != null)
       throw new IllegalStateException("deferred latency probe failed",
@@ -218,7 +217,7 @@ object LatencySoak {
     // per-batch observed max segments-per-bucket (read amplification) —
     // boundedness under BACKGROUND compaction is the claim being
     // verified, so report the worst observed and the final.
-    val segsSeen = segsObserved.asScala.map(_.longValue()).toArray
+    val segsSeen = segsObserved.asScala.map(_.intValue()).toArray
     val segsEnd = streaming.BucketState.readManifest(spark, s"$base/state").maxSegments
     println(s"""{"metric":"latency_soak","events":$total,"ticks":$nTicks,""" +
       s""""tick_ms":$tickMs,"trigger_ms":$triggerMs,"buckets":$nBuckets,""" +
@@ -230,7 +229,8 @@ object LatencySoak {
       s""""commit_p50_ms":${cs(cs.length / 2)},""" +
       s""""commit_max_ms":${cs.last},""" +
       s""""engine_ms":{${engineMedians(engine)}},""" +
-      s""""compact_trips":${compactions.get()},""" +
+      s""""compact_trips":${segsSeen.count(streaming.BucketState.foldDue(_,
+        streaming.CdcStream.CompactWhenSegments))},""" +
       s""""max_segs_observed":${if (segsSeen.isEmpty) 0 else segsSeen.max},""" +
       s""""max_segs_final":$segsEnd}""")
     spark.stop()

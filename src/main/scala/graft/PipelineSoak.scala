@@ -492,29 +492,14 @@ object PipelineSoak {
         // aligned-at-8 2,329 docs/s; staggered nd@4/kb@5 2,683; nd@3
         // 2,478 (folding the growing index too often costs more than
         // the read amortization saves) — nd@4/kb@5 kept.
-        // per-store tombstone folds (the takedown's masked rows reclaim
-        // at the fold; nd keeps its tombstone relation as the admitted
-        // registry's standing mask — see Retraction.foldTombstones).
-        // The vector index folds at its LIVE GENERATION dir (a cut-over
-        // store's root manifest is dead state — compacting it would
-        // fold nothing and GC against the wrong manifest).
-        val vecLive = operators.IncrementalVecIndex.liveDir(s, vecDir)
-        val folds: Seq[(String, Int, DataFrame => DataFrame)] = Seq(
-          (exactDir, compactWhenSegments,
-            operators.Retraction.foldTombstones(_, "doc_id")),
-          (ndDir, compactWhenSegments / 2,
-            operators.Retraction.foldTombstones(_, "doc_id",
-              keepTombstones = true)),
-          (kbDir, compactWhenSegments / 2 + 1,
-            operators.Retraction.foldTombstones(_, "doc_id",
-              exempt = Some(col("band") === -3L))),
-          (vecLive, compactWhenSegments + 3,
-            operators.Retraction.foldTombstones(_, "vec_id")))
-        folds.foreach { case (d, threshold, resolve) =>
-          if (streaming.BucketState.readManifest(s, d).maxSegments >= threshold)
-            streaming.BucketState.maybeCompactConcurrent(s, d, async = true,
-              streaming.BucketState.unionFold(resolve))
-        }
+        // Each store folds with its own fold; the vector index folds at
+        // its live generation.
+        operators.IncrementalDedup.compact(s, exactDir, compactWhenSegments, async = true)
+        operators.IncrementalNearDup.compact(s, ndDir, compactWhenSegments / 2, async = true)
+        operators.IncrementalKeepBest.compact(s, kbDir, compactWhenSegments / 2 + 1,
+          async = true)
+        operators.IncrementalVecIndex.compact(s, vecDir, compactWhenSegments + 3,
+          async = true)
         batchEnds.add(System.nanoTime())
         ()
       }

@@ -16,8 +16,8 @@ import graft.streaming.BucketState
   * (`p = pmod(xxhash64(fp), nBuckets)`): an incoming batch reads only the
   * buckets its own fingerprints hash into (partition-pruned paths) and
   * APPENDS one immutable segment holding only its survivors — prior
-  * segments are never rewritten (LSM-style; the one fold,
-  * `BucketState.compactConcurrent`, folds the segment list back to one).
+  * segments are never rewritten (LSM-style; the index's [[fold]], run by
+  * [[compact]], folds the segment list back to one).
   * Both I/O sides are O(batch): at 100 TB
   * of state a 1 GB drop reads just the fingerprint column store of the
   * touched buckets, never the corpus, and writes only its own new
@@ -44,6 +44,23 @@ object IncrementalDedup {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       survivorSchema.add("p", LongType))
 
+  /** This index's fold: tombstones folded on `doc_id` — a takedown's
+    * masked rows and the tombstones masking them leave at the fold
+    * ([[Retraction.foldTombstones]]).
+    */
+  private[graft] val fold: BucketState.Fold =
+    BucketState.unionFold("exact", Retraction.foldTombstones(_, "doc_id"))
+
+  /** Fold the index once its max segments per bucket reach `threshold`
+    * (the default 1: whenever it holds a segment), now or on a background
+    * thread (`async`; commits keep landing while it folds, made safe by
+    * the batch protocol [[ingest]] runs). Returns the max segments per
+    * bucket read before the fold ([[BucketState.compactIfDue]]).
+    */
+  def compact(spark: SparkSession, indexDir: String, threshold: Int = 1,
+              async: Boolean = false): Int =
+    BucketState.compactIfDue(spark, indexDir, threshold, async, fold)
+
   /** Admit `docs` (columns `doc_id`, `text`) against the index at
     * `indexDir`: returns the survivors — one `(fp, doc_id)` row per
     * content fingerprint never seen before, min doc_id within the batch —
@@ -52,8 +69,8 @@ object IncrementalDedup {
     * foreachBatch id, or 0,1,2… for a batch backfill); replaying a
     * committed batchId with identical input is an idempotent no-op that
     * returns the same survivors, with different input it fails loudly.
-    */
-  /** `retractIds`: an optional takedown set committed WITH this batch —
+    *
+    * `retractIds`: an optional takedown set committed WITH this batch —
     * tombstones staged in the same version dir and the same manifest
     * rename (see [[Retraction]] for the declared semantics). The
     * retraction applies BEFORE this batch's admissions: a fingerprint
@@ -149,54 +166,29 @@ object IncrementalDedup {
     spark.read.schema(survivorSchema).parquet(survivorsDir)
   }
 
-  /** Streaming ingress for the index: each micro-batch of documents is
-    * one [[ingest]] call keyed by the checkpoint's batchId — the replay
-    * guarantees above are exactly Structured Streaming's foreachBatch
-    * contract (a crash between the manifest commit and the checkpoint
-    * commit replays the batch; the fingerprint check makes it a no-op).
-    *
-    * Compaction policy, `compactWhenSegments` = K (0 = never): fold when
-    * the MEASURED max segments-per-bucket (one tiny manifest read per
-    * batch) reaches K. Read amplification is bounded at K by
-    * construction, and the rewrite runs only when the state shape
-    * demands it: skewed or narrow drops accumulate segments per bucket
-    * slowly, so the index absorbs many more batches between rewrites
-    * than a fixed cadence would for the same bound (README "Measured
-    * throughput", the `IngestSoak` table).
-    *
-    * `onBatch` (batchId, maxSegmentsPerBucket-after-ingest) is a probe
-    * hook for soaks/specs; default no-op.
-    */
-  /** `asyncCompaction = true` dispatches the due fold to a background
-    * thread ([[BucketState.maybeCompactConcurrent]]) instead of running
-    * it from the stream's thread — ingest commits keep landing O(batch)
-    * while the index folds, made safe by the batch protocol [[ingest]]
-    * runs ([[BucketState.appendBatch]]: leased read, locked commit).
-    * Default stays synchronous: deterministic segment counts for specs.
+  /** Streaming ingress for the index, [[BucketState.runIngest]]: one
+    * [[ingest]] per micro-batch keyed by the checkpoint's batchId (the
+    * replay guarantees above are exactly Structured Streaming's
+    * foreachBatch contract), then [[compact]] at `compactWhenSegments`
+    * (0 = never) — folding when the MEASURED max segments per bucket (one
+    * tiny manifest read per batch) reaches the bound, so skewed or narrow
+    * drops absorb many more batches between rewrites than a fixed cadence
+    * would for the same bound (README "Measured throughput", the
+    * `IngestSoak` table). `asyncCompaction` runs the due fold on a
+    * background thread; the synchronous default keeps segment counts
+    * deterministic for specs. `onBatch` gets (batchId, max segments per
+    * bucket after the ingest) — a probe hook for soaks and specs.
     */
   def runIngest(docs: DataFrame, indexDir: String, checkpointDir: String,
                 compactWhenSegments: Int = 0, nBuckets: Int = 64,
                 onBatch: (Long, Int) => Unit = (_, _) => (),
                 asyncCompaction: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // a (re)started stream sweeps once: a crashed writer may have left
-    // staged dirs this process never saw
-    BucketState.markGcDirty(indexDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        ingest(spark, indexDir, batch, batchId, nBuckets = nBuckets)
-        val maxSegs = BucketState.readManifest(spark, indexDir).maxSegments
-        onBatch(batchId, maxSegs)
-        if (compactWhenSegments > 0 && maxSegs >= compactWhenSegments)
-          BucketState.maybeCompactConcurrent(spark, indexDir, asyncCompaction,
-            BucketState.unionFold(Retraction.foldTombstones(_, "doc_id")))
-        ()
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BucketState.runIngest(docs, indexDir, checkpointDir, compactWhenSegments,
+      asyncCompaction, onBatch) { (batch, batchId) =>
+      ingest(batch.sparkSession, indexDir, batch, batchId, nBuckets = nBuckets)
+      fold
+    }
 
   /** The full deduped corpus registry: every admitted (fp, doc_id),
     * resolved through the committed manifest, minus stored takedowns.

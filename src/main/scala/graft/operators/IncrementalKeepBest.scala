@@ -113,6 +113,23 @@ object IncrementalKeepBest {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       rowSchema.add("p", LongType))
 
+  /** This index's fold: tombstones folded on `doc_id`, forwarding rows
+    * exempt ([[Retraction.foldTombstones]]'s `exempt`) — the forwarding
+    * relation is keyed by cluster LABELS, not members, and a retracted
+    * member's id can still be the label live members resolve through.
+    */
+  private[graft] val fold: BucketState.Fold =
+    BucketState.unionFold("kb", Retraction.foldTombstones(_, "doc_id",
+      exempt = Some(col("band") === -3L)))
+
+  /** Fold the index once its max segments per bucket reach `threshold`
+    * (default 1: whenever it holds a segment), now or on a background
+    * thread — [[IncrementalDedup.compact]] with this index's [[fold]].
+    */
+  def compact(spark: SparkSession, indexDir: String, threshold: Int = 1,
+              async: Boolean = false): Int =
+    BucketState.compactIfDue(spark, indexDir, threshold, async, fold)
+
   /** Driver union-find over a collected edge list — min-id roots, path
     * compression; exactly [[Dedup.clustersOf]]'s answer ((doc_id,
     * cluster) over `universe`, cluster = min reachable id, singletons

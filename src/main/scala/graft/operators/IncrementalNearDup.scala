@@ -94,8 +94,24 @@ object IncrementalNearDup {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       bandSchema.add("p", LongType))
 
-  private def md5Long60(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+  /** This index's fold: tombstones folded on `doc_id` with the
+    * tombstones KEPT ([[Retraction.foldTombstones]]'s `keepTombstones`).
+    * [[admittedSnapshot]] masks the never-GC'd `admitted/` answer files
+    * with the stored tombstones, so a fold that dropped them would bring
+    * retracted docs back; the masked band, sig and sig-key rows still
+    * leave.
+    */
+  private[graft] val fold: BucketState.Fold =
+    BucketState.unionFold("nd",
+      Retraction.foldTombstones(_, "doc_id", keepTombstones = true))
+
+  /** Fold the index once its max segments per bucket reach `threshold`
+    * (default 1: whenever it holds a segment), now or on a background
+    * thread — [[IncrementalDedup.compact]] with this index's [[fold]].
+    */
+  def compact(spark: SparkSession, indexDir: String, threshold: Int = 1,
+              async: Boolean = false): Int =
+    BucketState.compactIfDue(spark, indexDir, threshold, async, fold)
 
   private def bucketOf(nBuckets: Int) =
     pmod(xxhash64(col("band"), col("bh")), lit(nBuckets.toLong))
@@ -222,7 +238,7 @@ object IncrementalNearDup {
           element_at(col("toks"), col("p") + 2),
           element_at(col("toks"), col("p") + 3)).as("sh"))
     val aggs: Seq[Column] = (0 until K).map(i =>
-      min(TextFns.minhashPerm(md5Long60(col("sh")), i)).as(s"m$i"))
+      min(TextFns.minhashPerm(Dedup.md5Long60(col("sh")), i)).as(s"m$i"))
     val sig = shingles.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
       .withColumn("sig", array((0 until K).map(i => col(s"m$i")): _*))
     sig.select(
@@ -259,8 +275,8 @@ object IncrementalNearDup {
     * Manifest-skew argument (the pre-read's manifest vs the ingest's):
     * the store is single-writer (the owning stream), so between the two
     * reads only a background fold can commit — and the nd fold is
-    * row-preserving modulo tombstone application (foldTombstones with
-    * keepTombstones = true: masked data rows and nothing else leave).
+    * row-preserving modulo tombstone application (this index's [[fold]]:
+    * masked data rows and nothing else leave).
     * Every row the fold removed is re-removed by the ingest's own
     * tombstone mask (stored tombstones are never folded away), so the
     * masked row set is identical under either manifest.
@@ -792,35 +808,22 @@ object IncrementalNearDup {
     (spark.read.schema(admittedSchema).parquet(admittedDir), edges)
   }
 
-  /** Streaming ingress for the near-dup index — same contract surface as
-    * [[IncrementalDedup.runIngest]]: one [[ingest]] per micro-batch keyed
-    * by the checkpoint's batchId, adaptive (`compactWhenSegments`)
-    * folding, optionally dispatched to a background thread
-    * (`asyncCompaction` — safe by the batch protocol [[ingest]] runs,
-    * [[BucketState.appendBatch]]), one GC sweep at stream start.
+  /** Streaming ingress for the near-dup index — the same contract as
+    * [[IncrementalDedup.runIngest]] ([[BucketState.runIngest]]): one
+    * [[ingest]] per micro-batch keyed by the checkpoint's batchId, then
+    * [[compact]] at `compactWhenSegments` (0 = never), optionally on a
+    * background thread (`asyncCompaction`).
     */
   def runIngest(docs: DataFrame, indexDir: String, checkpointDir: String,
                 compactWhenSegments: Int = 0, nBuckets: Int = 64,
                 onBatch: (Long, Int) => Unit = (_, _) => (),
                 asyncCompaction: Boolean = false)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    BucketState.markGcDirty(indexDir)
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        ingest(spark, indexDir, batch, batchId, nBuckets = nBuckets)
-        val maxSegs = BucketState.readManifest(spark, indexDir).maxSegments
-        onBatch(batchId, maxSegs)
-        if (compactWhenSegments > 0 && maxSegs >= compactWhenSegments)
-          BucketState.maybeCompactConcurrent(spark, indexDir, asyncCompaction,
-            BucketState.unionFold(Retraction.foldTombstones(_, "doc_id",
-              keepTombstones = true)))
-        ()
-      }
-      .start()
-  }
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    BucketState.runIngest(docs, indexDir, checkpointDir, compactWhenSegments,
+      asyncCompaction, onBatch) { (batch, batchId) =>
+      ingest(batch.sparkSession, indexDir, batch, batchId, nBuckets = nBuckets)
+      fold
+    }
 
   /** Every admitted doc_id across all committed ingest batches, minus
     * every stored takedown — the surviving curated corpus. Materialized

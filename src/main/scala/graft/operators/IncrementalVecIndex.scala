@@ -135,6 +135,23 @@ object IncrementalVecIndex {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       rowSchema.add("p", LongType))
 
+  /** This index's fold: tombstones folded on `vec_id`
+    * ([[Retraction.foldTombstones]]).
+    */
+  private[graft] val fold: BucketState.Fold =
+    BucketState.unionFold("vec", Retraction.foldTombstones(_, "vec_id"))
+
+  /** Fold the LIVE generation once its max segments per bucket reach
+    * `threshold` (default 1: whenever it holds a segment), now or on a
+    * background thread — [[IncrementalDedup.compact]] with this index's
+    * [[fold]], run at [[liveDir]]. The root of a cut-over index is dead
+    * state: folding it would rewrite deleted or superseded dirs and GC
+    * against the wrong manifest.
+    */
+  def compact(spark: SparkSession, indexDir: String, threshold: Int = 1,
+              async: Boolean = false): Int =
+    BucketState.compactIfDue(spark, liveDir(spark, indexDir), threshold, async, fold)
+
   /** The frozen declared state: 16 cell centroids + [16][16][4] PQ
     * codebooks, stored as parquet rows under `indexDir/params` in the
     * same (cell, centroid) / (j, code, centroid) shapes the one-shot
@@ -527,18 +544,6 @@ object IncrementalVecIndex {
         .localCheckpoint(eager = true)
     } finally BucketState.releaseReads(lease)
   }
-
-  /** Segment fold for the LIVE generation — the safe compaction entry
-    * for this store: callers must never compact the ROOT of a cut-over
-    * index (its manifest is dead state — the fold would rewrite deleted
-    * or superseded dirs and GC against the wrong manifest). Resolves
-    * the generation pointer, then dispatches the standard concurrent
-    * fold with this store's tombstone resolve.
-    */
-  def maybeCompactConcurrent(spark: SparkSession, indexDir: String,
-                             async: Boolean = false): Unit =
-    BucketState.maybeCompactConcurrent(spark, liveDir(spark, indexDir), async,
-      BucketState.unionFold(Retraction.foldTombstones(_, "vec_id")))
 
   /** Build generation N+1 from the accumulated corpus and atomically cut
     * the serving pointer over to it. The old generation serves every

@@ -39,10 +39,9 @@ import org.apache.spark.sql.functions._
   *  - CALLER CONTRACT: retracted ids name PREVIOUSLY-INGESTED ids.
   *    Ingestion is ascending, so no future row can match an existing
   *    tombstone — which is what lets compaction drop masked rows AND
-  *    the tombstones masking them in one fold (the `resolve` of the
-  *    store's [[graft.streaming.BucketState.unionFold]], run by the one
-  *    fold, `BucketState.compactConcurrent`). Retracting a
-  *    never-ingested id masks nothing and is dropped at the next fold.
+  *    the tombstones masking them in one fold ([[foldTombstones]], the
+  *    `resolve` of each store's own `fold`). Retracting a never-ingested
+  *    id masks nothing and is dropped at the next fold.
   */
 private[graft] object Retraction {
 
@@ -115,20 +114,22 @@ private[graft] object Retraction {
   def maskIfAny(df: DataFrame, tombs: Option[DataFrame], idCol: String): DataFrame =
     tombs.fold(df)(t => mask(df, t, idCol))
 
-  /** Compaction fold for a tombstoned store: apply every tombstone to
-    * the data rows, keep rows of `exempt` kinds (relations keyed by
-    * LABELS, not members — the keep-best forwarding graph), and drop the
+  /** The tombstone resolve of a curation store's fold: apply every
+    * tombstone to the data rows, keep rows of `exempt` kinds, and drop the
     * tombstones themselves (sound per the ascending-id caller contract
-    * above — nothing a folded tombstone could ever mask remains).
-    * `idCol` is the store's id column; tombstone rows are recognized by
-    * their reserved bucket.
-    *
-    * `keepTombstones`: set by stores whose SNAPSHOT masks state outside
-    * the bucket store — the near-dup index's admitted registry is
-    * immutable per-batch answer files, so its tombstone relation must
-    * survive folds as the registry's standing mask (bounded by lifetime
-    * takedowns: one narrow row each — at-rest cost is nil next to the
-    * band state the fold does reclaim).
+    * above — nothing a folded tombstone could ever mask remains). `idCol`
+    * is the store's id column; tombstone rows are recognized by their
+    * reserved bucket. Each store names its arguments once, in its own
+    * `fold`: the exact and near-dup indexes on `doc_id`, the vector index
+    * on `vec_id`, and
+    *  - `exempt`: keep-best's forwarding rows, a relation keyed by
+    *    cluster LABELS, not members;
+    *  - `keepTombstones`: the near-dup index, whose snapshot masks state
+    *    outside the bucket store — its admitted registry is immutable
+    *    per-batch answer files, so its tombstone relation must survive
+    *    folds as the registry's standing mask (bounded by lifetime
+    *    takedowns: one narrow row each — at-rest cost is nil next to the
+    *    band state the fold does reclaim).
     */
   def foldTombstones(all: DataFrame, idCol: String,
                      exempt: Option[Column] = None,

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Trace
 
@@ -12,9 +13,10 @@ import graft.Trace
   * protocol's shared parts: the one segment reader ([[readBuckets]]),
   * the one batch protocol ([[appendBatch]]: leased read → layout and
   * replay checks → reserve → stage → the one append commit
-  * [[commitAppend]] → release → GC), and the one fold
-  * ([[compactConcurrent]], dispatched by [[maybeCompactConcurrent]]).
-  * The LSM replica stages before its fingerprint exists, so it shares
+  * [[commitAppend]] → release → GC), the one fold ([[compactConcurrent]]
+  * with the store's own [[Fold]], dispatched by [[maybeCompactConcurrent]]
+  * and tripped by [[compactIfDue]]) and the one streaming ingress
+  * ([[runIngest]]). The LSM replica stages before its fingerprint exists, so it shares
   * the parts below the check instead: [[stagingVersion]],
   * [[commitAppend]], the release rule of [[releaseVersion]] and the
   * conditional sweep [[gcVersionsIfDirty]].
@@ -782,11 +784,13 @@ private[graft] object BucketState {
 
   // ---- the one fold ----------------------------------------------------
   //
-  // Every bucketed store compacts through [[compactConcurrent]]: the
-  // four curation stores with [[unionFold]], the CDC LSM replica with
-  // its own fold (`CdcStream.compactLsm`). A store supplies only what
-  // its fold writes; the reservation, the locked segment-preserving
-  // swap, the view bookkeeping and the GC are this one code.
+  // Every bucketed store compacts through [[compactConcurrent]] with the
+  // fold it declares next to its layout: the four curation stores with
+  // [[unionFold]] through their tombstone resolve, the CDC LSM replica
+  // with its own (`CdcStream.lsmFold`). No caller builds a store's fold.
+  // A store supplies only what its fold writes; the reservation, the
+  // locked segment-preserving swap, the view bookkeeping, the GC and the
+  // `fold` trace span are this one code, tripped by [[compactIfDue]].
 
   /** What one fold writes, built from the manifest snapshot it folds:
     * `rows` (with `p`; no row may move across buckets) and `staged`, run
@@ -796,27 +800,30 @@ private[graft] object BucketState {
     */
   final case class Folded(rows: DataFrame, staged: String => Unit = _ => ())
 
-  /** A store's fold of snapshot `m` of `stateDir`; None when `m` holds
+  /** A store's fold, named by its store (`lsm`, `exact`, `nd`, `kb`,
+    * `vec`: the `store` of its `fold` span). `of(spark, stateDir, m)` is
+    * what folding snapshot `m` of `stateDir` writes; None when `m` holds
     * nothing to fold.
     */
-  type Fold = (SparkSession, String, Manifest) => Option[Folded]
+  final case class Fold(store: String,
+                        of: (SparkSession, String, Manifest) => Option[Folded])
 
-  /** The curation stores' fold: every referenced row through `resolve` —
-    * identity for plain union stores, a tombstone fold for stores with
-    * retraction ([[graft.operators.Retraction]]): masked data rows AND
-    * the tombstones masking them drop together, which is sound because a
-    * tombstone can never mask a FUTURE row (ingestion is ascending and
-    * tombstones name already-ingested ids), so once the fold has applied
-    * a tombstone to every stored row, nothing it could ever mask remains
-    * — including mid-fold late segments (late data ids are above the
-    * tombstone's; a late RETRACTION segment survives the swap verbatim
-    * and folds next time). `resolve` must preserve the `p` column.
+  /** A curation store's fold: every referenced row through `resolve`, the
+    * store's tombstone fold ([[graft.operators.Retraction.foldTombstones]]).
+    * Masked data rows AND the tombstones masking them may drop together,
+    * because a tombstone can never mask a FUTURE row (ingestion is
+    * ascending and tombstones name already-ingested ids), so once the
+    * fold has applied a tombstone to every stored row, nothing it could
+    * ever mask remains — including mid-fold late segments (late data ids
+    * are above the tombstone's; a late RETRACTION segment survives the
+    * swap verbatim and folds next time). `resolve` must preserve the `p`
+    * column.
     */
-  def unionFold(resolve: DataFrame => DataFrame = identity): Fold =
-    (spark, stateDir, m) =>
+  def unionFold(store: String, resolve: DataFrame => DataFrame): Fold =
+    Fold(store, (spark, stateDir, m) =>
       if (m.buckets.isEmpty) None
       else Some(Folded(resolve(readBuckets(spark, stateDir, m.buckets,
-        sys.error("unreachable — manifest non-empty")))))
+        sys.error("unreachable — manifest non-empty"))))))
 
   /** Compact a bucket-state dir: rewrite every live bucket into ONE fresh
     * version dir and repoint the manifest at it. After many incremental
@@ -841,6 +848,8 @@ private[graft] object BucketState {
     * dirs can't be GC'd mid-fold: they stay manifest-referenced until
     * this very swap, and at most one fold runs per dir
     * ([[maybeCompactConcurrent]]'s flag, or the caller's own thread).
+    * A fold that writes is one `fold` span of `fold.store`, whose batch
+    * is the last batch the folded snapshot had committed (−1 for none).
     * `beforeSwap` is a test seam: it runs after `staged`, before the
     * locked swap. A fold that throws before its swap releases its
     * version uncommitted, which marks the dir GC-dirty: the next
@@ -848,44 +857,45 @@ private[graft] object BucketState {
     * prior state must hold a [[readManifestLeased]] lease, or the
     * post-swap GC could remove what they are scanning.
     */
-  def compactConcurrent(spark: SparkSession, stateDir: String,
-                        beforeSwap: () => Unit = () => (),
-                        fold: Fold = unionFold()): Unit = {
+  def compactConcurrent(spark: SparkSession, stateDir: String, fold: Fold,
+                        beforeSwap: () => Unit = () => ()): Unit = {
     val m = readManifest(spark, stateDir)
-    fold(spark, stateDir, m).foreach { f =>
-      val newVersion = reserveVersion(stateDir, m.buckets.values.flatten.max + 1)
-      val dir = s"$stateDir/v=$newVersion"
-      var committed = false
-      try {
-        f.rows.repartition(org.apache.spark.sql.functions.col("p"))
-          .write.mode("overwrite").partitionBy("p").parquet(dir)
-        f.staged(dir)
-        val outBuckets = listBuckets(spark, dir).toSet
-        beforeSwap()
-        val merged = manifestLock(stateDir).synchronized {
-          val mNow = readManifest(spark, stateDir)
-          val out = (mNow.buckets.keySet ++ outBuckets).flatMap { b =>
-            val late = mNow.buckets.getOrElse(b, Set.empty[Long]) --
-              m.buckets.getOrElse(b, Set.empty[Long])
-            val segs = late ++
-              (if (outBuckets.contains(b)) Set(newVersion) else Set.empty[Long])
-            if (segs.isEmpty) None else Some(b -> segs)
-          }.toMap
-          commitManifest(spark, stateDir, out, mNow.fp)
-          committed = true
-          out
-        }
-        // retire the (now stale-by-key) session view so its lease doesn't
-        // defer the sweep, and seed the streaming signature with the
-        // folded pairs so the live stream resumes caching on its first
-        // post-fold read; a concurrent ingest mid-read is safe — blocks
-        // recompute from files its OWN lease still pins
-        invalidateView(stateDir)
-        lastSeen.put(stateDir, merged.toSeq
-          .flatMap { case (b, vs) => vs.map(v => (v, b)) }.toSet)
-        markGcDirty(stateDir) // superseded dirs exist until the sweep below
-        gcVersions(spark, stateDir)
-      } finally releaseVersion(stateDir, newVersion, committed)
+    fold.of(spark, stateDir, m).foreach { f =>
+      Trace.span(fold.store, "fold", m.fp.fold(-1L)(_._1 - 1)) {
+        val newVersion = reserveVersion(stateDir, m.buckets.values.flatten.max + 1)
+        val dir = s"$stateDir/v=$newVersion"
+        var committed = false
+        try {
+          f.rows.repartition(org.apache.spark.sql.functions.col("p"))
+            .write.mode("overwrite").partitionBy("p").parquet(dir)
+          f.staged(dir)
+          val outBuckets = listBuckets(spark, dir).toSet
+          beforeSwap()
+          val merged = manifestLock(stateDir).synchronized {
+            val mNow = readManifest(spark, stateDir)
+            val out = (mNow.buckets.keySet ++ outBuckets).flatMap { b =>
+              val late = mNow.buckets.getOrElse(b, Set.empty[Long]) --
+                m.buckets.getOrElse(b, Set.empty[Long])
+              val segs = late ++
+                (if (outBuckets.contains(b)) Set(newVersion) else Set.empty[Long])
+              if (segs.isEmpty) None else Some(b -> segs)
+            }.toMap
+            commitManifest(spark, stateDir, out, mNow.fp)
+            committed = true
+            out
+          }
+          // retire the (now stale-by-key) session view so its lease doesn't
+          // defer the sweep, and seed the streaming signature with the
+          // folded pairs so the live stream resumes caching on its first
+          // post-fold read; a concurrent ingest mid-read is safe — blocks
+          // recompute from files its OWN lease still pins
+          invalidateView(stateDir)
+          lastSeen.put(stateDir, merged.toSeq
+            .flatMap { case (b, vs) => vs.map(v => (v, b)) }.toSet)
+          markGcDirty(stateDir) // superseded dirs exist until the sweep below
+          gcVersions(spark, stateDir)
+        } finally releaseVersion(stateDir, newVersion, committed)
+      }
     }
   }
 
@@ -904,14 +914,14 @@ private[graft] object BucketState {
     * running fold will observe the extra segments on its next trip).
     */
   def maybeCompactConcurrent(spark: SparkSession, stateDir: String,
-                             async: Boolean, fold: Fold = unionFold()): Unit =
-    if (!async) compactConcurrent(spark, stateDir, fold = fold)
+                             async: Boolean, fold: Fold): Unit =
+    if (!async) compactConcurrent(spark, stateDir, fold)
     else {
       val flag = compactingFlags.getOrElseUpdate(
         stateDir, new java.util.concurrent.atomic.AtomicBoolean(false))
       if (flag.compareAndSet(false, true)) {
         val t = new Thread(() => {
-          try compactConcurrent(spark, stateDir, fold = fold)
+          try compactConcurrent(spark, stateDir, fold)
           catch {
             case e: Throwable =>
               System.err.println(
@@ -922,6 +932,54 @@ private[graft] object BucketState {
         t.start()
       }
     }
+
+  /** The one fold trigger rule: a store whose max segments per bucket is
+    * `segs` owes a fold at `threshold` (0 = never).
+    */
+  def foldDue(segs: Int, threshold: Int): Boolean = threshold > 0 && segs >= threshold
+
+  /** The one fold trigger: read `stateDir`'s manifest once and, when its
+    * max segments per bucket reach `threshold` ([[foldDue]]), dispatch
+    * `fold` through [[maybeCompactConcurrent]]. Returns that max (read
+    * before the fold) for the caller's batch hooks and counters. Measured
+    * read amplification is bounded at `threshold` by construction, and a
+    * store whose drops land in few buckets per batch folds rarely.
+    */
+  def compactIfDue(spark: SparkSession, stateDir: String, threshold: Int,
+                   async: Boolean, fold: Fold): Int = {
+    val segs = readManifest(spark, stateDir).maxSegments
+    if (foldDue(segs, threshold)) maybeCompactConcurrent(spark, stateDir, async, fold)
+    segs
+  }
+
+  /** The one streaming ingress of a bucketed store. A (re)started stream
+    * sweeps `stateDir` once (a crashed writer may have left staged dirs
+    * this process never saw); then each micro-batch of `input` is one
+    * `step` keyed by the checkpoint's batchId, and the store's replay
+    * guarantees are exactly Structured Streaming's foreachBatch contract
+    * (a crash between the manifest commit and the checkpoint commit
+    * replays the batch; the recorded fingerprint makes it a no-op).
+    * `step` commits the batch and returns the fold its store owes, which
+    * [[compactIfDue]] trips at `compactWhenSegments`, synchronously or on
+    * a background thread (`async`: commits keep landing while the store
+    * folds, made safe by the locked commits and read leases). `onBatch`
+    * gets (batchId, max segments per bucket after the commit).
+    */
+  def runIngest(input: DataFrame, stateDir: String, checkpointDir: String,
+                compactWhenSegments: Int, async: Boolean,
+                onBatch: (Long, Int) => Unit = (_, _) => ())(
+                step: (DataFrame, Long) => Fold): StreamingQuery = {
+    markGcDirty(stateDir)
+    input.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val fold = step(batch, batchId)
+        onBatch(batchId,
+          compactIfDue(batch.sparkSession, stateDir, compactWhenSegments, async, fold))
+      }
+      .start()
+  }
 
   /** Delete `v=` dirs no manifest entry references anymore. The live set
     * is derived from a FRESH manifest read under the per-dir manifest

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.Trace
 import graft.cdc.{CdcApply, CdcSchema, Changelog}
@@ -211,34 +211,29 @@ object CdcStream {
                 spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
                 imageType: org.apache.spark.sql.types.StructType =
                   CdcSchema.invoiceType,
-                tableName: String = "invoice"): StreamingQuery = {
-    BucketState.markGcDirty(stateDir) // a (re)started stream sweeps once
-    raw.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        val spark = rawBatch.sparkSession
-        val cached = rawBatch.persist() // history route + sliced parse + dead letters
-        try {
-          Changelog.schemaHistory(cached, valueCol)
-            .write.mode("overwrite").parquet(s"$schemaHistoryDir/batch=$batchId")
-          val ddls = fullHistory(spark, schemaHistoryDir, tableName)
-          val (espec, etype, epochs) =
-            graft.cdc.SchemaEvolution.evolveFull(spec, imageType, ddls)
-          Changelog.deadLettersEpochs(cached, epochs, etype, valueCol)
-            .write.mode("overwrite").parquet(s"$deadLetterDir/batch=$batchId")
-          val watermark = ddls.map(_._1).maxOption.getOrElse(Long.MinValue)
-          lsmStep(Changelog.fromEnvelopeJsonEpochs(cached, epochs, etype, valueCol),
-            batchId, auditDir, stateDir, nBuckets, espec,
-            CompactWhenSegments, asyncCompaction = false,
-            stateReader = Some(remappedBucketRead(
-              spark, stateDir, _, spec, imageType, ddls, espec, etype)),
-            onStaged = Some(writeSchemaWatermark(spark, _, watermark)))
-        } finally cached.unpersist()
-        ()
-      }
-      .start()
-  }
+                tableName: String = "invoice"): StreamingQuery =
+    BucketState.runIngest(raw, stateDir, checkpointDir, CompactWhenSegments,
+        async = false) { (rawBatch, batchId) =>
+      val spark = rawBatch.sparkSession
+      val cached = rawBatch.persist() // history route + sliced parse + dead letters
+      try {
+        Changelog.schemaHistory(cached, valueCol)
+          .write.mode("overwrite").parquet(s"$schemaHistoryDir/batch=$batchId")
+        val ddls = fullHistory(spark, schemaHistoryDir, tableName)
+        val (espec, etype, epochs) =
+          graft.cdc.SchemaEvolution.evolveFull(spec, imageType, ddls)
+        Changelog.deadLettersEpochs(cached, epochs, etype, valueCol)
+          .write.mode("overwrite").parquet(s"$deadLetterDir/batch=$batchId")
+        val watermark = ddls.map(_._1).maxOption.getOrElse(Long.MinValue)
+        val onStaged = Some(writeSchemaWatermark(spark, _: String, watermark))
+        applyLsmBatch(Changelog.fromEnvelopeJsonEpochs(cached, epochs, etype, valueCol),
+          batchId, auditDir, stateDir, nBuckets, espec, onStaged)
+        // the fold reads through this batch's schema history and stamps
+        // its output like a segment
+        lsmFold(nBuckets, Some(remappedBucketRead(
+          spark, stateDir, _, spec, imageType, ddls, espec, etype)), onStaged)
+      } finally cached.unpersist()
+    }
 
   /** `tableName`'s own full-DDL history implied by a schema-history dir:
     * (pos, statement) in pos order — the bounded driver-side read
@@ -481,38 +476,15 @@ object CdcStream {
                         checkpointDir: String, nBuckets: Int = 64,
                         spec: CdcSchema.CdcTableSpec = CdcSchema.invoiceSpec,
                         compactWhenSegments: Int = CompactWhenSegments,
-                        asyncCompaction: Boolean = false): StreamingQuery = {
-    BucketState.markGcDirty(stateDir) // a (re)started stream sweeps once
-    changelog.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (rawBatch: DataFrame, batchId: Long) =>
-        lsmStep(rawBatch, batchId, auditDir, stateDir, nBuckets, spec,
-          compactWhenSegments, asyncCompaction)
-      }
-      .start()
-  }
+                        asyncCompaction: Boolean = false): StreamingQuery =
+    BucketState.runIngest(changelog, stateDir, checkpointDir, compactWhenSegments,
+        asyncCompaction) { (rawBatch, batchId) =>
+      applyLsmBatch(rawBatch, batchId, auditDir, stateDir, nBuckets, spec)
+      lsmFold(nBuckets)
+    }
 
   /** Max segments per bucket at which both runners fold by default. */
-  private val CompactWhenSegments = 8
-
-  /** One micro-batch of either runner: [[applyLsmBatch]], then a
-    * [[maybeCompact]] once the max segments-per-bucket reaches
-    * `compactWhenSegments` (0 = never). `stateReader` and `onStaged` are
-    * the schema hooks of [[readLsm]] / [[applyLsmBatch]] / [[compactLsm]].
-    */
-  private def lsmStep(batch: DataFrame, batchId: Long, auditDir: String,
-                      stateDir: String, nBuckets: Int, spec: CdcSchema.CdcTableSpec,
-                      compactWhenSegments: Int, asyncCompaction: Boolean,
-                      stateReader: Option[Map[Long, Set[Long]] => DataFrame] = None,
-                      onStaged: Option[String => Unit] = None): Unit = {
-    applyLsmBatch(batch, batchId, auditDir, stateDir, nBuckets, spec, onStaged)
-    val spark = batch.sparkSession
-    if (compactWhenSegments > 0 &&
-        BucketState.readManifest(spark, stateDir).maxSegments >= compactWhenSegments)
-      maybeCompact(spark, stateDir, nBuckets, spec, asyncCompaction,
-        stateReader, onStaged)
-  }
+  private[graft] val CompactWhenSegments = 8
 
   /** Run [[compactLsm]]'s fold through the one dispatcher,
     * [[BucketState.maybeCompactConcurrent]]: now (sync) or on a
@@ -668,7 +640,8 @@ object CdcStream {
   //    delivered out of order across micro-batches, so no fold can
   //    prove a horizon will never mask a straggler — the tombstone is
   //    the store's standing mask, bounded by lifetime takedowns (the
-  //    same stance as the near-dup index's keepTombstones).
+  //    same stance as the near-dup index's fold, which keeps its
+  //    tombstones).
   //  - Zero cost when unused: no `p = -3` manifest entry ⇔ no tombstone
   //    exists, and every read skips the bucket read and the mask join
   //    (the hasTombs discipline).
@@ -955,18 +928,18 @@ object CdcStream {
                  beforeSwap: () => Unit = () => (),
                  stateReader: Option[Map[Long, Set[Long]] => DataFrame] = None,
                  onStaged: Option[String => Unit] = None): Unit =
-    BucketState.compactConcurrent(spark, stateDir, beforeSwap,
-      lsmFold(nBuckets, stateReader, onStaged))
+    BucketState.compactConcurrent(spark, stateDir,
+      lsmFold(nBuckets, stateReader, onStaged), beforeSwap)
 
   /** The replica's fold for [[BucketState.compactConcurrent]]: [[readLsm]]
     * then [[resolveSegments]] under the horizon, plus the horizon row and
     * the kept tombstones; before the swap, the `onStaged` stamp and the
     * raised `_TTFLOOR`.
     */
-  private def lsmFold(nBuckets: Int,
-                      stateReader: Option[Map[Long, Set[Long]] => DataFrame],
-                      onStaged: Option[String => Unit]): BucketState.Fold =
-    (spark, stateDir, m) =>
+  private[graft] def lsmFold(nBuckets: Int,
+                             stateReader: Option[Map[Long, Set[Long]] => DataFrame] = None,
+                             onStaged: Option[String => Unit] = None): BucketState.Fold =
+    BucketState.Fold("lsm", (spark, stateDir, m) =>
       // nothing to fold on an empty store, or one holding only retraction
       // tombstones (a takedown can precede the first data batch)
       if (!m.buckets.keys.exists(_ != LsmRetractBucket)) None
@@ -991,8 +964,8 @@ object CdcStream {
         // shuffle the keyspace), so no fold can prove a horizon will
         // never mask again — a straggler at or below rpos delivered
         // after the fold must still be erased. The at-rest cost is one
-        // narrow row per lifetime takedown (the standing-mask stance the
-        // near-dup index's keepTombstones documents); the rows the
+        // narrow row per lifetime takedown (the standing-mask stance of
+        // the near-dup index's fold); the rows the
         // horizon already covers DO leave the disk here.
         val keptTombs = segs.tombs.map(_
           .select(col("_rkey").as("key"), col("rpos").as("pos"),
@@ -1027,5 +1000,5 @@ object CdcStream {
             BucketState.writeAtomically(spark, s"$stateDir/_TTFLOOR",
               math.max(folded, readTtFloor(spark, stateDir)).toString)
           }))
-      }
+      })
 }

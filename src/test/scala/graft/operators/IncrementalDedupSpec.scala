@@ -109,30 +109,67 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(snap === Set(1L, 2L, 6L)) // doc 5 is duplicate content across batches
   }
 
-  test("adaptive policy: compacts when MEASURED segments/bucket reach the bound") {
+  /** One single-doc drop per text through a store's `runIngest` (given
+    * the stream, index dir, checkpoint dir and `onBatch`), at
+    * `compactWhenSegments = 2` over ONE bucket, so segments grow one per
+    * batch: the bound holds at every observation and is actually hit
+    * (compaction fired, not vacuously bounded), the index ends compacted,
+    * and each fold wrote one `fold` span named by `store`. Returns the
+    * index dir.
+    */
+  private def adaptiveBound(store: String, texts: Seq[String])(
+      run: (org.apache.spark.sql.DataFrame, String, String, (Long, Int) => Unit) =>
+        org.apache.spark.sql.streaming.StreamingQuery): String = {
     import org.apache.spark.sql.types._
     val in = java.nio.file.Files.createTempDirectory("increm-adapt").toString
     val dir = tmp(); val ckpt = tmp()
-    (0 until 4).foreach { b =>
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/d$b.json"),
-        s"""{"doc_id":${b + 1},"text":"w$b x$b"}""".getBytes)
+    // distinct mtimes: the file source takes files in mtime order, and
+    // near-dup admission assumes ascending doc_ids
+    texts.zipWithIndex.foreach { case (t, b) =>
+      val f = java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/d$b.json"),
+        s"""{"doc_id":${b + 1},"text":"$t"}""".getBytes)
+      java.nio.file.Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + b * 1000L))
     }
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
-    // nBuckets=1 forces every batch onto one bucket: segments grow 1/batch
     val observed = scala.collection.mutable.ListBuffer.empty[Int]
-    val q = IncrementalDedup.runIngest(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(in),
-      dir, ckpt, compactWhenSegments = 2, nBuckets = 1,
-      onBatch = (_, segs) => { observed.synchronized { observed += segs }; () })
-    q.processAllAvailable(); q.stop()
-    assert(IncrementalDedup.snapshot(spark, dir).count() === 4)
-    // the bound held at every observation point, and was actually hit
-    // (compaction fired, not vacuously bounded)
+    val sink = s"${tmp()}/trace.jsonl"
+    graft.Trace.withSink(sink) {
+      val q = run(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(in),
+        dir, ckpt, (_, segs) => { observed.synchronized { observed += segs }; () })
+      q.processAllAvailable(); q.stop()
+    }
     assert(observed.nonEmpty && observed.max === 2, s"observed=$observed")
-    val live = graft.streaming.BucketState.readManifest(spark, dir)
-      .buckets.values.flatten.toSet
+    val live = BucketState.readManifest(spark, dir).buckets.values.flatten.toSet
     assert(live.size === 1, s"expected compacted index, live versions: $live")
+    val folds = java.nio.file.Files.readAllLines(java.nio.file.Paths.get(sink))
+      .toArray.map(_.toString).filter(_.contains("\"phase\":\"fold\""))
+    assert(folds.length === observed.count(_ >= 2) &&
+      folds.forall(_.contains(s"\"store\":\"$store\"")), folds.mkString("\n"))
+    dir
+  }
+
+  test("adaptive policy: compacts when MEASURED segments/bucket reach the bound") {
+    val dir = adaptiveBound("exact", (0 until 4).map(b => s"w$b x$b")) {
+      (docs, dir, ckpt, onBatch) => IncrementalDedup.runIngest(docs, dir, ckpt,
+        compactWhenSegments = 2, nBuckets = 1, onBatch = onBatch)
+    }
+    assert(IncrementalDedup.snapshot(spark, dir).count() === 4)
+  }
+
+  test("adaptive policy: the near-dup runIngest compacts at the bound; admissions unchanged by its folds") {
+    // doc 3 is a near-dup of doc 1 and arrives after the first fold:
+    // it must still be rejected against the folded band rows
+    val a = "alpha beta gamma delta epsilon zeta eta theta"
+    val dir = adaptiveBound("nd", Seq(a, "one two three four five six seven eight",
+        s"$a iota", "red orange yellow green blue indigo violet black")) {
+      (docs, dir, ckpt, onBatch) => IncrementalNearDup.runIngest(docs, dir, ckpt,
+        compactWhenSegments = 2, nBuckets = 1, onBatch = onBatch)
+    }
+    assert(IncrementalNearDup.admittedSnapshot(spark, dir).collect()
+      .map(_.getLong(0)).toSet === Set(1L, 2L, 4L))
   }
 
   test("adaptive policy: does NOT compact while drops land in disjoint buckets") {
@@ -168,7 +205,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val before = IncrementalDedup.snapshot(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
 
-    graft.streaming.BucketState.compactConcurrent(spark, dir)
+    IncrementalDedup.compact(spark, dir)
     val m = graft.streaming.BucketState.readManifest(spark, dir)
     assert(m.buckets.values.flatten.toSet.size === 1, "one live version after compaction")
     val after = IncrementalDedup.snapshot(spark, dir)

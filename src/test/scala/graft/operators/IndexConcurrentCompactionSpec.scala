@@ -47,7 +47,7 @@ class IndexConcurrentCompactionSpec extends AnyFunSuite {
 
     // between the fold and the swap, batch 2 commits (one dup of doc 2,
     // one new doc) — the deterministic interleaving the seam exists for
-    BucketState.compactConcurrent(spark, dir, beforeSwap = () =>
+    BucketState.compactConcurrent(spark, dir, IncrementalDedup.fold, beforeSwap = () =>
       IncrementalDedup.ingest(spark, dir,
         docs(5L -> "gamma delta", 6L -> "eta theta"), batchId = 2, nBuckets = 4))
 
@@ -94,7 +94,7 @@ class IndexConcurrentCompactionSpec extends AnyFunSuite {
     // mid-fold, the upgrade batch commits: doc 3 is the higher-quality
     // near-dup of doc 1 — the retention decision and its member/fwd
     // rows must survive the segment-preserving swap
-    BucketState.compactConcurrent(spark, dir, beforeSwap = () =>
+    BucketState.compactConcurrent(spark, dir, IncrementalKeepBest.fold, beforeSwap = () =>
       KeepBestFeed.ingest(spark, nd, dir, docs(3L -> high),
         batchId = 1, nBuckets = 4))
     val got = IncrementalKeepBest.snapshot(spark, dir)
@@ -125,9 +125,7 @@ class IndexConcurrentCompactionSpec extends AnyFunSuite {
       }
       IncrementalNearDup.ingest(spark, dir, docs(rows: _*), batchId = b,
         nBuckets = 8)
-      val m = BucketState.readManifest(spark, dir)
-      if (m.buckets.nonEmpty && m.buckets.values.map(_.size).max >= 3)
-        BucketState.maybeCompactConcurrent(spark, dir, async = true)
+      IncrementalNearDup.compact(spark, dir, threshold = 3, async = true)
     }
     val deadline = System.currentTimeMillis() + 60000
     while (BucketState.compactionInFlight(dir) &&
@@ -178,7 +176,7 @@ class IndexConcurrentCompactionSpec extends AnyFunSuite {
       docs(3L -> "epsilon zeta", 4L -> "eta theta"), batchId = 1, nBuckets = 4)
     val before = snap(dir)
     var mid: DataFrame = null
-    BucketState.compactConcurrent(spark, dir, beforeSwap = () =>
+    BucketState.compactConcurrent(spark, dir, IncrementalDedup.fold, beforeSwap = () =>
       mid = IncrementalDedup.snapshot(spark, dir))
     // the fold swapped and GC'd every dir the mid-fold snapshot read
     assert(mid.collect().map(r => (r.getString(0), r.getLong(1))).toSet
@@ -210,7 +208,7 @@ class IndexConcurrentCompactionSpec extends AnyFunSuite {
       IncrementalVecIndex.ingest(spark, dir,
         vecs.filter(ccol >= lo + b * step && ccol < lo + (b + 1) * step),
         b).count()
-      BucketState.maybeCompactConcurrent(spark, dir, async = true)
+      IncrementalVecIndex.compact(spark, dir, async = true)
       val rows = IncrementalVecIndex.searchTopk(spark, dir, sfDir, q).collect()
       assert(rows.length === 10)
       val order = rows.map(r => (-r.getDouble(1), r.getLong(0))).toSeq
@@ -222,7 +220,7 @@ class IndexConcurrentCompactionSpec extends AnyFunSuite {
     // quiesced: the final serve equals a serve over the folded store
     val a = IncrementalVecIndex.searchTopk(spark, dir, sfDir, q).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    BucketState.compactConcurrent(spark, dir)
+    IncrementalVecIndex.compact(spark, dir)
     val b = IncrementalVecIndex.searchTopk(spark, dir, sfDir, q).collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(a === b)

@@ -55,8 +55,7 @@ class RetractionSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("fingerprint"))
 
     // compaction folds masked rows AND tombstones; answers unchanged
-    BucketState.compactConcurrent(spark, d,
-      fold = BucketState.unionFold(Retraction.foldTombstones(_, "doc_id")))
+    IncrementalDedup.compact(spark, d)
     assert(idsOf(IncrementalDedup.snapshot(spark, d)) === Set(3L, 4L, 5L))
     assert(!BucketState.readManifest(spark, d).buckets
       .contains(Retraction.TombBucket),
@@ -87,9 +86,7 @@ class RetractionSpec extends AnyFunSuite {
     // relation (the admitted registry is immutable per-batch files and
     // needs its standing mask); admissions keep running against the
     // surviving index (5 near-dups the surviving 3 → rejected)
-    BucketState.compactConcurrent(spark, d,
-      fold = BucketState.unionFold(
-        Retraction.foldTombstones(_, "doc_id", keepTombstones = true)))
+    IncrementalNearDup.compact(spark, d)
     assert(idsOf(IncrementalNearDup.admittedSnapshot(spark, d)) === Set(2L, 3L))
     val b2 = Seq((5L, tA)).toDF("doc_id", "text")
     IncrementalNearDup.ingest(spark, d, b2, 2, nBuckets = 8).count()
@@ -161,12 +158,44 @@ class RetractionSpec extends AnyFunSuite {
     assert(!snap2.exists(_._1 == 1L))
     assert(snap2.exists(_._1 == 10L))
     // compaction folds tombstones (forwarding rows exempt); unchanged
-    BucketState.compactConcurrent(spark, d,
-      fold = BucketState.unionFold(Retraction.foldTombstones(_, "doc_id",
-        exempt = Some(col("band") === -3L))))
+    IncrementalKeepBest.compact(spark, d)
     val snap3 = IncrementalKeepBest.snapshot(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toList
     assert(snap3 === snap2.sortBy(_._1))
+    graft.Shared.deleteDirTree(d)
+  }
+
+  test("keep-best: a fold keeps a retracted label's forwarding rows, so its live members stay merged") {
+    val nd = freshDir("ret-kbfwd-nd")
+    val d = freshDir("ret-kbfwd")
+    // cluster A = {10}; cluster B = {20, 21}, both filed under label 20;
+    // then a chain of docs morphing vocab A into vocab B (three tokens a
+    // step, the IncrementalKeepBestSpec bridge) merges B into A, which
+    // writes the forwarding row 20 → 10. Retracting doc 20 leaves member
+    // 21 on label 20, resolved only through that row.
+    def tok(v: Char, i: Int) = s"${v}word$i"
+    val n = 60
+    val a = (0 until n).map(tok('a', _)).mkString(" ")
+    val b = (0 until n).map(tok('b', _)).mkString(" ")
+    def chain(step: Int) = (0 until n)
+      .map(j => if (j < 3 * step) tok('b', j) else tok('a', j)).mkString(" ")
+    def clusters() = IncrementalKeepBest.snapshot(spark, d).collect()
+      .map(r => (r.getLong(0), r.getLong(3))).toList
+    KeepBestFeed.ingest(spark, nd, d, Seq((10L, a)).toDF("doc_id", "text"), 0,
+      nBuckets = 4).count()
+    KeepBestFeed.ingest(spark, nd, d,
+      Seq((20L, b), (21L, b + " extraone extratwo")).toDF("doc_id", "text"), 1,
+      nBuckets = 4).count()
+    KeepBestFeed.ingest(spark, nd, d,
+      (1 until 20).map(i => (30L + i, chain(i))).toDF("doc_id", "text"), 2,
+      nBuckets = 4).count()
+    KeepBestFeed.ingest(spark, nd, d, Seq.empty[(Long, String)].toDF("doc_id", "text"),
+      3, nBuckets = 4, retractIds = Some(Seq(20L).toDF("doc_id"))).count()
+    val before = clusters()
+    // one cluster of 21 live members: 10, the 19 chain docs and 21
+    assert(before === List((10L, 21L)), "the corpus no longer merges B into A")
+    IncrementalKeepBest.compact(spark, d)
+    assert(clusters() === before)
     graft.Shared.deleteDirTree(d)
   }
 
@@ -191,8 +220,7 @@ class RetractionSpec extends AnyFunSuite {
       .collect().map(_.getLong(0)).toSeq
     assert(!top1.contains(victim))
     // compaction fold: same surviving rows, same serving answer
-    BucketState.compactConcurrent(spark, d,
-      fold = BucketState.unionFold(Retraction.foldTombstones(_, "vec_id")))
+    IncrementalVecIndex.compact(spark, d)
     val top2 = IncrementalVecIndex.searchTopk(spark, d, dir, q)
       .collect().map(_.getLong(0)).toSeq
     assert(top2 === top1)

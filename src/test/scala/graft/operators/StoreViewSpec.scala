@@ -61,9 +61,8 @@ class StoreViewSpec extends AnyFunSuite {
       batchId = 2, retractIds = Some(Seq(1L).toDF("doc_id")))
     viewEqualsDirect(dir)
     // fold: pairs are REMOVED from the manifest — full-reset path
-    // (the exact store's own fold resolve, as the soak wires it)
-    BucketState.compactConcurrent(spark, dir,
-      fold = BucketState.unionFold(Retraction.foldTombstones(_, "doc_id")))
+    // (the exact store's own fold)
+    IncrementalDedup.compact(spark, dir)
     viewEqualsDirect(dir)
     // append after the reset
     IncrementalDedup.ingest(spark, dir, docsOf(30L -> "mm nn"), batchId = 3)

@@ -87,7 +87,6 @@ class FoldCrashSpec extends AnyFunSuite {
     def docs(rows: (Long, String)*) = rows.toDF("doc_id", "text")
     def snap() = IncrementalDedup.snapshot(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
-    val fold = BucketState.unionFold(Retraction.foldTombstones(_, "doc_id"))
 
     IncrementalDedup.ingest(spark, dir, docs(1L -> "aa bb", 2L -> "cc dd"), 0,
       nBuckets = 4).count()
@@ -99,11 +98,12 @@ class FoldCrashSpec extends AnyFunSuite {
     val m0 = BucketState.readManifest(spark, dir)
     assert(Retraction.hasTombs(m0))
 
-    intercept[SwapCrash](BucketState.compactConcurrent(spark, dir, crash, fold))
+    intercept[SwapCrash](BucketState.compactConcurrent(spark, dir,
+      IncrementalDedup.fold, crash))
     assert(snap() === expected)
     assertOrphanThenCollected(dir, m0)
 
-    BucketState.compactConcurrent(spark, dir, fold = fold)
+    IncrementalDedup.compact(spark, dir)
     val m = BucketState.readManifest(spark, dir)
     assert(m.maxSegments === 1 && !Retraction.hasTombs(m))
     assert(m.fp === m0.fp, "the fold keeps the replay record")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.operators.{IncrementalDedup, Retraction}
+import graft.operators.IncrementalDedup
 
 /** A failed batch or fold leaves no orphan on the hot path: a reserved
   * version released without a commit marks its dir GC-dirty, so the next
@@ -65,8 +65,7 @@ class OrphanSweepSpec extends AnyFunSuite {
     (0 to 2).foreach(ingest(dir, _))
     val m0 = BucketState.readManifest(spark, dir)
     intercept[Crash](BucketState.compactConcurrent(spark, dir,
-      () => throw new Crash,
-      BucketState.unionFold(Retraction.foldTombstones(_, "doc_id"))))
+      IncrementalDedup.fold, () => throw new Crash))
     assert(BucketState.readManifest(spark, dir) === m0,
       "a fold that died before its swap must not change the manifest")
     assert(orphans(dir).size === 1, "the fold's staged dir is on disk")
