@@ -1,14 +1,12 @@
 package graft
+import scala.collection.immutable.VectorMap
+
 import org.apache.spark.sql.SparkSession
 object Bench {
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Median of ≥3 runs: local[N] timings swing ±15% run-to-run, so a
-    // single sample makes round-over-round comparison noise. Run 1 pays
-    // the shared-materialization builds (Shared) — per-run totals in the
-    // output keep the cold/warm split visible.
-    val nRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
+  /** The bench session: `local[cpus]`, `cpus` shuffle partitions, AQE on,
+    * UTC. [[PlanDump]] dumps the plans of this same session.
+    */
+  def session(cpus: String): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -17,16 +15,26 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // Median of ≥3 runs: local[N] timings swing ±15% run-to-run, so a
+    // single sample makes round-over-round comparison noise. Run 1 pays
+    // the shared-materialization builds (Shared) — per-run totals in the
+    // output keep the cold/warm split visible.
+    val nRuns = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
+    val spark = session(cpus)
     // Warm up the session (codegen compiler, FS client, broadcast machinery)
     // so JVM boot isn't billed to whichever query happens to run first.
     spark.read.parquet(s"$sfDir/region.parquet").count()
     // Optional subset (comma-separated names) for targeted scale steps —
     // e.g. the dedup/ANN/decontaminate/cdc scale-path families at sf10,
     // where running all 80+ queries per scale decade buys nothing.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.keys.toVector
-      .filter(n => only.forall(_.contains(n)))
+      .filter(Graft.selected("SPARK_GRAFT_BENCH_ONLY"))
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def onePass(): Map[String, Double] =
       names.map { name =>
@@ -69,25 +77,13 @@ object Bench {
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
     val med = names.map(n => n -> median(runs.map(_(n))))
-    val qs = med.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = med.map(_._2).sum
-    val runTotals = runs.map(_.values.sum).map(t => f"$t%.3f").mkString("[", ",", "]")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Itemize the untimed setup pass: each shared-index build's wall time
-    // (the rest of `setup` is the steady-state query pass itself + JIT).
-    val setupBreakdown = Shared.buildSeconds.toSeq.sortBy(-_._2)
-      .map { case (k, v) => s"\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
     // a failing query must be loud in the output, never a fast-looking timing.
     // "cpus" + "shuffle_partitions" echo the EFFECTIVE session shape so the
     // driver can verify the scaling contract directly instead of inferring
     // it from timing ratios (which are structurally ≈1 at sf0.1, where the
     // median query is overhead-bound — the r17 suspect_cpus_ignored flag).
-    val effShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpus,"shuffle_partitions":$effShuffle,"queries":$qs,"failed":$failedJson,"runs":$nRuns,"run_totals":$runTotals,"setup":${f"$setup%.3f"},"setup_breakdown":$setupBreakdown,"sf":"$sfDir"}""")
+    def number(v: String): Any = v.toIntOption.getOrElse(v)
     val contextDead = spark.sparkContext.isStopped
-    spark.stop()
     // …and loud in the EXIT CODE. Three rounds of invalid sf10 artifacts
     // (0-byte file, then an all-failed run whose ~7ms-per-query timings
     // looked success-shaped in the JSON) went unnoticed because this
@@ -95,9 +91,19 @@ object Bench {
     // status. A bench where any query failed — or whose SparkContext
     // died mid-run (every subsequent .count() throws instantly) — is not
     // a measurement and must not produce a committable artifact.
-    if (failed.nonEmpty || contextDead) {
-      System.err.println(s"[bench] INVALID RUN: failed=${failed.mkString(",")} contextDead=$contextDead")
-      sys.exit(1)
-    }
+    Graft.finish(spark, "total", Seq(
+      "value" -> med.map(_._2).sum, "unit" -> "sec", "cpus" -> number(cpus),
+      "shuffle_partitions" ->
+        number(spark.conf.get("spark.sql.shuffle.partitions")),
+      "queries" -> med.to(VectorMap), "failed" -> failed.toSeq, "runs" -> nRuns,
+      "run_totals" -> runs.map(r => Trace.fixed(r.values.sum, 3)),
+      "setup" -> Trace.fixed(setup, 3),
+      // the untimed setup pass itemized: each shared-index build's wall
+      // time (the rest of `setup` is the steady-state query pass + JIT)
+      "setup_breakdown" -> Shared.buildSeconds.toSeq.sortBy(-_._2)
+        .map { case (k, v) => k -> Trace.fixed(v, 3) }.to(VectorMap),
+      "sf" -> sfDir),
+      s"[bench] INVALID RUN: failed=${failed.mkString(",")} contextDead=$contextDead" ->
+        (failed.isEmpty && !contextDead))
   }
 }

@@ -44,6 +44,50 @@ object Graft {
     s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)}]"
 
+  /** The names a comma list in the environment variable `envVar`
+    * selects (every name when it is unset): the query subset of the
+    * bench, plan-dump and verify mains.
+    */
+  def selected(envVar: String): String => Boolean = {
+    val only = sys.env.get(envVar).map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    name => only.forall(_.contains(name))
+  }
+
+  /** The run contract of every soak, probe and bench main: print its
+    * result line last on stdout ([[Trace.result]]), stop Spark, and exit 1
+    * when any check failed. Each check is `message -> passed`, and the
+    * message of every failed one goes to stderr.
+    */
+  def finish(spark: SparkSession, metric: String, fields: Trace.Fields,
+             checks: (String, Boolean)*): Unit = {
+    Trace.result(metric, fields)
+    spark.stop()
+    val failed = checks.collect { case (message, false) => message }
+    if (failed.nonEmpty) {
+      failed.foreach(System.err.println)
+      sys.exit(1)
+    }
+  }
+
+  /** Writes a resumable main's input into `workDir` once: `write` runs
+    * only when the `_CORPUS_READY` marker is absent, and then the marker
+    * records `params`. A relaunch into the same dir (a chaos kill) finds
+    * the marker and reuses the files, since rewritten part files would
+    * be new to the file source and trip the stores' replay guards; a
+    * marker for other parameters fails loudly.
+    */
+  def corpusOnce(workDir: String, params: String)(write: => Unit): Unit = {
+    val marker = java.nio.file.Paths.get(s"$workDir/_CORPUS_READY")
+    if (java.nio.file.Files.exists(marker)) {
+      val found = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
+      require(found == params,
+        s"workDir $workDir holds a corpus for $found, not $params — use a fresh dir")
+    } else {
+      write
+      java.nio.file.Files.write(marker, params.getBytes("UTF-8"))
+    }
+  }
+
   /** Register every fixture table as a temp view so the whole engine
     * surface is reachable from `spark.sql` text.
     */

@@ -91,9 +91,7 @@ object IngestSoak {
           compactWhenSegments = compactWhenSegments,
           onBatch = onB, asyncCompaction = async)
     q.processAllAvailable(); q.stop()
-    // a still-running background fold finishes or dies staged-only; wait
-    // so the final manifest/segment numbers describe a quiesced index
-    while (streaming.BucketState.compactionInFlight(indexDir)) Thread.sleep(100)
+    streaming.BucketState.quiesce(indexDir)
     val sec = (System.nanoTime() - t0) / 1e9
 
     val diff =
@@ -141,18 +139,16 @@ object IngestSoak {
       if (xs.isEmpty) 0.0
       else { val s = xs.sorted; s(s.length / 2) }
     val (h1, h2) = drops.splitAt(drops.length / 2)
-    val dropsJson = drops.map(d => f"$d%.3f").mkString("[", ",", "]")
-    println(s"""{"metric":"ingest_soak","mode":"$mode","docs":$nDocs,"batches":$nBatches,""" +
-      s""""compact_when_segments":$compactWhenSegments,"async":$async,""" +
-      s""""sec":${math.round(sec * 1000) / 1000.0},""" +
-      s""""docs_per_sec":${math.round(nDocs / sec)},""" +
-      s""""drop_sec":$dropsJson,""" +
-      s""""drop_med_first_half":${f"${med(h1)}%.3f"},""" +
-      s""""drop_med_second_half":${f"${med(h2)}%.3f"},""" +
-      s""""admitted":$admittedCount,"snapshot_diff":$diff,""" +
-      s""""live_versions":$versions,"max_segments_per_bucket":$maxSegs,""" +
-      s""""max_segments_observed":${observedMax.get()}}""")
-    spark.stop()
-    if (diff != 0) sys.exit(1)
+    Graft.finish(spark, "ingest_soak", Seq("mode" -> mode, "docs" -> nDocs,
+      "batches" -> nBatches, "compact_when_segments" -> compactWhenSegments,
+      "async" -> async, "sec" -> math.round(sec * 1000) / 1000.0,
+      "docs_per_sec" -> math.round(nDocs / sec),
+      "drop_sec" -> drops.map(Trace.fixed(_, 3)),
+      "drop_med_first_half" -> Trace.fixed(med(h1), 3),
+      "drop_med_second_half" -> Trace.fixed(med(h2), 3),
+      "admitted" -> admittedCount, "snapshot_diff" -> diff,
+      "live_versions" -> versions, "max_segments_per_bucket" -> maxSegs,
+      "max_segments_observed" -> observedMax.get()),
+      s"[ingest-soak] $mode index diverged from the one-shot answer" -> (diff == 0))
   }
 }

@@ -74,8 +74,14 @@ object JdbcSoak {
       replica(urlRow).exceptAll(expect).count()
     val diffBat = expect.exceptAll(replica(urlBat)).count() +
       replica(urlBat).exceptAll(expect).count()
-    println(f"""{"metric":"jdbc_soak","envelopes":$nEnvelopes,"batches":$nBatches,"perrow_sec":$rowSec%.2f,"perrow_eps":${(nEnvelopes / rowSec).toInt},"batched_sec":$batSec%.2f,"batched_eps":${(nEnvelopes / batSec).toInt},"speedup":${rowSec / batSec}%.2f,"replica_diff_perrow":$diffRow,"replica_diff_batched":$diffBat}""")
-    require(diffRow == 0 && diffBat == 0, "JDBC replica diverged from the engine fold")
-    spark.stop()
+    Graft.finish(spark, "jdbc_soak", Seq("envelopes" -> nEnvelopes,
+      "batches" -> nBatches, "perrow_sec" -> Trace.fixed(rowSec, 2),
+      "perrow_eps" -> (nEnvelopes / rowSec).toInt,
+      "batched_sec" -> Trace.fixed(batSec, 2),
+      "batched_eps" -> (nEnvelopes / batSec).toInt,
+      "speedup" -> Trace.fixed(rowSec / batSec, 2),
+      "replica_diff_perrow" -> diffRow, "replica_diff_batched" -> diffBat),
+      "[jdbc-soak] JDBC replica diverged from the engine fold" ->
+        (diffRow == 0 && diffBat == 0))
   }
 }

@@ -41,19 +41,19 @@ import org.apache.spark.sql.streaming.Trigger
 object LatencySoak {
 
   /** Median of each Spark durationMs phase over the non-empty batches,
-    * rendered as JSON members (per-phase medians need not sum to the
-    * triggerExecution median — they are independent medians).
+    * −1 for a phase with no samples (per-phase medians need not sum to
+    * the triggerExecution median — they are independent medians).
     */
   private def engineMedians(
       q: java.util.concurrent.ConcurrentLinkedQueue[
-        java.util.Map[String, java.lang.Long]]): String = {
+        java.util.Map[String, java.lang.Long]]): Trace.Fields = {
     import scala.jdk.CollectionConverters._
     val maps = q.asScala.toSeq
     Seq("latestOffset", "getBatch", "queryPlanning", "walCommit",
       "addBatch", "commitOffsets", "triggerExecution").map { k =>
       val v = maps.flatMap(m => Option(m.get(k)).map(_.longValue())).sorted
-      s""""$k":${if (v.isEmpty) -1 else v(v.length / 2)}"""
-    }.mkString(",")
+      k -> (if (v.isEmpty) -1L else v(v.length / 2))
+    }
   }
 
   /** The `p`-quantile of an ascending array (nearest rank, rounded
@@ -195,12 +195,8 @@ object LatencySoak {
     while (done.get() < total && probeError.get() == null &&
       System.currentTimeMillis() < deadline)
       Thread.sleep(200)
-    // wait for a background fold before the stop: it runs in the query's
-    // job group, so q.stop() would cancel it, and max_segs_final would
-    // describe a half-folded replica (no input is left, so no batch can
-    // trip another fold meanwhile)
-    while (streaming.BucketState.compactionInFlight(s"$base/state")) Thread.sleep(100)
     q.stop(); q.awaitTermination(60000)
+    streaming.BucketState.quiesce(s"$base/state")
     if (probeError.get() != null)
       throw new IllegalStateException("deferred latency probe failed",
         probeError.get())
@@ -208,31 +204,27 @@ object LatencySoak {
     import scala.jdk.CollectionConverters._
     val ls = latencies.asScala.map(_.longValue()).toArray.sorted
     require(ls.length == total, s"drained ${ls.length} of $total events")
-    def pct(p: Double) = percentile(ls, p).fold("null")(_.toString)
     val st = steady.asScala.map(_.longValue()).toArray.sorted
-    // no batch past warm-up ⇒ no steady-state figure at all (null), never
-    // the warm-up percentiles under the steady_* keys
-    def sp(p: Double) = percentile(st, p).fold("null")(_.toString)
     val cs = commitCosts.asScala.map(_.longValue()).toArray.sorted
     // per-batch observed max segments-per-bucket (read amplification) —
     // boundedness under BACKGROUND compaction is the claim being
     // verified, so report the worst observed and the final.
     val segsSeen = segsObserved.asScala.map(_.intValue()).toArray
     val segsEnd = streaming.BucketState.readManifest(spark, s"$base/state").maxSegments
-    println(s"""{"metric":"latency_soak","events":$total,"ticks":$nTicks,""" +
-      s""""tick_ms":$tickMs,"trigger_ms":$triggerMs,"buckets":$nBuckets,""" +
-      s""""batches":${cs.length},""" +
-      s""""p50_ms":${pct(0.50)},"p95_ms":${pct(0.95)},"p99_ms":${pct(0.99)},""" +
-      s""""max_ms":${ls.last},""" +
-      s""""steady_events":${st.length},"steady_p50_ms":${sp(0.50)},""" +
-      s""""steady_p95_ms":${sp(0.95)},"steady_p99_ms":${sp(0.99)},""" +
-      s""""commit_p50_ms":${cs(cs.length / 2)},""" +
-      s""""commit_max_ms":${cs.last},""" +
-      s""""engine_ms":{${engineMedians(engine)}},""" +
-      s""""compact_trips":${segsSeen.count(streaming.BucketState.foldDue(_,
-        streaming.CdcStream.CompactWhenSegments))},""" +
-      s""""max_segs_observed":${if (segsSeen.isEmpty) 0 else segsSeen.max},""" +
-      s""""max_segs_final":$segsEnd}""")
-    spark.stop()
+    // no batch past warm-up ⇒ no steady-state figure at all (null), never
+    // the warm-up percentiles under the steady_* keys
+    Graft.finish(spark, "latency_soak", Seq("events" -> total, "ticks" -> nTicks,
+      "tick_ms" -> tickMs, "trigger_ms" -> triggerMs, "buckets" -> nBuckets,
+      "batches" -> cs.length, "p50_ms" -> percentile(ls, 0.50),
+      "p95_ms" -> percentile(ls, 0.95), "p99_ms" -> percentile(ls, 0.99),
+      "max_ms" -> ls.last, "steady_events" -> st.length,
+      "steady_p50_ms" -> percentile(st, 0.50), "steady_p95_ms" -> percentile(st, 0.95),
+      "steady_p99_ms" -> percentile(st, 0.99),
+      "commit_p50_ms" -> cs(cs.length / 2), "commit_max_ms" -> cs.last,
+      "engine_ms" -> engineMedians(engine),
+      "compact_trips" -> segsSeen.count(streaming.BucketState.foldDue(_,
+        streaming.CdcStream.CompactWhenSegments)),
+      "max_segs_observed" -> (if (segsSeen.isEmpty) 0 else segsSeen.max),
+      "max_segs_final" -> segsEnd))
   }
 }

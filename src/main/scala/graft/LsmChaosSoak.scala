@@ -28,22 +28,11 @@ object LsmChaosSoak {
     val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
 
-    // input generated ONCE per workDir — a resumed run must see the same
-    // files (fresh part names would re-feed everything under new
-    // batchIds and trip the fingerprint guards), same discipline as
-    // PipelineSoak's _CORPUS_READY
-    val marker = java.nio.file.Paths.get(s"$base/_CORPUS_READY")
-    val params = s"$nKeys"
-    if (java.nio.file.Files.exists(marker)) {
-      val found = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      require(found == params,
-        s"workDir $base holds a corpus for $found keys, not $params — use a fresh dir")
-    } else {
-      // 24 files at 2/trigger → 12 micro-batches: enough commits that
-      // kills land mid-merge, mid-fold, and between the two commits
+    // 24 files at 2/trigger → 12 micro-batches: enough commits that
+    // kills land mid-merge, mid-fold, and between the two commits
+    Graft.corpusOnce(base, s"$nKeys") {
       Soak.envelopeLines(spark, nKeys).repartition(24)
         .write.mode("overwrite").text(s"$base/in")
-      java.nio.file.Files.write(marker, params.getBytes("UTF-8"))
     }
 
     // MID-STREAM TAKEDOWN (the out-of-band GDPR leg): a daemon thread
@@ -80,8 +69,7 @@ object LsmChaosSoak {
     takedown.start()
     q.processAllAvailable(); q.stop()
     takedown.join(600000)
-    while (streaming.BucketState.compactionInFlight(s"$base/state"))
-      Thread.sleep(100)
+    streaming.BucketState.quiesce(s"$base/state")
     val streamSec = (System.nanoTime() - t0) / 1e9
 
     // one-shot expectation: the batch replay of the SAME envelopes with
@@ -104,12 +92,13 @@ object LsmChaosSoak {
       .count()
     val nEnvelopes = spark.read.text(s"$base/in").count()
     val audit = spark.read.parquet(s"$base/audit").count()
-    println(s"""{"metric":"lsm_chaos_soak","keys":$nKeys,""" +
-      s""""envelopes":$nEnvelopes,"snapshot_diff":$diff,""" +
-      s""""audit_rows":$audit,"state_keys":${streamed.count()},""" +
-      s""""retract_through":$retractP,"retracted_live":$retractedLive,""" +
-      s""""stream_sec":${math.round(streamSec * 1000) / 1000.0}}""")
-    spark.stop()
-    if (diff != 0 || audit != nEnvelopes || retractedLive != 0) sys.exit(1)
+    Graft.finish(spark, "lsm_chaos_soak", Seq("keys" -> nKeys,
+      "envelopes" -> nEnvelopes, "snapshot_diff" -> diff, "audit_rows" -> audit,
+      "state_keys" -> streamed.count(), "retract_through" -> retractP,
+      "retracted_live" -> retractedLive,
+      "stream_sec" -> math.round(streamSec * 1000) / 1000.0),
+      "[lsm-chaos] replica diverged from the batch replay" -> (diff == 0),
+      s"[lsm-chaos] audit incomplete: $audit != $nEnvelopes" -> (audit == nEnvelopes),
+      s"[lsm-chaos] $retractedLive retracted keys still live" -> (retractedLive == 0))
   }
 }

@@ -127,13 +127,6 @@ object PipelineSoak {
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.global
 
-    // Corpus + drops are generated ONCE per workDir: a resumed run (the
-    // chaos harness kill -9s the JVM mid-stream and relaunches) must NOT
-    // rewrite the drop files — parquet part-file names are fresh UUIDs
-    // per write, so the file source would see "new" files, re-process
-    // every drop under new batchIds, and the index fingerprint guards
-    // would (correctly) refuse. The marker records the parameters so a
-    // mismatched reuse fails loudly instead of soaking the wrong corpus.
     // held-out eval slice: never streamed, decon gates against it
     val EvalMod = 7
     // the v2-publish drop IS the takedown drop: publish → back-screen
@@ -141,14 +134,6 @@ object PipelineSoak {
     val PublishDrop = nBatches / 2
     // mid-stream vector-index generation cutover at the 3/4 mark
     val CutoverDrop = (3 * nBatches) / 4
-    val marker = java.nio.file.Paths.get(s"$base/_CORPUS_READY")
-    val params =
-      s"$nDocs/$nBatches/decon$EvalMod-backscreen$PublishDrop-cutover$CutoverDrop"
-    if (java.nio.file.Files.exists(marker)) {
-      val found = new String(java.nio.file.Files.readAllBytes(marker), "UTF-8")
-      require(found == params,
-        s"workDir $base holds a corpus for $found, not $params — use a fresh dir")
-    }
     // deterministic per-doc embedding for the vector stage: 64 pseudo-
     // random components in [-1, 1] derived from (doc_id, dim) — real
     // drops arrive embedded; the soak's point is the INDEX plumbing
@@ -158,7 +143,9 @@ object PipelineSoak {
       transform(sequence(lit(0), lit(63)), i =>
         ((pmod(xxhash64(docId, i), lit(2000001L)) - lit(1000000L)) /
           lit(1000000.0)).cast("float"))
-    if (!java.nio.file.Files.exists(marker)) {
+    // corpus + drops once per workDir: a chaos relaunch reuses them
+    Graft.corpusOnce(base,
+        s"$nDocs/$nBatches/decon$EvalMod-backscreen$PublishDrop-cutover$CutoverDrop") {
       ScaleProbe.writeDocuments(spark, s"$base/corpus", nDocs)
       val c = spark.read.parquet(s"$base/corpus/documents.parquet")
         .select(col("doc_id"), col("text"))
@@ -176,7 +163,6 @@ object PipelineSoak {
           pseudoEmbedding(col("doc_id")).as("embedding"),
           lit(0).as("label"))
         .write.mode("overwrite").parquet(s"$base/corpus/embeddings.parquet")
-      java.nio.file.Files.write(marker, params.getBytes("UTF-8"))
     }
     val corpus = spark.read.parquet(s"$base/corpus/documents.parquet")
       .select(col("doc_id"), col("text"))
@@ -506,9 +492,8 @@ object PipelineSoak {
       .start()
     q.processAllAvailable(); q.stop()
     val vecLiveFinal = operators.IncrementalVecIndex.liveDir(spark, vecDir)
-    (Seq(exactDir, ndDir, kbDir, vecDir) :+ vecLiveFinal).distinct.foreach { d =>
-      while (streaming.BucketState.compactionInFlight(d)) Thread.sleep(100)
-    }
+    streaming.BucketState.quiesce(
+      (Seq(exactDir, ndDir, kbDir, vecDir) :+ vecLiveFinal).distinct: _*)
     val streamSec = (System.nanoTime() - t0) / 1e9
     // the cutover must have happened (generation 2 live), and the serve
     // loop racing it must have completed every query — reclaim the dead
@@ -719,35 +704,31 @@ object PipelineSoak {
         (cutoverServes.get() > 0 && serveFailures.get() == 0),
       s"cutover serve loop: ${cutoverServes.get()} ok, " +
         s"${serveFailures.get()} failed")
-    println(s"""{"metric":"pipeline_soak","docs":$nDocs,"batches":$nBatches,""" +
-      s""""tau":$tau,"raw":$raw,"gated":$gatedN,"decon_admitted":$deconN,""" +
-      s""""exact_admitted":$exactN,""" +
-      s""""nd_admitted":$admittedN,"pipeline_diff":$diff,"kb_diff":$kbDiff,""" +
-      s""""decon_diff":$deconDiff,"vec_diff":$vecDiff,""" +
-      s""""retract_diff":$retractDiff,""" +
-      s""""retract_drop":$PublishDrop,"retract_n":$retractN,""" +
-      s""""cutover_drop":$CutoverDrop,""" +
-      s""""cutover_sec":${cutoverSec.get() / 1000.0},""" +
-      s""""cutover_serves":${cutoverServes.get()},""" +
-      s""""serve_failures":${serveFailures.get()},""" +
-      s""""eval_versions":${(0 until nBatches).map(b =>
-        operators.EvalSet.versionForBatch(spark, evalDir, evalVerDir, b.toLong))
-        .mkString("[", ",", "]")},""" +
-      s""""stream_sec":${math.round(streamSec * 1000) / 1000.0},""" +
-      s""""docs_per_sec":${math.round(nDocs / streamSec)},""" +
-      s""""drop_sec":${drops.map(d => f"$d%.3f").mkString("[", ",", "]")},""" +
-      s""""drop_med_first_half":${f"${med(h1)}%.3f"},""" +
-      s""""drop_med_second_half":${f"${med(h2)}%.3f"},""" +
-      s""""decon_sec":${ds.map(d => f"${d.deconSec}%.2f").mkString("[", ",", "]")},""" +
-      s""""exact_sec":${ds.map(d => f"${d.exactSec}%.2f").mkString("[", ",", "]")},""" +
-      s""""bands_sec":${ds.map(d => f"${d.bandsSec}%.2f").mkString("[", ",", "]")},""" +
-      s""""nd_sec":${ds.map(d => f"${d.ndSec}%.2f").mkString("[", ",", "]")},""" +
-      s""""kb_sec":${ds.map(d => f"${d.kbSec}%.2f").mkString("[", ",", "]")},""" +
-      s""""vec_sec":${ds.map(d => f"${d.vecSec}%.2f").mkString("[", ",", "]")},""" +
-      s""""pack_sec":${math.round(packSec * 1000) / 1000.0},""" +
-      s""""shard_docs":${shardSizes.sorted.mkString("[", ",", "]")}}""")
-    spark.stop()
-    if (diff != 0 || kbDiff != 0 || deconDiff != 0 || vecDiff != 0 ||
-      retractDiff != 0) sys.exit(1)
+    def secs(f: DropStat => Double) = ds.map(d => Trace.fixed(f(d), 2))
+    Graft.finish(spark, "pipeline_soak", Seq("docs" -> nDocs, "batches" -> nBatches,
+      "tau" -> tau, "raw" -> raw, "gated" -> gatedN, "decon_admitted" -> deconN,
+      "exact_admitted" -> exactN, "nd_admitted" -> admittedN,
+      "pipeline_diff" -> diff, "kb_diff" -> kbDiff, "decon_diff" -> deconDiff,
+      "vec_diff" -> vecDiff, "retract_diff" -> retractDiff,
+      "retract_drop" -> PublishDrop, "retract_n" -> retractN,
+      "cutover_drop" -> CutoverDrop, "cutover_sec" -> cutoverSec.get() / 1000.0,
+      "cutover_serves" -> cutoverServes.get(), "serve_failures" -> serveFailures.get(),
+      "eval_versions" -> (0 until nBatches).map(b =>
+        operators.EvalSet.versionForBatch(spark, evalDir, evalVerDir, b.toLong)),
+      "stream_sec" -> math.round(streamSec * 1000) / 1000.0,
+      "docs_per_sec" -> math.round(nDocs / streamSec),
+      "drop_sec" -> drops.map(Trace.fixed(_, 3)),
+      "drop_med_first_half" -> Trace.fixed(med(h1), 3),
+      "drop_med_second_half" -> Trace.fixed(med(h2), 3),
+      "decon_sec" -> secs(_.deconSec), "exact_sec" -> secs(_.exactSec),
+      "bands_sec" -> secs(_.bandsSec), "nd_sec" -> secs(_.ndSec),
+      "kb_sec" -> secs(_.kbSec), "vec_sec" -> secs(_.vecSec),
+      "pack_sec" -> math.round(packSec * 1000) / 1000.0,
+      "shard_docs" -> shardSizes.sorted),
+      "[pipeline-soak] near-dup admissions diverged (pipeline_diff)" -> (diff == 0),
+      "[pipeline-soak] keep-best diverged (kb_diff)" -> (kbDiff == 0),
+      "[pipeline-soak] decontamination diverged (decon_diff)" -> (deconDiff == 0),
+      "[pipeline-soak] vector index diverged (vec_diff)" -> (vecDiff == 0),
+      "[pipeline-soak] takedown diverged (retract_diff)" -> (retractDiff == 0))
   }
 }

@@ -119,14 +119,15 @@ object ScaleProbe {
       }.toMap
     }.toMap
 
-    val qs = probeQueries.map { n =>
-      val t1 = times("x1")(n); val t10 = times("x10")(n)
-      f"""\"$n\":{\"x1\":$t1%.3f,\"x10\":$t10%.3f,\"ratio\":${t10 / t1}%.2f}"""
-    }.mkString("{", ",", "}")
     val tot1 = times("x1").values.sum
     val tot10 = times("x10").values.sum
-    println(
-      f"""{"metric":"scale_probe","unit":"sec","baseN":$baseN,"total_x1":$tot1%.3f,"total_x10":$tot10%.3f,"total_ratio":${tot10 / tot1}%.2f,"queries":$qs}""")
-    spark.stop()
+    Graft.finish(spark, "scale_probe", Seq("unit" -> "sec", "baseN" -> baseN,
+      "total_x1" -> Trace.fixed(tot1, 3), "total_x10" -> Trace.fixed(tot10, 3),
+      "total_ratio" -> Trace.fixed(tot10 / tot1, 2),
+      "queries" -> probeQueries.map { n =>
+        val t1 = times("x1")(n); val t10 = times("x10")(n)
+        n -> Seq("x1" -> Trace.fixed(t1, 3), "x10" -> Trace.fixed(t10, 3),
+          "ratio" -> Trace.fixed(t10 / t1, 2))
+      }))
   }
 }

@@ -113,10 +113,49 @@ object Shared {
     cell.df // builds outside the registry lock; per-cell exactly-once
   }
 
-  /** Best-effort recursive delete of a per-run scratch directory (the
-    * incremental driver queries' temp index dirs): repeated verify/bench
-    * runs would otherwise accrete gigabytes of dead index state under
-    * /tmp. Call only after the query's answer has been MATERIALIZED
+  /** A fresh scratch dir under the temp root, named by `prefix`: the
+    * per-run store of a driver query or a probe.
+    */
+  def scratchDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Runs `body` over the scratch dir `dir` and deletes the dir when the
+    * body ends, returned or thrown: repeated verify/bench runs would
+    * otherwise accrete dead stores under /tmp, and `graft.Verify` goes on
+    * after a failed query.
+    */
+  def inScratch[T](dir: String)(body: => T): T =
+    try body finally deleteDirTree(dir)
+
+  /** The scratch run of a store-backed driver query: [[inScratch]] whose
+    * answer is eagerly checkpointed before the dir goes, since the lazy
+    * answer reads the dir.
+    */
+  def scratchRun(dir: String)(answer: => DataFrame): DataFrame =
+    inScratch(dir)(answer.localCheckpoint(eager = true))
+
+  /** An [[ascendingSplit]]: chunk `i` holds the rows whose id is in
+    * `(cuts(i), cuts(i + 1)]`.
+    */
+  final case class Split(chunks: Seq[DataFrame], cuts: Seq[Long])
+
+  /** `df` split into `n` ascending ranges of its non-negative id column
+    * `id`, over the cuts `lo - 1`, `lo + (hi - lo) * i / n` and `hi` (`lo`
+    * and `hi` its min and max, read in one job): the chunks of a chunked
+    * ingest that must equal the one-shot answer.
+    */
+  def ascendingSplit(df: DataFrame, id: String, n: Int): Split = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    val b = df.agg(min(id), max(id)).collect()(0)
+    val (lo, hi) = (b.getLong(0), b.getLong(1))
+    val cuts = (lo - 1) +: (1 until n).map(i => lo + (hi - lo) * i / n) :+ hi
+    Split(cuts.sliding(2).map { case Seq(a, c) =>
+      df.filter(col(id) > a && col(id) <= c)
+    }.toSeq, cuts)
+  }
+
+  /** Best-effort recursive delete of a per-run scratch directory
+    * ([[inScratch]]). Call only after the answer has been MATERIALIZED
     * (eager localCheckpoint) — a lazy frame still reading the dir would
     * break.
     */

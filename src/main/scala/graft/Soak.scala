@@ -49,7 +49,6 @@ object Soak {
       java.nio.file.Files.createTempDirectory("graft-soak").toString)
     val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
 
     // Deterministic workload over nKeys keys (~1.6 envelopes/key); see
     // [[envelopeLines]].
@@ -83,9 +82,11 @@ object Soak {
     val diff = streamed.exceptAll(batchSnap).count() +
       batchSnap.exceptAll(streamed).count()
     val audit = spark.read.parquet(s"$base/audit").count()
-    println(s"""{"metric":"soak","envelopes":$nEnvelopes,"stream_sec":$streamSec,"stream_eps":${(nEnvelopes / streamSec).toInt},"batch_sec":$batchSec,"batch_eps":${(nEnvelopes / batchSec).toInt},"state_keys":$batchRows,"snapshot_diff":$diff,"audit_rows":$audit}""")
-    require(diff == 0, "stream/batch snapshots diverged")
-    require(audit == nEnvelopes, s"audit incomplete: $audit != $nEnvelopes")
-    spark.stop()
+    Graft.finish(spark, "soak", Seq("envelopes" -> nEnvelopes,
+      "stream_sec" -> streamSec, "stream_eps" -> (nEnvelopes / streamSec).toInt,
+      "batch_sec" -> batchSec, "batch_eps" -> (nEnvelopes / batchSec).toInt,
+      "state_keys" -> batchRows, "snapshot_diff" -> diff, "audit_rows" -> audit),
+      "[soak] stream/batch snapshots diverged" -> (diff == 0),
+      s"[soak] audit incomplete: $audit != $nEnvelopes" -> (audit == nEnvelopes))
   }
 }

@@ -24,6 +24,10 @@ import java.nio.charset.StandardCharsets.UTF_8
   * and stats futures) never interleave, and a run relaunched after a
   * crash extends the same file. With the switch unset, `span` is one
   * volatile read and then its body.
+  *
+  * Its encoder ([[json]]) is the program's one JSON writer: the result
+  * line every main prints ([[result]]) and `graft.Verify`'s
+  * `oracle_sql.json` go through it too.
   */
 object Trace {
   type Fields = Seq[(String, Any)]
@@ -54,18 +58,34 @@ object Trace {
     val r = f
     val ms = (System.nanoTime() - t0) / 1e6
     if (out ne null) {
-      val members = Seq("store" -> store, "phase" -> phase, "batch" -> batch,
+      val line = json(Seq("store" -> store, "phase" -> phase, "batch" -> batch,
         "start_ms" -> startMs, "ms" -> math.round(ms * 1000) / 1000.0,
-        "thread" -> Thread.currentThread().getName) ++ fields(r)
-      val line = members.map { case (k, v) => s"${json(k)}:${json(v)}" }
-        .mkString("{", ",", "}\n").getBytes(UTF_8)
-      synchronized { val o = out; if (o ne null) o.write(line) }
+        "thread" -> Thread.currentThread().getName) ++ fields(r)) + "\n"
+      synchronized { val o = out; if (o ne null) o.write(line.getBytes(UTF_8)) }
     }
     (r, ms / 1e3)
   }
 
-  private def json(v: Any): String = v match {
-    case _: Int | _: Long | _: Double | _: Boolean => v.toString
+  /** The one JSON encoder of the program. Numbers and booleans are
+    * written as themselves: a `BigDecimal` in plain notation (see
+    * [[fixed]]) and a non-finite `Double` as `null`. `None` is `null` and
+    * `Some(x)` is `x`. A `Map`, or a non-empty `Seq` of `(String, _)`
+    * pairs (a [[Fields]]), is an object in its iteration order; any other
+    * `Seq` or `Array` is an array; anything else is an escaped string.
+    */
+  private[graft] def json(v: Any): String = v match {
+    case null | None => "null"
+    case Some(x) => json(x)
+    case d: Double => if (d.isNaN || d.isInfinite) "null" else d.toString
+    case _: Int | _: Long | _: Boolean => v.toString
+    case b: BigDecimal => b.bigDecimal.toPlainString
+    case a: Array[_] => json(a.toSeq)
+    case m: collection.Map[_, _] => obj(m)
+    case s: Iterable[_] if s.nonEmpty && s.forall {
+        case (_: String, _) => true
+        case _ => false
+      } => obj(s)
+    case s: Iterable[_] => s.map(json).mkString("[", ",", "]")
     case other =>
       val b = new StringBuilder("\"")
       other.toString.foreach {
@@ -76,6 +96,23 @@ object Trace {
       }
       b.append('"').toString
   }
+
+  private def obj(fields: Iterable[_]): String =
+    fields.map { case (k, x) => s"${json(k)}:${json(x)}" }.mkString("{", ",", "}")
+
+  /** `x` rounded half-up to `digits` decimals, written by [[json]] with
+    * exactly those digits (`%.3f`'s text, whatever the JVM's locale);
+    * `None` (`null`) when `x` is not finite.
+    */
+  def fixed(x: Double, digits: Int): Option[BigDecimal] =
+    if (x.isNaN || x.isInfinite) None
+    else Some(BigDecimal(x).setScale(digits, BigDecimal.RoundingMode.HALF_UP))
+
+  /** Prints a main's result as its last stdout line: one JSON object,
+    * `metric` first, then `fields` in order.
+    */
+  def result(metric: String, fields: Fields): Unit =
+    println(json(("metric" -> metric) +: fields))
 
   /** Routes every span to `path` while `f` runs, then restores the sink
     * the environment chose.

@@ -51,39 +51,35 @@ object VecCutoverProbe {
           math.cos(0.07 * (qi + 1) * (i + 1))))
     val exact = queries.map(exactTop10)
 
-    val indexDir = java.nio.file.Files
-      .createTempDirectory("graft-cutover-probe").toString
-    val ids = vecs.agg(min("vec_id"), max("vec_id")).collect()(0)
-    val mid = (ids.getLong(0) + ids.getLong(1)) / 2
-    val (_, tIngest) = Trace.timed("vec_cutover_probe", "ingest", -1L) {
-      operators.IncrementalVecIndex.ingest(spark, indexDir,
-        vecs.filter(col("vec_id") <= mid), 0).count()
-      operators.IncrementalVecIndex.ingest(spark, indexDir,
-        vecs.filter(col("vec_id") > mid), 1).count()
-    }
-    def recallNow(): Double = {
-      val hits = queries.zip(exact).map { case (q, ex) =>
-        val got = operators.IncrementalVecIndex
-          .searchTopk(spark, indexDir, sfDir, q)
-          .collect().map(_.getLong(0)).toSet
-        ex.count(got.contains).toDouble / 10.0
+    val indexDir = Shared.scratchDir("graft-cutover-probe")
+    val fields = Shared.inScratch(indexDir) {
+      val (_, tIngest) = Trace.timed("vec_cutover_probe", "ingest", -1L) {
+        Shared.ascendingSplit(vecs, "vec_id", 2).chunks.zipWithIndex
+          .foreach { case (half, i) =>
+            operators.IncrementalVecIndex.ingest(spark, indexDir, half, i).count()
+          }
       }
-      hits.sum / hits.length
+      def recallNow(): Double = {
+        val hits = queries.zip(exact).map { case (q, ex) =>
+          val got = operators.IncrementalVecIndex
+            .searchTopk(spark, indexDir, sfDir, q)
+            .collect().map(_.getLong(0)).toSet
+          ex.count(got.contains).toDouble / 10.0
+        }
+        hits.sum / hits.length
+      }
+      val (recallG1, tServe1) = Trace.timed("vec_cutover_probe", "serve_gen1", -1L)(recallNow())
+      val (_, tCutover) = Trace.timed("vec_cutover_probe", "cutover", -1L)(
+        operators.IncrementalVecIndex.cutover(spark, indexDir, vecs))
+      val (recallG2, tServe2) = Trace.timed("vec_cutover_probe", "serve_gen2", -1L)(recallNow())
+      operators.IncrementalVecIndex.gcGenerations(spark, indexDir)
+      Seq("sf_dir" -> sfDir, "vectors" -> n, "queries" -> queries.length,
+        "recall10_gen1" -> recallG1, "recall10_gen2" -> recallG2,
+        "recall10_gen2_post_gc" -> recallNow(),
+        "ingest_sec" -> Trace.fixed(tIngest, 2), "cutover_sec" -> Trace.fixed(tCutover, 2),
+        "serve24_gen1_sec" -> Trace.fixed(tServe1, 2),
+        "serve24_gen2_sec" -> Trace.fixed(tServe2, 2))
     }
-    val (recallG1, tServe1) = Trace.timed("vec_cutover_probe", "serve_gen1", -1L)(recallNow())
-    val (_, tCutover) = Trace.timed("vec_cutover_probe", "cutover", -1L)(
-      operators.IncrementalVecIndex.cutover(spark, indexDir, vecs))
-    val (recallG2, tServe2) = Trace.timed("vec_cutover_probe", "serve_gen2", -1L)(recallNow())
-    operators.IncrementalVecIndex.gcGenerations(spark, indexDir)
-    val recallG2PostGc = recallNow()
-    graft.Shared.deleteDirTree(indexDir)
-
-    println(s"""{"metric":"vec_cutover_recall","sf_dir":"$sfDir","vectors":$n,""" +
-      s""""queries":${queries.length},"recall10_gen1":$recallG1,""" +
-      s""""recall10_gen2":$recallG2,"recall10_gen2_post_gc":$recallG2PostGc,""" +
-      s""""ingest_sec":${f"$tIngest%.2f"},"cutover_sec":${f"$tCutover%.2f"},""" +
-      s""""serve24_gen1_sec":${f"$tServe1%.2f"},""" +
-      s""""serve24_gen2_sec":${f"$tServe2%.2f"}}""")
-    spark.stop()
+    Graft.finish(spark, "vec_cutover_recall", fields)
   }
 }

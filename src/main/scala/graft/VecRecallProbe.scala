@@ -26,8 +26,8 @@ import org.apache.spark.sql.functions._
   * residual miss isolates the PQ-quantization + rerank-cut error from
   * the cell-routing error the smaller fractions add.
   *
-  * Serve times are the MEDIAN OF 3 full passes per grid point (the
-  * bench-artifact discipline — the r16 single-run times carried 3-5×
+  * Serve times are the MEDIAN OF 3 full passes per grid point
+  * (`SPARK_GRAFT_BENCH_RUNS`, as for the bench; the bench-artifact discipline — the r16 single-run times carried 3-5×
   * box-noise swings); recall is asserted identical across the passes
   * (it is deterministic by construction).
   *
@@ -38,7 +38,7 @@ import org.apache.spark.sql.functions._
 object VecRecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val runs = sys.env.getOrElse("SPARK_GRAFT_PROBE_RUNS", "3").toInt
+    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val spark = Graft.session(Graft.localMaster)
     spark.sparkContext.setLogLevel("WARN")
 
@@ -59,79 +59,77 @@ object VecRecallProbe {
       operators.Similarity.bruteTopkForVec(spark, sfDir, q)
         .collect().map(_.getLong(0)).toSeq))
 
-    val indexDir = java.nio.file.Files
-      .createTempDirectory("graft-recall-probe").toString
-    val ids = vecs.agg(min("vec_id"), max("vec_id")).collect()(0)
-    val mid = (ids.getLong(0) + ids.getLong(1)) / 2
-    val (_, tIngest) = Trace.timed("vec_recall_probe", "ingest", -1L) {
-      operators.IncrementalVecIndex.ingest(spark, indexDir,
-        vecs.filter(col("vec_id") <= mid), 0).count()
-      operators.IncrementalVecIndex.ingest(spark, indexDir,
-        vecs.filter(col("vec_id") > mid), 1).count()
-    }
-    // one pass over the 24 queries at (nProbe, rerank): recall@10 + sec
-    def passAt(np: Int, rr: Int): (Double, Double) = {
-      val (r, tServe) = Trace.timed("vec_recall_probe", "serve", -1L) {
-        val perQ = queries.zip(exact).map { case (q, ex) =>
-          val got = operators.IncrementalVecIndex
-            .searchTopk(spark, indexDir, sfDir, q, nProbe = np, rerank = rr)
-            .collect().map(_.getLong(0)).toSet
-          ex.count(got.contains).toDouble / 10.0
+    val indexDir = Shared.scratchDir("graft-recall-probe")
+    val fields = Shared.inScratch(indexDir) {
+      val (_, tIngest) = Trace.timed("vec_recall_probe", "ingest", -1L) {
+        Shared.ascendingSplit(vecs, "vec_id", 2).chunks.zipWithIndex
+          .foreach { case (half, i) =>
+            operators.IncrementalVecIndex.ingest(spark, indexDir, half, i).count()
+          }
+      }
+      // one pass over the 24 queries at (nProbe, rerank): recall@10 + sec
+      def passAt(np: Int, rr: Int): (Double, Double) = {
+        val (r, tServe) = Trace.timed("vec_recall_probe", "serve", -1L) {
+          val perQ = queries.zip(exact).map { case (q, ex) =>
+            val got = operators.IncrementalVecIndex
+              .searchTopk(spark, indexDir, sfDir, q, nProbe = np, rerank = rr)
+              .collect().map(_.getLong(0)).toSet
+            ex.count(got.contains).toDouble / 10.0
+          }
+          perQ.sum / perQ.length
         }
-        perQ.sum / perQ.length
+        (r, tServe)
       }
-      (r, tServe)
-    }
-    // median-of-`runs` serve time; recall asserted stable across runs
-    def curveAt(np: Int, rr: Int): (Double, Double) = {
-      val passes = (0 until runs).map(_ => passAt(np, rr))
-      require(passes.map(_._1).distinct.size == 1,
-        s"recall must be deterministic across passes at nProbe=$np rerank=$rr; " +
-          s"got ${passes.map(_._1)}")
-      (passes.head._1, median(passes.map(_._2)))
-    }
-    def cellsNow(): Int =
-      operators.IncrementalVecIndex.readParams(spark, indexDir).centroids.length
-    def curve(): Seq[(Int, Double, Double)] = {
-      val cells = cellsNow()
-      fractions.map { den =>
-        val np = math.max(1, cells / den)
-        val (r, t) = curveAt(np, operators.Similarity.PqRerank)
-        (np, r, t)
+      // median-of-`runs` serve time; recall asserted stable across runs
+      def curveAt(np: Int, rr: Int): (Double, Double) = {
+        val passes = (0 until runs).map(_ => passAt(np, rr))
+        require(passes.map(_._1).distinct.size == 1,
+          s"recall must be deterministic across passes at nProbe=$np rerank=$rr; " +
+            s"got ${passes.map(_._1)}")
+        (passes.head._1, median(passes.map(_._2)))
       }
-    }
-    val gen1Cells = cellsNow()
-    val (g1, tG1) = Trace.timed("vec_recall_probe", "gen1_curve", -1L)(curve())
-    // the SECOND recall/latency axis at the documented operating width
-    // (fraction 1/2 of gen-1 = nProbe 8): widen the ADC→exact re-rank
-    // cut — isolates how much of the residual miss is the candidate cut
-    // vs PQ quantization
-    val reranks = Seq(100, 400, 1600)
-    val rrCurve = reranks.map { rr =>
-      val (r, t) = curveAt(gen1Cells / 2, rr); (rr, r, t)
-    }
-    val (_, tCutover) = Trace.timed("vec_recall_probe", "cutover", -1L)(
-      operators.IncrementalVecIndex.cutover(spark, indexDir, vecs))
-    operators.IncrementalVecIndex.gcGenerations(spark, indexDir)
-    val gen2Cells = cellsNow()
-    val (g2, tG2) = Trace.timed("vec_recall_probe", "gen2_curve", -1L)(curve())
-    graft.Shared.deleteDirTree(indexDir)
+      def cellsNow(): Int =
+        operators.IncrementalVecIndex.readParams(spark, indexDir).centroids.length
+      def curve(): Seq[(Int, Double, Double)] = {
+        val cells = cellsNow()
+        fractions.map { den =>
+          val np = math.max(1, cells / den)
+          val (r, t) = curveAt(np, operators.Similarity.PqRerank)
+          (np, r, t)
+        }
+      }
+      val gen1Cells = cellsNow()
+      val (g1, tG1) = Trace.timed("vec_recall_probe", "gen1_curve", -1L)(curve())
+      // the SECOND recall/latency axis at the documented operating width
+      // (fraction 1/2 of gen-1 = nProbe 8): widen the ADC→exact re-rank
+      // cut — isolates how much of the residual miss is the candidate cut
+      // vs PQ quantization
+      val reranks = Seq(100, 400, 1600)
+      val rrCurve = reranks.map { rr =>
+        val (r, t) = curveAt(gen1Cells / 2, rr); (rr, r, t)
+      }
+      val (_, tCutover) = Trace.timed("vec_recall_probe", "cutover", -1L)(
+        operators.IncrementalVecIndex.cutover(spark, indexDir, vecs))
+      operators.IncrementalVecIndex.gcGenerations(spark, indexDir)
+      val gen2Cells = cellsNow()
+      val (g2, tG2) = Trace.timed("vec_recall_probe", "gen2_curve", -1L)(curve())
 
-    def fmt(c: Seq[(Int, Double, Double)], f: ((Int, Double, Double)) => String) =
-      c.map { t => s""""${t._1}":${f(t)}""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"vec_recall_curve","sf_dir":"$sfDir","vectors":$n,""" +
-      s""""queries":${queries.length},"runs":$runs,""" +
-      s""""fractions":[${fractions.map(d => s""""1/$d"""").mkString(",")}],""" +
-      s""""gen1_cells":$gen1Cells,"gen2_cells":$gen2Cells,""" +
-      s""""recall10_gen1":${fmt(g1, t => f"${t._2}%.4f")},""" +
-      s""""recall10_gen2":${fmt(g2, t => f"${t._2}%.4f")},""" +
-      s""""recall10_gen1_rerank_np${gen1Cells / 2}":${fmt(rrCurve, t => f"${t._2}%.4f")},""" +
-      s""""serve24_rerank_np${gen1Cells / 2}_sec":${fmt(rrCurve, t => f"${t._3}%.1f")},""" +
-      s""""serve24_gen1_sec":${fmt(g1, t => f"${t._3}%.1f")},""" +
-      s""""serve24_gen2_sec":${fmt(g2, t => f"${t._3}%.1f")},""" +
-      s""""exact_sec":${f"$tExact%.1f"},"ingest_sec":${f"$tIngest%.1f"},""" +
-      s""""cutover_sec":${f"$tCutover%.1f"},""" +
-      s""""grid_gen1_sec":${f"$tG1%.1f"},"grid_gen2_sec":${f"$tG2%.1f"}}""")
-    spark.stop()
+      // one member per grid point, keyed by its nProbe (or rerank)
+      def at(c: Seq[(Int, Double, Double)], digits: Int,
+             f: ((Int, Double, Double)) => Double) =
+        c.map(t => t._1.toString -> Trace.fixed(f(t), digits))
+      Seq("sf_dir" -> sfDir, "vectors" -> n,
+        "queries" -> queries.length, "runs" -> runs,
+        "fractions" -> fractions.map(d => s"1/$d"),
+        "gen1_cells" -> gen1Cells, "gen2_cells" -> gen2Cells,
+        "recall10_gen1" -> at(g1, 4, _._2), "recall10_gen2" -> at(g2, 4, _._2),
+        s"recall10_gen1_rerank_np${gen1Cells / 2}" -> at(rrCurve, 4, _._2),
+        s"serve24_rerank_np${gen1Cells / 2}_sec" -> at(rrCurve, 1, _._3),
+        "serve24_gen1_sec" -> at(g1, 1, _._3), "serve24_gen2_sec" -> at(g2, 1, _._3),
+        "exact_sec" -> Trace.fixed(tExact, 1), "ingest_sec" -> Trace.fixed(tIngest, 1),
+        "cutover_sec" -> Trace.fixed(tCutover, 1),
+        "grid_gen1_sec" -> Trace.fixed(tG1, 1), "grid_gen2_sec" -> Trace.fixed(tG2, 1))
+    }
+    Graft.finish(spark, "vec_recall_curve", fields)
   }
 }

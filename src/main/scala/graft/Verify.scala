@@ -17,10 +17,9 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // dev convenience (driver never sets it): restrict to a comma-list of
     // query names, e.g. SPARK_GRAFT_VERIFY_ONLY=cdc_snapshot_lsm_asof
-    val only = sys.env.get("SPARK_GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val only = Graft.selected("SPARK_GRAFT_VERIFY_ONLY")
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => only(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -32,21 +31,10 @@ object Verify {
       spark.catalog.clearCache()
       Shared.releaseTransient(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    // every control char escaped (Trace.json): a tab or CR in
+    // builder-authored SQL would otherwise make the driver's json.load
+    // fail and silently zero the round's correctness
+    val json = Trace.json(SparkEntry.oracleSql.filter { case (k, _) => only(k) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

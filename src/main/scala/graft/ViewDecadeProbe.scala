@@ -29,53 +29,48 @@ object ViewDecadeProbe {
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = Tables.documents(spark, sfDir).select(col("doc_id"), col("text"))
-    val ids = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
-    val (lo, hi) = (ids.getLong(0), ids.getLong(1))
     def storageMb: Long =
       spark.sparkContext.getRDDStorageInfo.map(_.memSize).sum / (1024 * 1024)
 
-    // ---- 4-chunk ingest: the view engages on chunk 3 ----------------
-    val dir4 = java.nio.file.Files.createTempDirectory("graft-vdp4").toString
-    val cuts = Seq(lo - 1) ++ (1 to 3).map(i => lo + (hi - lo) * i / 4) ++ Seq(hi)
-    var viewAt = List.empty[Boolean]
-    var chunkSec = List.empty[Double]
-    var storMb = List.empty[Long]
-    val admitted4 = cuts.sliding(2).zipWithIndex.map { case (Seq(a, b), i) =>
-      val (adm, t) = Trace.timed("view_decade_probe", "chunk", i)(
-        operators.IncrementalNearDup.ingest(spark, dir4,
-          docs.filter(col("doc_id") > a && col("doc_id") <= b),
-          batchId = i, nBuckets = 16))
-      viewAt :+= graft.streaming.BucketState.hasView(dir4)
-      chunkSec :+= t
-      storMb :+= storageMb
-      adm
-    }.toSeq.reduce(_.unionByName(_))
-    val n4 = admitted4.count()
+    val dir = Shared.scratchDir("graft-vdp")
+    val (fields, checks) = Shared.inScratch(dir) {
+      // ---- 4-chunk ingest: the view engages on chunk 3 ----------------
+      val dir4 = s"$dir/four"
+      var viewAt = List.empty[Boolean]
+      var chunkSec = List.empty[Double]
+      var storMb = List.empty[Long]
+      val admitted4 = Shared.ascendingSplit(docs, "doc_id", 4).chunks.zipWithIndex
+        .map { case (chunk, i) =>
+          val (adm, t) = Trace.timed("view_decade_probe", "chunk", i)(
+            operators.IncrementalNearDup.ingest(spark, dir4, chunk,
+              batchId = i, nBuckets = 16))
+          viewAt :+= graft.streaming.BucketState.hasView(dir4)
+          chunkSec :+= t
+          storMb :+= storageMb
+          adm
+        }.reduce(_.unionByName(_))
+      val n4 = admitted4.count()
 
-    // ---- 2-chunk control on the same corpus (direct reads) ----------
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-vdp2").toString
-    val mid = (lo + hi) / 2
-    val (admitted2, t2) = Trace.timed("view_decade_probe", "two_chunk", -1L) {
-      val a = operators.IncrementalNearDup.ingest(spark, dir2,
-        docs.filter(col("doc_id") <= mid), batchId = 0, nBuckets = 16)
-      val b = operators.IncrementalNearDup.ingest(spark, dir2,
-        docs.filter(col("doc_id") > mid), batchId = 1, nBuckets = 16)
-      val u = a.unionByName(b).localCheckpoint(eager = true)
-      u.count()
-      u
+      // ---- 2-chunk control on the same corpus (direct reads) ----------
+      val (admitted2, t2) = Trace.timed("view_decade_probe", "two_chunk", -1L) {
+        val u = Shared.ascendingSplit(docs, "doc_id", 2).chunks.zipWithIndex
+          .map { case (chunk, i) =>
+            operators.IncrementalNearDup.ingest(spark, s"$dir/two", chunk,
+              batchId = i, nBuckets = 16)
+          }.reduce(_.unionByName(_)).localCheckpoint(eager = true)
+        u.count()
+        u
+      }
+      val diff = admitted4.exceptAll(admitted2).count() +
+        admitted2.exceptAll(admitted4).count()
+      (Seq("sf_dir" -> sfDir, "docs" -> docs.count(), "admitted_4chunk" -> n4,
+        "admitted_diff_vs_2chunk" -> diff, "view_live_after_chunk" -> viewAt,
+        "chunk_sec" -> chunkSec.map(Trace.fixed(_, 1)),
+        "storage_mb_after_chunk" -> storMb, "twochunk_sec" -> Trace.fixed(t2, 1)),
+        Seq("[view-decade] 4-chunk admissions diverged from the 2-chunk form" -> (diff == 0),
+          s"[view-decade] view engaged after chunks $viewAt, not from chunk 3 on" ->
+            (viewAt == List(false, false, true, true))))
     }
-    val diff = admitted4.exceptAll(admitted2).count() +
-      admitted2.exceptAll(admitted4).count()
-    graft.Shared.deleteDirTree(dir4); graft.Shared.deleteDirTree(dir2)
-
-    println(s"""{"metric":"view_decade_probe","sf_dir":"$sfDir",""" +
-      s""""docs":${docs.count()},"admitted_4chunk":$n4,""" +
-      s""""admitted_diff_vs_2chunk":$diff,""" +
-      s""""view_live_after_chunk":[${viewAt.mkString(",")}],""" +
-      s""""chunk_sec":[${chunkSec.map(t => f"$t%.1f").mkString(",")}],""" +
-      s""""storage_mb_after_chunk":[${storMb.mkString(",")}],""" +
-      s""""twochunk_sec":${f"$t2%.1f"}}""")
-    spark.stop()
-    if (diff != 0 || !(viewAt == List(false, false, true, true))) sys.exit(1)
+    Graft.finish(spark, "view_decade_probe", fields, checks: _*)
   }
 }

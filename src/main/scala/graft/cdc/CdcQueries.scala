@@ -170,31 +170,24 @@ object CdcQueries {
       // state dir (a retraction would poison the shared replica the
       // other three LSM queries read); a full sequence replay by
       // construction, like every incremental-store driver query.
-      import org.apache.spark.sql.functions.{col, min, max}
-      val log = Changelog.syntheticShared(s, d)
-      val b = log.agg(min("pos"), max("pos")).collect()(0)
-      val (lo, hi) = (b.getLong(0), b.getLong(1))
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      val state = java.nio.file.Files.createTempDirectory("graft-lsm-r").toString
-      val audit = java.nio.file.Files.createTempDirectory("graft-lsm-ra").toString
-      val S = graft.streaming.CdcStream
-      S.applyLsmBatch(log.filter(col("pos") <= c1), 0, audit, state, 16,
-        CdcSchema.invoiceSpec)
-      S.applyLsmBatch(log.filter(col("pos") > c1 && col("pos") <= c2), 1,
-        audit, state, 16, CdcSchema.invoiceSpec)
-      val takedown = graft.Tables.orders(s, d)
-        .select(col("o_orderkey").cast("int").as("k"))
-        .filter(col("k") % 13 === 0)
-      S.retractLsmKeys(s, state, takedown, throughPos = c2)
-      S.applyLsmBatch(log.filter(col("pos") > c2), 2, audit, state, 16,
-        CdcSchema.invoiceSpec)
-      S.compactLsm(s, state, 16)
-      val out = S.partitionedSnapshotLsm(s, state)
-        .select(col("order_id").cast("long").as("order_id"),
-          col("invoice_number").cast("long").as("invoice_number"))
-        .localCheckpoint(eager = true)
-      graft.Shared.deleteDirTree(state); graft.Shared.deleteDirTree(audit)
-      out
+      import org.apache.spark.sql.functions.col
+      val dir = graft.Shared.scratchDir("graft-lsm-r")
+      graft.Shared.scratchRun(dir) {
+        val (state, audit) = (s"$dir/state", s"$dir/audit")
+        val split = graft.Shared.ascendingSplit(Changelog.syntheticShared(s, d), "pos", 3)
+        val S = graft.streaming.CdcStream
+        S.applyLsmBatch(split.chunks(0), 0, audit, state, 16, CdcSchema.invoiceSpec)
+        S.applyLsmBatch(split.chunks(1), 1, audit, state, 16, CdcSchema.invoiceSpec)
+        val takedown = graft.Tables.orders(s, d)
+          .select(col("o_orderkey").cast("int").as("k"))
+          .filter(col("k") % 13 === 0)
+        S.retractLsmKeys(s, state, takedown, throughPos = split.cuts(2))
+        S.applyLsmBatch(split.chunks(2), 2, audit, state, 16, CdcSchema.invoiceSpec)
+        S.compactLsm(s, state, 16)
+        S.partitionedSnapshotLsm(s, state)
+          .select(col("order_id").cast("long").as("order_id"),
+            col("invoice_number").cast("long").as("invoice_number"))
+      }
     },
     "cdc_changes_between" -> { (s, d) =>
       // CHANGE-DATA FEED off the retained LSM log: net per-key
@@ -243,24 +236,17 @@ object CdcQueries {
   private def sharedLsmState(s: SparkSession, d: String): (String, Long) = {
     val key = (s.sparkContext.applicationId + "#" + System.identityHashCode(s), d)
     lsmMemo.getOrElseUpdate(key, {
-      import org.apache.spark.sql.functions.col
       val t0 = System.nanoTime()
       val state = java.nio.file.Files.createTempDirectory("graft-lsm").toString
       val audit = java.nio.file.Files.createTempDirectory("graft-lsm-a").toString
-      val log = Changelog.syntheticShared(s, d)
-      val b = log.agg(
-        org.apache.spark.sql.functions.min("pos"),
-        org.apache.spark.sql.functions.max("pos")).collect()(0)
-      val (lo, hi) = (b.getLong(0), b.getLong(1))
-      val (c1, c2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
+      val split = graft.Shared.ascendingSplit(Changelog.syntheticShared(s, d), "pos", 3)
       val S = graft.streaming.CdcStream
-      S.applyLsmBatch(log.filter(col("pos") <= c1), 0, audit, state, 16, CdcSchema.invoiceSpec)
+      S.applyLsmBatch(split.chunks(0), 0, audit, state, 16, CdcSchema.invoiceSpec)
       S.compactLsm(s, state, 16)
-      S.applyLsmBatch(log.filter(col("pos") > c1 && col("pos") <= c2), 1,
-        audit, state, 16, CdcSchema.invoiceSpec)
-      S.applyLsmBatch(log.filter(col("pos") > c2), 2, audit, state, 16, CdcSchema.invoiceSpec)
+      S.applyLsmBatch(split.chunks(1), 1, audit, state, 16, CdcSchema.invoiceSpec)
+      S.applyLsmBatch(split.chunks(2), 2, audit, state, 16, CdcSchema.invoiceSpec)
       graft.Shared.buildSeconds.put("lsm_state", (System.nanoTime() - t0) / 1e9)
-      (state, hi)
+      (state, split.cuts.last)
     })
   }
 

@@ -1785,21 +1785,19 @@ object Dedup {
     * never corpus × eval.
     */
   def textDeconBackscreen(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val evalDir = java.nio.file.Files
-      .createTempDirectory("graft-backscreen").toString
-    EvalSet.publish(s, evalDir, docs.filter(col("doc_id") % 14 === 0))
-    EvalSet.publish(s, evalDir, docs.filter(col("doc_id") % 7 === 0))
-    val train = docs.filter(col("doc_id") % 7 =!= 0)
-    val admittedV1 = decontaminateAdmit(train, EvalSet.hashesAt(s, evalDir, 1))
-    val survivorsV2 =
-      decontaminateAdmit(admittedV1, EvalSet.hashesAt(s, evalDir, 2))
-    val out = admittedV1.select(col("doc_id"))
-      .join(survivorsV2.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .orderBy(col("doc_id"))
-      .localCheckpoint(eager = true)
-    graft.Shared.deleteDirTree(evalDir)
-    out
+    val evalDir = graft.Shared.scratchDir("graft-backscreen")
+    graft.Shared.scratchRun(evalDir) {
+      val docs = Tables.documents(s, dir)
+      EvalSet.publish(s, evalDir, docs.filter(col("doc_id") % 14 === 0))
+      EvalSet.publish(s, evalDir, docs.filter(col("doc_id") % 7 === 0))
+      val train = docs.filter(col("doc_id") % 7 =!= 0)
+      val admittedV1 = decontaminateAdmit(train, EvalSet.hashesAt(s, evalDir, 1))
+      val survivorsV2 =
+        decontaminateAdmit(admittedV1, EvalSet.hashesAt(s, evalDir, 2))
+      admittedV1.select(col("doc_id"))
+        .join(survivorsV2.select(col("doc_id")), Seq("doc_id"), "left_anti")
+        .orderBy(col("doc_id"))
+    }
   }
 
   private val textDeconBackscreenSql =

@@ -225,30 +225,20 @@ object IncrementalDedup {
     * the equality IS the correctness statement for the incremental path.
     */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame =
-    dedupIncrementalAt(s, dir,
-      java.nio.file.Files.createTempDirectory("graft-increm").toString)
+    dedupIncrementalAt(s, dir, graft.Shared.scratchDir("graft-increm"))
 
   private[graft] def dedupIncrementalAt(s: SparkSession, dir: String,
-                                        indexDir: String): DataFrame = {
-    val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val ids = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
-    val mid = (ids.getLong(0) + ids.getLong(1)) / 2
-    // 16 buckets at demo scale: bucket count trades pruning granularity
-    // against files-per-version; a production index sizes it to state
-    // volume (buckets ~ state / target-file-size), not batch volume
-    ingest(s, indexDir, docs.filter(col("doc_id") <= mid), batchId = 0,
-      nBuckets = 16).count()
-    ingest(s, indexDir, docs.filter(col("doc_id") > mid), batchId = 1,
-      nBuckets = 16).count()
-    // materialize the answer, then reclaim the per-run index dir: the
-    // snapshot frame lazily reads the dir, so delete only after the
-    // eager checkpoint (repeated verify/bench runs would otherwise
-    // accrete dead index state under /tmp)
-    val out = snapshot(s, indexDir).orderBy(col("fp"))
-      .localCheckpoint(eager = true)
-    graft.Shared.deleteDirTree(indexDir)
-    out
-  }
+                                        indexDir: String): DataFrame =
+    graft.Shared.scratchRun(indexDir) {
+      val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
+      // 16 buckets at demo scale: bucket count trades pruning granularity
+      // against files-per-version; a production index sizes it to state
+      // volume (buckets ~ state / target-file-size), not batch volume
+      graft.Shared.ascendingSplit(docs, "doc_id", 2).chunks.zipWithIndex.foreach {
+        case (chunk, i) => ingest(s, indexDir, chunk, batchId = i, nBuckets = 16).count()
+      }
+      snapshot(s, indexDir).orderBy(col("fp"))
+    }
 
   private val dedupIncrementalSql =
     """WITH docs AS (
@@ -270,22 +260,14 @@ object IncrementalDedup {
     * the oracle is shared.
     */
   def dedupIncrementalStream(s: SparkSession, dir: String): DataFrame = {
-    val indexDir =
-      java.nio.file.Files.createTempDirectory("graft-increm-stream").toString
-    val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val ids = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
-    val (lo, hi) = (ids.getLong(0), ids.getLong(1))
-    val cuts = Seq(lo - 1) ++ (1 to 3).map(i => lo + (hi - lo) * i / 4) ++
-      Seq(hi)
-    cuts.sliding(2).zipWithIndex.foreach { case (Seq(a, b), i) =>
-      ingest(s, indexDir,
-        docs.filter(col("doc_id") > a && col("doc_id") <= b),
-        batchId = i, nBuckets = 16).count()
+    val indexDir = graft.Shared.scratchDir("graft-increm-stream")
+    graft.Shared.scratchRun(indexDir) {
+      val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
+      graft.Shared.ascendingSplit(docs, "doc_id", 4).chunks.zipWithIndex.foreach {
+        case (chunk, i) => ingest(s, indexDir, chunk, batchId = i, nBuckets = 16).count()
+      }
+      snapshot(s, indexDir).orderBy(col("fp"))
     }
-    val out = snapshot(s, indexDir).orderBy(col("fp"))
-      .localCheckpoint(eager = true)
-    graft.Shared.deleteDirTree(indexDir)
-    out
   }
 
   /** Driver-facing demonstration of DELETION: chunk 1 (ids ≤ mid)
@@ -302,25 +284,19 @@ object IncrementalDedup {
     * this wrong.
     */
   def dedupIncrementalRetract(s: SparkSession, dir: String): DataFrame =
-    dedupIncrementalRetractAt(s, dir,
-      java.nio.file.Files.createTempDirectory("graft-increm-ret").toString)
+    dedupIncrementalRetractAt(s, dir, graft.Shared.scratchDir("graft-increm-ret"))
 
   private[graft] def dedupIncrementalRetractAt(s: SparkSession, dir: String,
-                                               indexDir: String): DataFrame = {
-    val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val ids = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
-    val mid = (ids.getLong(0) + ids.getLong(1)) / 2
-    ingest(s, indexDir, docs.filter(col("doc_id") <= mid), batchId = 0,
-      nBuckets = 16).count()
-    val takedown = docs.filter(col("doc_id") <= mid &&
-      pmod(col("doc_id"), lit(5)) === 0).select(col("doc_id"))
-    ingest(s, indexDir, docs.filter(col("doc_id") > mid), batchId = 1,
-      nBuckets = 16, retractIds = Some(takedown)).count()
-    val out = snapshot(s, indexDir).orderBy(col("fp"))
-      .localCheckpoint(eager = true)
-    graft.Shared.deleteDirTree(indexDir)
-    out
-  }
+                                               indexDir: String): DataFrame =
+    graft.Shared.scratchRun(indexDir) {
+      val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
+      val Seq(chunk1, chunk2) = graft.Shared.ascendingSplit(docs, "doc_id", 2).chunks
+      ingest(s, indexDir, chunk1, batchId = 0, nBuckets = 16).count()
+      val takedown = chunk1.filter(pmod(col("doc_id"), lit(5)) === 0).select(col("doc_id"))
+      ingest(s, indexDir, chunk2, batchId = 1, nBuckets = 16,
+        retractIds = Some(takedown)).count()
+      snapshot(s, indexDir).orderBy(col("fp"))
+    }
 
   // Sequence replay: mid and the takedown set are deterministic in the
   // data, so the oracle recomputes both phases — surviving phase-1

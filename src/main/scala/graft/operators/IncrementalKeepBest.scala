@@ -213,8 +213,8 @@ object IncrementalKeepBest {
     * batch. Replay contract identical to the sibling indexes: same
     * batchId + same input → idempotent no-op returning the same rows;
     * different input fails loudly.
-    */
-  /** `edgesIn`: this batch's verified near-dup edges `(edgesSeen
+    *
+    * `edgesIn`: this batch's verified near-dup edges `(edgesSeen
     * (doc_id, seen_id), edgesBatch (doc_a, doc_b))` as returned by
     * [[IncrementalNearDup.ingestWithEdges]] for the SAME batch — the
     * store is layered on that banded index, which discovers and
@@ -226,8 +226,8 @@ object IncrementalKeepBest {
     * banded index supplying its edges — one foreachBatch feeding both is
     * the enforcement point (the shared batchId + fingerprint guards make
     * a replay of either side idempotent).
-    */
-  /** `retractIds`: an optional takedown set committed WITH this batch —
+    *
+    * `retractIds`: an optional takedown set committed WITH this batch —
     * member rows of the named ids are masked from stored reads and the
     * snapshot here (the cluster's best becomes the best SURVIVING
     * member; a fully-retracted cluster disappears until a new arrival
@@ -539,30 +539,23 @@ object IncrementalKeepBest {
     * across drops land on exactly the batch answer.
     */
   def keepBestIncremental(s: SparkSession, dir: String): DataFrame =
-    keepBestIncrementalAt(s, dir,
-      java.nio.file.Files.createTempDirectory("graft-kb").toString)
+    keepBestIncrementalAt(s, dir, graft.Shared.scratchDir("graft-kb"))
 
   private[graft] def keepBestIncrementalAt(s: SparkSession, dir: String,
-                                           indexDir: String): DataFrame = {
-    val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val ids = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
-    val mid = (ids.getLong(0) + ids.getLong(1)) / 2
-    // the pipeline's order per drop: the near-dup index discovers the
-    // batch's verified edges, the keep-best store layers on them
-    Seq(docs.filter(col("doc_id") <= mid), docs.filter(col("doc_id") > mid))
-      .zipWithIndex.foreach { case (drop, i) =>
-        val (_, es, eb) = IncrementalNearDup.ingestWithEdges(s,
-          s"$indexDir/nd", drop, i.toLong, nBuckets = 16)
-        ingest(s, s"$indexDir/kb", drop, i.toLong, nBuckets = 16,
-          edgesIn = Some((es, eb))).count()
+                                           indexDir: String): DataFrame =
+    graft.Shared.scratchRun(indexDir) {
+      val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
+      // the pipeline's order per drop: the near-dup index discovers the
+      // batch's verified edges, the keep-best store layers on them
+      graft.Shared.ascendingSplit(docs, "doc_id", 2).chunks.zipWithIndex.foreach {
+        case (drop, i) =>
+          val (_, es, eb) = IncrementalNearDup.ingestWithEdges(s,
+            s"$indexDir/nd", drop, i.toLong, nBuckets = 16)
+          ingest(s, s"$indexDir/kb", drop, i.toLong, nBuckets = 16,
+            edgesIn = Some((es, eb))).count()
       }
-    // snapshot() eagerly checkpoints, so the per-run index dir (both
-    // stores) can be reclaimed on success (repeated verify/bench runs
-    // would otherwise accrete dead index state under /tmp)
-    val out = snapshot(s, s"$indexDir/kb")
-    graft.Shared.deleteDirTree(indexDir)
-    out
-  }
+      snapshot(s, s"$indexDir/kb")
+    }
 
   /** Full DuckDB replay of the contract: connected components of the
     * prefix-capped verified graph ([[IncrementalNearDup.cappedGraphCtes]]

@@ -311,8 +311,8 @@ object IncrementalNearDup {
     * dominant per-drop compute, runs once per drop. The caller owns its
     * lifecycle; fingerprints are over band VALUES, so
     * replay contracts are unchanged.
-    */
-  /** `retractIds`: an optional takedown set committed WITH this batch —
+    *
+    * `retractIds`: an optional takedown set committed WITH this batch —
     * band, sig and sig-key rows of the named ids are masked from every
     * stored read before this batch's admissions, and the ids leave the
     * admitted snapshot ([[Retraction]]'s declared semantics; tombstones
@@ -349,8 +349,8 @@ object IncrementalNearDup {
     * predicate by the batch's per-bucket count — near saturation that
     * silently dropped verified edges from the crash-recovery feed.
     * IncrementalCapSpec's replay case pins the fixed contract.)
-    */
-  /** `prevBandsIn`: an optional [[preReadTouched]] result — the stored
+    *
+    * `prevBandsIn`: an optional [[preReadTouched]] result — the stored
     * band rows of (a superset of) this batch's touched groups, read and
     * materialized EARLY under the caller's lease while an upstream stage
     * still ran. Used in place of the store read for the guard and the
@@ -388,8 +388,8 @@ object IncrementalNearDup {
     * contract only the LATEST committed batch can replay (the manifest
     * records one fingerprint), so ids at/above the batch minimum are
     * exactly the batch's own rows.
-    */
-  /** `tombs`: the surviving-view mask — stored tombstones unioned with
+    *
+    * `tombs`: the surviving-view mask — stored tombstones unioned with
     * the in-flight batch's own retraction set (identical on first run
     * and replay; see [[Retraction]]). Every stored read here (band rows,
     * sig rows, sig-key anchors) is anti-joined against it, so admission
@@ -849,25 +849,21 @@ object IncrementalNearDup {
     * same hash ladder.
     */
   def nearDupIncremental(s: SparkSession, dir: String): DataFrame =
-    nearDupIncrementalAt(s, dir,
-      java.nio.file.Files.createTempDirectory("graft-neardup").toString)
+    nearDupIncrementalAt(s, dir, graft.Shared.scratchDir("graft-neardup"))
 
   private[graft] def nearDupIncrementalAt(s: SparkSession, dir: String,
-                                          indexDir: String): DataFrame = {
+                                          indexDir: String): DataFrame =
+    graft.Shared.scratchRun(indexDir)(admittedChunks(s, dir, indexDir, 2))
+
+  /** The union of the admitted sets of the documents table ingested into
+    * `indexDir` as `n` ascending chunks, ordered by doc_id.
+    */
+  private def admittedChunks(s: SparkSession, dir: String, indexDir: String,
+                             n: Int): DataFrame = {
     val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val ids = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
-    val mid = (ids.getLong(0) + ids.getLong(1)) / 2
-    val a = ingest(s, indexDir, docs.filter(col("doc_id") <= mid),
-      batchId = 0, nBuckets = 16)
-    val b = ingest(s, indexDir, docs.filter(col("doc_id") > mid),
-      batchId = 1, nBuckets = 16)
-    // the admitted frames lazily read the dir — materialize, then reclaim
-    // the per-run index (repeated verify/bench runs would otherwise
-    // accrete dead index state under /tmp)
-    val out = a.unionByName(b).orderBy(col("doc_id"))
-      .localCheckpoint(eager = true)
-    graft.Shared.deleteDirTree(indexDir)
-    out
+    graft.Shared.ascendingSplit(docs, "doc_id", n).chunks.zipWithIndex
+      .map { case (chunk, i) => ingest(s, indexDir, chunk, batchId = i, nBuckets = 16) }
+      .reduce(_.unionByName(_)).orderBy(col("doc_id"))
   }
 
   /** Shared DuckDB CTE chain ending in `mh_pairs(doc_a, doc_b)` — the
@@ -935,6 +931,12 @@ object IncrementalNearDup {
        |  SELECT doc_a, doc_b FROM rescue)""".stripMargin
   }
 
+  // The admitted universe is SIG (docs that produce band rows), not DOCS:
+  // a <3-token or null-text doc has no shingles, hence no signature and
+  // no band rows, and the ingest (which derives admission from band
+  // rows) can never admit it — the oracle must start from the same
+  // universe or it would spuriously include short docs the engine
+  // structurally excludes (same invariant as IngestSoak's expected set).
   private val nearDupIncrementalSql: String =
     s"""WITH $cappedGraphCtes
        |SELECT CAST(doc_id AS BIGINT) AS doc_id FROM sig
@@ -954,29 +956,9 @@ object IncrementalNearDup {
     * shared — the equality gates the cached read path bit-for-bit.
     */
   def nearDupStream(s: SparkSession, dir: String): DataFrame = {
-    val indexDir =
-      java.nio.file.Files.createTempDirectory("graft-neardup-stream").toString
-    val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val ids = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
-    val (lo, hi) = (ids.getLong(0), ids.getLong(1))
-    val cuts = Seq(lo - 1) ++ (1 to 3).map(i => lo + (hi - lo) * i / 4) ++
-      Seq(hi)
-    val parts = cuts.sliding(2).zipWithIndex.map { case (Seq(a, b), i) =>
-      ingest(s, indexDir,
-        docs.filter(col("doc_id") > a && col("doc_id") <= b),
-        batchId = i, nBuckets = 16)
-    }.toSeq
-    val out = parts.reduce(_.unionByName(_)).orderBy(col("doc_id"))
-      .localCheckpoint(eager = true)
-    graft.Shared.deleteDirTree(indexDir)
-    out
+    val indexDir = graft.Shared.scratchDir("graft-neardup-stream")
+    graft.Shared.scratchRun(indexDir)(admittedChunks(s, dir, indexDir, 4))
   }
-    // admitted universe is SIG (docs that produce band rows), not DOCS:
-    // a <3-token or null-text doc has no shingles, hence no signature and
-    // no band rows, and the ingest (which derives admission from band
-    // rows) can never admit it — the oracle must start from the same
-    // universe or it would spuriously include short docs the engine
-    // structurally excludes (same invariant as IngestSoak's expected set)
 
   /** Driver-facing demonstration of DELETION: chunk 1 ingests, then
     * chunk 2 arrives WITH a takedown of every chunk-1 id divisible
@@ -990,25 +972,19 @@ object IncrementalNearDup {
     * anchors).
     */
   def nearDupRetract(s: SparkSession, dir: String): DataFrame =
-    nearDupRetractAt(s, dir,
-      java.nio.file.Files.createTempDirectory("graft-neardup-ret").toString)
+    nearDupRetractAt(s, dir, graft.Shared.scratchDir("graft-neardup-ret"))
 
   private[graft] def nearDupRetractAt(s: SparkSession, dir: String,
-                                      indexDir: String): DataFrame = {
-    val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
-    val ids = docs.agg(min("doc_id"), max("doc_id")).collect()(0)
-    val mid = (ids.getLong(0) + ids.getLong(1)) / 2
-    ingest(s, indexDir, docs.filter(col("doc_id") <= mid),
-      batchId = 0, nBuckets = 16).count()
-    val takedown = docs.filter(col("doc_id") <= mid &&
-      pmod(col("doc_id"), lit(5)) === 0).select(col("doc_id"))
-    ingest(s, indexDir, docs.filter(col("doc_id") > mid),
-      batchId = 1, nBuckets = 16, retractIds = Some(takedown)).count()
-    val out = admittedSnapshot(s, indexDir).orderBy(col("doc_id"))
-      .localCheckpoint(eager = true)
-    graft.Shared.deleteDirTree(indexDir)
-    out
-  }
+                                      indexDir: String): DataFrame =
+    graft.Shared.scratchRun(indexDir) {
+      val docs = graft.Tables.documents(s, dir).select(col("doc_id"), col("text"))
+      val Seq(chunk1, chunk2) = graft.Shared.ascendingSplit(docs, "doc_id", 2).chunks
+      ingest(s, indexDir, chunk1, batchId = 0, nBuckets = 16).count()
+      val takedown = chunk1.filter(pmod(col("doc_id"), lit(5)) === 0).select(col("doc_id"))
+      ingest(s, indexDir, chunk2, batchId = 1, nBuckets = 16,
+        retractIds = Some(takedown)).count()
+      admittedSnapshot(s, indexDir).orderBy(col("doc_id"))
+    }
 
   /** Two-phase sequence replay of the takedown semantics: phase 1 is the
     * one-batch capped graph over chunk 1; phase 2 ranks chunk 2 against

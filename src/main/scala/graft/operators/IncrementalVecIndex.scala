@@ -366,8 +366,8 @@ object IncrementalVecIndex {
     * `(cell, vec_id, codes)`; replay (same batchId + same input) is an
     * idempotent no-op returning the same rows, different input fails
     * loudly — the [[BucketState.checkBatch]] contract.
-    */
-  /** `retractIds`: an optional takedown set committed WITH this batch —
+    *
+    * `retractIds`: an optional takedown set committed WITH this batch —
     * code rows of the named vec_ids are masked from the snapshot and the
     * serving path, and fold out at the next compaction
     * ([[Retraction]]'s shared design). Encoding is unaffected (pure in
@@ -483,8 +483,8 @@ object IncrementalVecIndex {
     * full-precision vectors (read from the `dir` corpus). This is
     * [[Similarity.annIvfPqTopkFromIndexForVec]] over the incremental
     * store instead of the one-shot layout.
-    */
-  /** `rerank`: ADC candidates kept for the exact re-rank — the second
+    *
+    * `rerank`: ADC candidates kept for the exact re-rank — the second
     * recall/latency knob beside `nProbe` (default = the one-shot
     * indexes' constant, which every driver oracle bakes in; the 2M
     * operating-point curve in `tools/` measures both axes).
@@ -646,36 +646,31 @@ object IncrementalVecIndex {
     * exact fixed-point re-rank, final order — bit-for-bit.
     */
   def annIvfPqIncremental(s: SparkSession, dir: String): DataFrame =
-    annIvfPqIncrementalAt(s, dir,
-      java.nio.file.Files.createTempDirectory("graft-vecinc").toString)
+    annIvfPqIncrementalAt(s, dir, graft.Shared.scratchDir("graft-vecinc"))
 
   private[graft] def annIvfPqIncrementalAt(s: SparkSession, dir: String,
-                                           indexDir: String): DataFrame = {
-    val vecs = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
-    val ids = vecs.agg(min("vec_id"), max("vec_id")).collect()(0)
-    val mid = (ids.getLong(0) + ids.getLong(1)) / 2
-    // ingest's own actions (fingerprint, segment write, commit) run
-    // eagerly inside the call; the returned frame is the batch's lazy
-    // re-encode, and counting it re-ran the whole encode as an extra
-    // job per drop for a value this query never reads (r17 — two jobs
-    // off the declared query's critical path, results untouched)
-    ingest(s, indexDir, vecs.filter(col("vec_id") <= mid), batchId = 0)
-    ingest(s, indexDir, vecs.filter(col("vec_id") > mid), batchId = 1)
-    // declare the frozen params + the appended codes for the oracle
-    val od = s"${Similarity.OracleParamsDir}/vecinc"
-    s.read.parquet(s"$indexDir/params/centroids")
-      .coalesce(1).write.mode("overwrite").parquet(s"$od/centroids")
-    s.read.parquet(s"$indexDir/params/codebooks")
-      .coalesce(1).write.mode("overwrite").parquet(s"$od/codebooks")
-    snapshot(s, indexDir)
-      .coalesce(1).write.mode("overwrite").parquet(s"$od/codes")
-    val out = searchTopk(s, indexDir, dir,
-      Similarity.storedQueryVec(s, dir),
-      excludeId = Some(Similarity.QueryVec))
-      .localCheckpoint(eager = true)
-    graft.Shared.deleteDirTree(indexDir)
-    out
-  }
+                                           indexDir: String): DataFrame =
+    graft.Shared.scratchRun(indexDir) {
+      val vecs = Tables.embeddings(s, dir).select(col("vec_id"), col("embedding"))
+      // ingest's own actions (fingerprint, segment write, commit) run
+      // eagerly inside the call; the returned frame is the batch's lazy
+      // re-encode, and counting it re-ran the whole encode as an extra
+      // job per drop for a value this query never reads (r17 — two jobs
+      // off the declared query's critical path, results untouched)
+      graft.Shared.ascendingSplit(vecs, "vec_id", 2).chunks.zipWithIndex.foreach {
+        case (half, i) => ingest(s, indexDir, half, batchId = i)
+      }
+      // declare the frozen params + the appended codes for the oracle
+      val od = s"${Similarity.OracleParamsDir}/vecinc"
+      s.read.parquet(s"$indexDir/params/centroids")
+        .coalesce(1).write.mode("overwrite").parquet(s"$od/centroids")
+      s.read.parquet(s"$indexDir/params/codebooks")
+        .coalesce(1).write.mode("overwrite").parquet(s"$od/codebooks")
+      snapshot(s, indexDir)
+        .coalesce(1).write.mode("overwrite").parquet(s"$od/codes")
+      searchTopk(s, indexDir, dir, Similarity.storedQueryVec(s, dir),
+        excludeId = Some(Similarity.QueryVec))
+    }
 
   // Full oracle: probe selection from the declared centroids
   // (annIvfTopkSql's arithmetic), ADC tables from the declared codebooks

@@ -908,10 +908,20 @@ private[graft] object BucketState {
   def compactionInFlight(stateDir: String): Boolean =
     compactingFlags.get(stateDir).exists(_.get())
 
+  /** Waits until no background fold of any of `stateDirs` is in flight:
+    * each has landed or died staged-only, so the stores' manifests and
+    * segment counts describe quiesced state.
+    */
+  def quiesce(stateDirs: String*): Unit =
+    stateDirs.foreach(d => while (compactionInFlight(d)) Thread.sleep(100))
+
   /** The one fold dispatcher: run [[compactConcurrent]] with `fold` now
     * (sync) or on a background daemon thread (async, at most one in
     * flight per state dir — a trip while one is running is a no-op; the
     * running fold will observe the extra segments on its next trip).
+    * The thread clears the Spark job group it inherits from a streaming
+    * batch: stopping that stream cancels its group, and the fold is not
+    * the stream's to cancel.
     */
   def maybeCompactConcurrent(spark: SparkSession, stateDir: String,
                              async: Boolean, fold: Fold): Unit =
@@ -921,6 +931,7 @@ private[graft] object BucketState {
         stateDir, new java.util.concurrent.atomic.AtomicBoolean(false))
       if (flag.compareAndSet(false, true)) {
         val t = new Thread(() => {
+          spark.sparkContext.clearJobGroup()
           try compactConcurrent(spark, stateDir, fold)
           catch {
             case e: Throwable =>

@@ -109,4 +109,36 @@ class TraceSpec extends AnyFunSuite {
     assert(Files.list(Paths.get(plain)).iterator().asScala
       .forall(p => !p.getFileName.toString.endsWith(".jsonl")))
   }
+
+  test("a result line is JSON under any locale: nested arrays and objects, nulls, escaped strings") {
+    val text = "a \"quoted\" C:\\dir\ttab\nline \u0001 end"
+    val out = new java.io.ByteArrayOutputStream()
+    val prev = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try Console.withOut(out) {
+      Trace.result("probe", Seq("sec" -> Trace.fixed(1.5, 3),
+        "ratio" -> Trace.fixed(2.0 / 3, 2), "raw" -> 0.25, "none" -> None,
+        "inf" -> Trace.fixed(Double.PositiveInfinity, 1), "text" -> text,
+        "runs" -> Seq(Trace.fixed(0.1234, 3), Trace.fixed(12, 3)),
+        "nested" -> Seq("x1" -> Seq("n" -> 7L, "ok" -> true), "x10" -> Seq(1, 2)),
+        "empty" -> Map.empty[String, Int]))
+    } finally java.util.Locale.setDefault(prev)
+    val line = new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8).trim
+    assert(!line.contains("\n"), "one line")
+    // digits exactly as %.3f writes them in an English locale
+    assert(line.contains("\"sec\":1.500,\"ratio\":0.67,"), line)
+    val node = new ObjectMapper().readTree(line)
+    assert(node.fieldNames().asScala.toSeq === Seq("metric", "sec", "ratio", "raw",
+      "none", "inf", "text", "runs", "nested", "empty"))
+    assert(node.get("metric").asText === "probe")
+    assert(node.get("sec").asDouble === 1.5 && node.get("ratio").asDouble === 0.67)
+    assert(node.get("raw").asDouble === 0.25)
+    assert(node.get("none").isNull && node.get("inf").isNull)
+    assert(node.get("text").asText === text)
+    assert(node.get("runs").elements().asScala.map(_.asDouble).toSeq === Seq(0.123, 12.0))
+    val nested = node.get("nested")
+    assert(nested.get("x1").get("n").asLong === 7L && nested.get("x1").get("ok").asBoolean)
+    assert(nested.get("x10").elements().asScala.map(_.asInt).toSeq === Seq(1, 2))
+    assert(node.get("empty").isObject && node.get("empty").size === 0)
+  }
 }

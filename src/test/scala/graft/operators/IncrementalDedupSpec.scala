@@ -92,12 +92,16 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val in = java.nio.file.Files.createTempDirectory("increm-stream").toString
     val dir = tmp()
     val ckpt = tmp()
-    def write(name: String, rows: (Long, String)*) =
-      java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/$name"),
-        rows.map { case (id, t) => s"""{"doc_id":$id,"text":"$t"}""" }
-          .mkString("\n").getBytes)
-    write("a.json", 1L -> "aa bb", 2L -> "cc dd")
-    write("b.json", 5L -> "aa bb", 6L -> "ee ff")
+    // distinct mtimes: the file source takes files in mtime order, and the
+    // answer below assumes a.json first
+    def write(name: String, at: Int, rows: (Long, String)*) =
+      java.nio.file.Files.setLastModifiedTime(
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$in/$name"),
+          rows.map { case (id, t) => s"""{"doc_id":$id,"text":"$t"}""" }
+            .mkString("\n").getBytes),
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + at * 1000L))
+    write("a.json", 0, 1L -> "aa bb", 2L -> "cc dd")
+    write("b.json", 1, 5L -> "aa bb", 6L -> "ee ff")
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
     val stream = spark.readStream.schema(schema)
@@ -291,8 +295,22 @@ class IncrementalDedupSpec extends AnyFunSuite {
         s"$name left its per-run index dir behind: $idx")
     }
     run("exact", IncrementalDedup.dedupIncrementalAt)
+    run("exact-retract", IncrementalDedup.dedupIncrementalRetractAt)
     run("neardup", IncrementalNearDup.nearDupIncrementalAt)
+    run("neardup-retract", IncrementalNearDup.nearDupRetractAt)
     run("keepbest", IncrementalKeepBest.keepBestIncrementalAt)
+    run("vec", IncrementalVecIndex.annIvfPqIncrementalAt)
+    // …and a scratch run whose body throws still takes its dir with it
+    val failing = java.nio.file.Files.createTempDirectory("hygiene-failing")
+    intercept[IllegalStateException] {
+      graft.Shared.scratchRun(failing.toString) {
+        IncrementalDedup.ingest(spark, failing.toString,
+          docsOf(1L -> "aa bb"), batchId = 0).count()
+        throw new IllegalStateException("query failed mid-run")
+      }
+    }
+    assert(!java.nio.file.Files.exists(failing),
+      s"a failed scratch run left its dir behind: $failing")
   }
 
   test("chunked ingest equals one-shot exact dedup on the fixture corpus") {

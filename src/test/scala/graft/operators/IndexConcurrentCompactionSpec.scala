@@ -1,6 +1,7 @@
 package graft.operators
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
@@ -108,6 +109,66 @@ class IndexConcurrentCompactionSpec extends AnyFunSuite {
     val m = BucketState.readManifest(spark, dir)
     assert(m.fp.map(_._1) === Some(2L))
     assert(diskVersions(dir) === m.buckets.values.flatten.toSet)
+  }
+
+  test("stopping a stream leaves its in-flight background fold to land") {
+    import org.apache.spark.scheduler.{JobSucceeded, SparkListener,
+      SparkListenerJobEnd, SparkListenerJobStart}
+    import org.apache.spark.sql.functions.udf
+    import org.apache.spark.sql.types._
+    val base = Files.createTempDirectory("graft-icc-stop").toString
+    val (in, dir) = (s"$base/in", s"$base/index")
+    new java.io.File(in).mkdirs()
+    // two single-doc drops, mtimes one second apart (file-source order)
+    Seq("alpha beta", "gamma delta").zipWithIndex.foreach { case (t, b) =>
+      val f = Files.write(java.nio.file.Paths.get(s"$in/d$b.json"),
+        s"""{"doc_id":${b + 1},"text":"$t"}""".getBytes)
+      Files.setLastModifiedTime(f,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + b * 1000L))
+    }
+    // the store's own fold, held open inside its write job until released
+    val gate = udf(() => FoldGate.hold()).asNondeterministic()
+    val held = BucketState.Fold(IncrementalDedup.fold.store, (s, d, m) =>
+      IncrementalDedup.fold.of(s, d, m).map(f => f.copy(rows = f.rows.filter(gate()))))
+    // the group of every job that ended without success
+    val failedGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.put(e.jobId, Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobResult != JobSucceeded) failedGroups.add(groups.getOrDefault(e.jobId, ""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val sink = s"$base/trace.jsonl"
+    try graft.Trace.withSink(sink) {
+      val schema = StructType(Seq(
+        StructField("doc_id", LongType), StructField("text", StringType)))
+      // one bucket, so the second drop makes 2 segments and trips the fold;
+      // that batch then holds the stream alive until the stop interrupts it
+      val q = BucketState.runIngest(
+          spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(in),
+          dir, s"$base/ckpt", compactWhenSegments = 2, async = true,
+          onBatch = (b, _) => if (b == 1) {
+            FoldGate.running.await(60, TimeUnit.SECONDS)
+            Thread.sleep(60000)
+          }) { (batch, batchId) =>
+        IncrementalDedup.ingest(batch.sparkSession, dir, batch, batchId, nBuckets = 1)
+        held
+      }
+      assert(FoldGate.running.await(60, TimeUnit.SECONDS), "the fold never started")
+      q.stop()
+      FoldGate.release.countDown()
+      BucketState.quiesce(dir)
+      assert(!failedGroups.contains(q.runId.toString),
+        "stopping the stream cancelled a job of its group")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val live = BucketState.readManifest(spark, dir).buckets.values.flatten.toSet
+    assert(live.size === 1, s"the fold did not land: live versions $live")
+    assert(scala.io.Source.fromFile(sink).getLines()
+      .exists(l => l.contains("\"store\":\"exact\"") && l.contains("\"phase\":\"fold\"")))
+    assert(snap(dir).map(_._2) === Set(1L, 2L))
   }
 
   test("stress: near-dup ingests racing real background folds converge to one-shot") {
@@ -225,4 +286,13 @@ class IndexConcurrentCompactionSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(a === b)
   }
+}
+
+/** Holds a fold's write job open: its first task signals `running`, and
+  * every task waits for `release`.
+  */
+private object FoldGate {
+  val running = new CountDownLatch(1)
+  val release = new CountDownLatch(1)
+  def hold(): Boolean = { running.countDown(); release.await(); true }
 }
